@@ -82,7 +82,7 @@ object TickProfile {
         reps3.repartition(col("cell")).write.mode("append")
           .partitionBy("cell").parquet(dir3 + "/codes") }
       val sig3 = t("sigRows plan+exec") {
-        val x = graft.ops.DedupLedgerProbe.sigRowsOf(
+        val x = graft.ops.DedupLedger.signatureRows(
           sv.join(reps3.select(col("owner").as("doc_id")), Seq("doc_id"), "left_semi"))
         x.localCheckpoint() }
       t("vectors write") {

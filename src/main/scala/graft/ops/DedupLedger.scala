@@ -83,31 +83,21 @@ object DedupLedger {
     docs.agg(max(col("doc_id"))).head.getLong(0) * 9L / 10L
 
   /** Per-doc minhash signature: `(cell = doc_id mod 16, doc_id, sig)` —
-    * ONE row per doc. EXACTLY the q49 derivation
-    * ([[DedupOps.minhashPairsOn]]): one md5 per distinct trigram
-    * shingle, `NUM_SEEDS` cheap derived hashes, per-seed minima in ONE
-    * groupBy. Docs with < 3 tokens have no shingles and emit no rows
-    * (they can only exact-match). The LSH band keys are NOT stored —
+    * ONE row per doc, `sig` = the [[DedupOps.minhashSignatures]] minima
+    * (the q49 family's own kernel) in seed order. Docs with < 3 tokens
+    * have no shingles and emit no rows (they can only exact-match).
+    * The LSH band keys are NOT stored —
     * band b's key is just `sig[2b] "|" sig[2b+1]`, fully derivable
     * row-locally at read time ([[bandsOf]]), so persisting band rows
     * would store the signature 6× for zero information (measured: the
     * band-row layout made the near ledger larger than the corpus text
     * on the 50k fixture). `cell` is pure layout (compaction sizing /
     * 16-way listing split), like the exact table's hash nibble. */
-  private[ops] def sigRows(docs: DataFrame): DataFrame = {
-    import DedupOps.{HASH_P, NUM_SEEDS}
-    val g = TextOps.shingled(docs)
-      .select(col("doc_id"), explode(col("grams")).as("gram"))
-      .withColumn("hm",
-        expr("conv(substring(md5(gram), 1, 15), 16, 10)").cast("long") % HASH_P)
-    val minAggs = (0 until NUM_SEEDS).map { sd =>
-      min(expr(s"(hm * ${2 * sd + 1} + ${7919 * sd}) % $HASH_P")).as(s"m$sd")
-    }
-    g.groupBy(col("doc_id")).agg(minAggs.head, minAggs.tail: _*)
-      .withColumn("sig", array((0 until NUM_SEEDS).map(i => col(s"m$i")): _*))
+  private[ops] def sigRows(docs: DataFrame): DataFrame =
+    DedupOps.minhashSignatures(TextOps.shingled(docs))
       .select(pmod(col("doc_id"), lit(16L)).cast("int").as("cell"),
-              col("doc_id"), col("sig"))
-  }
+              col("doc_id"),
+              array((0 until DedupOps.NUM_SEEDS).map(i => col(s"m$i")): _*).as("sig"))
 
   /** Row-local LSH band derivation over a `(doc_id, sig)` frame — used
     * on BOTH sides of the near join (the streamed store scan and the
@@ -579,9 +569,15 @@ object DedupLedger {
     * frame otherwise. */
   private val SKIP_SLACK = 4L
   /** Stores whose ledger-banded row bound stays under this keep NO
-    * persisted stats: their runtime histogram is a sub-100 ms job the
-    * memo amortizes, and stamping stats would tax every fixture-scale
-    * APPEND with a bump aggregation for nothing. Corpus-scale stores
+    * persisted stats, and stamping stats would tax every fixture-scale
+    * APPEND with a bump aggregation. The price is the runtime
+    * histogram, and the memo only amortizes it between verdicts of
+    * ONE snapshot version: a streamed tick publishes a new version
+    * every tick, so a streamed small store misses the memo on every
+    * tick. Measured on a 4-vCPU box (the benchmark's ingest_tick: a
+    * 4500-doc ledger, 250-doc ticks), each tick pays a ledger count
+    * (2 jobs) plus the bucket histogram (3 jobs), about 0.45-0.55 s,
+    * and 2 of the tick's 4 ledger scans. Corpus-scale stores
     * (where the histogram job is the per-tick cost the round-17 A/B
     * isolated) get stats at build/refresh and cheap slack bumps per
     * delta. */
@@ -2231,24 +2227,8 @@ object DedupLedger {
       |  GROUP BY bdoc) nr ON nr.bdoc = b.doc_id
       |ORDER BY b.doc_id""".stripMargin
 
-  private[ops] def baseDuck: String = {
-    import DedupOps.{HASH_P, NUM_SEEDS, ROWS_PER_BAND, trigramDuck}
-    s"""g0 AS (
-      |  SELECT doc_id, list_distinct($trigramDuck) AS grams
-      |  FROM (SELECT doc_id, str_split(text, ' ') AS toks FROM documents)),
-      |g AS (SELECT doc_id, unnest(grams) AS gram FROM g0),
-      |hh AS (SELECT doc_id,
-      |         ('0x' || substr(md5(gram), 1, 15))::BIGINT % $HASH_P AS hm
-      |       FROM g),
-      |sig AS (
-      |  SELECT doc_id, s,
-      |    min((hm * (2 * s + 1) + 7919 * s) % $HASH_P) AS mh
-      |  FROM hh CROSS JOIN (SELECT unnest(range(0, $NUM_SEEDS)) AS s) seeds
-      |  GROUP BY doc_id, s),
-      |bands AS (
-      |  SELECT doc_id, s // $ROWS_PER_BAND AS band,
-      |    string_agg(mh::VARCHAR, '|' ORDER BY s) AS bkey
-      |  FROM sig GROUP BY doc_id, s // $ROWS_PER_BAND),
+  private[ops] def baseDuck: String =
+    s"""${sigBandsDuck(materialized = false)},
       |cut AS (SELECT (max(doc_id) * 9) // 10 AS c FROM documents),
       |eh AS (SELECT doc_id, sha256(text) AS h FROM documents),
       |batch AS (SELECT doc_id, h FROM eh, cut WHERE doc_id >= c),
@@ -2257,6 +2237,32 @@ object DedupLedger {
       |  GROUP BY h),
       |hist_sig_docs AS (SELECT doc_id FROM documents, cut WHERE doc_id < c)"""
       .stripMargin
+
+  /** DuckDB mirror of [[sigRows]] then [[bandsOf]]: the `g0` .. `bands`
+    * CTE chain every text-ledger oracle starts with (one md5 per
+    * distinct trigram, NUM_SEEDS derived minima, band keys in seed
+    * order). `materialized` marks sig/bands for oracles that reference
+    * them repeatedly: DuckDB inlines unmaterialized chains
+    * exponentially. */
+  private def sigBandsDuck(materialized: Boolean): String = {
+    import DedupOps.{HASH_P, NUM_SEEDS, ROWS_PER_BAND, trigramDuck}
+    val m = if (materialized) " MATERIALIZED" else ""
+    s"""g0 AS (
+      |  SELECT doc_id, list_distinct($trigramDuck) AS grams
+      |  FROM (SELECT doc_id, str_split(text, ' ') AS toks FROM documents)),
+      |g AS (SELECT doc_id, unnest(grams) AS gram FROM g0),
+      |hh AS (SELECT doc_id,
+      |         ('0x' || substr(md5(gram), 1, 15))::BIGINT % $HASH_P AS hm
+      |       FROM g),
+      |sig AS$m (
+      |  SELECT doc_id, s,
+      |    min((hm * (2 * s + 1) + 7919 * s) % $HASH_P) AS mh
+      |  FROM hh CROSS JOIN (SELECT unnest(range(0, $NUM_SEEDS)) AS s) seeds
+      |  GROUP BY doc_id, s),
+      |bands AS$m (
+      |  SELECT doc_id, s // $ROWS_PER_BAND AS band,
+      |    string_agg(mh::VARCHAR, '|' ORDER BY s) AS bkey
+      |  FROM sig GROUP BY doc_id, s // $ROWS_PER_BAND)""".stripMargin
   }
 
   /** One survivor GENERATION as CTEs (`{p}_ex`, `{p}_nr`, `{p}_surv`,
@@ -2302,24 +2308,8 @@ object DedupLedger {
     * inlines unmaterialized CTE chains exponentially. Instantiated at
     * (8/10, 9/10) for q151's compacted two-decile lifecycle and at
     * (9/10, 19/20) for q152's two streamed ticks over the last decile. */
-  private def twoGenBaseDuck(cutLo: String, cutMid: String): String = {
-    import DedupOps.{HASH_P, NUM_SEEDS, ROWS_PER_BAND, trigramDuck}
-    s"""g0 AS (
-      |  SELECT doc_id, list_distinct($trigramDuck) AS grams
-      |  FROM (SELECT doc_id, str_split(text, ' ') AS toks FROM documents)),
-      |g AS (SELECT doc_id, unnest(grams) AS gram FROM g0),
-      |hh AS (SELECT doc_id,
-      |         ('0x' || substr(md5(gram), 1, 15))::BIGINT % $HASH_P AS hm
-      |       FROM g),
-      |sig AS MATERIALIZED (
-      |  SELECT doc_id, s,
-      |    min((hm * (2 * s + 1) + 7919 * s) % $HASH_P) AS mh
-      |  FROM hh CROSS JOIN (SELECT unnest(range(0, $NUM_SEEDS)) AS s) seeds
-      |  GROUP BY doc_id, s),
-      |bands AS MATERIALIZED (
-      |  SELECT doc_id, s // $ROWS_PER_BAND AS band,
-      |    string_agg(mh::VARCHAR, '|' ORDER BY s) AS bkey
-      |  FROM sig GROUP BY doc_id, s // $ROWS_PER_BAND),
+  private def twoGenBaseDuck(cutLo: String, cutMid: String): String =
+    s"""${sigBandsDuck(materialized = true)},
       |cutlo AS (SELECT $cutLo AS c FROM documents),
       |cutmid AS (SELECT $cutMid AS c FROM documents),
       |eh AS MATERIALIZED (
@@ -2333,7 +2323,6 @@ object DedupLedger {
       |batch_b AS (SELECT doc_id, h FROM eh, cutmid WHERE doc_id >= c),
       |batch AS (SELECT doc_id, h FROM eh, cutlo WHERE doc_id >= c)"""
       .stripMargin
-  }
 
   /** The full two-generation oracle: base at the given cuts, survivor
     * chain (generation B dedups against generation A's reps), final
@@ -2864,24 +2853,8 @@ object DedupLedger {
     // ledger plus gen 1's re-admitted representatives. sig/bands are
     // MATERIALIZED — two survivor steps reference them repeatedly and
     // DuckDB inlines unmaterialized CTE chains exponentially.
-    "q177_ledger_forget" -> {
-      import DedupOps.{HASH_P, NUM_SEEDS, ROWS_PER_BAND, trigramDuck}
-      s"""WITH g0 AS (
-        |  SELECT doc_id, list_distinct($trigramDuck) AS grams
-        |  FROM (SELECT doc_id, str_split(text, ' ') AS toks FROM documents)),
-        |g AS (SELECT doc_id, unnest(grams) AS gram FROM g0),
-        |hh AS (SELECT doc_id,
-        |         ('0x' || substr(md5(gram), 1, 15))::BIGINT % $HASH_P AS hm
-        |       FROM g),
-        |sig AS MATERIALIZED (
-        |  SELECT doc_id, s,
-        |    min((hm * (2 * s + 1) + 7919 * s) % $HASH_P) AS mh
-        |  FROM hh CROSS JOIN (SELECT unnest(range(0, $NUM_SEEDS)) AS s) seeds
-        |  GROUP BY doc_id, s),
-        |bands AS MATERIALIZED (
-        |  SELECT doc_id, s // $ROWS_PER_BAND AS band,
-        |    string_agg(mh::VARCHAR, '|' ORDER BY s) AS bkey
-        |  FROM sig GROUP BY doc_id, s // $ROWS_PER_BAND),
+    "q177_ledger_forget" ->
+      s"""WITH ${sigBandsDuck(materialized = true)},
         |cut AS (SELECT (max(doc_id) * 9) // 10 AS c FROM documents),
         |eh AS (SELECT doc_id, sha256(text) AS h FROM documents),
         |batch AS MATERIALIZED (
@@ -2917,8 +2890,7 @@ object DedupLedger {
         |FROM batch b
         |LEFT JOIN s2_ex ON s2_ex.bdoc = b.doc_id
         |LEFT JOIN s2_nr ON s2_nr.bdoc = b.doc_id
-        |ORDER BY gen, doc_id""".stripMargin
-    },
+        |ORDER BY gen, doc_id""".stripMargin,
 
     // q151: two chained survivor generations (decile 8 vs history-80,
     // decile 9 vs history-80 + gen-8 reps), then the verdict of BOTH

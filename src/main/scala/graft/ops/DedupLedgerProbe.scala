@@ -2,8 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** Test/profiling access to DedupLedger's private row derivations. */
+/** Test/profiling access to DedupLedger's private exact-row derivation. */
 object DedupLedgerProbe {
   def exactRowsOf(docs: DataFrame): DataFrame = DedupLedger.exactRows(docs)
-  def sigRowsOf(docs: DataFrame): DataFrame = DedupLedger.sigRows(docs)
 }

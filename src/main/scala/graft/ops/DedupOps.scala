@@ -109,6 +109,38 @@ object DedupOps {
       .drop("_i", "_j")
   }
 
+  /** One row per shingle of a `(doc_id, grams, ...)` frame: the `keep`
+    * columns plus `gram`. The MinHash kernel and the TextOps shingle
+    * index explode here: plain `explode` makes Catalyst infer a
+    * `size(grams) > 0` filter, substitute the grams alias into it (so
+    * the tokenizer's `split` re-runs once per trigram, O(tokens²) per
+    * doc) and push it below the rebalance exchange, onto the scan's
+    * single partition. `explode_outer` infers nothing; the null filter
+    * drops the one row it emits for an empty array. */
+  private[ops] def gramRows(g0: DataFrame, keep: String*): DataFrame =
+    g0.select(keep.map(col) :+ explode_outer(col("grams")).as("gram"): _*)
+      .filter(col("gram").isNotNull)
+
+  /** MinHash signature per doc of a `(doc_id, grams)` frame: `(doc_id,
+    * m0 .. m11)`, one column per seed. Docs without shingles emit no
+    * row. One md5 per shingle, then NUM_SEEDS cheap derived hashes
+    * h_s = ((h % P) * (2s+1) + 7919s) % P — exact int64 in both
+    * engines, so the oracle replicates signatures bit-for-bit while
+    * the expensive digest runs once per shingle, not once per seed.
+    * All NUM_SEEDS minima are computed as separate aggregates in ONE
+    * groupBy over the shingle rows (no seed explosion: the exploded
+    * form pushes NUM_SEEDS x |shingles| rows through two shuffles).
+    * The q49 family and the text dedup ledger both sign with this. */
+  private[ops] def minhashSignatures(g0: DataFrame): DataFrame = {
+    val withHm = gramRows(g0, "doc_id")
+      .withColumn("hv", expr(s"conv(substring(md5(gram), 1, 15), 16, 10)").cast("long"))
+      .withColumn("hm", expr(s"hv % $HASH_P"))
+    val minAggs = (0 until NUM_SEEDS).map { sd =>
+      min(expr(s"(hm * ${2 * sd + 1} + ${7919 * sd}) % $HASH_P")).as(s"m$sd")
+    }
+    withHm.groupBy(col("doc_id")).agg(minAggs.head, minAggs.tail: _*)
+  }
+
   /** MinHash signatures -> LSH band buckets -> candidate pairs -> exact
     * jaccard verification, over a (doc_id, grams) shingle frame — the
     * q49 pipeline as a reusable operator.
@@ -148,25 +180,7 @@ object DedupOps {
     */
   private[graft] def minhashPairsOn(g0: DataFrame, bandCap: Int = BAND_CAP,
                                     pairBudgetPerDoc: Option[Int] = None): DataFrame = {
-    // explode_outer + null filter: plain explode would infer a
-    // non-empty-array filter (moot over the checkpointed RDD, kept for
-    // shape parity with the TextOps index)
-    val g = g0.select(col("doc_id"), explode_outer(col("grams")).as("gram"))
-      .filter(col("gram").isNotNull)
-    // One md5 per shingle, then NUM_SEEDS cheap derived hashes
-    // h_s = ((h % P) * (2s+1) + 7919s) % P — exact int64 in both
-    // engines, so the oracle replicates signatures bit-for-bit while
-    // the expensive digest runs once per shingle, not once per seed.
-    // All NUM_SEEDS minima are computed as separate aggregates in ONE
-    // groupBy over the shingle rows (no seed explosion: the exploded
-    // form pushes NUM_SEEDS x |shingles| rows through two shuffles).
-    val withHm = g
-      .withColumn("hv", expr(s"conv(substring(md5(gram), 1, 15), 16, 10)").cast("long"))
-      .withColumn("hm", expr(s"hv % $HASH_P"))
-    val minAggs = (0 until NUM_SEEDS).map { sd =>
-      min(expr(s"(hm * ${2 * sd + 1} + ${7919 * sd}) % $HASH_P")).as(s"m$sd")
-    }
-    val sig = withHm.groupBy(col("doc_id")).agg(minAggs.head, minAggs.tail: _*)
+    val sig = minhashSignatures(g0)
     // band key = the band's row minhashes joined in seed order
     val bandStructs = (0 until NUM_SEEDS / ROWS_PER_BAND).map { b =>
       val ms = (0 until ROWS_PER_BAND).map(r => s"m${b * ROWS_PER_BAND + r}")

@@ -1322,12 +1322,13 @@ object IndexStore {
   private val fileIndexCache = new DriverCache[(String, String),
     org.apache.spark.sql.execution.datasources.InMemoryFileIndex](512)
   private val declaredFrameCache =
-    new DriverCache[(Int, String, String), DataFrame](512)
+    new DriverCache[(String, String, String), DataFrame](512)
   private def readDeclared(spark: SparkSession, dir: String, sub: String,
                            files: Seq[String], ddl: String): DataFrame = {
     val base = s"$dir/$sub"
     val fileset = files.mkString("\n")
-    val fkey = (System.identityHashCode(spark), s"$base|$ddl", fileset)
+    val fkey = (org.apache.spark.sql.graftshim.Shim.sessionId(spark),
+      s"$base|$ddl", fileset)
     declaredFrameCache.get(fkey).getOrElse {
       val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
       val ikey = (s"$base|$ddl", fileset)
@@ -1368,12 +1369,14 @@ object IndexStore {
     * vary per store (optional label, rider columns), so only the
     * builder can declare them. Trusted only for snapshots at or above
     * the stamping version: a time-travel read below it may predate
-    * the stamped shape. Unstamped stores read exactly as before. */
+    * the stamped shape. Unstamped stores read exactly as before, and
+    * so does a blank stamp: it would otherwise declare a zero-column
+    * read schema. */
   private def stampedDdls(dir: String, snapVersion: Int): Map[String, String] = {
     val p = props(dir)
     if (p.get("ddl.version")
           .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-          .exists(_ <= snapVersion)) p
+          .exists(_ <= snapVersion)) p.filter(_._2.trim.nonEmpty)
     else Map.empty
   }
 

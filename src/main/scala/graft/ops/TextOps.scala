@@ -114,8 +114,7 @@ object TextOps {
     * condition instead of a silent empty answer.
     */
   def rareTailDiagnostic(g0: DataFrame, dfCap: Int = DF_CAP): (Long, Long) = {
-    val df = g0.select(explode_outer(col("grams")).as("gram"))
-      .filter(col("gram").isNotNull)
+    val df = DedupOps.gramRows(g0)
       .groupBy(col("gram")).agg(count(lit(1)).as("df"))
       .agg(coalesce(sum(when(col("df").between(2, dfCap), 1L).otherwise(0L)),
              lit(0L)).as("retained"),
@@ -151,8 +150,7 @@ object TextOps {
     * reads two longs.
     */
   def pairWitnessDiagnostic(g0: DataFrame, dfCap: Int = DF_CAP): (Long, Long) = {
-    val r = g0.select(explode_outer(col("grams")).as("gram"))
-      .filter(col("gram").isNotNull)
+    val r = DedupOps.gramRows(g0)
       .groupBy(col("gram")).agg(count(lit(1)).as("df"))
       .agg(coalesce(sum(when(col("df").between(2, dfCap), 1L).otherwise(0L)),
              lit(0L)).as("retained"),
@@ -177,8 +175,7 @@ object TextOps {
     * (checkpointed) shingle frame, like every diagnostic in this family.
     */
   def coverageDiagnostic(g0: DataFrame, dfCap: Int = DF_CAP): (Long, Long) = {
-    val g = g0.select(col("doc_id"), explode_outer(col("grams")).as("gram"))
-      .filter(col("gram").isNotNull)
+    val g = DedupOps.gramRows(g0, "doc_id")
     val rare = g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, dfCap))
     val covered = g.join(rare.select(col("gram")), Seq("gram"), "left_semi")
@@ -196,8 +193,7 @@ object TextOps {
     * callers re-reference it for verification.
     */
   private[ops] def invertedIndexCandidates(gc: DataFrame, dfCap: Int): DataFrame =
-    gc.select(col("doc_id"), explode_outer(col("grams")).as("gram"))
-      .filter(col("gram").isNotNull)
+    DedupOps.gramRows(gc, "doc_id")
       .groupBy(col("gram"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
       .filter(size(col("ds")).between(2, dfCap))

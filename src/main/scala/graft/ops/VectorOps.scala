@@ -1207,7 +1207,7 @@ object VectorOps {
     val sig = (snap.version.toLong << 32) ^
       scala.util.hashing.MurmurHash3.orderedHash(
         snap.codes ++ snap.vectors ++ snap.tombs).toLong
-    val key = s"${System.identityHashCode(spark)}|$indexDir"
+    val key = s"${org.apache.spark.sql.graftshim.Shim.sessionId(spark)}|$indexDir"
     val cached = storeFramesCache.get(key).orNull
     if (cached != null && cached._1 == sig) (cached._2, cached._3)
     else {

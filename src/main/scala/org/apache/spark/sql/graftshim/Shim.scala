@@ -29,6 +29,12 @@ object Shim {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed
 
+  /** The session's unique id (classic-only; `System.identityHashCode`
+    * can repeat across two live sessions, this cannot) — the key for
+    * driver caches that hold frames bound to one session. */
+  def sessionId(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+
   /** Drain the async listener bus (private[spark]) — deterministic
     * job-count assertions in specs instead of fixed sleeps. */
   def waitForListenerBus(sc: org.apache.spark.SparkContext,

@@ -713,4 +713,32 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.headVersion(dir).contains(head),
       "post-vacuum replay of a healed tag double-ingested")
   }
+
+  test("blank ddl stamp: the read falls back to footer inference, same rows " +
+       "as an unstamped store") {
+    val hist = (0L until 32L)
+      .map(i => (i, s"alpha beta gamma delta epsilon token$i end"))
+      .toDF("doc_id", "text")
+    def ledger(name: String): String = {
+      val dir = java.nio.file.Files.createTempDirectory(name).toString + "/led"
+      graft.ops.DedupLedger.buildLedger(hist, dir)
+      dir
+    }
+    val blank = ledger("stamp-blank")
+    IndexStore.setProps(blank, Map("ddl.codes" -> " ", "ddl.vectors" -> " "))
+    val plain = ledger("stamp-none")
+    // an empty value deletes the key: the store reads as never stamped
+    IndexStore.setProps(plain,
+      Map("ddl.version" -> "", "ddl.codes" -> "", "ddl.vectors" -> ""))
+    assert(!IndexStore.props(plain).keys.exists(_.startsWith("ddl.")))
+    def rows(dir: String) = {
+      val (codes, vecs) = IndexStore.frames(spark, dir, IndexStore.snapshot(dir))
+      (codes.schema, vecs.schema,
+       codes.orderBy("h").collect().toSeq, vecs.orderBy("doc_id").collect().toSeq)
+    }
+    val (bc, bv, bcr, bvr) = rows(blank)
+    assert(bc.nonEmpty && bv.nonEmpty, "a blank stamp became a zero-column schema")
+    assert((bc, bv, bcr, bvr) == rows(plain))
+    assert(bcr.size == 32 && bvr.size == 32)
+  }
 }

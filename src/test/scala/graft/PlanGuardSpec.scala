@@ -315,6 +315,44 @@ class PlanGuardSpec extends SparkSpec {
       s"a history scan leaked into the serve-side verdict plan:\n$p")
   }
 
+  /** Conditions of the optimized plan's Filters that hold a lambda over
+    * `split(text, ...)`. */
+  private def lambdaSplitFilters(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction, StringSplit}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    def splitsText(e: Expression): Boolean = e match {
+      case s: StringSplit => s.str.references.exists(_.name == "text")
+      case _ => false
+    }
+    def lambdaOverSplit(e: Expression): Boolean = e match {
+      case l: LambdaFunction => l.find(splitsText).isDefined
+      case _ => false
+    }
+    val hits = scala.collection.mutable.Buffer[String]()
+    df.queryExecution.optimizedPlan.foreach {
+      case f: Filter if f.condition.find(lambdaOverSplit).isDefined =>
+        hits += f.condition.toString
+      case _ => ()
+    }
+    hits.toSeq
+  }
+
+  test("ledger signatures: no filter re-splits each document inside a lambda") {
+    // a plain explode over the shingle array infers a size(grams) > 0
+    // filter that inlines the trigram lambda over split(text, ' ') and
+    // lands below the rebalance exchange: O(tokens²) per doc on one core
+    val docs = Tables.documents(spark, sf)
+    val sigs = graft.ops.DedupLedger.signatureRows(docs)
+    assert(lambdaSplitFilters(sigs).isEmpty, sigs.queryExecution.optimizedPlan)
+    val verdict = SparkEntry.queries("q139_ledger_dedup")(spark, sf)
+    assert(lambdaSplitFilters(verdict).isEmpty, verdict.queryExecution.optimizedPlan)
+    // negative control: the guard sees the trap when it is there
+    val trap = graft.ops.TextOps.shingled(docs).select(explode(col("grams")))
+    assert(lambdaSplitFilters(trap).nonEmpty,
+      s"no inferred lambda filter under plain explode — the guard is vacuous:\n" +
+        trap.queryExecution.optimizedPlan)
+  }
+
   test("q96b: partial sketch buffers cross the shuffle, not the chunk stream") {
     val p = plan("q96b_chunk_topk_sketch")
     assert(p.contains("partial_spacesavingtopk")

@@ -87,4 +87,37 @@ class RelationParitySpec extends SparkSpec {
     assert(dv.orderBy("doc_id").collect().toSeq ==
       iv.select(dv.columns.map(col): _*).orderBy("doc_id").collect().toSeq)
   }
+
+  test("two live sessions: each frame memo serves only the session that built it") {
+    import org.apache.spark.sql.graftshim.Shim.sessionId
+    import graft.ops.VectorOps
+    val other = spark.newSession()
+    assert(sessionId(other) != sessionId(spark))
+    // declared ledger reads
+    val dir = freshLedger()
+    val snap = IndexStore.snapshot(dir)
+    def read(s: org.apache.spark.sql.SparkSession) = IndexStore.frames(s, dir,
+      snap, Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
+      declaredSchema = true)._2
+    val mine = read(spark)
+    val theirs = read(other)
+    assert(mine.sparkSession eq spark)
+    assert(theirs.sparkSession eq other,
+      "the second session was served a frame bound to the first")
+    assert((read(spark) eq mine) && (read(other) eq theirs),
+      "each session must still hit its own memo entry")
+    assert(mine.orderBy("doc_id").collect().toSeq ==
+      theirs.orderBy("doc_id").collect().toSeq)
+    // ANN serve frames
+    val emb = GenFixtures.clusteredEmbeddings(spark, 300).localCheckpoint()
+    val idx = java.nio.file.Files.createTempDirectory("relpar-ann").toString
+    VectorOps.buildIvfPqIndex(emb, idx, k = 4)
+    for (s <- Seq(spark, other)) {
+      VectorOps.servedIvfPqCandidates(s, idx, emb, numQueries = 3,
+        probes = 2, rerank = 5)
+      val cached = VectorOps.storeFramesCache.get(s"${sessionId(s)}|$idx")
+      assert(cached.exists(_._2.sparkSession eq s),
+        "ANN store frames must be cached under their own session's id")
+    }
+  }
 }
