@@ -30,7 +30,7 @@ object AnnCalibrate {
     val denom = 5 * nq
 
     for ((k, iters) <- Seq((8, 1), (8, 4), (10, 4), (10, 8), (10, 16))) {
-      val (quant0, coarse0, cb0, codes0) =
+      val (quant0, coarse0, cb0, codes0, _) =
         ops.VectorOps.ivfPqBuild(emb, k, coarseIters = iters)
       val quant = quant0.localCheckpoint()
       val coarse = coarse0.localCheckpoint()

@@ -77,6 +77,15 @@ object Bench {
         "idle-box baseline — per-query numbers in this artifact are " +
         "likely uniformly inflated by box state, not code")
     }
+    // name -> "<class>: <message>" of the last failure each warm-up,
+    // timed query or artifact write raised, so a -1 (or a missing
+    // artifact) carries its cause; truncated so a stack-trace-sized
+    // message cannot crowd out the tail of the line
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def record(name: String, t: Throwable): Unit =
+      errors(name) = s"${t.getClass.getName}: ${t.getMessage}".take(200)
+    def warm(name: String)(body: => Any): Unit =
+      try { body; () } catch { case t: Throwable => record(s"warmup:$name", t) }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(f => f.exists(name.startsWith)) }
     // q128/q129/q130 serve from a persisted index; build it here,
@@ -84,36 +93,31 @@ object Bench {
     // cold tmpdir
     if (Seq("q128", "q129", "q130")
           .exists(p => selected.exists(_._1.startsWith(p))))
-      try ops.VectorOps.warmStoredIndexes(spark, sfDir)
-      catch { case _: Throwable => () } // a build failure still surfaces in the timed run
+      // a build failure still surfaces in the timed run
+      warm("stored_indexes")(ops.VectorOps.warmStoredIndexes(spark, sfDir))
     // same serve-only discipline for the dedup ledger (q139/q140/q145)
     // and the tick pipeline (q148, which also consumes the ledger)
     if (Seq("q139", "q140", "q145", "q148")
           .exists(p => selected.exists(_._1.startsWith(p))))
-      try { ops.DedupLedger.ensureLedger(spark, sfDir); () }
-      catch { case _: Throwable => () }
+      warm("ledger")(ops.DedupLedger.ensureLedger(spark, sfDir))
     // the round-13 artifact stores: q151's compacted ledger, q152's
     // cloneable history seed, and the tokenizer registry (q153 serves
     // from it; q148's tick reads its v1 vocabulary from it)
     if (Seq("q151").exists(p => selected.exists(_._1.startsWith(p))))
-      try { ops.DedupLedger.ensureCompactLedger(spark, sfDir); () }
-      catch { case _: Throwable => () }
+      warm("compact_ledger")(ops.DedupLedger.ensureCompactLedger(spark, sfDir))
     if (Seq("q152").exists(p => selected.exists(_._1.startsWith(p))))
-      try { ops.DedupLedger.ensureHistoryLedger(spark, sfDir); () }
-      catch { case _: Throwable => () }
+      warm("history_ledger")(ops.DedupLedger.ensureHistoryLedger(spark, sfDir))
     if (Seq("q148", "q153").exists(p => selected.exists(_._1.startsWith(p))))
-      try { ops.BpeOps.ensureTokenizerRegistry(spark, sfDir); () }
-      catch { case _: Throwable => () }
+      warm("tokenizer_registry")(ops.BpeOps.ensureTokenizerRegistry(spark, sfDir))
     // BPE merge caches: q141-q143 and q150 read the full-corpus artifact
     if (Seq("q141", "q142", "q143", "q150")
           .exists(p => selected.exists(_._1.startsWith(p))))
-      try { ops.BpeOps.trainedMerges(spark, sfDir); () }
-      catch { case _: Throwable => () }
+      warm("bpe_merges")(ops.BpeOps.trainedMerges(spark, sfDir))
     val results = selected.map { case (name, fn) =>
       val times = (0 until runs).flatMap { _ =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case _: Throwable => None }
+        catch { case t: Throwable => record(name, t); None }
       }.sorted
       // a query with zero successful runs is reported as -1, never as a
       // plausible elapsed time. median = the headline; min = the
@@ -150,16 +154,30 @@ object Bench {
         s""","control_min_sum":${math.rint(c * 1000) / 1000}""").getOrElse("") +
       boxFactor.map(f =>
         s""","box_factor":${math.rint(f * 1000) / 1000}""").getOrElse("")
-    val summary = s""""metric":"total","unit":"sec","value":$total,"total_min":$totalMin,"n_ok":$nOk,"n_catalog":${results.size},"failed":$fs,"runs":$runs$bf,"sf":"$sfDir""""
-    val json = s"""{$summary,"queries":$qs,"queries_min":$qmins,$summary}"""
-    println(json)
-    // belt-and-braces: the full untruncated line as a repo-local file.
-    // Only for FULL-catalog runs — a SPARK_GRAFT_BENCH_ONLY dev loop
-    // must not clobber the committed full artifact with a 2-query file
-    if (only.isEmpty)
+    def jsonStr(v: String): String = v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+    def line(): String = {
+      val es = errors.map { case (k, v) => s"\"${jsonStr(k)}\":\"${jsonStr(v)}\"" }
+        .mkString("{", ",", "}")
+      val summary = s""""metric":"total","unit":"sec","value":$total,"total_min":$totalMin,"n_ok":$nOk,"n_catalog":${results.size},"failed":$fs,"errors":$es,"runs":$runs$bf,"sf":"$sfDir""""
+      s"""{$summary,"queries":$qs,"queries_min":$qmins,$summary}"""
+    }
+    // belt-and-braces: the full untruncated line as a repo-local file,
+    // written before the line is printed so a failed write is reported
+    // in it. Only for FULL-catalog runs — a SPARK_GRAFT_BENCH_ONLY dev
+    // loop must not clobber the committed full artifact with a 2-query
+    // file
+    if (only.isEmpty) {
+      val json = line()
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get("BENCH_full_local.json"), json + "\n")
-      catch { case _: Throwable => () }
+      catch { case t: Throwable => record("artifact:BENCH_full_local.json", t) }
+    }
+    println(line())
     spark.stop()
   }
 }

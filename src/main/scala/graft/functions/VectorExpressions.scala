@@ -1,10 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Runtime kernel for [[LongArrayDot]]: tight primitive loop over the
   * unsafe array data — no per-element lambda dispatch (Spark's
@@ -103,6 +106,264 @@ case class SrpBandCodes(child: Expression, bands: Int, bits: Int)
     copy(child = newChild)
 }
 
+/** Driver-held rational centroids (id, s, n), decoded once from the
+  * `array<struct<int, array<bigint>, bigint>>` literal the IVF-PQ
+  * layer builds with `typedLit` — a k-means cell table, or one
+  * sub-space of a PQ codebook. Serializable: codegen ships it to the
+  * executors through the plan's reference array. */
+final case class CentroidTable(ids: Array[Int], sums: Array[Array[Long]],
+                               counts: Array[Long])
+
+object CentroidTable {
+  def decode(a: ArrayData): CentroidTable =
+    if (a == null) CentroidTable(Array.empty, Array.empty, Array.empty)
+    else {
+      val k = a.numElements()
+      val rows = (0 until k).map(i => a.getStruct(i, 3))
+      CentroidTable(rows.map(_.getInt(0)).toArray,
+        rows.map(_.getArray(1).toLongArray()).toArray,
+        rows.map(_.getLong(2)).toArray)
+    }
+
+  /** A per-sub-space codebook literal (`array<array<struct<...>>>`). */
+  def decodeAll(a: ArrayData): Array[CentroidTable] =
+    if (a == null) Array.empty
+    else Array.tabulate(a.numElements())(i =>
+      decode(if (a.isNullAt(i)) null else a.getArray(i)))
+}
+
+/** Runtime kernels for [[NearestCentroid]], [[PqEncode]] and
+  * [[AdcFold]]: the IVF-PQ stack's nearest-centroid argmin and ADC
+  * table fold as primitive loops, each bit-identical to its
+  * higher-order SQL reference form (`VectorOps.nearestCentroidHof`,
+  * `pqEncodeHof`, `adcFoldHof`):
+  *  - the distance to a rational centroid (s, n) is the exact int64
+  *    numerator sum_d (x_d*n - s_d)^2 and ONE IEEE division by
+  *    (n*n).toDouble; `Math.*Exact` raises on overflow like the
+  *    session's ANSI bigint arithmetic;
+  *  - a null vector element, or a width that differs from the
+  *    centroid's (zip_with pads with nulls), gives a null distance;
+  *  - the argmin is `array_min` over (dist, id) structs: a null
+  *    distance sorts first, ties go to the lowest id, an empty table
+  *    gives null.
+  */
+object IvfKernels {
+  private def hasNull(v: ArrayData, off: Int, len: Int): Boolean = {
+    var j = 0
+    while (j < len) { if (v.isNullAt(off + j)) return true; j += 1 }
+    false
+  }
+
+  /** Distance of v[off, off + len) to centroid `c` of `t`; NaN stands
+    * for SQL's null distance (a real distance is never NaN). */
+  private def dist(v: ArrayData, off: Int, len: Int, nullVec: Boolean,
+                   t: CentroidTable, c: Int): Double = {
+    val s = t.sums(c)
+    val n = t.counts(c)
+    if (nullVec || s.length != len) Double.NaN
+    else {
+      var acc = 0L
+      var j = 0
+      while (j < len) {
+        val d = Math.subtractExact(Math.multiplyExact(v.getLong(off + j), n), s(j))
+        acc = Math.addExact(acc, Math.multiplyExact(d, d))
+        j += 1
+      }
+      val denom = Math.multiplyExact(n, n)
+      if (denom == 0L) throw new ArithmeticException("Division by zero")
+      acc.toDouble / denom.toDouble
+    }
+  }
+
+  /** Index into `t` of the nearest centroid to v[off, off + len) in
+    * (dist, id) struct order — null distance first, then distance, then
+    * id; -1 when `t` is empty. */
+  private def argmin(v: ArrayData, off: Int, len: Int, t: CentroidTable): Int = {
+    val nullVec = hasNull(v, off, len)
+    var best = -1
+    var bestDist = 0.0
+    var c = 0
+    while (c < t.ids.length) {
+      val d = dist(v, off, len, nullVec, t, c)
+      val before =
+        if (best < 0) true
+        else if (d.isNaN || bestDist.isNaN)
+          d.isNaN && (!bestDist.isNaN || t.ids(c) < t.ids(best))
+        else d < bestDist || (d == bestDist && t.ids(c) < t.ids(best))
+      if (before) { best = c; bestDist = d }
+      c += 1
+    }
+    best
+  }
+
+  /** (dist, cell) of the nearest centroid, or null for an empty table. */
+  def nearest(q: ArrayData, t: CentroidTable): InternalRow = {
+    val len = q.numElements()
+    val c = argmin(q, 0, len, t)
+    if (c < 0) null
+    else {
+      val d = dist(q, 0, len, hasNull(q, 0, len), t, c)
+      new GenericInternalRow(Array[Any](if (d.isNaN) null else d, t.ids(c)))
+    }
+  }
+
+  /** One code per sub-space: the nearest codeword of v's slice
+    * [sub*subdim, sub*subdim + subdim) (shorter past v's end, like
+    * `slice`); null where the sub-space codebook is empty. */
+  def encode(v: ArrayData, cb: Array[CentroidTable], subdim: Int): ArrayData = {
+    val size = v.numElements()
+    val codes = new Array[Any](cb.length)
+    var sub = 0
+    while (sub < cb.length) {
+      val off = sub * subdim
+      val len = math.max(0, math.min(subdim, size - off))
+      val c = argmin(v, off, len, cb(sub))
+      codes(sub) = if (c < 0) null else cb(sub).ids(c)
+      sub += 1
+    }
+    new GenericArrayData(codes)
+  }
+
+  /** ADC distance: a left fold from 0.0 of dtab[i*ksub + codes[i]] over
+    * sub-spaces i = 0..m-1 — `element_at` indexing (1-based, negative
+    * from the end, out of range raises); null if any looked-up code or
+    * table entry is null. */
+  def adcFold(codes: ArrayData, dtab: ArrayData, m: Int, ksub: Int): java.lang.Double = {
+    val size = dtab.numElements()
+    var acc = 0.0
+    var isNull = false
+    var i = 0
+    while (i < m) {
+      if (i >= codes.numElements())
+        throw new ArrayIndexOutOfBoundsException(
+          s"code index ${i + 1} outside array of ${codes.numElements()}")
+      if (codes.isNullAt(i)) isNull = true
+      else {
+        val e = i * ksub + codes.getInt(i) + 1
+        val pos = if (e > 0) e - 1 else if (e < 0) size + e else -1
+        if (pos < 0 || pos >= size)
+          throw new ArrayIndexOutOfBoundsException(
+            s"table index $e outside array of $size")
+        if (dtab.isNullAt(pos)) isNull = true
+        else acc += dtab.getDouble(pos)
+      }
+      i += 1
+    }
+    if (isNull) null else acc
+  }
+}
+
+/** Nearest rational centroid of an array<bigint> vector:
+  * `struct<dist: double, cell: int>` against a foldable
+  * (cell, s, n) table — k-means assignment as one static call per row.
+  * The table is decoded once (interpreted: lazily per instance;
+  * codegen: into the plan's reference array). */
+case class NearestCentroid(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  @transient private lazy val table =
+    CentroidTable.decode(right.eval().asInstanceOf[ArrayData])
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("dist", DoubleType), StructField("cell", IntegerType)))
+
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (right.foldable) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure("centroids must be a literal")
+
+  override def eval(input: InternalRow): Any = {
+    val q = left.eval(input)
+    if (q == null) null else IvfKernels.nearest(q.asInstanceOf[ArrayData], table)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val tab = ctx.addReferenceObj("centroids", table,
+      "graft.functions.CentroidTable")
+    val q = left.genCode(ctx)
+    ev.copy(code = code"""
+      ${q.code}
+      boolean ${ev.isNull} = ${q.isNull};
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = null;
+      if (!${ev.isNull}) {
+        ${ev.value} = graft.functions.IvfKernels.nearest(${q.value}, $tab);
+        ${ev.isNull} = ${ev.value} == null;
+      }""")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** PQ encode of an array<bigint> vector: one nearest-codeword id per
+  * sub-space of width `subdim`, against a foldable per-sub-space
+  * codebook literal (`array<array<struct<code, s, n>>>`, one entry per
+  * sub-space). */
+case class PqEncode(left: Expression, right: Expression, subdim: Int)
+    extends BinaryExpression {
+
+  @transient private lazy val codebook =
+    CentroidTable.decodeAll(right.eval().asInstanceOf[ArrayData])
+
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (right.foldable) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure("codebook must be a literal")
+
+  override def eval(input: InternalRow): Any = {
+    val v = left.eval(input)
+    if (v == null) null
+    else IvfKernels.encode(v.asInstanceOf[ArrayData], codebook, subdim)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cb = ctx.addReferenceObj("codebook", codebook,
+      "graft.functions.CentroidTable[]")
+    val v = left.genCode(ctx)
+    ev.copy(code = code"""
+      ${v.code}
+      boolean ${ev.isNull} = ${v.isNull};
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = null;
+      if (!${ev.isNull}) {
+        ${ev.value} = graft.functions.IvfKernels.encode(${v.value}, $cb, $subdim);
+      }""")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** ADC distance of a PQ code array against a dense per-query table
+  * (`m` sub-spaces × `ksub` codewords, sub-major): the left fold of `m`
+  * table lookups in sub-space order. */
+case class AdcFold(left: Expression, right: Expression, m: Int, ksub: Int)
+    extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(codes: Any, dtab: Any): Any =
+    IvfKernels.adcFold(codes.asInstanceOf[ArrayData],
+      dtab.asInstanceOf[ArrayData], m, ksub)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (codes, dtab) => {
+      val r = ctx.freshName("adist")
+      s"""java.lang.Double $r =
+         |  graft.functions.IvfKernels.adcFold($codes, $dtab, $m, $ksub);
+         |if ($r == null) ${ev.isNull} = true; else ${ev.value} = $r;""".stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 object VectorFunctions {
   /** Codegen'd exact int64 dot product over quantized vectors. */
   def ldot(a: Column, b: Column): Column = {
@@ -114,5 +375,24 @@ object VectorFunctions {
   def srpCodes(q: Column, bands: Int, bits: Int): Column = {
     import org.apache.spark.sql.graftshim.Shim.{column, expression}
     column(SrpBandCodes(expression(q), bands, bits))
+  }
+
+  /** Codegen'd nearest rational centroid: struct(dist, cell) against a
+    * centroid-table literal. */
+  def nearestCentroid(q: Column, centroids: Column): Column = {
+    import org.apache.spark.sql.graftshim.Shim.{column, expression}
+    column(NearestCentroid(expression(q), expression(centroids)))
+  }
+
+  /** Codegen'd PQ encode against a per-sub-space codebook literal. */
+  def pqEncode(v: Column, codebook: Column, subdim: Int): Column = {
+    import org.apache.spark.sql.graftshim.Shim.{column, expression}
+    column(PqEncode(expression(v), expression(codebook), subdim))
+  }
+
+  /** Codegen'd ADC fold of PQ codes over a dense distance table. */
+  def adcFold(codes: Column, dtab: Column, m: Int, ksub: Int): Column = {
+    import org.apache.spark.sql.graftshim.Shim.{column, expression}
+    column(AdcFold(expression(codes), expression(dtab), m, ksub))
   }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.VectorFunctions.ldot
+import graft.functions.VectorFunctions.{adcFold, ldot, nearestCentroid, pqEncode}
 
 /** Embedding similarity-search operators (SURVEY.md §2.9): brute-force
   * cosine top-k as the exact baseline and an IVF-style bucketed variant
@@ -62,10 +62,10 @@ object VectorOps {
 
   // ---- k-means IVF index CONSTRUCTION (q124) -------------------------
   // q52/q64 probe cells that something else built; this is the builder:
-  // Lloyd's algorithm as pure DataFrame ops. Assignment is a broadcast
-  // of the k (sum-vector, count) rational centroids against the
-  // streaming corpus — one row-local higher-order expression per
-  // (vector, cell), NO shuffle; the centroid update is one
+  // Lloyd's algorithm as pure DataFrame ops. Assignment holds the k
+  // (sum-vector, count) rational centroids as a literal against the
+  // streaming corpus — one compiled nearest-centroid call per vector,
+  // NO shuffle; the centroid update is one
   // map-side-combined groupBy over (cell, dim). That is the 100 TB
   // k-means topology (the corpus never moves; only k x dim partial
   // sums do). Distance uses the q64-proven exact-integer form:
@@ -170,10 +170,6 @@ object VectorOps {
       .toDF("cell", "s", "n")
   }
 
-  /** One assignment pass: each vector to its nearest rational centroid
-    * (dist asc, cell asc). Input `quant`: (vec_id, q); `cents`:
-    * (cell, s, n). Output: (vec_id, q, cell, dist).
-    */
   /** A centroid table collected to coordinator rows — k bounded entries,
     * the serve path's IvfPqMeta discipline applied to training. */
   private def centRowsOf(cents: DataFrame): Seq[(Int, Seq[Long], Long)] =
@@ -181,33 +177,37 @@ object VectorOps {
       .map(r => (r.getInt(0), r.getSeq[Long](1), r.getLong(2)))
       .sortBy(_._1).toSeq
 
-  /** Row-local assignment against driver-held centroid rows: transform
-    * over a constant (cell, s, n) array + array_min's (dist, cell)
-    * struct ordering — the same exact-int numerators, the same one IEEE
-    * division, the same tie-break the old broadcast-join + min_by form
-    * produced, bit-identically. What it deletes is a full-corpus hash
-    * exchange PER LLOYD ROUND (the old groupBy(vec_id, q) carried the
-    * vector array through the shuffle key): at iters=8 that was 8
-    * corpus shuffles per build — the design note always claimed "the
-    * corpus never moves, only k×dim partial sums do", and now the plan
-    * agrees (the only exchange left in a round is kmeansUpdate's
-    * map-side-combined k×dim partial-sum aggregation).
+  /** Reference form of [[kmeansAssignRows]]' `NearestCentroid` as
+    * higher-order SQL over a `_cents` (cell, s, n) literal column —
+    * VectorExprSpec checks the kernel against it. */
+  private[graft] val nearestCentroidHof =
+    """array_min(transform(_cents, c -> struct(
+      |  cast(aggregate(zip_with(q, c._2, (x, sc) -> (x * c._3 - sc) * (x * c._3 - sc)),
+      |                 cast(0 AS bigint), (a, t) -> a + t) AS double)
+      |    / cast(c._3 * c._3 AS double) AS dist,
+      |  c._1 AS cell)))""".stripMargin
+
+  /** One assignment pass: each vector to its nearest rational centroid
+    * (dist asc, cell asc). Input `quant`: (vec_id, q, riders...);
+    * `rows`: driver-held (cell, s, n). Output: the input plus (cell,
+    * dist).
+    *
+    * Row-local: one compiled `NearestCentroid` call per vector against
+    * the centroid literal — exact int64 numerators, one IEEE division,
+    * ties to the lowest cell, bit-identical to [[nearestCentroidHof]].
+    * There is no corpus exchange in a Lloyd round: the corpus never
+    * moves, only kmeansUpdate's map-side-combined k×dim partial sums
+    * do.
     */
   private[graft] def kmeansAssignRows(quant: DataFrame,
       rows: Seq[(Int, Seq[Long], Long)]): DataFrame =
     quant
-      .withColumn("_cents", typedLit(rows))
-      .withColumn("m", expr(
-        """array_min(transform(_cents, c -> struct(
-          |  cast(aggregate(zip_with(q, c._2, (x, sc) -> (x * c._3 - sc) * (x * c._3 - sc)),
-          |                 cast(0 AS bigint), (a, t) -> a + t) AS double)
-          |    / cast(c._3 * c._3 AS double) AS dist,
-          |  c._1 AS cell)))""".stripMargin))
+      .withColumn("m", nearestCentroid(col("q"), typedLit(rows)))
       // rider columns (e.g. a filterable metadata attribute) pass
       // through untouched — assignment adds (cell, dist), drops nothing
       .withColumn("cell", col("m.cell"))
       .withColumn("dist", col("m.dist"))
-      .drop("_cents", "m")
+      .drop("m")
 
   private[graft] def kmeansAssign(quant: DataFrame, cents: DataFrame): DataFrame =
     kmeansAssignRows(quant, centRowsOf(cents))
@@ -343,59 +343,64 @@ object VectorOps {
       .select(col("vec_id"), col("sub"),
               expr(s"slice(q, sub * $PQ_SUBDIM + 1, $PQ_SUBDIM)").as("sq"))
 
+  /** Per-sub-space singleton centroids from full-width seed vectors
+    * (cell, v), in [[cbRowsOf]]'s layout: sub-space `sub` of seed
+    * `cell` is v[sub*PQ_SUBDIM, (sub+1)*PQ_SUBDIM), count 1. */
+  private def seedCodebook(seeds: Seq[(Int, Array[Long])])
+      : Seq[Seq[(Int, Seq[Long], Long)]] =
+    (0 until PQ_M).map(sub => seeds.sortBy(_._1).map { case (cell, v) =>
+      (cell, v.slice(sub * PQ_SUBDIM, (sub + 1) * PQ_SUBDIM).toSeq, 1L) })
+
   /** Deterministic init, q124's held-out scheme per sub-space: the
     * PQ_KSUB lowest NON-QUERY vec_ids' sub-vectors as singleton
-    * centroids, cells renumbered 0..PQ_KSUB-1. */
-  private[graft] def pqInit(subs: DataFrame): DataFrame = {
-    val init = subs
+    * centroids, cells renumbered 0..PQ_KSUB-1. Input: (vec_id,
+    * `vecCol`) full-width vectors; output: the ≤ PQ_M × PQ_KSUB seed
+    * rows as coordinator state, [[cbRowsOf]]'s layout. */
+  private[graft] def pqInit(vecs: DataFrame, vecCol: String)
+      : Seq[Seq[(Int, Seq[Long], Long)]] = {
+    val seeds = vecs
       .filter(col("vec_id") >= SEED_FROM && col("vec_id") < SEED_FROM + PQ_KSUB)
-      .select(col("sub"), (col("vec_id") - SEED_FROM).cast("int").as("cell"),
-              col("sq").as("s"), lit(1L).as("n"))
-      .localCheckpoint()
-    requireSeeds(init.count(), PQ_M.toLong * PQ_KSUB, "pqInit")
-    init
+      .select(col("vec_id"), col(vecCol)).collect()
+      .map(r => ((r.getLong(0) - SEED_FROM).toInt, r.getSeq[Long](1).toArray))
+    requireSeeds(seeds.length.toLong, PQ_KSUB.toLong, "pqInit")
+    seedCodebook(seeds.toSeq)
   }
 
   /** [[pqInit]] for training frames that need not contain the global
     * seed ids (a refine generation trains on ONE store region): the
-    * PQ_KSUB lowest non-query vec_ids PRESENT per sub-space, renumbered
-    * 0..KSUB-1 in id order — the same held-out singleton-centroid
-    * discipline, anchored to the frame instead of the id space. A
-    * region with fewer than KSUB vectors just trains fewer codewords
-    * (the encode argmin already ranges over present codes only). */
-  private[graft] def pqInitPresent(subs: DataFrame): DataFrame = {
-    val spark = subs.sparkSession
-    import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("sub")).orderBy(col("vec_id"))
-    // ≤ PQ_M × PQ_KSUB seed rows — coordinator state like every trained
-    // codebook: collected and re-injected as a local relation, so the
-    // downstream broadcast join costs no exchange job (the previous
-    // localCheckpoint form paid a materialization AND an exchange)
-    subs
+    * PQ_KSUB lowest non-query vec_ids PRESENT, renumbered 0..KSUB-1 in
+    * id order — the same held-out singleton-centroid discipline,
+    * anchored to the frame instead of the id space. A region with fewer
+    * than KSUB vectors just trains fewer codewords (the encode argmin
+    * already ranges over present codes only). */
+  private[graft] def pqInitPresent(vecs: DataFrame, vecCol: String)
+      : Seq[Seq[(Int, Seq[Long], Long)]] =
+    seedCodebook(vecs
       .filter(col("vec_id") >= SEED_FROM)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= PQ_KSUB)
-      .select(col("sub"), (col("rn") - 1).cast("int").as("cell"),
-              col("sq").as("s"), lit(1L).as("n"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2), r.getLong(3)))
-      .toSeq.toDF("sub", "cell", "s", "n")
-  }
+      .orderBy(col("vec_id")).limit(PQ_KSUB)
+      .select(col(vecCol)).collect()
+      .map(_.getSeq[Long](0).toArray)
+      .zipWithIndex.map { case (v, cell) => (cell, v) }.toSeq)
 
-  /** Nearest sub-centroid per (vector, sub-space): q124's exact-int64
-    * numerator + (dist, cell) tie-break, with `sub` in the broadcast-join
-    * and group keys. Output: (vec_id, sub, sq, cell). */
-  private[graft] def pqAssign(subs: DataFrame, cents: DataFrame): DataFrame =
-    subs.join(broadcast(cents), "sub")
-      .withColumn("dn", expr(
-        """aggregate(zip_with(sq, s, (x, sc) -> (x * n - sc) * (x * n - sc)),
-          |          cast(0 AS bigint), (a, t) -> a + t)""".stripMargin))
-      .withColumn("dist", col("dn").cast("double") /
-                          (col("n") * col("n")).cast("double"))
-      .groupBy(col("vec_id"), col("sub"), col("sq"))
-      .agg(min(struct(col("dist"), col("cell"))).as("m"))
-      .select(col("vec_id"), col("sub"), col("sq"), col("m.cell").as("cell"))
+  /** One generalized-Lloyd round of the per-sub-space codebook from
+    * driver-held `init` rows, row-local until the update: each vector is
+    * PQ-encoded against `init` (its nearest codeword per sub-space,
+    * exact-int64 distances, ties to the lowest code), the codes
+    * posexplode to (sub, cell) rows next to the sub-vector slice, and
+    * [[pqUpdate]] sums them — ONE aggregation, no join and no exploded
+    * corpus×M×kSub distance rows. `posexplode_outer` + the null filter
+    * keep Catalyst from inferring a size filter that would encode every
+    * vector twice; the null codes it drops are sub-spaces with no
+    * codeword. vec_id is the index key (one row per vector). Input:
+    * (vec_id, `vecCol`); output: (sub, cell, s, n). */
+  private[graft] def pqTrain(vecs: DataFrame, vecCol: String,
+      init: Seq[Seq[(Int, Seq[Long], Long)]]): DataFrame =
+    pqUpdate(vecs
+      .select(posexplode_outer(pqCodesCol(col(vecCol), init)).as(Seq("sub", "cell")),
+              col(vecCol).as("v"))
+      .filter(col("cell").isNotNull)
+      .select(col("sub"), col("cell"),
+              expr(s"slice(v, sub * $PQ_SUBDIM + 1, $PQ_SUBDIM)").as("sq")))
 
   /** Per-(sub, cell) rational centroid update — q124's kmeansUpdate with
     * the sub-space id carried through both groupBys. kSub * M * dim
@@ -415,30 +420,28 @@ object VectorOps {
   /** The full PQ lifecycle (q126): train the per-sub-space codebook,
     * encode the corpus to PQ_M codes per vector, serve top-`topK` ADC
     * neighbors for the first `numQueries` vectors. The ADC sum is an
-    * explicit left fold in sub-space order (aggregate over a sequence),
-    * so the M-term IEEE summation is bit-deterministic cross-engine.
+    * explicit left fold in sub-space order ([[adcFoldCol]]), so the
+    * M-term IEEE summation is bit-deterministic cross-engine.
     */
   def pqAdcTopK(emb: DataFrame, numQueries: Int, topK: Int,
                 checkpointDir: Option[String] = None): DataFrame = {
     requireHeldOut(numQueries)
     val spark = emb.sparkSession
     val quant = emb.withColumn("q", expr(quantExpr)).select(col("vec_id"), col("q"))
-    val subs = pin(pqSubvectors(quant), checkpointDir) // train + encode + queries
-    val cents = pin(pqUpdate(pqAssign(subs, pqInit(subs))),
+    val train = pin(quant, checkpointDir) // init + train
+    val cents = pin(pqTrain(train, "q", pqInit(train, "q")),
       checkpointDir) // <= PQ_M * PQ_KSUB rows: the whole codebook
     // encode row-locally against the collected codebook (the training
     // above stays distributed) — no corpus×M exchange, no per-vector
     // collect_list shuffle
     val codes = quant
-      .withColumn("_cb", typedLit(cbRowsOf(cents)))
-      .withColumn("codes", pqCodesCol("q"))
-      .select(col("vec_id"), col("codes"))
+      .select(col("vec_id"), pqCodesCol(col("q"), cbRowsOf(cents)).as("codes"))
     // dense per-query ADC table over every (sub, cell) slot; slots Lloyd
     // dropped get +Infinity — no code can reference them, the filler only
     // keeps the positional index dense for element_at
     val grid = spark.range(PQ_M).select(col("id").cast("int").as("sub"))
       .crossJoin(spark.range(PQ_KSUB).select(col("id").cast("int").as("cell")))
-    val qdist = subs.filter(col("vec_id") < numQueries)
+    val qdist = pqSubvectors(train.filter(col("vec_id") < numQueries))
       .join(broadcast(cents), "sub")
       .withColumn("dn", expr(
         """aggregate(zip_with(sq, s, (x, sc) -> (x * n - sc) * (x * n - sc)),
@@ -458,10 +461,7 @@ object VectorOps {
       .partitionBy(col("qid")).orderBy(col("adist"), col("vec_id"))
     codes.crossJoin(broadcast(dtabs))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("adist", expr(
-        s"""aggregate(transform(sequence(0, ${PQ_M - 1}),
-           |  i -> element_at(dtab, i * $PQ_KSUB + element_at(codes, i + 1) + 1)),
-           |  cast(0 AS double), (a, x) -> a + x)""".stripMargin))
+      .withColumn("adist", adcFoldCol)
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= topK)
       .select(col("qid"), col("vec_id"), col("adist"), col("rn"))
@@ -562,26 +562,6 @@ object VectorOps {
   private def residExpr(vec: String): String =
     s"zip_with($vec, s, (x, sd) -> cast(floor((x * n - sd) / cast(n AS double)) AS bigint))"
 
-  /** The BUILD half of the IVFADC+R stack, shared by the in-query q127
-    * form and the persisted-index q128 form: returns (quant, coarse,
-    * codebook, codes) where `codes` = (vec_id, cell, codes) CARRIES the
-    * coarse cell — the cell rides the sub-space pipeline as a
-    * functionally-dependent group key, so the corpus-sized
-    * codes ⋈ cell-assignment join that used to close the build (VERDICT
-    * r10's one named scale-killer) no longer exists at all. The only
-    * corpus-sized exchanges left are the per-vector groupBys of the
-    * encode itself (hash on vec_id — inherent to producing one code row
-    * per vector).
-    *
-    * RESIDUAL encoding (IVFADC proper): PQ trains on x - centroid(x),
-    * not on x — with the coarse structure subtracted, the residual
-    * distribution is tight around 0 and a small codebook covers it
-    * (measured on fixtures/sf1vec: raw-vector PQ reads 26% ADC-only
-    * recall@5, residual PQ lifts the whole serving stack — see
-    * SCALING.md round-10). Residuals stay on the integer scale via
-    * the floor-quantized exact form, so train/encode/ADC reuse the
-    * exact-int machinery verbatim.
-    */
   /** Generalized Lloyd training: `iters` update rounds from the held-out
     * init. iters=1 is the gated q124 trajectory's training half (init →
     * assign → update); each extra round re-assigns and re-sums — one
@@ -604,15 +584,17 @@ object VectorOps {
     val spark = quant.sparkSession
     import spark.implicits._
     var rows = centRowsOf(kmeansInit(quant, k))
+    // the centroid width takes kmeansUpdate's one-aggregation path
+    val dim = rows.headOption.map(_._2.length)
     var assigned = kmeansAssignRows(quant, rows)
-    rows = centRowsOf(kmeansUpdate(assigned))
+    rows = centRowsOf(kmeansUpdate(assigned, dim))
     var i = 1
     while (i < iters) {
       val live = rows.map(_._1).toSet
       if ((0 until k).exists(c => !live(c)))
         rows = centRowsOf(reseedDead(rows.toDF("cell", "s", "n"), assigned, k))
       assigned = kmeansAssignRows(quant, rows)
-      rows = centRowsOf(kmeansUpdate(assigned))
+      rows = centRowsOf(kmeansUpdate(assigned, dim))
       i += 1
     }
     rows.toDF("cell", "s", "n")
@@ -655,17 +637,12 @@ object VectorOps {
     }
   }
 
-  /** Coarse-assign + residual-encode `quantDf` against learned `coarse`
-    * cells: (vec_id, cell, rq) — shared by build (whole corpus) and
-    * APPEND (new vectors only, against stored cells). */
-  private[graft] def residualsOf(quantDf: DataFrame,
-                                 coarse: DataFrame): DataFrame =
-    residualsOfAssigned(kmeansAssign(quantDf, coarse), coarse)
-
-  /** [[residualsOf]] over an ALREADY-ASSIGNED frame — shared with the
-    * retrain path, which materializes one assignment and derives
-    * residuals, vectors, and codebook training from it; one body keeps
-    * the two paths arithmetically identical by construction. */
+  /** Floor-quantized residuals of an ALREADY-ASSIGNED frame against its
+    * `coarse` cells: (vec_id, cell, rq, riders) — shared by build (whole
+    * corpus), APPEND (new vectors only, against stored cells) and the
+    * refine, each of which assigns once and derives residuals, vectors
+    * (and codebook training) from that one assignment; one body keeps
+    * the paths arithmetically identical by construction. */
   private def residualsOfAssigned(assigned: DataFrame,
                                   coarse: DataFrame): DataFrame = {
     val riders = assigned.columns
@@ -678,15 +655,6 @@ object VectorOps {
       .select((Seq(col("vec_id"), col("cell"), col("rq")) ++
                riders.map(col)): _*)
   }
-
-  /** Residual sub-vectors with the coarse cell carried through (constant
-    * per vec_id — a rider key, not a new grouping dimension). */
-  private[graft] def residSubvectors(resid: DataFrame): DataFrame =
-    resid
-      .select(col("vec_id"), col("cell"),
-              explode(expr(s"sequence(0, ${PQ_M - 1})")).as("sub"), col("rq"))
-      .select(col("vec_id"), col("cell"), col("sub"),
-              expr(s"slice(rq, sub * $PQ_SUBDIM + 1, $PQ_SUBDIM)").as("sq"))
 
   /** The trained codebook collected to coordinator rows, grouped by
     * sub-space (sub ascending; entries (code, s, n) code-ascending).
@@ -701,22 +669,10 @@ object VectorOps {
       .map(t => (t._2, t._3, t._4)).sortBy(_._1).toSeq)
   }
 
-  /** The PQ encode as ONE ROW-LOCAL projection over a full-width vector
-    * column: per sub-space, slice + argmin over the driver-held
-    * codebook entries via array_min's (dist, code) struct ordering —
-    * the exact arithmetic and tie-break the old explode → broadcast
-    * join → double groupBy pipeline produced, bit-identically. Deletes
-    * the corpus×M exploded exchange AND both per-vector shuffles from
-    * every encode: at 100 TB the encode pass becomes a pure map over
-    * the corpus scan (codebooks are coordinator state — kSub×M rational
-    * centroids — exactly as FAISS holds them), which is what lets the
-    * code table be written partition-aligned with its source with zero
-    * data movement. */
-  private def pqCodesCol(vecCol: String): Column = expr(
-    // outer transform materializes each sub-vector slice ONCE (16 per
-    // vector), the inner argmin then reuses it across the ≤16 codebook
-    // entries — slicing inside the inner lambda would re-allocate per
-    // (sub, code) pair, 16× the array churn for identical values
+  /** Reference form of [[pqCodesCol]]' `PqEncode` as higher-order SQL
+    * over `vecCol` and a `_cb` codebook literal column in [[cbRowsOf]]'s
+    * layout — VectorExprSpec checks the kernel against it. */
+  private[graft] def pqEncodeHof(vecCol: String): String =
     s"""transform(
        |  transform(sequence(0, ${PQ_M - 1}), sub ->
        |    struct(sub AS sub, slice($vecCol, sub * $PQ_SUBDIM + 1, $PQ_SUBDIM) AS sq)),
@@ -724,7 +680,36 @@ object VectorOps {
        |    cast(aggregate(zip_with(t.sq, c._2, (x, sc) -> (x * c._3 - sc) * (x * c._3 - sc)),
        |                   cast(0 AS bigint), (a, t2) -> a + t2) AS double)
        |      / cast(c._3 * c._3 AS double) AS dist,
-       |    c._1 AS code))).code)""".stripMargin)
+       |    c._1 AS code))).code)""".stripMargin
+
+  /** The PQ encode as ONE ROW-LOCAL projection over a full-width vector
+    * column: per sub-space, the nearest codeword of the driver-held
+    * codebook (`cbRows`, [[cbRowsOf]]'s layout) by exact-int64 distance,
+    * ties to the lowest code, an empty sub-space codebook giving a null
+    * code — one compiled `PqEncode` call per vector, bit-identical to
+    * [[pqEncodeHof]]. No corpus×M exchange and no per-vector shuffle:
+    * at 100 TB the encode pass is a pure map over the corpus
+    * scan (codebooks are coordinator state — kSub×M rational centroids
+    * — exactly as FAISS holds them), which is what lets the code table
+    * be written partition-aligned with its source with zero data
+    * movement. */
+  private def pqCodesCol(vec: Column,
+                         cbRows: Seq[Seq[(Int, Seq[Long], Long)]]): Column =
+    pqEncode(vec, typedLit(cbRows), PQ_SUBDIM)
+
+  /** Reference form of [[adcFoldCol]]'s `AdcFold` as higher-order SQL
+    * over (codes, dtab) columns — VectorExprSpec checks the kernel
+    * against it. */
+  private[graft] val adcFoldHof: String =
+    s"""aggregate(transform(sequence(0, ${PQ_M - 1}),
+       |  i -> element_at(dtab, i * $PQ_KSUB + element_at(codes, i + 1) + 1)),
+       |  cast(0 AS double), (a, x) -> a + x)""".stripMargin
+
+  /** ADC distance of a code row: PQ_M lookups into its query's dense
+    * (sub, code) table `dtab`, summed as a left fold from 0.0 in
+    * sub-space order (null when a code is null). */
+  private def adcFoldCol: Column =
+    adcFold(col("codes"), col("dtab"), PQ_M, PQ_KSUB)
 
   /** Encode residual vectors to (vec_id, cell, codes) against a
     * driver-held codebook — shared by build and append (append encodes
@@ -735,20 +720,11 @@ object VectorOps {
     val riders = resid.columns
       .filterNot(c => c == "vec_id" || c == "cell" || c == "rq").toSeq
     resid
-      .withColumn("_cb", typedLit(cbRows))
-      .withColumn("codes", pqCodesCol("rq"))
-      .select((Seq(col("vec_id"), col("cell"), col("codes")) ++
+      .select((Seq(col("vec_id"), col("cell"),
+                   pqCodesCol(col("rq"), cbRows).as("codes")) ++
                riders.map(col)): _*)
   }
 
-  /** Encode residuals against the store's generation-correct
-    * codebooks: rows assigned to a refined cell use that cell's
-    * generation codebook (`<dir>/codebook2`), all others the base
-    * codebook — one row-local encode pass per generation PRESENT IN
-    * THE STORE (bounded by the refine count, never the batch), each
-    * with its cells' rows filter-pushed. `gens` empty (never-refined
-    * store) is the single-codebook fast path, bit-identical to the
-    * pre-generation encode. */
   /** [[IvfPqMeta]] cells as the sorted centroid rows
     * [[kmeansAssignRows]] and `residualsOfAssigned` consume — identical
     * to `centRowsOf(coarse frame)` by construction. */
@@ -782,6 +758,14 @@ object VectorOps {
       }).reduce(_ unionByName _)
     }
 
+  /** Encode residuals against the store's generation-correct
+    * codebooks: rows assigned to a refined cell use that cell's
+    * generation codebook (`<dir>/codebook2`), all others the base
+    * codebook — one row-local encode pass per generation PRESENT IN
+    * THE STORE (bounded by the refine count, never the batch), each
+    * with its cells' rows filter-pushed. `gens` empty (never-refined
+    * store) is the single-codebook fast path, bit-identical to the
+    * pre-generation encode. */
   private def encodeGenAware(spark: SparkSession, dir: String,
       resid: DataFrame, cbRowsBase: Seq[Seq[(Int, Seq[Long], Long)]],
       gens: Map[Int, Int]): DataFrame =
@@ -799,10 +783,31 @@ object VectorOps {
       }).reduce(_ unionByName _)
     }
 
+  /** The BUILD half of the IVFADC+R stack, shared by the in-query q127
+    * form and the persisted-index q128 form: returns (quant, coarse,
+    * codebook, codes, assigned). `codes` = (vec_id, cell, codes)
+    * CARRIES the coarse cell, so no corpus-sized codes ⋈
+    * cell-assignment join closes the build (VERDICT r10's one named
+    * scale-killer). `assigned` = (vec_id, q, riders, cell, dist) is the
+    * build's ONE corpus assignment against the final cells: the
+    * residuals here, and [[buildIvfPqIndex]]'s stored vectors and
+    * `qe_base` stamp, all derive from it. Assignment, codebook training
+    * and encode are row-local; the only exchanges are the k×dim and
+    * M×kSub partial-sum aggregations.
+    *
+    * RESIDUAL encoding (IVFADC proper): PQ trains on x - centroid(x),
+    * not on x — with the coarse structure subtracted, the residual
+    * distribution is tight around 0 and a small codebook covers it
+    * (measured on fixtures/sf1vec: raw-vector PQ reads 26% ADC-only
+    * recall@5, residual PQ lifts the whole serving stack — see
+    * SCALING.md round-10). Residuals stay on the integer scale via
+    * the floor-quantized exact form, so train/encode/ADC reuse the
+    * exact-int machinery verbatim.
+    */
   private[graft] def ivfPqBuild(emb: DataFrame, k: Int,
       checkpointDir: Option[String] = None,
       coarseIters: Int = IVF_COARSE_ITERS)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     // filterable metadata (the fixture's `label`) rides the encode
     // pipeline when the input carries it — row-local passthrough, zero
     // extra movement — so the stored code table can serve FILTERED
@@ -820,32 +825,16 @@ object VectorOps {
     // (SCALING.md round-11 iters sweep)
     val coarse = pin(kmeansFit(quant, k, coarseIters, checkpointDir),
       checkpointDir) // k rows: (cell, s, n)
-    val resid = pin(residualsOf(quantL, coarse), checkpointDir)
+    val assigned = pin(kmeansAssign(quantL, coarse), checkpointDir)
+    val resid = pin(residualsOfAssigned(assigned, coarse), checkpointDir)
     // TRAINING stays distributed (per-(sub, cell) partial sums over the
-    // exploded train set); the ENCODE is a row-local projection against
-    // the collected codebook — no exploded corpus exchange
-    val rsubs = pin(residSubvectors(
-      resid.select(col("vec_id"), col("cell"), col("rq"))).drop("cell"),
-      checkpointDir)
-    val cb = pin(pqUpdate(pqAssign(rsubs, pqInit(rsubs))), checkpointDir)
+    // residuals encoded against the held-out seeds); the ENCODE is a
+    // row-local projection against the collected codebook
+    val cb = pin(pqTrain(resid, "rq", pqInit(resid, "rq")), checkpointDir)
     val codes = encodeWithCell(resid, cbRowsOf(cb))
-    (quantL, coarse, cb, codes)
+    (quantL, coarse, cb, codes, assigned)
   }
 
-  /** The SERVE half: answers top-`topK` from (coarse, codebook, codes) —
-    * frames either freshly built (q127) or read back from a persisted
-    * index (q128). With `pruneStoredPartitions` the routed cells are
-    * collected driver-side (≤ numQueries × probes already-aggregated
-    * values — the ANN router's natural home is the coordinator) and
-    * applied as a LITERAL filter, so a cell-partitioned codes store
-    * prunes to probed-cell directories at the scan (PartitionFilters in
-    * the plan; PlanGuardSpec pins it).
-    */
-  /** Stages 1+2 of the serve (route + probed-cell ADC scan): returns the
-    * `rerank`-capped candidate frame (qid, vec_id, adist) WITHOUT
-    * executing it — exposed so PlanGuardSpec can pin the scan's
-    * partition pruning, and so callers can see the three-stage server
-    * topology explicitly. */
   /** The compressed-domain scan every serve mode shares: each probed-cell
     * code row joins the (tiny, broadcast) routed-query set on its ONE
     * cell, then folds M table lookups — no float vector math in the
@@ -859,10 +848,7 @@ object VectorOps {
       .join(broadcast(qcellsDf), "cell")
       .filter(col("vec_id") =!= col("qid"))
       .join(broadcast(dtabsDf), Seq("qid", "cell"))
-      .withColumn("adist", expr(
-        s"""aggregate(transform(sequence(0, ${PQ_M - 1}),
-           |  i -> element_at(dtab, i * $PQ_KSUB + element_at(codes, i + 1) + 1)),
-           |  cast(0 AS double), (a, x) -> a + x)""".stripMargin))
+      .withColumn("adist", adcFoldCol)
       .withColumn("arn", row_number().over(wAdc))
       .filter(col("arn") <= rerank)
       .select(col("qid"), col("vec_id"), col("adist"))
@@ -994,8 +980,11 @@ object VectorOps {
     (routed, dtabRows)
   }
 
-  /** Stored-serve stage 2 as a lazy frame (the pruned probed-cell ADC
-    * scan) — also what PlanGuardSpec pins PartitionFilters on. */
+  /** Stages 1+2 of the stored serve (route + pruned probed-cell ADC
+    * scan): returns the `rerank`-capped candidate frame (qid, vec_id,
+    * adist) WITHOUT executing it — exposed so PlanGuardSpec can pin the
+    * scan's PartitionFilters, and so callers can see the three-stage
+    * server topology explicitly. */
   private[graft] def ivfPqCandidatesStored(spark: SparkSession,
       qRows: Array[(Long, Array[Long])], meta: IvfPqMeta, codes: DataFrame,
       probes: Int, rerank: Int): DataFrame = {
@@ -1147,6 +1136,12 @@ object VectorOps {
       probes, rerank, topK, None)
   }
 
+  /** The STORED serve half: answers top-`topK` from a persisted index's
+    * codes and vectors frames. The routed cells are collected
+    * driver-side (≤ numQueries × probes values — the ANN router's
+    * natural home is the coordinator) and applied as a LITERAL filter,
+    * so both cell-partitioned scans prune to probed-cell directories
+    * (PartitionFilters in the plan; PlanGuardSpec pins it). */
   private def serveFromStoreFrames(spark: SparkSession, indexDir: String,
       codesDf: DataFrame, vecsDf: DataFrame,
       qRows: Array[(Long, Array[Long])], probes: Int, rerank: Int,
@@ -1252,32 +1247,21 @@ object VectorOps {
                       probes: Int, rerank: Int, topK: Int,
                       checkpointDir: Option[String] = None,
                       coarseIters: Int = IVF_COARSE_ITERS): DataFrame = {
-    val (quant, coarse, cb, codes) = ivfPqBuild(emb, k, checkpointDir, coarseIters)
+    val (quant, coarse, cb, codes, _) = ivfPqBuild(emb, k, checkpointDir, coarseIters)
     serveIvfPq(quant, coarse, cb, codes, numQueries, probes, rerank, topK)
   }
 
-  /** Persist the IVF-PQ index so serving never pays the build again:
-    *   <dir>/coarse    — k rows (cell, s, n), the learned coarse cells
-    *   <dir>/codebook  — ≤ PQ_M × PQ_KSUB rows, the residual codebook
-    *   <dir>/codes     — (vec_id, codes) PARTITIONED BY cell
-    * Partitioning the code table by cell is what makes stored serving
-    * sub-linear: a query touches probes/k of the directories and the
-    * scan prunes the rest statically ([[serveIvfPq]]'s literal filter).
-    * At 100 TB the codes table is itself ~32× smaller than the corpus,
-    * and each cell directory is further ~1/k of that.
-    */
-  /** Mean coarse quantization error of a quantized frame against a
-    * centroid set — the DRIFT metric behind [[needsRetrain]]: vectors
-    * drawn from the trained distribution land near some centroid
-    * (error ≈ the training-time mean, stamped as `qe_base`); appended
-    * vectors from a DIVERGED distribution land far from every trained
-    * cell, their residuals overflow the PQ codebook's range, and serve
-    * recall decays (AnnDriftStudy measures the decay curve — SCALING.md
-    * round-16). One assign + avg over the frame, exact-integer inner
-    * distances like every k-means stage here. */
-  private[graft] def meanCoarseQe(quant: DataFrame,
-                                  coarse: DataFrame): Double = {
-    val row = kmeansAssign(quant, coarse).agg(avg(col("dist"))).head
+  /** Mean coarse quantization error of an assigned frame (the `dist`
+    * column [[kmeansAssignRows]] adds) — the DRIFT metric behind
+    * [[needsRetrain]]: vectors drawn from the trained distribution land
+    * near some centroid (error ≈ the training-time mean, stamped as
+    * `qe_base`); appended vectors from a DIVERGED distribution land far
+    * from every trained cell, their residuals overflow the PQ
+    * codebook's range, and serve recall decays (AnnDriftStudy measures
+    * the decay curve — SCALING.md round-16). One avg over the frame,
+    * exact-integer inner distances like every k-means stage here. */
+  private[graft] def meanCoarseQe(assigned: DataFrame): Double = {
+    val row = assigned.agg(avg(col("dist"))).head
     if (row.isNullAt(0)) 0.0 else row.getDouble(0)
   }
 
@@ -1310,7 +1294,7 @@ object VectorOps {
       (_, appended) = IndexStore.diffFrames(spark, dir, built, head)
     } yield {
       val coarse = spark.read.parquet(s"$dir/coarse")
-      meanCoarseQe(appended.select(col("vec_id"), col("q")), coarse) / base
+      meanCoarseQe(kmeansAssign(appended.select(col("vec_id"), col("q")), coarse)) / base
     }
   }
 
@@ -1333,6 +1317,18 @@ object VectorOps {
                    threshold: Double = 1.5): Boolean =
     appendedDriftRatio(spark, dir).exists(_ > threshold)
 
+  /** Persist the IVF-PQ index so serving never pays the build again:
+    *   <dir>/coarse    — k rows (cell, s, n), the learned coarse cells
+    *   <dir>/codebook  — ≤ PQ_M × PQ_KSUB rows, the residual codebook
+    *   <dir>/codes     — (vec_id, codes) PARTITIONED BY cell
+    *   <dir>/vectors   — (vec_id, q) PARTITIONED BY cell
+    * Partitioning the code table by cell is what makes stored serving
+    * sub-linear: a query touches probes/k of the directories and the
+    * scan prunes the rest statically ([[serveFromStoreFrames]]' literal
+    * filter).
+    * At 100 TB the codes table is itself ~32× smaller than the corpus,
+    * and each cell directory is further ~1/k of that.
+    */
   def buildIvfPqIndex(emb: DataFrame, dir: String, k: Int,
                       checkpointDir: Option[String] = None): Unit = {
     // clear the previous build's policy stamps FIRST: a crash anywhere
@@ -1341,7 +1337,7 @@ object VectorOps {
     // they do not describe (round-16 review find)
     if (IndexStore.headVersion(dir).isDefined)
       IndexStore.setProps(dir, Map("qe_base" -> "", "built_version" -> ""))
-    val (quant, coarse, cb, codes) = ivfPqBuild(emb, k, checkpointDir)
+    val (quant, coarse, cb, codes, assigned) = ivfPqBuild(emb, k, checkpointDir)
     coarse.write.mode("overwrite").parquet(s"$dir/coarse")
     cb.write.mode("overwrite").parquet(s"$dir/codebook")
     // data files land first, then ONE manifest snapshot covering codes
@@ -1349,7 +1345,7 @@ object VectorOps {
     // resolve _HEAD, never a directory listing)
     val vecCols = Seq(col("vec_id"), col("q"), col("cell")) ++
       (if (quant.columns.contains("label")) Seq(col("label")) else Nil)
-    val vecsWritten = kmeansAssign(quant, coarse).select(vecCols: _*)
+    val vecsWritten = assigned.select(vecCols: _*)
     IndexStore.commitRebuild(dir) {
       // explicit cell clustering before the write: the encode/assign
       // paths are now pure row-local projections (no shuffle for AQE to
@@ -1376,7 +1372,7 @@ object VectorOps {
     // honest degraded state) and clears any prior build's
     // last_replace_version so the new policy window starts clean.
     IndexStore.setProps(dir, Map(
-      "qe_base" -> meanCoarseQe(quant, coarse).toString,
+      "qe_base" -> meanCoarseQe(assigned).toString,
       "built_version" -> IndexStore.headVersion(dir).getOrElse(0).toString,
       "last_replace_version" -> "",
       // modality stamp: forget's declared-modalities guard rejects a
@@ -1696,10 +1692,8 @@ object VectorOps {
     }
     // ONE assignment of the rewritten content against the new router,
     // materialized — codes (via residuals), vectors, and the
-    // generation-codebook training all derive from it (the earlier
-    // form assigned once inside residualsOf and once for newVecs, and
-    // every lazy consumer re-executed its copy; identical arithmetic,
-    // now identical by construction)
+    // generation-codebook training all derive from it (the build does
+    // the same; identical arithmetic by construction)
     val assigned = kmeansAssignRows(quantVecs, newCents).localCheckpoint()
     mark("final assignment")
     val resid = residualsOfAssigned(assigned,
@@ -1721,15 +1715,13 @@ object VectorOps {
       if (updated.isEmpty)
         encodeGenAware(spark, dir, resid, cbRowsOf(cb), oldGens)
       else {
-        val rsubs = residSubvectors(
-          residNew.select(col("vec_id"), col("cell"), col("rq"))).drop("cell")
         // the trained generation codebook is COORDINATOR state by
         // design (≤ PQ_M × PQ_KSUB rational centroids, exactly what
         // FAISS holds and what the encode broadcasts anyway): collect
         // it ONCE and write the persisted copy from the driver rows —
         // one training job instead of checkpoint + recompute-per-
         // consumer (measured 0.4-0.5 s of the refine at gate scale)
-        val cbNewRows = cbRowsOf(pqUpdate(pqAssign(rsubs, pqInitPresent(rsubs))))
+        val cbNewRows = cbRowsOf(pqTrain(residNew, "rq", pqInitPresent(residNew, "rq")))
         // generation codebook lands BEFORE any code row that references
         // it (a generation nobody routes to is inert; the reverse order
         // could publish codes with no matching codewords across a crash)
@@ -1835,9 +1827,9 @@ object VectorOps {
     * rebuilds, and it is the executable form of the standard PQ scale
     * practice the q126 notes claim: the codebook trains on a SAMPLE and
     * encodes everything (kSub×M centroids need ~1e5 vectors regardless
-    * of corpus size). Both stages are broadcast joins against the tiny
-    * stored frames + the encode's per-vector groupBys: the new batch
-    * streams, nothing retrains, nothing already stored is rewritten.
+    * of corpus size). Both stages are row-local projections against
+    * the driver-held router and codebook: the new batch streams,
+    * nothing retrains, nothing already stored is rewritten.
     */
   def appendToIvfPqIndex(spark: SparkSession, embNew: DataFrame,
                          dir: String, tag: Option[String] = None): Unit = {
@@ -2805,7 +2797,7 @@ object VectorOps {
   }
 
   /** The PQ train+encode lifecycle as a DuckDB CTE chain, mirroring
-    * pqSubvectors/pqInit/pqAssign/pqUpdate step for step: same
+    * pqInit/pqTrain/pqUpdate and the encode step for step: same
     * deterministic init, same exact-int64 distance numerators, same
     * (dist, cell) tie-break. PARAMETERIZED by its input: reads a CTE
     * named `pqin` (vec_id, q) so the q126 oracle feeds raw quantized

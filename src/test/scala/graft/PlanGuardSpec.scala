@@ -228,6 +228,71 @@ class PlanGuardSpec extends SparkSpec {
     }
   }
 
+  /** Optimized plans of every Dataset action `body` runs — collects,
+    * counts and checkpoints included — seen by a QueryExecutionListener. */
+  private def actionPlans(body: => Unit)
+      : Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        seen.add(qe.optimizedPlan); ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.sql.graftshim.Shim.waitForListenerBus(spark.sparkContext, 60000L)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  /** `array_min` calls over a lambda (the interpreted nearest-centroid
+    * argmin) anywhere in a plan. */
+  private def lambdaArgmins(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayMin, LambdaFunction}
+    p.flatMap(_.expressions.flatMap(_.collect {
+      case m: ArrayMin if m.child.find(_.isInstanceOf[LambdaFunction]).isDefined =>
+        m.toString.take(300)
+    }))
+  }
+
+  test("IVF-PQ build: assignment, encode and PQ training run no lambda argmin; " +
+       "q126's training runs no join") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val p124 = SparkEntry.queries("q124_kmeans_ivf_build")(spark, sf)
+      .queryExecution.optimizedPlan
+    assert(lambdaArgmins(p124).isEmpty, p124)
+    // q126 trains its codebook while the frame is constructed: every
+    // action that runs (init, training, codebook collect) and the final
+    // plan (encode + ADC scan)
+    var q126: org.apache.spark.sql.DataFrame = null
+    val train126 = actionPlans {
+      q126 = SparkEntry.queries("q126_ann_pq_adc")(spark, sf)
+    }
+    assert(train126.exists(_.exists(_.isInstanceOf[Aggregate])),
+      s"no training aggregation observed:\n${train126.mkString("\n")}")
+    for (p <- train126 :+ q126.queryExecution.optimizedPlan)
+      assert(lambdaArgmins(p).isEmpty, p)
+    val joins = train126.filter(_.exists(_.isInstanceOf[Join]))
+    assert(joins.isEmpty, s"a join in q126's PQ training:\n${joins.mkString("\n")}")
+    // ivfPqBuild: coarse fit, the one assignment, codebook training,
+    // and the codebook and codes frames it returns
+    var built: Product = null
+    val buildPlans = actionPlans {
+      built = graft.ops.VectorOps.ivfPqBuild(
+        Tables.rebalance(Tables.embeddings(spark, sf)), k = 8)
+    }
+    val frames = built.productIterator.collect {
+      case df: org.apache.spark.sql.DataFrame => df.queryExecution.optimizedPlan }
+    for (p <- buildPlans ++ frames)
+      assert(lambdaArgmins(p).isEmpty, p)
+  }
+
   test("q128: serve plan prunes to probed-cell partitions; no build stage present") {
     // stage 1+2 (route + ADC scan — executes eagerly inside the full
     // serve, so pin its plan separately): the stored codes scan must

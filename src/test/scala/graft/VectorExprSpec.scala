@@ -59,6 +59,146 @@ class VectorExprSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
   }
 
+  // ---- IVF-PQ kernels vs the higher-order forms they replace --------
+  private val rnd = new scala.util.Random(42)
+  private def randVec(dim: Int, amp: Int): Seq[Long] =
+    Seq.fill(dim)((rnd.nextInt(2 * amp + 1) - amp).toLong)
+  private lazy val centers = Seq.fill(8)(randVec(64, 15000))
+  // 500 random 64-d vectors on the quantized scale (|x| ≤ 2e4) around
+  // the 8 centers
+  private lazy val vecs = (0 until 500).map(i => Tuple1(
+    centers(i % 8).zip(randVec(64, 4000)).map { case (c, e) => c + e })).toDF("q")
+  // rational centroids (cell, s, n) near the centers, listed out of cell
+  // order; cells 9 and 2 are the SAME centroid, so every vector nearest
+  // to it is a planted distance tie the lower cell must win
+  private lazy val cents: Seq[(Int, Seq[Long], Long)] = {
+    def sums(c: Int, n: Long) =
+      centers(c).zip(randVec(64, 5)).map { case (x, e) => x * n + e }
+    val base = (0 until 8).filterNot(_ == 2).map { c =>
+      val n = 1L + rnd.nextInt(20)
+      (c, sums(c, n), n)
+    }
+    val twin = sums(2, 3L)
+    ((9, twin, 3L) +: base.reverse) :+ ((2, twin, 3L))
+  }
+  private def withoutWholeStage[T](body: => T): T = {
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try body finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+  }
+  private def interpreted[T](body: => T): T = {
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try withoutWholeStage(body)
+    finally spark.conf.unset("spark.sql.codegen.factoryMode")
+  }
+  private def rootCauses(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("nearestCentroid matches the higher-order form exactly, ties to the lower cell") {
+    import graft.functions.VectorFunctions.nearestCentroid
+    import graft.ops.VectorOps
+    assert(cents.count(_._1 == 2) == 1 && cents.count(_._1 == 9) == 1)
+    val got = vecs
+      .withColumn("_cents", typedLit(cents))
+      .select(nearestCentroid($"q", typedLit(cents)).as("fast"),
+              expr(VectorOps.nearestCentroidHof).as("ref"))
+      .localCheckpoint()
+    assert(got.filter(!($"fast" <=> $"ref")).count() == 0)
+    // the tie is live: vectors land on the twin pair, and never on 9
+    val cells = got.select($"fast.cell").as[Int].collect().toSet
+    assert(cells.contains(2) && !cells.contains(9), cells)
+    assert(cells.size > 2, s"assignment degenerate: $cells")
+    // the twin's own center: equally near cells 9 and 2, cell 2 wins
+    val on = Seq(Tuple1(centers(2))).toDF("q")
+      .select(nearestCentroid($"q", typedLit(cents)).as("m")).head.getStruct(0)
+    assert(on.getInt(1) == 2)
+    // an empty table assigns nothing, like array_min of an empty array
+    assert(vecs.limit(1).select(nearestCentroid($"q",
+      typedLit(Seq.empty[(Int, Seq[Long], Long)]))).head.isNullAt(0))
+  }
+
+  /** A 16 × 4 codebook over 64-d vectors: sub-space 5 is EMPTY, and in
+    * sub-space 3 codes 11 and 4 are the same codeword (planted ties). */
+  private lazy val codebook: Seq[Seq[(Int, Seq[Long], Long)]] =
+    (0 until 16).map {
+      case 5 => Seq.empty
+      case sub =>
+        val cws = (0 until 16).map { c =>
+          val n = 1L + rnd.nextInt(8)
+          (c, randVec(4, 20000).map(_ * n), n)
+        }
+        if (sub != 3) cws
+        else cws.map { case (c, s, n) => if (c == 11) (c, cws(4)._2, cws(4)._3) else (c, s, n) }
+          .reverse
+    }
+
+  test("pqEncode matches the higher-order form exactly; empty sub-space gives a null code") {
+    import graft.functions.VectorFunctions.pqEncode
+    import graft.ops.VectorOps
+    val got = vecs
+      .withColumn("_cb", typedLit(codebook))
+      .select(pqEncode($"q", typedLit(codebook), VectorOps.PQ_SUBDIM).as("fast"),
+              expr(VectorOps.pqEncodeHof("q")).as("ref"))
+      .localCheckpoint()
+    assert(got.filter(!($"fast" <=> $"ref")).count() == 0)
+    val codes = got.select($"fast").as[Seq[Option[Int]]].collect()
+    assert(codes.forall(c => c.length == 16 && c(5).isEmpty && c.patch(5, Nil, 1).forall(_.isDefined)))
+    val sub3 = codes.map(_(3).get).toSet
+    assert(!sub3.contains(11), sub3) // code 11 only ever ties code 4
+    // a vector whose sub-space 3 IS the tied codeword: code 4 wins
+    val (_, s4, n4) = codebook(3).find(_._1 == 4).get
+    val tied = Seq(Tuple1(Seq.fill(12)(0L) ++ s4.map(_ / n4) ++ Seq.fill(48)(0L))).toDF("q")
+    assert(tied.select(pqEncode($"q", typedLit(codebook), 4)).head.getSeq[Any](0)(3) == 4)
+  }
+
+  test("adcFold matches the higher-order form exactly; a null code gives a null adist") {
+    import graft.functions.VectorFunctions.adcFold
+    import graft.ops.VectorOps
+    val rows = (0 until 500).map { i =>
+      val codes: Seq[Option[Int]] = Seq.fill(16)(Some(rnd.nextInt(16)))
+        .updated(i % 16, if (i % 7 == 0) None else Some(rnd.nextInt(16)))
+      val dtab = Seq.fill(256)(
+        if (rnd.nextInt(20) == 0) Double.PositiveInfinity else rnd.nextDouble() * 1e6)
+      (codes, dtab)
+    }
+    val got = rows.toDF("codes", "dtab")
+      .select($"codes", adcFold($"codes", $"dtab", VectorOps.PQ_M, VectorOps.PQ_KSUB).as("fast"),
+              expr(VectorOps.adcFoldHof).as("ref"))
+      .localCheckpoint()
+    assert(got.filter(!($"fast" <=> $"ref")).count() == 0)
+    val nullCode = got.filter(exists($"codes", _.isNull))
+    assert(nullCode.count() > 0 && nullCode.filter($"fast".isNotNull).count() == 0)
+    assert(got.filter($"fast".isNull).count() == nullCode.count())
+  }
+
+  test("IVF-PQ kernels: codegen, wholeStage=false and interpreted paths agree") {
+    import graft.functions.VectorFunctions.{adcFold, nearestCentroid, pqEncode}
+    val df = vecs.limit(50)
+      .select($"q", nearestCentroid($"q", typedLit(cents)).as("m"),
+              pqEncode($"q", typedLit(codebook), 4).as("codes"))
+      .withColumn("dtab", expr("transform(sequence(0, 255), i -> cast(i * 1.5 AS double))"))
+      .withColumn("adist", adcFold($"codes", $"dtab", 16, 16))
+    def run() = df.collect().toSeq.map(_.toString)
+    val on = run()
+    assert(on.nonEmpty)
+    assert(withoutWholeStage(run()) == on)
+    assert(interpreted(run()) == on)
+  }
+
+  test("IVF-PQ kernels: an int64 envelope breach throws, it never wraps") {
+    import graft.functions.VectorFunctions.{nearestCentroid, pqEncode}
+    val big = Seq(Tuple1(Seq.fill(64)(Long.MaxValue / 4))).toDF("q")
+    val cs = Seq((0, Seq.fill(64)(0L), 8L))
+    val cb = Seq.fill(16)(Seq((0, Seq.fill(4)(0L), 8L)))
+    def breaches(): Unit = {
+      val e1 = intercept[Exception](big.select(nearestCentroid($"q", typedLit(cs))).collect())
+      assert(rootCauses(e1).exists(_.isInstanceOf[ArithmeticException]), e1)
+      val e2 = intercept[Exception](big.select(pqEncode($"q", typedLit(cb), 4)).collect())
+      assert(rootCauses(e2).exists(_.isInstanceOf[ArithmeticException]), e2)
+    }
+    breaches()
+    interpreted(breaches())
+  }
+
   test("k-means IVF build (q124): Lloyd objective monotone, assignment total, clusters converge") {
     import graft.ops.VectorOps
     // clustered corpus with known geometry (the sf1vec generator at
