@@ -86,6 +86,31 @@ object Bench {
       errors(name) = s"${t.getClass.getName}: ${t.getMessage}".take(200)
     def warm(name: String)(body: => Any): Unit =
       try { body; () } catch { case t: Throwable => record(s"warmup:$name", t) }
+    // I/O-sensitive control family (ROADMAP carry-over #1): the compute
+    // canary above cannot see a storage stall, which is what inflated
+    // round 21's store-heavy queries. A fixed parquet round trip (one
+    // 4-file table, and 32 one-row files read back through a listing),
+    // min of 2 each, in a temp dir deleted afterwards; emitted as
+    // `io_control_min_sum`, never added to any total. A failure is
+    // recorded, not fatal: the catalog still runs.
+    val ioControlSum: Option[Double] =
+      if (only.nonEmpty) None
+      else try Some {
+        val tmp = java.nio.file.Files.createTempDirectory("graft-io-control")
+        def roundTrip(name: String, rows: Long, files: Int): Double =
+          (0 until 2).map { _ =>
+            val p = s"$tmp/$name"
+            val t0 = System.nanoTime()
+            spark.range(0L, rows, 1L, files)
+              .selectExpr("id", "cast(id % 97 as string) as s")
+              .write.mode("overwrite").parquet(p)
+            spark.read.parquet(p)
+              .selectExpr("sum(id)", "count(distinct s)").collect()
+            (System.nanoTime() - t0) / 1e9
+          }.min
+        try roundTrip("wide", 200000L, 4) + roundTrip("small_files", 32L, 32)
+        finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+      } catch { case t: Throwable => record("io_control", t); None }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(f => f.exists(name.startsWith)) }
     // q128/q129/q130 serve from a persisted index; build it here,
@@ -123,23 +148,28 @@ object Bench {
       // plausible elapsed time. median = the headline; min = the
       // contention-resistant statistic (a fixed workload's true cost is
       // its fastest observed run — background load only ever adds time)
-      if (times.isEmpty) (name, -1.0, -1.0)
-      else (name, times(times.size / 2), times.head)
+      if (times.isEmpty) (name, -1.0, -1.0, -1.0)
+      else (name, times(times.size / 2), times.head, times.last)
     }
-    val failed = results.collect { case (n, t, _) if t < 0 => n }
+    val failed = results.collect { case (n, t, _, _) if t < 0 => n }
     // the driver's round artifact keeps only the LAST ~2000 chars of this
     // line, which in round 11 cut the per-query maps at ~q49 alphabetical
     // (VERDICT r11 #8) — emit queries in ASCENDING min order so the
     // hottest (most diagnostic) rows sit at the end of queries_min,
     // inside the preserved tail next to the trailing summary copy
     val ordered = results.sortBy(_._3)
-    val qs = ordered.map { case (k, v, _) => s"\"" + k + "\":" + v }
+    val qs = ordered.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val qmins = ordered.map { case (k, _, m) => s"\"" + k + "\":" + m }
+    val qmins = ordered.map { case (k, _, m, _) => s"\"" + k + "\":" + m }
+      .mkString("{", ",", "}")
+    // per-query max/min over the runs: a stalled run reads far above 1
+    // even when the median hides it (measured queries only)
+    val qdisp = ordered.collect { case (k, _, m, x) if m > 0 =>
+      s"\"" + k + "\":" + math.rint(x / m * 1000) / 1000 }
       .mkString("{", ",", "}")
     val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.collect { case (_, t, _) if t >= 0 => t }.sum
-    val totalMin = results.collect { case (_, _, m) if m >= 0 => m }.sum
+    val total = results.collect { case (_, t, _, _) if t >= 0 => t }.sum
+    val totalMin = results.collect { case (_, _, m, _) if m >= 0 => m }.sum
     // summary fields at BOTH ends: the round artifact truncates the
     // captured output (round 10 kept only the last ~2000 chars; earlier
     // rounds clipped differently), so the totals/failures ride both the
@@ -152,6 +182,8 @@ object Bench {
     val bf =
       controlSum.map(c =>
         s""","control_min_sum":${math.rint(c * 1000) / 1000}""").getOrElse("") +
+      ioControlSum.map(c =>
+        s""","io_control_min_sum":${math.rint(c * 1000) / 1000}""").getOrElse("") +
       boxFactor.map(f =>
         s""","box_factor":${math.rint(f * 1000) / 1000}""").getOrElse("")
     def jsonStr(v: String): String = v.flatMap {
@@ -164,7 +196,7 @@ object Bench {
       val es = errors.map { case (k, v) => s"\"${jsonStr(k)}\":\"${jsonStr(v)}\"" }
         .mkString("{", ",", "}")
       val summary = s""""metric":"total","unit":"sec","value":$total,"total_min":$totalMin,"n_ok":$nOk,"n_catalog":${results.size},"failed":$fs,"errors":$es,"runs":$runs$bf,"sf":"$sfDir""""
-      s"""{$summary,"queries":$qs,"queries_min":$qmins,$summary}"""
+      s"""{$summary,"dispersion":$qdisp,"queries":$qs,"queries_min":$qmins,$summary}"""
     }
     // belt-and-braces: the full untruncated line as a repo-local file,
     // written before the line is printed so a failed write is reported

@@ -206,30 +206,32 @@ object DedupLedger {
         case Some(pre) => pre.join(owners, Seq("doc_id"), "left_semi")
         case None => sigRows(sv.join(owners, Seq("doc_id"), "left_semi"))
       }
-      // the two table writes are independent DAGs over materialized
-      // inputs (reps is checkpointed; sigs is a filter of a
-      // checkpointed frame or of reps) — overlap them; the commit
-      // lambda returns only when both files sets are on disk, so the
-      // manifest diff sees them exactly as the serial form did
+      // the two table writes (and the stats bump's aggregation) are
+      // independent DAGs over materialized inputs (reps is
+      // checkpointed; sigs is a filter of a checkpointed frame or of
+      // reps) — overlap them; the commit lambda returns only when both
+      // file sets are on disk, so the manifest diff sees them exactly
+      // as the serial form did
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: scala.concurrent.ExecutionContext = armWriteEc
-      val wCodes = Future {
-        reps.repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-      }
-      val wVecs = Future {
-        sigs.repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(s"$dir/vectors")
-      }
-      Await.result(wCodes, Duration.Inf)
-      Await.result(wVecs, Duration.Inf)
       bumpArmStats(dir, "vectors-hist", bandsOf(sigs), Seq("band", "bkey"),
         armFilesBefore(dir, _.vectors), "vectors",
         Some(bandsOf(IndexStore.frames(sigs.sparkSession, dir,
           IndexStore.snapshot(dir),
           Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
-          declaredSchema = true)._2)))
+          declaredSchema = true)._2))) {
+        val wCodes = Future {
+          reps.repartition(col("cell"))
+            .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
+        }
+        val wVecs = Future {
+          sigs.repartition(col("cell"))
+            .write.mode("append").partitionBy("cell").parquet(s"$dir/vectors")
+        }
+        Await.result(wCodes, Duration.Inf)
+        Await.result(wVecs, Duration.Inf)
+      }
     }
   }
 
@@ -453,10 +455,10 @@ object DedupLedger {
       // batch ⋉ verdict join, and a live bump is a second reference —
       // without the checkpoint it re-executed the whole verdict plan
       // (round-16 TickProfile find, recurred when the r17 write-time
-      // stats added the reference). Stats-less SUB-ESCALATION stores
-      // (every fixture-scale store) keep the single-reference lazy
-      // write — their bump is a zero-job no-op, so the checkpoint
-      // would be pure added cost; [[bumpWillConsume]] draws that line
+      // stats added the reference). A store whose stats were lost,
+      // under the escalation bytes, keeps the single-reference lazy
+      // write — its bump is a zero-job no-op, so the checkpoint would
+      // be pure added cost; [[bumpWillConsume]] draws that line
       // exactly (including the byte-gated escalation, ADVICE r18 #1).
       // Increment-sized by contract.
       val key = s"marks-hist-${geom.params}"
@@ -466,12 +468,13 @@ object DedupLedger {
         if (bumpWillConsume(dir, key, beforeFiles, "marks"))
           marks0.localCheckpoint()
         else marks0
-      marks.repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/marks")
       bumpArmStats(dir, key, mediaBandsOf(marks, geom),
         Seq("band", "bkey"), beforeFiles, "marks",
         Some(mediaBandsOf(IndexStore.marksFrame(marks.sparkSession, dir,
-          IndexStore.snapshot(dir), IndexStore.MARKS_DDL), geom)))
+          IndexStore.snapshot(dir), IndexStore.MARKS_DDL), geom))) {
+        marks.repartition(col("cell"))
+          .write.mode("append").partitionBy("cell").parquet(s"$dir/marks")
+      }
     }
 
   /** Fingerprint-WIDTH guard (review find): a word-count/geometry
@@ -533,8 +536,9 @@ object DedupLedger {
     *
     *   1. `bandedRows ≤ SKIP_SLACK × perItem`: volume ≤ bandedRows ×
     *      batchItems ≤ SKIP_SLACK × budget — skip with ZERO jobs
-    *      beyond the footer-read count the sentinel already memoized
-    *      (every fixture-scale marks/seqs arm lands here). The slack
+    *      (the row bound is the persisted stats' `rows`; only a store
+    *      that lost its stats pays the memoized footer count; every
+    *      fixture-scale arm lands here). The slack
     *      factor (4) trades a bounded overshoot of the HEURISTIC
     *      budget for zero measurement cost on small stores: worst
     *      case 4 000 candidate rows per batch item — the same order
@@ -568,20 +572,6 @@ object DedupLedger {
     * is the checkpointed bands when step 3 ran, the caller's original
     * frame otherwise. */
   private val SKIP_SLACK = 4L
-  /** Stores whose ledger-banded row bound stays under this keep NO
-    * persisted stats, and stamping stats would tax every fixture-scale
-    * APPEND with a bump aggregation. The price is the runtime
-    * histogram, and the memo only amortizes it between verdicts of
-    * ONE snapshot version: a streamed tick publishes a new version
-    * every tick, so a streamed small store misses the memo on every
-    * tick. Measured on a 4-vCPU box (the benchmark's ingest_tick: a
-    * 4500-doc ledger, 250-doc ticks), each tick pays a ledger count
-    * (2 jobs) plus the bucket histogram (3 jobs), about 0.45-0.55 s,
-    * and 2 of the tick's 4 ledger scans. Corpus-scale stores
-    * (where the histogram job is the per-tick cost the round-17 A/B
-    * isolated) get stats at build/refresh and cheap slack bumps per
-    * delta. */
-  private val STATS_MIN_BANDED = 100000L
   /** Consecutive skipped opportunistic self-heals before the verdict
     * side escalates to a BLOCKING stats write (VERDICT r17 #4). */
   private val HEAL_ESCALATE_AFTER = 3
@@ -633,15 +623,14 @@ object DedupLedger {
         .map(r => (r.getLong(0).toInt, r.getLong(1)))
     }
     // self-heal: the exact histogram we just paid for becomes the next
-    // verdicts' zero-job stats — persisted only when the store is
-    // corpus-scale, the head did not move since our snapshot (a later
-    // delta's growth would be missing from it), and the writer lock is
-    // FREE (never queue a read path behind a writer)
+    // verdicts' zero-job stats — persisted only when the head did not
+    // move since our snapshot (a later delta's growth would be missing
+    // from it) and the writer lock is FREE (never queue a read path
+    // behind a writer)
     // (call sites pre-filter `persisted` to version-coherent stats, so
     // reaching here with Some(st) means st is current — re-stamp only
     // when accumulated slack has made its bound loose)
-    if (bandedRows > STATS_MIN_BANDED &&
-        persisted.forall(_.slack > 0)) {
+    if (persisted.forall(_.slack > 0)) {
       def writeIfCurrent(): Boolean =
         if (IndexStore.headVersion(dir).contains(version)) {
           IndexStore.writeArmStats(dir, what, IndexStore.ArmStats(
@@ -739,26 +728,23 @@ object DedupLedger {
     * write-time stats (slack = 0) — called from REBUILD paths over
     * the content being written (one extra aggregation on a frame the
     * build already materializes, corpus-proportional like the write
-    * itself) and from an arm's FIRST delta (the delta IS the corpus
-    * there). Small stores (banded rows ≤ [[STATS_MIN_BANDED]]) write
-    * nothing: their runtime histogram is memo-cheap and a stats file
-    * would tax every subsequent append with a bump job. */
+    * itself), from an arm's FIRST delta (the delta IS the corpus
+    * there) and from the byte-gated escalation. Every store persists
+    * its stats, whatever its size: a streamed store publishes a new
+    * version per tick, so the runtime histogram's per-version memo
+    * never hits there, and each tick would otherwise pay a ledger
+    * count plus the bucket histogram before its verdict (5 of the 27
+    * jobs of a tick on the benchmark's 4500-doc ingest_tick ledger). */
   private def refreshArmStats(dir: String, key: String, banded: DataFrame,
-                              keys: Seq[String],
-                              force: Boolean = false): Unit = {
+                              keys: Seq[String]): Unit = {
     val hist = ScaleOps.boundedCollect(
       banded.groupBy(keys.map(col): _*).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz")).agg(count(lit(1)).as("n")),
       1L << 20, s"$key write-time stats histogram")
       .map(r => (r.getLong(0).toInt, r.getLong(1)))
     val bandedRows = hist.foldLeft(0L) { case (a, (sz, n)) => a + sz.toLong * n }
-    // `force` (the escalated convergence path) persists regardless of
-    // the floor: the escalation already decided the store is
-    // corpus-scale by bytes, and NOT persisting would re-pay the
-    // full-arm scan on every subsequent append
-    if (force || bandedRows > STATS_MIN_BANDED)
-      IndexStore.writeArmStats(dir, key, IndexStore.ArmStats(
-        IndexStore.headVersion(dir).getOrElse(0) + 1, 0L, bandedRows, hist))
+    IndexStore.writeArmStats(dir, key, IndexStore.ArmStats(
+      IndexStore.headVersion(dir).getOrElse(0) + 1, 0L, bandedRows, hist))
   }
 
   /** Byte-size proxy for "corpus-scale arm": above this, a stats-less
@@ -768,8 +754,10 @@ object DedupLedger {
     * Next #4 — the convergence guarantee a persistent writer needs;
     * the opportunistic verdict-side self-heal can be starved forever
     * by that same writer, because its histogram is stale the moment
-    * head moves). Fixture-scale stores sit far below this and keep
-    * their zero-stats, zero-job appends. */
+    * head moves). Builders stamp stats on every store, so only a store
+    * whose stats were lost (one that predates them, or a deleted stats
+    * file) reaches this gate; below it such a store keeps zero-job
+    * appends and its verdicts restamp stats through the self-heal. */
   private val STATS_ESCALATE_BYTES = 4L << 20
 
   /** Pre-publish byte size of an arm's already-published files — the
@@ -788,9 +776,10 @@ object DedupLedger {
     * commit (the round-16 regression the checkpoint exists to stop),
     * and a non-deterministic survivors plan could make the persisted
     * histogram diverge from the rows actually written. Callers
-    * checkpoint exactly when this returns true; the only false case —
-    * stats-less, published, sub-escalation arm — is the zero-job
-    * bump no-op where a checkpoint is pure added cost. */
+    * checkpoint exactly when this returns true — every store a builder
+    * stamped. The only false case — a published arm whose stats were
+    * lost, under the escalation bytes — is the zero-job bump no-op
+    * where a checkpoint is pure added cost. */
   private def bumpWillConsume(dir: String, key: String,
                               before: Seq[String], sub: String): Boolean =
     IndexStore.armStats(dir, key).isDefined || before.isEmpty ||
@@ -803,12 +792,15 @@ object DedupLedger {
     * delta's commit lambda, BEFORE publish, so a crash between bump
     * and publish can only over-count (conservative), never leave a
     * published delta unaccounted. No-ops with zero jobs when the
-    * store carries no stats for this key (fixture-scale stores
-    * forever; legacy corpus stores until a rebuild, the verdict
-    * side's self-heal, or the byte-gated escalation below persists
-    * one). An empty `before` (the arm's first delta) computes the
-    * exact histogram instead. */
-  /** The stamped version is `headVersion + 1` computed PRE-publish —
+    * store carries no stats for this key (a store whose stats were
+    * lost, until a rebuild, the verdict side's self-heal, or the
+    * byte-gated escalation below persists one). An empty `before`
+    * (the arm's first delta) computes the exact histogram instead.
+    * `write` is the delta's table write: it runs here so that, on the
+    * bump branch, the one aggregation over the materialized delta
+    * overlaps it instead of following it.
+    *
+    * The stamped version is `headVersion + 1` computed PRE-publish —
     * exact under the fenced writer lock (the CAS cannot race while we
     * hold it); under UNFENCED concurrent writers the eventual
     * published version can be higher, leaving the stamp LOW, which
@@ -818,21 +810,30 @@ object DedupLedger {
                            bandedDelta: => DataFrame,
                            keys: Seq[String], before: Seq[String],
                            sub: String,
-                           fullArmBanded: => Option[DataFrame]): Unit =
+                           fullArmBanded: => Option[DataFrame])
+                          (write: => Unit): Unit =
     IndexStore.armStats(dir, key) match {
       case Some(st) =>
-        val r = bandedDelta.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("n"))
-          .agg(max(col("n")), sum(col("n"))).head
-        val d = if (r.isNullAt(0)) 0L else r.getLong(0)
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration.Duration
+        val bump = Future {
+          val r = bandedDelta.groupBy(keys.map(col): _*)
+            .agg(count(lit(1)).as("n"))
+            .agg(max(col("n")), sum(col("n"))).head
+          if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
+        }(armWriteEc)
+        try write finally { Await.ready(bump, Duration.Inf); () }
+        val (d, rows) = Await.result(bump, Duration.Inf)
         if (d > 0L)
           IndexStore.writeArmStats(dir, key, st.copy(
             version = IndexStore.headVersion(dir).getOrElse(0) + 1,
             slack = st.slack + d,
-            rows = st.rows + r.getLong(1)))
+            rows = st.rows + rows))
       case None if before.isEmpty =>
+        write
         refreshArmStats(dir, key, bandedDelta, keys)
       case None =>
+        write
         // ESCALATED convergence (VERDICT r17 #4): a corpus-scale arm
         // with no persisted stats — a legacy store, or one whose
         // opportunistic verdict-side self-heal has been starved by
@@ -851,7 +852,7 @@ object DedupLedger {
           refreshArmStats(dir, key,
             full.select(keys.map(col): _*)
               .unionByName(bandedDelta.select(keys.map(col): _*)),
-            keys, force = true)
+            keys)
         }
     }
 
@@ -1078,12 +1079,13 @@ object DedupLedger {
         if (bumpWillConsume(dir, key, beforeFiles, "seqs"))
           rows0.localCheckpoint()
         else rows0
-      rows.repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/seqs")
       bumpArmStats(dir, key, mediaBandsOf(rows, geom),
         Seq("f", "band", "bkey"), beforeFiles, "seqs",
         Some(mediaBandsOf(IndexStore.seqsFrame(rows.sparkSession, dir,
-          IndexStore.snapshot(dir)), geom)))
+          IndexStore.snapshot(dir)), geom))) {
+        rows.repartition(col("cell"))
+          .write.mode("append").partitionBy("cell").parquet(s"$dir/seqs")
+      }
     }
 
   /** Verdict of a VIDEO batch `(media_id, f, fp: array<bigint>)` —

@@ -506,7 +506,10 @@ object IndexStore {
     * cleared by a rebuild, or unparseable — every miss falls back to
     * the runtime histogram path, so stats can only ever REMOVE work). */
   def armStats(dir: String, key: String): Option[ArmStats] =
-    io(dir).readBytes(s"_manifest/${statsName(key)}").flatMap { b =>
+    readArmStats(dir, statsName(key))
+
+  private def readArmStats(dir: String, name: String): Option[ArmStats] =
+    io(dir).readBytes(s"_manifest/$name").flatMap { b =>
       scala.util.Try {
         val lines = new String(b, "UTF-8").split('\n').filter(_.nonEmpty)
         val kv = lines.takeWhile(_.contains('='))
@@ -523,18 +526,36 @@ object IndexStore {
     * callers (the delta bump) MUST hold the writer lock; the
     * opportunistic verdict-side refresh goes through
     * [[tryWithWriterLock]]. */
-  def writeArmStats(dir: String, key: String, st: ArmStats): Unit = {
+  def writeArmStats(dir: String, key: String, st: ArmStats): Unit =
+    writeArmStatsNamed(dir, statsName(key), st)
+
+  private def writeArmStatsNamed(dir: String, name: String,
+                                 st: ArmStats): Unit = {
     val body = (Seq(s"version=${st.version}", s"slack=${st.slack}",
       s"rows=${st.rows}") ++
       st.hist.map { case (sz, n) => s"$sz\t$n" }).mkString("\n")
-    io(dir).writeAtomic(s"_manifest/${statsName(key)}", body.getBytes("UTF-8"))
+    io(dir).writeAtomic(s"_manifest/$name", body.getBytes("UTF-8"))
   }
+
+  private def armStatsNames(dir: String): Seq[String] =
+    io(dir).list("_manifest").filter(_.startsWith("stats."))
 
   /** Drop every persisted arm stat — [[commitRebuild]] calls this
     * before the replacing write lands. */
   private def clearArmStats(dir: String): Unit =
-    io(dir).list("_manifest").filter(_.startsWith("stats."))
-      .foreach { n => io(dir).delete(s"_manifest/$n"); () }
+    armStatsNames(dir).foreach { n => io(dir).delete(s"_manifest/$n"); () }
+
+  /** Carry arm stats across a CONTENT-PRESERVING replacement published
+    * at `v` onto head `onto`: every stat coherent with `onto` (version
+    * >= onto, so it already counts every delta the replacement carried
+    * forward) describes the new snapshot's rows too — compaction
+    * rewrites the same rows, or fewer when it folds tombstones, which
+    * only loosens the bound. Stale stats stay stale. Caller holds the
+    * writer lock. */
+  private def restampArmStats(dir: String, onto: Int, v: Int): Unit =
+    for (n <- armStatsNames(dir); st <- readArmStats(dir, n)
+         if st.version >= onto && st.version < v)
+      writeArmStatsNamed(dir, n, st.copy(version = v))
 
   /** The single conditional-create operation the whole OCC protocol
     * rests on (VERDICT r17 #2): atomically materialize `body` at
@@ -938,11 +959,6 @@ object IndexStore {
         listData(dir, "marks"), listData(dir, "seqs"))
     }
 
-  /** Commit a REPLACEMENT write (compaction): run `write`, then publish
-    * the files it added PLUS any files published since `base` (an
-    * append that landed while the compaction shuffle ran must survive —
-    * it rewrote `base`'s data, not the concurrent batch's). Everything
-    * `base` referenced becomes unreferenced garbage for [[vacuum]]. */
   /** Version of the store's last REPLACEMENT commit (compaction), if
     * any — incremental readers (diff-based policies like the ANN
     * retrain trigger) consult this because a diff across a replacement
@@ -983,7 +999,18 @@ object IndexStore {
     io(dir).readBytes(s"_manifest/v$v.list").exists(b =>
       new String(b, "UTF-8").split('\n').exists(_.startsWith(REPLACE_PREFIX)))
 
-  def commitReplace(dir: String, base: Snapshot)(write: => Unit): Int =
+  /** Commit a REPLACEMENT write (compaction): run `write`, then publish
+    * the files it added PLUS any files published since `base` (an
+    * append that landed while the compaction shuffle ran must survive —
+    * it rewrote `base`'s data, not the concurrent batch's). Everything
+    * `base` referenced becomes unreferenced garbage for [[vacuum]].
+    * `preservesContent` (compaction only) carries the arm stats that
+    * are coherent with the published-onto head to the new version; a
+    * refine or any other row-changing replacement leaves them at their
+    * old version, which verdicts read as stale (runtime histogram). */
+  def commitReplace(dir: String, base: Snapshot,
+                    preservesContent: Boolean = false)
+                   (write: => Unit): Int =
     withWriterLock(dir) {
       val preWrite = Seq("codes", "vectors", "marks", "seqs", "tombs")
         .map(sub => sub -> listData(dir, sub).toSet).toMap
@@ -992,6 +1019,7 @@ object IndexStore {
         .map(sub => sub ->
           (listData(dir, sub).toSet -- preWrite(sub))).toMap
       var v = 0
+      var onto = 0
       var done = false
       while (!done) {
         // carries re-derive PER ATTEMPT: an append that lands while the
@@ -1011,6 +1039,7 @@ object IndexStore {
           .foreach(w => throw ConcurrentReplacementException(
             dir, base.version, w))
         v = math.max(now.version, v) + 1
+        onto = now.version
         done = publishCas(dir, v,
           (added("codes") ++ (now.codes.toSet -- base.codes.toSet)).toSeq.sorted,
           (added("vectors") ++ (now.vectors.toSet -- base.vectors.toSet)).toSeq.sorted,
@@ -1019,6 +1048,7 @@ object IndexStore {
           (added("tombs") ++ (now.tombs.toSet -- base.tombs.toSet)).toSeq.sorted,
           extra = Seq(s"$REPLACE_PREFIX${base.version}"))
       }
+      if (preservesContent) restampArmStats(dir, onto, v)
       setPropsLocked(dir, Map("last_replace_version" -> v.toString))
       v
     }
@@ -1301,15 +1331,22 @@ object IndexStore {
     * verdict-construct residue VERDICT r20 Next #1 names. Build the
     * SAME relation directly instead:
     *
-    *   - the file LISTING ([[InMemoryFileIndex]] — statuses +
-    *     partition values parsed from the `cell=`/`modality=` paths,
-    *     exactly what DataSource builds) is memoized per
-    *     (table root, ddl, exact fileset): store data files are
+    *   - per-file STATUSES come from [[fileStatuses]], a cross-session
+    *     cache keyed by qualified file path: store data files are
     *     immutable once committed (manifests name unique part files;
-    *     vacuum deletes, never rewrites), so a fileset IS the content
-    *     identity — an append mints a new key, never a stale hit. At
-    *     object-store scale this also removes the per-file existence
-    *     HEADs the reader path re-issues on every construct.
+    *     compaction writes new ones; vacuum deletes, never rewrites),
+    *     so a status never goes stale. A miss is one driver-side
+    *     `getFileStatus` (plus block locations, as Spark's own listing
+    *     resolves them) for that file only — a new tick stats just its
+    *     own new files, and a read over any number of files never starts
+    *     Spark's parallel-listing job (which it launches for more than
+    *     `parallelPartitionDiscovery.threshold` root paths, 32 by
+    *     default). The cache holds statuses only, nothing bound to a
+    *     session.
+    *   - the [[InMemoryFileIndex]] (partition values parsed from the
+    *     `cell=`/`modality=` paths, exactly what DataSource builds) is
+    *     built per (session, fileset) over a `FileStatusCache` that
+    *     answers from those statuses, so it lists nothing.
     *   - the analyzed FRAME is memoized per (session, root, ddl,
     *     fileset) — the [[VectorOps.storeFramesCache]] discipline: a
     *     DataFrame is a PLAN (executing it re-reads the parquet), so
@@ -1318,34 +1355,61 @@ object IndexStore {
     *
     * Plan parity with the reader path is pinned by RelationParitySpec:
     * same schema (data cols then partition col), same FileSourceScan,
-    * same partition pruning, same pushdown surface. */
-  private val fileIndexCache = new DriverCache[(String, String),
-    org.apache.spark.sql.execution.datasources.InMemoryFileIndex](512)
+    * same partition pruning, same pushdown surface, no Spark job. */
+  private val fileStatuses =
+    new DriverCache[String, org.apache.hadoop.fs.FileStatus](1 << 16)
   private val declaredFrameCache =
     new DriverCache[(String, String, String), DataFrame](512)
+
+  /** Spark's listing-cache interface answered from [[fileStatuses]]:
+    * every root path is a manifest data file, its own single leaf, and
+    * a miss stats that one file — so the index never lists. */
+  private final class ManifestStatusCache(fs: org.apache.hadoop.fs.FileSystem)
+      extends org.apache.spark.sql.execution.datasources.FileStatusCache {
+    override def getLeafFiles(path: org.apache.hadoop.fs.Path)
+        : Option[Array[org.apache.hadoop.fs.FileStatus]] =
+      Some(Array(fileStatuses.get(path.toString).getOrElse {
+        val f = statFile(fs, path)
+        fileStatuses.put(path.toString, f)
+        f
+      }))
+    override def putLeafFiles(path: org.apache.hadoop.fs.Path,
+        leafFiles: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = ()
+  }
+
+  /** Status of one data file as Spark's serial listing resolves it
+    * (`HadoopFSUtils`: a `LocatedFileStatus` carrying the block
+    * locations, built without the permission lookup). */
+  private def statFile(fs: org.apache.hadoop.fs.FileSystem,
+                       p: org.apache.hadoop.fs.Path)
+      : org.apache.hadoop.fs.FileStatus = {
+    import org.apache.hadoop.fs.{BlockLocation, LocatedFileStatus}
+    val f = fs.getFileStatus(p)
+    val locs = fs.getFileBlockLocations(f, 0, f.getLen).map { l =>
+      if (l.getClass == classOf[BlockLocation]) l
+      else new BlockLocation(l.getNames, l.getHosts, l.getOffset, l.getLength)
+    }
+    new LocatedFileStatus(f.getLen, f.isDirectory, f.getReplication,
+      f.getBlockSize, f.getModificationTime, 0, null, null, null, null,
+      f.getPath, locs)
+  }
+
   private def readDeclared(spark: SparkSession, dir: String, sub: String,
                            files: Seq[String], ddl: String): DataFrame = {
     val base = s"$dir/$sub"
-    val fileset = files.mkString("\n")
     val fkey = (org.apache.spark.sql.graftshim.Shim.sessionId(spark),
-      s"$base|$ddl", fileset)
+      s"$base|$ddl", files.mkString("\n"))
     declaredFrameCache.get(fkey).getOrElse {
       val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-      val ikey = (s"$base|$ddl", fileset)
-      val idx = fileIndexCache.get(ikey).getOrElse {
-        // qualify like DataSource does (scheme-full paths in the scan's
-        // Location), via the context conf — no per-read conf copy
-        val fs = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val built =
-          new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-            spark,
-            files.map(f => fs.makeQualified(
-              new org.apache.hadoop.fs.Path(s"$base/$f"))),
-            Map("basePath" -> base), Some(schema))
-        fileIndexCache.put(ikey, built)
-        built
-      }
+      // qualify like DataSource does (scheme-full paths in the scan's
+      // Location), via the context conf — no per-read conf copy
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val idx = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+        spark,
+        files.map(f => fs.makeQualified(new org.apache.hadoop.fs.Path(s"$base/$f"))),
+        Map("basePath" -> base), Some(schema), new ManifestStatusCache(fs))
       val ps = idx.partitionSchema
       val dataSchema = org.apache.spark.sql.types.StructType(
         schema.filterNot(f => ps.exists(_.name.equalsIgnoreCase(f.name))))
@@ -1529,7 +1593,7 @@ object IndexStore {
            f <- io(dir).list(s"$staging/$sub/$cellDir")
              if f.endsWith(".parquet"))
         io(dir).move(s"$staging/$sub/$cellDir/$f", s"$sub/$cellDir/$f")
-    try commitReplace(dir, snap) {
+    try commitReplace(dir, snap, preservesContent = true) {
       adopt("codes"); adopt("vectors"); adopt("marks"); adopt("seqs")
     }
     finally io(dir).deleteRecursive(staging)

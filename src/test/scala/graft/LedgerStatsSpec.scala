@@ -12,6 +12,11 @@ import graft.ops.{DedupLedger, IndexStore}
   *     by its banded row count (a crashed bump over-counts, never
   *     under-counts, because it lands before the manifest CAS);
   *   - a rebuild CLEARS stale stats before the new content publishes;
+  *   - every store a builder writes carries stats, whatever its size,
+  *     so a streamed tick's verdict measures nothing ledger-wide;
+  *   - compaction rewrites the same rows, so it carries stats coherent
+  *     with the head it publishes onto (concurrent appends included)
+  *     to its own version;
   *   - stats can only remove work: a hot store (maxBound above the
   *     shed floor) falls back to the runtime histogram and sheds
   *     byte-identically to a store with no stats at all.
@@ -34,24 +39,40 @@ class LedgerStatsSpec extends SparkSpec {
   private def seedDoc =
     Seq((0L, "stats spec seed doc")).toDF("doc_id", "text")
 
-  private def countJobs[A](f: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = f
-      // listener events are async — drain the bus deterministically
-      // (a fixed sleep can under-count either run on a loaded box and
-      // flip the parity assertion both ways)
-      org.apache.spark.sql.graftshim.Shim.waitForListenerBus(
-        spark.sparkContext, 30000L)
-      (a, n.get())
-    } finally spark.sparkContext.removeSparkListener(l)
+  private val textKey = "vectors-hist"
+  private val textBands = 6 // DedupOps.NUM_SEEDS / ROWS_PER_BAND
+
+  private def textDocs(ids: Seq[Long]) =
+    ids.map(i => (i, s"alpha beta gamma delta epsilon zeta token$i end"))
+      .toDF("doc_id", "text")
+
+  private def textLedger(n: Long): String = {
+    val dir = java.nio.file.Files.createTempDirectory("stats-text")
+      .toString + "/led"
+    DedupLedger.buildLedger(textDocs(0L until n), dir)
+    dir
+  }
+
+  /** 10 re-crawled copies of stored docs plus 10 new docs. */
+  private def textBatch =
+    textDocs(0L until 10L).withColumn("doc_id", col("doc_id") + 100000L)
+      .unionByName(textDocs(5000L until 5010L)).localCheckpoint()
+
+  /** Jobs the default-budget and the uncapped text verdicts start while
+    * they construct against the head snapshot (memos cleared before
+    * each); the two verdicts must agree row for row. */
+  private def textVerdictJobs(dir: String): (Int, Int) = {
+    val snap = IndexStore.snapshot(dir)
+    val batch = textBatch
+    DedupLedger.clearShedMemos()
+    val (vd, jd) = countJobs(
+      DedupLedger.dedupAgainstLedger(spark, batch, dir, snap))
+    DedupLedger.clearShedMemos()
+    val (vn, jn) = countJobs(DedupLedger.dedupAgainstLedger(spark, batch,
+      dir, snap, pairBudgetPerItem = None))
+    assert(vd.collect().toSeq == vn.collect().toSeq,
+      "the stats fast path changed the text verdict vs uncapped")
+    (jd, jn)
   }
 
   test("rebuild stamps exact stats; the healthy verdict consults them with " +
@@ -76,11 +97,11 @@ class LedgerStatsSpec extends SparkSpec {
           |ELSE array(cast(conv(substring(md5(concat(id, '|novel')), 1, 11),
           |      16, 10) as bigint) & $mask42) END""".stripMargin).as("fp"))
       .localCheckpoint()
-    // the uncapped (None) baseline pays only the scan-construction
-    // jobs (parquet file listing past the parallel-discovery
-    // threshold); the DEFAULT path must plan with EXACTLY the same
-    // jobs — the ladder's histogram/occupancy measurements all elided
-    // by the persisted stats
+    // the uncapped (None) baseline pays only the saturation
+    // sentinel's footer count (declared reads construct from the
+    // manifest's file statuses, with no listing job); the DEFAULT path
+    // must plan with no more jobs — the ladder's histogram/occupancy
+    // measurements all elided by the persisted stats
     DedupLedger.clearShedMemos()
     val (verdictDefault, jobs) = countJobs {
       DedupLedger.dedupMediaAgainstLedger(spark, batch, dir, snap, geom)
@@ -90,9 +111,9 @@ class LedgerStatsSpec extends SparkSpec {
       DedupLedger.dedupMediaAgainstLedger(spark, batch, dir, snap, geom,
         pairBudgetPerItem = None)
     }
-    // DEFAULT runs FIRST (cold file-listing cache), so <= proves the
-    // ladder added nothing: in practice it plans CHEAPER than None,
-    // which pays the saturation sentinel's footer count
+    // DEFAULT runs FIRST (cold frame memo), so <= proves the ladder
+    // added nothing: in practice it plans CHEAPER than None, which
+    // pays the saturation sentinel's footer count
     assert(jobs <= jobsNone,
       s"a healthy stats-carrying store must plan the default verdict with " +
       s"no auxiliary jobs beyond the uncapped path's ($jobsNone), ran $jobs")
@@ -102,6 +123,86 @@ class LedgerStatsSpec extends SparkSpec {
       (r.getLong(0), r.isNullAt(1), r.isNullAt(2), r.getLong(3))).toSeq
     assert(got == want, "stats fast path changed the verdict vs uncapped")
     assert(got.count(_._4 == 0L) == 100, "the 100 exact copies must drop")
+  }
+
+  test("every built store carries exact stats whatever its size: a 64-doc " +
+       "text ledger's default verdict runs no more jobs than the uncapped " +
+       "one") {
+    val dir = textLedger(64)
+    val st = IndexStore.armStats(dir, textKey)
+      .getOrElse(fail("a 64-doc ledger build must stamp text arm stats"))
+    assert(st.slack == 0L && st.rows == 64L * textBands &&
+      st.version == IndexStore.headVersion(dir).get, s"got $st")
+    val (jd, jn) = textVerdictJobs(dir)
+    assert(jd <= jn, s"the default-budget verdict ran $jd jobs to the " +
+      s"uncapped verdict's $jn: it measured the ledger before its verdict")
+    // the mixed builder stamps its text and marks arms; the seqs arm
+    // gets exact stats from its first delta
+    val mixed = java.nio.file.Files.createTempDirectory("stats-mixed").toString
+    DedupLedger.buildMixedLedger(seedDoc, healthyMarks(500), mixed, geom)
+    assert(IndexStore.armStats(mixed, textKey).exists(_.rows == textBands),
+      "the mixed build must stamp its text arm")
+    assert(IndexStore.armStats(mixed, statsKey)
+      .exists(_.rows == 500L * geom.bands), "the mixed build must stamp marks")
+    val frames = spark.range(0, 10, 1, 2).crossJoin(spark.range(0, 4, 1, 1)
+        .withColumnRenamed("id", "f"))
+      .select(col("id").as("media_id"), col("f"),
+        expr(s"array(cast(conv(substring(md5(concat(id, '/', f)), 1, 11), " +
+          s"16, 10) as bigint) & $mask42)").as("fp"))
+    DedupLedger.appendVideoSurvivors(frames, mixed, tag = "seqs-1", geom)
+    assert(IndexStore.armStats(mixed, s"seqs-hist-${geom.params}")
+      .exists(s => s.slack == 0L && s.rows == 40L * geom.bands),
+      "the first video delta must stamp exact seqs stats")
+  }
+
+  test("compaction carries the stats to the version it publishes, and the " +
+       "next verdict still measures nothing") {
+    val dir = textLedger(64)
+    DedupLedger.appendSurvivors(textDocs(200L until 210L), dir, tag = "c-1")
+    val st0 = IndexStore.armStats(dir, textKey).get
+    assert(st0.version == IndexStore.headVersion(dir).get)
+    val v = IndexStore.compact(spark, dir)
+    assert(IndexStore.headVersion(dir).contains(v))
+    val st = IndexStore.armStats(dir, textKey).get
+    assert(st.version == v, s"stats must be restamped to the compacted head: $st")
+    assert((st.slack, st.rows, st.hist.toSeq) ==
+      ((st0.slack, st0.rows, st0.hist.toSeq)),
+      "compaction rewrites the same rows; the bound must not change")
+    val (jd, jn) = textVerdictJobs(dir)
+    assert(jd <= jn, s"after compaction the default verdict ran $jd jobs " +
+      s"to the uncapped verdict's $jn")
+  }
+
+  test("a content-preserving replacement that carries a concurrent append " +
+       "restamps stats that include the append's bump") {
+    val dir = textLedger(64)
+    val base = IndexStore.snapshot(dir)
+    val st0 = IndexStore.armStats(dir, textKey).get
+    val (codes, vecs) = IndexStore.frames(spark, dir, base,
+      Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
+      declaredSchema = true)
+    val codesRows = codes.localCheckpoint()
+    val vecRows = vecs.localCheckpoint()
+    val v = IndexStore.commitReplace(dir, base, preservesContent = true) {
+      codesRows.repartition(col("cell")).write.mode("append")
+        .partitionBy("cell").parquet(s"$dir/codes")
+      vecRows.repartition(col("cell")).write.mode("append")
+        .partitionBy("cell").parquet(s"$dir/vectors")
+      // the append lands after the rewrite was staged, before the
+      // replacement publishes: the carry adopts its files
+      DedupLedger.appendSurvivors(textDocs(300L until 320L), dir,
+        tag = "mid-replace")
+      ()
+    }
+    assert(IndexStore.headVersion(dir).contains(v))
+    val st = IndexStore.armStats(dir, textKey).get
+    assert(st.version >= v, s"stats must cover the published head v$v: $st")
+    assert(st.rows == st0.rows + 20L * textBands && st.slack >= st0.slack + 1L,
+      s"stats must include the carried append's bump: $st0 -> $st")
+    val sigs = IndexStore.frames(spark, dir, IndexStore.snapshot(dir),
+      Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
+      declaredSchema = true)._2
+    assert(sigs.count() == 84L, "the replacement must hold base + append rows")
   }
 
   test("delta commits bump slack and rows soundly; rebuild clears stale " +

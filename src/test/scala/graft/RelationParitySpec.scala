@@ -4,13 +4,31 @@ import org.apache.spark.sql.functions._
 import graft.ops.{DedupLedger, IndexStore}
 
 /** Round 21: the declared-schema readers construct their relation
-  * DIRECTLY (cached InMemoryFileIndex + HadoopFsRelation) instead of
-  * through `spark.read.schema(ddl).parquet(files)`. These tests pin
-  * that the direct construct is observably IDENTICAL to the reader
-  * path — same schema, same scan shape, same partition pruning, same
-  * rows — and that the frame memo can never serve a stale fileset. */
+  * DIRECTLY (InMemoryFileIndex over cached manifest file statuses +
+  * HadoopFsRelation) instead of through
+  * `spark.read.schema(ddl).parquet(files)`. These tests pin that the
+  * direct construct is observably IDENTICAL to the reader path — same
+  * schema, same scan shape, same partition pruning, same rows — that it
+  * lists nothing (no Spark job, however many files), that the frame
+  * memo can never serve a stale fileset, and that no session is served
+  * a file index another session built. */
 class RelationParitySpec extends SparkSpec {
   import spark.implicits._
+
+  /** Cell-pruned executed plan, ids normalized. */
+  private def shape(df: org.apache.spark.sql.DataFrame): String = {
+    val d = df.filter(col("cell") === 3).select(col("doc_id"))
+    d.collect() // finalize (AQE discipline: same Dataset's action)
+    d.queryExecution.executedPlan.toString
+      .replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
+  }
+
+  private def fileIndex(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation.asInstanceOf[
+          org.apache.spark.sql.execution.datasources.HadoopFsRelation].location
+    }.getOrElse(fail(s"no file relation in ${df.queryExecution.analyzed}"))
 
   private def freshLedger(): String = {
     val dir = java.nio.file.Files.createTempDirectory("relpar").toString + "/led"
@@ -34,17 +52,47 @@ class RelationParitySpec extends SparkSpec {
       "direct relation must expose the reader path's schema " +
         "(data cols then partition col, same nullability)")
     // partition pruning + scan shape parity on a cell-filtered read
-    def shape(df: org.apache.spark.sql.DataFrame): String = {
-      val d = df.filter(col("cell") === 3).select(col("doc_id"))
-      d.collect() // finalize (AQE discipline: same Dataset's action)
-      d.queryExecution.executedPlan.toString
-        .replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
-    }
     assert(shape(sigs) == shape(reader),
       "cell-pruned executed plan must match the reader path's")
     val a = sigs.orderBy("doc_id").collect().toSeq
     val b = reader.orderBy("doc_id").collect().toSeq
     assert(a == b, "rows must be identical")
+  }
+
+  test("a declared read over more than 32 files constructs with no Spark " +
+       "job and matches the reader path, which lists them with a job") {
+    // one row per file: 48 vectors files over cells 0-3, past Spark's
+    // 32-path parallel-listing threshold
+    val dir = java.nio.file.Files.createTempDirectory("relpar-many")
+      .toString + "/led"
+    IndexStore.setProps(dir, Map("modalities" -> "text"))
+    IndexStore.commitRebuild(dir) {
+      (0L until 48L).map(i => ((i % 4).toInt, s"h$i", i))
+        .toDF("cell", "h", "owner").repartition(4)
+        .write.mode("overwrite").option("maxRecordsPerFile", 1L)
+        .partitionBy("cell").parquet(s"$dir/codes")
+      (0L until 48L).map(i => ((i % 4).toInt, i, Seq(i, i + 1)))
+        .toDF("cell", "doc_id", "sig").repartition(4)
+        .write.mode("overwrite").option("maxRecordsPerFile", 1L)
+        .partitionBy("cell").parquet(s"$dir/vectors")
+    }
+    val snap = IndexStore.snapshot(dir)
+    assert(snap.vectors.size == 48, s"fixture: ${snap.vectors.size} files")
+    val (sigs, jobs) = countJobs(IndexStore.frames(spark, dir, snap,
+      Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
+      declaredSchema = true)._2)
+    assert(jobs == 0, s"the declared construct ran $jobs Spark jobs")
+    val (reader, readerJobs) = countJobs(
+      spark.read.schema(IndexStore.VECTORS_DDL)
+        .option("basePath", s"$dir/vectors")
+        .parquet(snap.vectors.map(f => s"$dir/vectors/$f"): _*))
+    assert(readerJobs >= 1, "negative control: the reader path must list " +
+      "48 paths with a Spark job, or this case proves nothing")
+    assert(sigs.schema == reader.schema)
+    assert(shape(sigs) == shape(reader),
+      "cell-pruned executed plan must match the reader path's")
+    assert(sigs.orderBy("doc_id").collect().toSeq ==
+      reader.orderBy("doc_id").collect().toSeq, "rows must be identical")
   }
 
   test("frame memo: same snapshot reuses the plan; an append never serves stale") {
@@ -106,6 +154,9 @@ class RelationParitySpec extends SparkSpec {
       "the second session was served a frame bound to the first")
     assert((read(spark) eq mine) && (read(other) eq theirs),
       "each session must still hit its own memo entry")
+    assert(!(fileIndex(mine) eq fileIndex(theirs)),
+      "the two sessions' relations share one file index (it pins the " +
+      "session that built it)")
     assert(mine.orderBy("doc_id").collect().toSeq ==
       theirs.orderBy("doc_id").collect().toSeq)
     // ANN serve frames

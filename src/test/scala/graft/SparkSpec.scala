@@ -8,6 +8,26 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** `f`'s result and the number of Spark jobs started while it ran. */
+  protected def countJobs[A](f: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val a = f
+      // listener events are async — drain the bus deterministically
+      // (a fixed sleep can under-count on a loaded box)
+      org.apache.spark.sql.graftshim.Shim.waitForListenerBus(
+        spark.sparkContext, 30000L)
+      (a, n.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
