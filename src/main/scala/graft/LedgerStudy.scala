@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
 import graft.ops.{DedupLedger, DedupOps, IndexStore, TextOps}
+import graft.ops.DedupLedger.Text
 
 /** Measurement harness for the dedup ledger's ECONOMICS claim
   * (q139/q140): the daily increment dedups in time proportional to the
@@ -48,7 +49,7 @@ object LedgerStudy {
       val wdir = java.nio.file.Files.createTempDirectory("ledger-study-warm").toString
       val whist = docs.filter(col("doc_id") < 2000)
       DedupLedger.buildLedger(whist, wdir)
-      DedupLedger.dedupAgainstLedger(spark, batch, wdir,
+      DedupLedger.verdict(Text, spark, batch, wdir,
         IndexStore.snapshot(wdir)).count()
       DedupOps.minhashLshPairs(TextOps.shingled(whist.unionByName(batch)),
         pairBudgetPerDoc = Some(TextOps.PAIR_BUDGET_PER_DOC)).count()
@@ -61,16 +62,15 @@ object LedgerStudy {
       val (_, tBuild) = timed { DedupLedger.buildLedger(hist, ldir) }
       val snap = IndexStore.snapshot(ldir)
       // warm once (parquet footers), then measure the verdict serve
-      DedupLedger.dedupAgainstLedger(spark, batch, ldir, snap).count()
+      DedupLedger.verdict(Text, spark, batch, ldir, snap).count()
       val (verdict, tVerdict) = timed {
-        val v = DedupLedger.dedupAgainstLedger(spark, batch, ldir, snap)
+        val v = DedupLedger.verdict(Text, spark, batch, ldir, snap)
           .localCheckpoint()
         v.count(); v
       }
       val (_, tAppend) = timed {
-        DedupLedger.appendSurvivors(
-          batch.join(verdict.filter(col("keep") === 1L).select(col("doc_id")),
-            Seq("doc_id"), "left_semi"), ldir, tag = "study")
+        DedupLedger.append(Text, DedupLedger.keepers(Text, batch, verdict),
+          ldir, tag = "study")
       }
       // the no-ledger alternative: re-run the q49 batch pass over
       // history ∪ batch (re-shingles and re-signs EVERYTHING)
@@ -97,7 +97,7 @@ object LedgerStudy {
       .filter(col("lo") < batchLo && col("hi") >= batchLo)
     val ldir = java.nio.file.Files.createTempDirectory("ledger-study-full").toString
     DedupLedger.buildLedger(docs.filter(col("doc_id") < batchLo), ldir)
-    val verdict = DedupLedger.dedupAgainstLedger(spark, batch, ldir,
+    val verdict = DedupLedger.verdict(Text, spark, batch, ldir,
       IndexStore.snapshot(ldir)).localCheckpoint()
     val caught = planted.join(
       verdict.select(col("doc_id").as("hi"), col("exact_of"), col("near_of")),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.DedupLedger.{Media, Text, Video}
 
 /** Scale study for the perceptual-dedup topology (q154/q155): the gate
   * fixtures are 200 SF-invariant images/clips, so the 100×-corpus
@@ -241,7 +242,8 @@ object MediaDedupStudy {
         expr(s"""array(CASE WHEN id < 100000 THEN shiftleft(id, 14)
                  ELSE cast(conv(substring(md5(cast(id as string)), 1, 11), 16, 10)
                       as bigint) & $mask42 END)""").as("fp"))
-    val (_, tBuildN) = timed(DedupLedger.buildMixedLedger(seedDoc, marksN, dirN))
+    val (_, tBuildN) = timed(DedupLedger.build(dirN, "text,media,video",
+      Text -> seedDoc, Media() -> marksN))
     val snapN = IndexStore.snapshot(dirN)
     // batch: 1k exact copies of hot members + 9k fan-probes whose
     // band-0 key is the hot bucket's; each fan-probe v = id+200000 has
@@ -256,9 +258,9 @@ object MediaDedupStudy {
     def keeps(v: org.apache.spark.sql.DataFrame): Long =
       v.agg(sum(col("keep"))).head.getLong(0)
     val (k1, t1) = timed(keeps(
-      DedupLedger.dedupMediaAgainstLedger(spark, batchN, dirN, snapN)))
+      DedupLedger.verdict(Media(), spark, batchN, dirN, snapN)))
     val (k2, t2) = timed(keeps(
-      DedupLedger.dedupMediaAgainstLedger(spark, batchN, dirN, snapN,
+      DedupLedger.verdict(Media(), spark, batchN, dirN, snapN,
         pairBudgetPerItem = Some(10))))
     println(f"narrow 3x14 @ 1M marks (100k hot): build $tBuildN%.1f s; " +
       f"uncapped $t1%.1f s keep=$k1; capped(10/item) $t2%.1f s keep=$k2")
@@ -274,15 +276,16 @@ object MediaDedupStudy {
         .stripMargin
     val marksW = spark.range(0, 1000000L, 1, 32)
       .select(col("id").as("media_id"), expr(wfp("id")).as("fp"))
-    val (_, tBuildW) = timed(DedupLedger.buildMixedLedger(seedDoc, marksW, dirW, DedupLedger.WideMarks))
+    val (_, tBuildW) = timed(DedupLedger.build(dirW, "text,media,video",
+      Text -> seedDoc, Media(DedupLedger.WideMarks) -> marksW))
     val snapW = IndexStore.snapshot(dirW)
     val batchW = spark.range(0, 10000L, 1, 32)
       .select((col("id") + 2000000L).as("media_id"),
         expr(s"CASE WHEN id < 1000 THEN ${wfp("id")} " +
           s"ELSE ${wfp("(id + 5000000)")} END").as("fp"))
       .localCheckpoint()
-    val (k3, t3) = timed(keeps(DedupLedger.dedupMediaAgainstLedger(
-      spark, batchW, dirW, snapW, DedupLedger.WideMarks)))
+    val (k3, t3) = timed(keeps(DedupLedger.verdict(
+      Media(DedupLedger.WideMarks), spark, batchW, dirW, snapW)))
     println(f"wide 3x40 @ 1M marks: build $tBuildW%.1f s; " +
       f"uncapped $t3%.1f s keep=$k3")
   }
@@ -329,7 +332,7 @@ object MediaDedupStudy {
       .select(col("id").as("media_id"), col("f"),
         expr(wFrames("id")).as("fp"))
     val (_, tBuildW) = timed(
-      DedupLedger.appendVideoSurvivors(histW, dirW, tag = "seed", DedupLedger.WideMarks))
+      DedupLedger.append(Video(DedupLedger.WideMarks), histW, dirW, tag = "seed"))
     // batch: 1k exact copies, 4k one-frame 2-bit edits, 5k novels
     val batchW = spark.range(0, 10000L, 1, 32)
       .select(col("id"), explode(expr("sequence(0, 3)")).as("f"))
@@ -342,8 +345,8 @@ object MediaDedupStudy {
           |ELSE ${wFrames("(id + 7000000)")} END""".stripMargin).as("fp"))
       .localCheckpoint()
     val (kW, tW) = timed(
-      DedupLedger.dedupVideoAgainstLedger(spark, batchW, dirW,
-          IndexStore.snapshot(dirW), DedupLedger.WideMarks)
+      DedupLedger.verdict(Video(DedupLedger.WideMarks), spark, batchW,
+          dirW, IndexStore.snapshot(dirW))
         .agg(sum(col("keep"))).head.getLong(0))
     println(f"wide 3x40 @ 1M videos (no intro): build $tBuildW%.1f s; " +
       f"uncapped verdict $tW%.1f s, keep=$kW (expect 5000)")
@@ -361,7 +364,7 @@ object MediaDedupStudy {
         expr(s"array(CASE WHEN f = 0 AND id < 200000 THEN ${intro}L " +
           s"ELSE ${nWord("id")} END)").as("fp"))
     val (_, tBuildN) = timed(
-      DedupLedger.appendVideoSurvivors(histN, dirN, tag = "seed"))
+      DedupLedger.append(Video(), histN, dirN, tag = "seed"))
     val batchN = spark.range(0, 10000L, 1, 32)
       .select(col("id"), explode(expr("sequence(0, 3)")).as("f"))
       .select((col("id") + 2000000L).as("media_id"), col("f"),
@@ -377,9 +380,8 @@ object MediaDedupStudy {
           |ELSE ${nWord("(id + 7000000)")} END)""".stripMargin).as("fp"))
       .localCheckpoint()
     val (kN, tN) = timed(
-      DedupLedger.dedupVideoAgainstLedger(spark, batchN, dirN,
-          IndexStore.snapshot(dirN), DedupLedger.NarrowMarks,
-          pairBudgetPerItem = Some(100))
+      DedupLedger.verdict(Video(DedupLedger.NarrowMarks), spark, batchN,
+          dirN, IndexStore.snapshot(dirN), pairBudgetPerItem = Some(100))
         .agg(sum(col("keep"))).head.getLong(0))
     println(f"narrow 3x14 @ 1M videos (200k shared intro, ALL probes " +
       f"carry it): build $tBuildN%.1f s; capped(100/item) verdict " +
@@ -392,8 +394,8 @@ object MediaDedupStudy {
     // price the correlated intro mass (every probe carries it, so
     // maxOcc ≈ the whole batch) and shed it with no explicit argument.
     val (kD, tD) = timed(
-      DedupLedger.dedupVideoAgainstLedger(spark, batchN, dirN,
-          IndexStore.snapshot(dirN), DedupLedger.NarrowMarks)
+      DedupLedger.verdict(Video(DedupLedger.NarrowMarks), spark, batchN,
+          dirN, IndexStore.snapshot(dirN))
         .agg(sum(col("keep"))).head.getLong(0))
     println(f"narrow 3x14 @ 1M videos, DEFAULT budget (the r15 " +
       f"hang-class cell): verdict $tD%.1f s, keep=$kD (expect 5000)")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{DedupLedger, IndexStore}
+import graft.ops.DedupLedger.Text
 
 /** Throwaway profiling main for the tick family (round 16, VERDICT r15
   * Next #4): times each phase of q152's runtime shape so the trim
@@ -52,7 +53,7 @@ object TickProfile {
         graft.streaming.DedupMaintenance.dedupSink(stream, dir, ckpt)
           .start().awaitTermination() }
       t("final verdict+count") {
-        DedupLedger.dedupAgainstLedger(s, docs.filter(col("doc_id") >= c9),
+        DedupLedger.verdict(Text, s, docs.filter(col("doc_id") >= c9),
           dir, IndexStore.snapshot(dir)).count() }
       // decomposition: the same tick WITHOUT the stream — batch API
       val zone2 = graft.jobs.JobRecordGate.freshZone("graft-tickprof2-", d)
@@ -63,12 +64,11 @@ object TickProfile {
         docs.filter(col("doc_id") >= c9 && col("doc_id") < cMid)
           .select(col("doc_id"), col("text")).localCheckpoint() }
       val v1 = t("verdict construct") {
-        DedupLedger.dedupAgainstLedger(s, b1, dir2, IndexStore.snapshot(dir2)) }
+        DedupLedger.verdict(Text, s, b1, dir2, IndexStore.snapshot(dir2)) }
       t("verdict action") { v1.count() }
       t("append") {
-        DedupLedger.appendSurvivors(
-          b1.join(v1.filter(col("keep") === 1L).select(col("doc_id")),
-            Seq("doc_id"), "left_semi"), dir2, "prof-1") }
+        DedupLedger.append(Text, DedupLedger.keepers(Text, b1, v1), dir2,
+          "prof-1") }
       // append decomposition on a fresh clone
       val zone3 = graft.jobs.JobRecordGate.freshZone("graft-tickprof3-", d)
       val dir3 = new java.io.File(zone3, "ledger").getAbsolutePath
@@ -82,7 +82,7 @@ object TickProfile {
         reps3.repartition(col("cell")).write.mode("append")
           .partitionBy("cell").parquet(dir3 + "/codes") }
       val sig3 = t("sigRows plan+exec") {
-        val x = graft.ops.DedupLedger.signatureRows(
+        val x = graft.ops.DedupLedger.sigRows(
           sv.join(reps3.select(col("owner").as("doc_id")), Seq("doc_id"), "left_semi"))
         x.localCheckpoint() }
       t("vectors write") {

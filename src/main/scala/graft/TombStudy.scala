@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
 import graft.ops.{DedupLedger, IndexStore}
+import graft.ops.DedupLedger.{Media, Text}
 
 /** Measurement harness for the TOMBSTONE takedown's ECONOMICS claim
   * (q177/q178): a forget costs O(deleted) regardless of corpus size
@@ -46,7 +47,7 @@ object TombStudy {
       DedupLedger.buildLedger(docs.filter(col("doc_id") < 2000), wdir)
       IndexStore.forget(spark, wdir, "text",
         docs.filter(col("doc_id") < 100).select(col("doc_id")))
-      DedupLedger.dedupAgainstLedger(spark, batch, wdir,
+      DedupLedger.verdict(Text, spark, batch, wdir,
         IndexStore.snapshot(wdir)).count()
       IndexStore.compact(spark, wdir)
       ()
@@ -64,7 +65,7 @@ object TombStudy {
         ._1.count()
       // verdict against the clean store (min of 3)
       def verdict(): Long =
-        DedupLedger.dedupAgainstLedger(spark, batch, ldir,
+        DedupLedger.verdict(Text, spark, batch, ldir,
           IndexStore.snapshot(ldir)).count()
       verdict() // footer warm
       val tClean = (1 to 3).map(_ => timed(verdict())._2).min
@@ -104,16 +105,16 @@ object TombStudy {
       val sdir =
         java.nio.file.Files.createTempDirectory("tomb-shuffle").toString
       val (_, tBuild) = timed {
-        DedupLedger.buildMixedLedger(
-          docs.filter(col("doc_id") < 10).select(col("doc_id"), col("text")),
-          fps(0L, 2000000L), sdir)
+        DedupLedger.build(sdir, "text,media,video",
+          Text -> docs.filter(col("doc_id") < 10).select(col("doc_id"), col("text")),
+          Media() -> fps(0L, 2000000L))
       }
       val batchFps = fps(3000000L, 3001000L)
         .unionByName(fps(0L, 100L) // re-uploads of history: must resolve
           .withColumn("media_id", col("media_id") + 5000000L))
         .localCheckpoint()
       def mVerdict(): Long =
-        DedupLedger.dedupMediaAgainstLedger(spark, batchFps, sdir,
+        DedupLedger.verdict(Media(), spark, batchFps, sdir,
           IndexStore.snapshot(sdir)).count()
       mVerdict()
       val tClean = (1 to 3).map(_ => timed(mVerdict())._2).min

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
 import graft.ops.{DedupLedger, IndexStore}
+import graft.ops.DedupLedger.{Media, Text, Video}
 
 /** VERDICT r16 #1: the two WIDE healthy-store cells (marks wide 3x40,
   * seqs wide 3x40, 1M items, 10k batch) drifted +1-3 s under the
@@ -62,7 +63,8 @@ object WideCellAB {
     val dirM = java.nio.file.Files.createTempDirectory("graft-ab-marks").toString
     val marksW = spark.range(0, 1000000L, 1, 32)
       .select(col("id").as("media_id"), expr(wfp("id")).as("fp"))
-    val (_, tBuildM) = timed(DedupLedger.buildMixedLedger(seedDoc, marksW, dirM, DedupLedger.WideMarks))
+    val (_, tBuildM) = timed(DedupLedger.build(dirM, "text,media,video",
+      Text -> seedDoc, Media(DedupLedger.WideMarks) -> marksW))
     val snapM = IndexStore.snapshot(dirM)
     val batchM = spark.range(0, 10000L, 1, 32)
       .select((col("id") + 2000000L).as("media_id"),
@@ -70,8 +72,8 @@ object WideCellAB {
           s"ELSE ${wfp("(id + 5000000)")} END").as("fp"))
       .localCheckpoint()
     def marksKeep(budget: Option[Int]): Long =
-      DedupLedger.dedupMediaAgainstLedger(spark, batchM, dirM, snapM,
-          DedupLedger.WideMarks, pairBudgetPerItem = budget)
+      DedupLedger.verdict(Media(DedupLedger.WideMarks), spark, batchM, dirM,
+          snapM, pairBudgetPerItem = budget)
         .agg(sum(col("keep"))).head.getLong(0)
     // warm-up (JIT + parquet reader paths), untimed
     marksKeep(DedupOpsDefault.default)
@@ -93,7 +95,7 @@ object WideCellAB {
       .select(col("id"), explode(expr("sequence(0, 3)")).as("f"))
       .select(col("id").as("media_id"), col("f"), expr(wFrames("id")).as("fp"))
     val (_, tBuildS) = timed(
-      DedupLedger.appendVideoSurvivors(histS, dirS, tag = "seed", DedupLedger.WideMarks))
+      DedupLedger.append(Video(DedupLedger.WideMarks), histS, dirS, tag = "seed"))
     val snapS = IndexStore.snapshot(dirS)
     val batchS = spark.range(0, 10000L, 1, 32)
       .select(col("id"), explode(expr("sequence(0, 3)")).as("f"))
@@ -106,8 +108,8 @@ object WideCellAB {
           |ELSE ${wFrames("(id + 7000000)")} END""".stripMargin).as("fp"))
       .localCheckpoint()
     def seqsKeep(budget: Option[Int]): Long =
-      DedupLedger.dedupVideoAgainstLedger(spark, batchS, dirS, snapS,
-          DedupLedger.WideMarks, pairBudgetPerItem = budget)
+      DedupLedger.verdict(Video(DedupLedger.WideMarks), spark, batchS, dirS,
+          snapS, pairBudgetPerItem = budget)
         .agg(sum(col("keep"))).head.getLong(0)
     seqsKeep(DedupOpsDefault.default)
     println(f"== seqs wide 3x40 @ 1M videos, no intro (build $tBuildS%.1f s) ==")

@@ -93,7 +93,7 @@ object DedupLedger {
     * band-row layout made the near ledger larger than the corpus text
     * on the 50k fixture). `cell` is pure layout (compaction sizing /
     * 16-way listing split), like the exact table's hash nibble. */
-  private[ops] def sigRows(docs: DataFrame): DataFrame =
+  private[graft] def sigRows(docs: DataFrame): DataFrame =
     DedupOps.minhashSignatures(TextOps.shingled(docs))
       .select(pmod(col("doc_id"), lit(16L)).cast("int").as("cell"),
               col("doc_id"),
@@ -124,25 +124,10 @@ object DedupLedger {
         expr("conv(substring(h, 1, 1), 16, 10)").cast("int"))
       .select(col("cell"), col("h"), col("owner"))
 
-  /** Build (REBUILD-commit) the ledger from `history`. Both tables are
-    * clustered on their partition key before the write so each cell
-    * lands as one file set, not one fragment per upstream task. */
-  def buildLedger(history: DataFrame, dir: String): Int = {
-    IndexStore.setProps(dir, Map("modalities" -> "text"))
-    val v = IndexStore.commitRebuild(dir) {
-      exactRows(history)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
-      // checkpoint so the stats histogram reuses the materialized sig
-      // rows instead of re-shingling the corpus a third time
-      val sigs = sigRows(history).localCheckpoint()
-      sigs.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/vectors")
-      refreshArmStats(dir, "vectors-hist", bandsOf(sigs), Seq("band", "bkey"))
-    }
-    stampLedgerDdls(dir)
-    v
-  }
+  /** Build (REBUILD-commit) a text-only ledger from `history` — the
+    * text arm's call of [[build]]. */
+  def buildLedger(history: DataFrame, dir: String): Int =
+    build(dir, "text", Text -> history)
 
   /** Table-schema stamps for LEDGER builders (round 21, VERDICT r20
     * Next #3 — the 1b mechanism applied ledger-side): this builder owns
@@ -171,70 +156,6 @@ object DedupLedger {
     ()
   }
 
-  /** Append `survivors`' fingerprints as one idempotent tagged delta:
-    * exact rows collapse batch-internal text duplicates to their min-id
-    * representative; signature rows are written for those
-    * representatives only (an exact-identical text would carry an
-    * identical signature — storing it twice buys nothing). */
-  def appendSurvivors(survivors: DataFrame, dir: String, tag: String,
-                      precomputedSigs: Option[DataFrame] = None,
-                      assumeMaterialized: Boolean = false): Int = {
-    // materialize the increment ONCE: every caller passes a LAZY
-    // batch ⋉ verdict.keep join, and this body references it twice
-    // (exact rows, then signature rows) — without the checkpoint each
-    // reference re-executed the whole verdict plan (ledger scan +
-    // batch shingle pipeline + three joins), which profiling showed
-    // was ~4 s of the ~6 s per streamed tick at sf0.1 (round-16
-    // TickProfile). The checkpoint is increment-sized by contract.
-    // (inside the idempotency gate: a replayed tag skips even the
-    // materialization). `assumeMaterialized` skips the re-checkpoint
-    // when the caller already holds a materialized survivor frame
-    // (the mixed sink's parallel arm phase).
-    IndexStore.commitDelta(dir, Some(tag)) {
-      val sv = if (assumeMaterialized) survivors
-               else survivors.localCheckpoint()
-      val reps = exactRows(sv).localCheckpoint()
-      // `precomputedSigs` (the round-17 tick trim): a streamed tick's
-      // VERDICT already paid one full shingle→minhash pass over the
-      // batch — the survivors' signature rows are a semi-join filter
-      // of that frame, row-identical to recomputing them (sigRows is
-      // per-doc deterministic; cell = pmod(doc_id, 16)). Callers
-      // without a shared pass (batch ingest paths) omit it and pay
-      // the subset recompute exactly as before.
-      val owners = reps.select(col("owner").as("doc_id"))
-      val sigs = precomputedSigs match {
-        case Some(pre) => pre.join(owners, Seq("doc_id"), "left_semi")
-        case None => sigRows(sv.join(owners, Seq("doc_id"), "left_semi"))
-      }
-      // the two table writes (and the stats bump's aggregation) are
-      // independent DAGs over materialized inputs (reps is
-      // checkpointed; sigs is a filter of a checkpointed frame or of
-      // reps) — overlap them; the commit lambda returns only when both
-      // file sets are on disk, so the manifest diff sees them exactly
-      // as the serial form did
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = armWriteEc
-      bumpArmStats(dir, "vectors-hist", bandsOf(sigs), Seq("band", "bkey"),
-        armFilesBefore(dir, _.vectors), "vectors",
-        Some(bandsOf(IndexStore.frames(sigs.sparkSession, dir,
-          IndexStore.snapshot(dir),
-          Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
-          declaredSchema = true)._2))) {
-        val wCodes = Future {
-          reps.repartition(col("cell"))
-            .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-        }
-        val wVecs = Future {
-          sigs.repartition(col("cell"))
-            .write.mode("append").partitionBy("cell").parquet(s"$dir/vectors")
-        }
-        Await.result(wCodes, Duration.Inf)
-        Await.result(wVecs, Duration.Inf)
-      }
-    }
-  }
-
   /** Small daemon pool for overlapping independent Spark actions
     * (parallel table writes, parallel modality arms) — job SUBMISSION
     * threads only; the work itself runs on Spark's scheduler. */
@@ -245,104 +166,6 @@ object DedupLedger {
         t.setDaemon(true)
         t
       }))
-
-  /** The batch's signature rows as a standalone frame — what
-    * [[dedupAgainstLedger]] derives internally (`(cell, doc_id,
-    * sig)`), exposed so a streamed tick can compute the shingle →
-    * minhash pass ONCE, checkpoint it, and share it between the
-    * verdict (`batchSigs`) and the survivor append
-    * (`precomputedSigs`). */
-  def signatureRows(batch: DataFrame): DataFrame = sigRows(batch)
-
-  /** Verdict of `batch` against the ledger at `snap`: one row per batch
-    * doc — `(doc_id, exact_of, near_of, keep)`. The ledger side streams
-    * from the snapshot's explicit file list; the batch side broadcasts
-    * ONLY while it is measurably small (round-12 VERDICT #1: the
-    * increment scales with ingest rate, not corpus size — a hard
-    * `broadcast()` hint on a 100 GB/day increment is a guaranteed
-    * driver OOM, the exact latent-OOM pattern `broadcastIfSmall` was
-    * built to ban). Past `maxBroadcast` the hint drops away and AQE
-    * picks a shuffle-hash join on the same keys — verdict-identical
-    * topology change, pinned by LedgerTopologySpec's forced-shuffle
-    * run (the q103 salted-join discipline: prove the plan shape is
-    * oracle-invisible). */
-  def dedupAgainstLedger(spark: SparkSession, batch: DataFrame,
-                         dir: String, snap: IndexStore.Snapshot,
-                         maxBroadcast: Long = 256L << 20,
-                         pairBudgetPerItem: Option[Int] =
-                           DedupOps.DEFAULT_PAIR_BUDGET,
-                         batchSigs: Option[DataFrame] = None): DataFrame = {
-    // ONE gate decision for all four batch-derived frames, taken on the
-    // batch's OWN plan stats: every broadcast side below (hash rows,
-    // band rows, the two verdict arms) is ≤ O(batch rows) by
-    // construction and narrower than the batch text, but the verdict
-    // arms are post-join aggregates whose Catalyst size estimates are
-    // inflated products of their join children (no CBO stats on
-    // temp frames) — gating each frame on its own estimate rejects
-    // kilobyte-sized aggregates and silently de-broadcasts the verdict
-    // (caught by PlanGuardSpec q139). The batch scan's estimate is the
-    // honest proxy for all four.
-    val small = maxBroadcast > 0 &&
-      batch.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBroadcast
-    def gate(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // the empty-table bootstrap (a mixed store seeded media/video-first
-    // verdicts its first text tick against empty history) is gated on
-    // the store's STAMPED modalities — an unstamped or non-text store
-    // with no codes fails by name instead of silently admitting every
-    // duplicate (ADVICE r15 #1). Readers OUTSIDE the ledger (the ANN
-    // store) keep IndexStore.frames' fail-loud default.
-    requireModality(dir, snap.codes, "text", legacyAllowed = false)
-    val (exact, sigs) = IndexStore.frames(spark, dir, snap,
-      Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
-      declaredSchema = true) // text-ledger store by the gate above
-    val bh = batch.select(col("doc_id").as("bdoc"), sha2(col("text"), 256).as("h"))
-    val ex = exact.join(gate(bh), Seq("h"))
-      .groupBy(col("bdoc")).agg(min(col("owner")).as("exact_of"))
-    val bb = bandsOf(batchSigs.getOrElse(sigRows(batch)))
-      .select(col("band"), col("bkey"),
-        col("doc_id").as("bdoc"), col("sig").as("bsig"))
-    // stored sigs re-derive their band keys row-locally in-flight: the
-    // scan reads one sig row per doc, the explode costs no storage.
-    // Under the (default) budget, the LEDGER side sheds its hottest
-    // band buckets (shedHotBuckets — same floor/derivation as the
-    // media arm; exact duplicates are immune, the exact arm is a
-    // separate sha2 join). hitsPerBucket = 1: the minhash band key is
-    // a string pair over a ~2^62 hash keyspace, so any batch's
-    // expected occupancy of one ledger bucket is ≪ 1. No saturation
-    // sentinel here — that keyspace is not a fixed bit geometry the
-    // model speaks about.
-    val lbands0 = bandsOf(sigs)
-    val (lbands, bbJ) = pairBudgetPerItem match {
-      case None => (lbands0, bb)
-      case Some(perItem) =>
-        // bucket sizes are bounded by the signature-table row count
-        // (one row per doc per band, one bucket per band) — the footer
-        // count decides whether measuring can matter at all, and the
-        // write-time stats carry it exactly (zero jobs) when present;
-        // the batch side's measured max bucket occupancy bounds the
-        // true join volume (see shedUnlessAffordable). items = band
-        // rows / bands.
-        val persisted = IndexStore.armStats(dir, "vectors-hist")
-          .filter(_.version >= snap.version) // stale stats prove nothing
-        shedUnlessAffordable(lbands0, Seq("band", "bkey"), perItem,
-          persisted.map(_.rows).getOrElse(
-            memoizedCount(dir, snap.version, "vectors")(sigs.count()) *
-              (DedupOps.NUM_SEEDS / DedupOps.ROWS_PER_BAND)),
-          bb, _ / (DedupOps.NUM_SEEDS / DedupOps.ROWS_PER_BAND),
-          dir, snap.version, "vectors-hist", persisted)
-    }
-    val nm = lbands.join(gate(bbJ), Seq("band", "bkey"))
-      .withColumn("agree", expr(
-        "aggregate(zip_with(sig, bsig, (x, y) -> IF(x = y, 1, 0)), 0, (a, v) -> a + v)"))
-      .groupBy(col("bdoc"))
-      .agg(min(when(col("agree") >= SIG_MIN, col("doc_id"))).as("near_of"))
-    batch.select(col("doc_id"))
-      .join(gate(ex.withColumnRenamed("bdoc", "doc_id")), Seq("doc_id"), "left")
-      .join(gate(nm.withColumnRenamed("bdoc", "doc_id")), Seq("doc_id"), "left")
-      .withColumn("keep", when(col("exact_of").isNull && col("near_of").isNull,
-        1L).otherwise(0L))
-      .orderBy(col("doc_id"))
-  }
 
   // ---- media fingerprint arm (q158): the ledger learns to speak
   // dhash/ahash — a third `marks` table on the same store, one row per
@@ -397,106 +220,6 @@ object DedupLedger {
       .withColumn("cell",
         pmod(expr("element_at(fp, 1)"), lit(16L)).cast("int"))
       .select(col("cell"), col("fp"), col("owner"))
-
-  /** Row-local band derivation over any frame with an `fp` column —
-    * used on both sides of the near join, like [[bandsOf]]; band keys
-    * are [[DedupOps.wideBandKeySql]] slices, constant-folded per band
-    * so the explode stays in whole-stage codegen. */
-  private def mediaBandsOf(fps: DataFrame, geom: MarksGeom): DataFrame = {
-    val bandStructs = (0 until geom.bands).map { b =>
-      s"named_struct('band', $b, 'bkey', " +
-        s"${DedupOps.wideBandKeySql(b, geom.bandBits, "fp")})"
-    }
-    fps.withColumn("mb",
-        explode(expr(s"array(${bandStructs.mkString(", ")})")))
-      .withColumn("band", col("mb.band"))
-      .withColumn("bkey", col("mb.bkey"))
-      .drop("mb")
-  }
-
-  /** Rebuild a MIXED ledger: the two text tables plus the media marks,
-    * all under one snapshot — a reader can never see the modalities
-    * half a batch apart. */
-  def buildMixedLedger(history: DataFrame, historyFps: DataFrame,
-                       dir: String, geom: MarksGeom = NarrowMarks): Int = {
-    // a mixed store declares EVERY modality the router can send it —
-    // absence of any one table is bootstrap, not misconfiguration
-    IndexStore.setProps(dir, Map("modalities" -> "text,media,video"))
-    val v = IndexStore.commitRebuild(dir) {
-      exactRows(history)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
-      val sigs = sigRows(history).localCheckpoint()
-      sigs.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/vectors")
-      refreshArmStats(dir, "vectors-hist", bandsOf(sigs), Seq("band", "bkey"))
-      val marks = markRows(historyFps).localCheckpoint()
-      marks.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/marks")
-      refreshArmStats(dir, s"marks-hist-${geom.params}",
-        mediaBandsOf(marks, geom), Seq("band", "bkey"))
-    }
-    stampLedgerDdls(dir)
-    v
-  }
-
-  /** Append surviving media fingerprints as one idempotent tagged
-    * delta (the media analog of [[appendSurvivors]]). `geom` keys the
-    * write-time stats bump to the geometry the verdict reads at —
-    * stats at a mismatched geometry are never consulted (the verdict
-    * falls back to its runtime histogram), so a wrong `geom` here
-    * costs speed, not correctness. */
-  def appendMediaSurvivors(survivors: DataFrame, dir: String,
-                           tag: String,
-                           geom: MarksGeom = NarrowMarks): Int =
-    IndexStore.commitDelta(dir, Some(tag)) {
-      // materialize ONCE when the stats bump will CONSUME the frame
-      // (the appendSurvivors discipline): callers pass a lazy
-      // batch ⋉ verdict join, and a live bump is a second reference —
-      // without the checkpoint it re-executed the whole verdict plan
-      // (round-16 TickProfile find, recurred when the r17 write-time
-      // stats added the reference). A store whose stats were lost,
-      // under the escalation bytes, keeps the single-reference lazy
-      // write — its bump is a zero-job no-op, so the checkpoint would
-      // be pure added cost; [[bumpWillConsume]] draws that line
-      // exactly (including the byte-gated escalation, ADVICE r18 #1).
-      // Increment-sized by contract.
-      val key = s"marks-hist-${geom.params}"
-      val beforeFiles = armFilesBefore(dir, _.marks)
-      val marks0 = markRows(survivors)
-      val marks =
-        if (bumpWillConsume(dir, key, beforeFiles, "marks"))
-          marks0.localCheckpoint()
-        else marks0
-      bumpArmStats(dir, key, mediaBandsOf(marks, geom),
-        Seq("band", "bkey"), beforeFiles, "marks",
-        Some(mediaBandsOf(IndexStore.marksFrame(marks.sparkSession, dir,
-          IndexStore.snapshot(dir), IndexStore.MARKS_DDL), geom))) {
-        marks.repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(s"$dir/marks")
-      }
-    }
-
-  /** Fingerprint-WIDTH guard (review find): a word-count/geometry
-    * mismatch — a wide store probed at a narrow geometry, or batch
-    * fingerprints hashed at the wrong grid — makes `zip_with` pad the
-    * short side with nulls, the ≤-maxHamming predicate evaluate to
-    * null, and the near arm silently match NOTHING: every
-    * near-duplicate admitted forever with no error. The guard is an
-    * IN-PLAN `assert_true` row filter on both verdict inputs: every
-    * row validates inside the scans the verdict already runs (zero
-    * extra Spark jobs — the first cut of this guard as driver-side
-    * aggregations cost two jobs per verdict call), and a mismatch
-    * fails the job BY NAME instead of silently passing. assert_true
-    * yields NULL on success, so the filter keeps every valid row. */
-  private def withWidthCheck(df: DataFrame, geom: MarksGeom,
-                             what: String): DataFrame = {
-    val w = (geom.fpBits + 63) / 64
-    df.filter(expr(
-      s"assert_true(size(fp) = $w, '$what fingerprint width <> $w words " +
-        s"(geometry ${geom.params}): a width mismatch nulls the hamming " +
-        "filter and silently admits every near-duplicate') IS NULL"))
-  }
 
   /** The ledger-side hot-bucket shed shared by the verdict arms'
     * banded lookup joins (VERDICT r14 #1b: candidate volume is
@@ -767,24 +490,6 @@ object DedupLedger {
     before.foldLeft(0L)((a, rel) =>
       a + IndexStore.dataFileSize(dir, sub, rel))
 
-  /** Will the [[bumpArmStats]] call that follows this delta's write
-    * EVALUATE the delta frame again? True on the live-stats bump, the
-    * first-delta exact refresh, AND (ADVICE r18 #1) the byte-gated
-    * escalation — a stats-less corpus-scale arm computes the full-arm
-    * histogram from `fullArmBanded UNION bandedDelta`, so a lazy delta
-    * there re-executes the caller's whole verdict plan inside the
-    * commit (the round-16 regression the checkpoint exists to stop),
-    * and a non-deterministic survivors plan could make the persisted
-    * histogram diverge from the rows actually written. Callers
-    * checkpoint exactly when this returns true — every store a builder
-    * stamped. The only false case — a published arm whose stats were
-    * lost, under the escalation bytes — is the zero-job bump no-op
-    * where a checkpoint is pure added cost. */
-  private def bumpWillConsume(dir: String, key: String,
-                              before: Seq[String], sub: String): Boolean =
-    IndexStore.armStats(dir, key).isDefined || before.isEmpty ||
-      armBytes(dir, sub, before) >= STATS_ESCALATE_BYTES
-
   /** Delta-commit stats maintenance — increment-proportional: slack +=
     * the DELTA's max per-bucket count (sound: every pre-existing
     * bucket grew by at most that, and a bucket born since the last
@@ -810,7 +515,7 @@ object DedupLedger {
                            bandedDelta: => DataFrame,
                            keys: Seq[String], before: Seq[String],
                            sub: String,
-                           fullArmBanded: => Option[DataFrame])
+                           fullArmBanded: => DataFrame)
                           (write: => Unit): Unit =
     IndexStore.armStats(dir, key) match {
       case Some(st) =>
@@ -844,25 +549,18 @@ object DedupLedger {
         // delta takes the cheap bump branch above. Bytes are the
         // corpus proxy (manifest metadata, no job to decide).
         val bytes = armBytes(dir, sub, before)
-        if (bytes >= STATS_ESCALATE_BYTES) fullArmBanded.foreach { full =>
+        if (bytes >= STATS_ESCALATE_BYTES) {
           log.warn(s"DedupLedger: $dir/$sub ($bytes bytes) carries no " +
             s"'$key' stats — escalating to a blocking full-arm stats " +
             "refresh inside this append commit (one-time convergence; " +
             "see SCALING r18)")
           refreshArmStats(dir, key,
-            full.select(keys.map(col): _*)
+            fullArmBanded.select(keys.map(col): _*)
               .unionByName(bandedDelta.select(keys.map(col): _*)),
             keys)
         }
     }
 
-  /** The arm's published files BEFORE the in-flight delta commit —
-    * readable inside a commit lambda (pre-publish, under the writer
-    * lock). Empty for a never-published store. */
-  private def armFilesBefore(dir: String,
-                             arm: IndexStore.Snapshot => Seq[String]): Seq[String] =
-    IndexStore.headVersion(dir)
-      .map(v => arm(IndexStore.snapshotAt(dir, v))).getOrElse(Nil)
   private val sentinelCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Int, Long)]()
   private def memoizedCount(dir: String, version: Int, what: String)
@@ -926,88 +624,6 @@ object DedupLedger {
         "...)) if bootstrapping this modality is intended")
     }
 
-  /** Verdict of a media batch `(media_id, fp: array<bigint>)` against
-    * the ledger's marks at `snap`: `(media_id, exact_of, near_of,
-    * keep)` — exact = fingerprint equality, near = banded pigeonhole
-    * join + word-wise popcount ≤ `geom.maxHamming` (exact recall at
-    * any admitted geometry), both arms resolving to the smallest
-    * matching owner. Same topology discipline as the text verdict:
-    * the ledger side streams from the snapshot's file list, the batch
-    * side broadcasts only while its plan stats stay under
-    * `maxBroadcast`. `geom` must match the store's stamped geometry
-    * (the params discipline — [[ensureMixedHistoryLedger]] stamps it).
-    * With `pairBudgetPerItem` set, the ledger side sheds its hottest
-    * band buckets ([[shedHotBuckets]]) so per-item fan-out stays
-    * bounded as the marks table grows; unset, the saturation sentinel
-    * logs when the geometry has outgrown the marks population. */
-  def dedupMediaAgainstLedger(spark: SparkSession, batch: DataFrame,
-                              dir: String, snap: IndexStore.Snapshot,
-                              geom: MarksGeom = NarrowMarks,
-                              maxBroadcast: Long = 256L << 20,
-                              pairBudgetPerItem: Option[Int] =
-                                DedupOps.DEFAULT_PAIR_BUDGET): DataFrame = {
-    val small = maxBroadcast > 0 &&
-      batch.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBroadcast
-    def gate(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // an empty marks snapshot bootstraps only when the store declares
-    // the modality (stamped stores) or predates the stamp (legacy
-    // tolerate — the marks arm's historical default)
-    requireModality(dir, snap.marks, "media", legacyAllowed = true)
-    // RAW frame for the exact arm and the sentinel count: the width
-    // guard lives on the BANDED path only (the zip_with it protects),
-    // so count() stays a parquet footer read and the exact arm's
-    // column pruning survives; the near arm always runs over the same
-    // inputs, so a width-mismatched store still fails loudly there
-    val marksRaw = IndexStore.marksFrame(spark, dir, snap,
-      IndexStore.MARKS_DDL)
-    val bm = withWidthCheck(batch, geom, "media batch")
-      .select(col("media_id").as("bid"), col("fp").as("bfp"))
-    val ex = marksRaw.select(col("fp").as("bfp"), col("owner"))
-      .join(gate(bm), Seq("bfp"))
-      .groupBy(col("bid")).agg(min(col("owner")).as("exact_of"))
-    val lb0 = mediaBandsOf(
-      withWidthCheck(marksRaw.select(col("fp"), col("owner")), geom, "marks"),
-      geom)
-    val bb = mediaBandsOf(bm.select(col("bid"), col("bfp").as("fp")), geom)
-      .select(col("band"), col("bkey"), col("bid"), col("fp").as("bfp"))
-    val (lb, bbJ) = pairBudgetPerItem match {
-      case None =>
-        // parquet count-star prunes to row-group footers, and the memo
-        // makes it once per published snapshot, not once per verdict
-        DedupOps.warnIfSaturated(
-          memoizedCount(dir, snap.version, "marks")(marksRaw.count()),
-          geom.bands, geom.bandBits)
-        (lb0, bb)
-      case Some(perItem) =>
-        // bucket sizes are bounded by the marks row count (footer
-        // read, memoized — the same count the sentinel path pays);
-        // the batch bands' measured max occupancy bounds the true
-        // join volume. items = band rows / bands. The saturation
-        // sentinel runs here too (ADVICE r16 #2): shedding without
-        // the geometry-outgrown signal hides the condition the
-        // operator must react to, and the count is already memoized
-        val persisted = IndexStore.armStats(dir, s"marks-hist-${geom.params}")
-          .filter(_.version >= snap.version) // stale stats prove nothing
-        val n = persisted.map(_.rows / geom.bands).getOrElse(
-          memoizedCount(dir, snap.version, "marks")(marksRaw.count()))
-        DedupOps.warnIfSaturated(n, geom.bands, geom.bandBits)
-        shedUnlessAffordable(lb0, Seq("band", "bkey"), perItem,
-          n * geom.bands,
-          bb, _ / geom.bands,
-          dir, snap.version, s"marks-hist-${geom.params}", persisted)
-    }
-    val nr = lb.join(gate(bbJ), Seq("band", "bkey"))
-      .filter(expr("aggregate(zip_with(fp, bfp, (x, y) -> bit_count(x ^ y)), " +
-        s"0, (acc, v) -> acc + v) <= ${geom.maxHamming}"))
-      .groupBy(col("bid")).agg(min(col("owner")).as("near_of"))
-    batch.select(col("media_id"))
-      .join(gate(ex.withColumnRenamed("bid", "media_id")), Seq("media_id"), "left")
-      .join(gate(nr.withColumnRenamed("bid", "media_id")), Seq("media_id"), "left")
-      .withColumn("keep", when(col("exact_of").isNull && col("near_of").isNull,
-        1L).otherwise(0L))
-      .orderBy(col("media_id"))
-  }
-
   /** SRP sign-bit fingerprint for an embeddings frame — the EMBEDDING
     * arm's integer fingerprint: 42 deterministic hyperplanes (the q97
     * formula at bands=3 x bits=14, evaluated by the codegen'd
@@ -1061,162 +677,519 @@ object DedupLedger {
               col("owner"), col("fh.f").as("f"), col("fh.fp").as("fp"),
               col("seqhash"))
 
-  /** Append surviving videos' fingerprint sequences as one idempotent
-    * tagged delta (the video analog of [[appendMediaSurvivors]]);
-    * `geom` keys the write-time stats bump, same contract as the
-    * media append's. */
-  def appendVideoSurvivors(frames: DataFrame, dir: String,
-                           tag: String,
-                           geom: MarksGeom = NarrowMarks): Int =
-    IndexStore.commitDelta(dir, Some(tag)) {
-      // materialized once IF the stats bump will consume it (see
-      // appendMediaSurvivors; the lazy form re-executed the caller's
-      // verdict plan inside a live bump)
-      val key = s"seqs-hist-${geom.params}"
-      val beforeFiles = armFilesBefore(dir, _.seqs)
-      val rows0 = seqRows(frames)
-      val rows =
-        if (bumpWillConsume(dir, key, beforeFiles, "seqs"))
-          rows0.localCheckpoint()
-        else rows0
-      bumpArmStats(dir, key, mediaBandsOf(rows, geom),
-        Seq("f", "band", "bkey"), beforeFiles, "seqs",
-        Some(mediaBandsOf(IndexStore.seqsFrame(rows.sparkSession, dir,
-          IndexStore.snapshot(dir)), geom))) {
-        rows.repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(s"$dir/seqs")
+  // ---- the ledger ARMS: one description per modality, one lifecycle
+  // skeleton over it — [[build]], [[verdict]], [[append]], [[ingest]]
+  // and the streamed tick step [[stage]] are written once.
+
+  /** One modality of the ledger. An arm declares:
+    *   - the store tables it writes (`tables`; the LAST is the banded
+    *     table its near arm reads and its stats describe) and their
+    *     rebuild / delta row builders;
+    *   - its batch shape (`idCol`) and preparation: a stream kind's
+    *     rows become doc_id/text rows (text) or fingerprints at the
+    *     arm's grid (images, video), and the near side derives from
+    *     the batch (text: the shingle → MinHash signatures, checkpointed
+    *     once per tick; fingerprint arms: the batch itself);
+    *   - its exact key, band derivation and band key columns;
+    *   - its near predicate and aggregate;
+    *   - its stats key, modality stamp and bootstrap polarity
+    *     ([[requireModality]]), width guard and saturation sentinel. */
+  sealed abstract class LedgerArm {
+    /** The store's stamped modality — also the suffix of the arm's
+      * streamed-tick idempotency tag. */
+    def modality: String
+    /** The stream `kind` a mixed tick routes to this arm. */
+    def kind: String
+    /** Batch id column (and the verdict's). */
+    def idCol: String
+    /** Batch id column inside the verdict's arm aggregates. */
+    private[ops] def bid: String = "bid"
+    private[ops] def tables: Seq[String]
+    private[ops] def table: String = tables.last
+    private[ops] def statsKey: String
+    private[ops] def bandKeys: Seq[String] = Seq("band", "bkey")
+    private[ops] def bands: Int
+    /** Empty-snapshot polarity for stores that predate the modality
+      * stamp (text: fail-loud; marks/seqs: tolerate). */
+    private[ops] def legacyAllowed: Boolean = true
+    /** Stream rows of this arm's kind → the arm's batch shape. */
+    private[graft] def prepare(rows: DataFrame): DataFrame
+    /** The batch's near-side rows, lazily. */
+    private[ops] def nearRows(batch: DataFrame): DataFrame = batch
+    /** The near-side rows one verdict and its append both read. */
+    private[ops] def sharedNear(batch: DataFrame): DataFrame = batch
+    /** Band rows of the band table's rows (both join sides, and stats). */
+    private[ops] def banded(rows: DataFrame): DataFrame
+    /** The band table as stored at `snap`. */
+    private[ops] def tableFrame(spark: SparkSession, dir: String,
+                                snap: IndexStore.Snapshot): DataFrame
+    private[ops] def sides(spark: SparkSession, batch: DataFrame,
+                           near: DataFrame, dir: String,
+                           snap: IndexStore.Snapshot): Sides
+    /** Band-join candidates → `(bid, near_of)`. */
+    private[ops] def near(cand: DataFrame): DataFrame
+    private[ops] def sentinel(tableRows: => Long, batch: DataFrame): Unit = ()
+    private[ops] def batchIds(batch: DataFrame): DataFrame = batch.select(col(idCol))
+    /** `(table, rows)` a rebuild writes; the band table materialized. */
+    private[ops] def buildRows(history: DataFrame): Seq[(String, DataFrame)]
+    /** `(table, rows)` a delta over materialized survivors writes. */
+    private[ops] def deltaRows(sv: DataFrame,
+                               near: DataFrame): Seq[(String, DataFrame)]
+    /** Fails a sink whose grid cannot feed this arm's geometry. */
+    private[graft] def requireGrid(): Unit = ()
+  }
+
+  /** The frames one verdict joins: `ledgerExact ⋈ batchExact` on
+    * `exactKey`, `ledgerBands ⋈ batchBands` on the arm's band keys;
+    * `table` is the raw band table (the row-count fallback). */
+  private[ops] final case class Sides(ledgerExact: DataFrame,
+                                      batchExact: DataFrame,
+                                      exactKey: Seq[String],
+                                      ledgerBands: DataFrame,
+                                      batchBands: DataFrame,
+                                      table: DataFrame)
+
+  /** The text arm (q139 family): `codes` = exact sha2 rows, `vectors` =
+    * MinHash signatures; near = ≥ [[SIG_MIN]] agreeing positions. */
+  case object Text extends LedgerArm {
+    val modality = "text"
+    val kind = "text"
+    val idCol = "doc_id"
+    private[ops] override def bid = "bdoc"
+    private[ops] val tables = Seq("codes", "vectors")
+    private[ops] val statsKey = "vectors-hist"
+    private[ops] val bands = DedupOps.NUM_SEEDS / DedupOps.ROWS_PER_BAND
+    private[ops] override val legacyAllowed = false
+    private[graft] def prepare(rows: DataFrame): DataFrame =
+      rows.select(col("doc_id"), col("text"))
+    private[ops] override def nearRows(batch: DataFrame): DataFrame = sigRows(batch)
+    private[ops] override def sharedNear(batch: DataFrame): DataFrame =
+      sigRows(batch).localCheckpoint()
+    private[ops] def banded(rows: DataFrame): DataFrame = bandsOf(rows)
+    private[ops] def tableFrame(spark: SparkSession, dir: String,
+                                snap: IndexStore.Snapshot): DataFrame =
+      IndexStore.frames(spark, dir, snap, Some(IndexStore.CODES_DDL),
+        Some(IndexStore.VECTORS_DDL), declaredSchema = true)._2
+    private[ops] def sides(spark: SparkSession, batch: DataFrame,
+                           near: DataFrame, dir: String,
+                           snap: IndexStore.Snapshot): Sides = {
+      // text-ledger store by the modality gate: the contract DDLs
+      val (exact, sigs) = IndexStore.frames(spark, dir, snap,
+        Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
+        declaredSchema = true)
+      // stored sigs re-derive their band keys row-locally in-flight:
+      // the scan reads one sig row per doc, the explode costs no storage
+      Sides(exact,
+        batch.select(col("doc_id").as("bdoc"), sha2(col("text"), 256).as("h")),
+        Seq("h"), bandsOf(sigs),
+        bandsOf(near).select(col("band"), col("bkey"),
+          col("doc_id").as("bdoc"), col("sig").as("bsig")),
+        sigs)
+    }
+    private[ops] def near(cand: DataFrame): DataFrame =
+      cand.withColumn("agree", expr(
+          "aggregate(zip_with(sig, bsig, (x, y) -> IF(x = y, 1, 0)), 0, (a, v) -> a + v)"))
+        .groupBy(col("bdoc"))
+        .agg(min(when(col("agree") >= SIG_MIN, col("doc_id"))).as("near_of"))
+    // history stores EVERY doc's signature; a delta stores its exact
+    // representatives' only (an exact-identical text would carry an
+    // identical signature — storing it twice buys nothing), as a
+    // semi-join of the batch's signature rows: row-identical to
+    // re-signing the representatives (sigRows is per-doc
+    // deterministic; cell = pmod(doc_id, 16))
+    private[ops] def buildRows(history: DataFrame): Seq[(String, DataFrame)] =
+      Seq("codes" -> exactRows(history),
+          "vectors" -> sigRows(history).localCheckpoint())
+    private[ops] def deltaRows(sv: DataFrame,
+                               near: DataFrame): Seq[(String, DataFrame)] = {
+      val reps = exactRows(sv).localCheckpoint()
+      Seq("codes" -> reps,
+          "vectors" -> near.join(reps.select(col("owner").as("doc_id")),
+            Seq("doc_id"), "left_semi"))
+    }
+  }
+
+  /** The fingerprint arms: `fp: array<bigint>` rows banded at `geom`,
+    * near = word-wise popcount ≤ `geom.maxHamming`, and a `gw`×`gh`
+    * dHash grid for streamed payloads. */
+  sealed abstract class FpArm extends LedgerArm {
+    def geom: MarksGeom
+    def gw: Int
+    def gh: Int
+    val idCol = "media_id"
+    private[ops] def bands = geom.bands
+    /** Row-local band derivation over any frame with an `fp` column —
+      * used on both sides of the near join, like [[bandsOf]]; band keys
+      * are [[DedupOps.wideBandKeySql]] slices, constant-folded per band
+      * so the explode stays in whole-stage codegen. */
+    private[ops] def banded(rows: DataFrame): DataFrame = {
+      val bandStructs = (0 until geom.bands).map { b =>
+        s"named_struct('band', $b, 'bkey', " +
+          s"${DedupOps.wideBandKeySql(b, geom.bandBits, "fp")})"
       }
+      rows.withColumn("mb",
+          explode(expr(s"array(${bandStructs.mkString(", ")})")))
+        .withColumn("band", col("mb.band"))
+        .withColumn("bkey", col("mb.bkey"))
+        .drop("mb")
+    }
+    /** Fingerprint-WIDTH guard (review find): a word-count/geometry
+      * mismatch — a wide store probed at a narrow geometry, or batch
+      * fingerprints hashed at the wrong grid — makes `zip_with` pad the
+      * short side with nulls, the ≤-maxHamming predicate evaluate to
+      * null, and the near arm silently match NOTHING: every
+      * near-duplicate admitted forever with no error. The guard is an
+      * IN-PLAN `assert_true` row filter on both verdict inputs: every
+      * row validates inside the scans the verdict already runs (zero
+      * extra Spark jobs — the first cut of this guard as driver-side
+      * aggregations cost two jobs per verdict call), and a mismatch
+      * fails the job BY NAME instead of silently passing. assert_true
+      * yields NULL on success, so the filter keeps every valid row. */
+    private[ops] def checked(df: DataFrame, what: String): DataFrame = {
+      val w = (geom.fpBits + 63) / 64
+      df.filter(expr(
+        s"assert_true(size(fp) = $w, '$what fingerprint width <> $w words " +
+          s"(geometry ${geom.params}): a width mismatch nulls the hamming " +
+          "filter and silently admits every near-duplicate') IS NULL"))
+    }
+    private[ops] def withinHamming: Column =
+      expr("aggregate(zip_with(fp, bfp, (x, y) -> bit_count(x ^ y)), " +
+        s"0, (acc, v) -> acc + v) <= ${geom.maxHamming}")
+    /** The arm's one table's rows for a batch (exact-collapsed). */
+    private[ops] def rowsOf(fps: DataFrame): DataFrame
+    private[ops] def buildRows(fps: DataFrame): Seq[(String, DataFrame)] =
+      Seq(table -> rowsOf(fps).localCheckpoint())
+    private[ops] def deltaRows(sv: DataFrame,
+                               near: DataFrame): Seq[(String, DataFrame)] =
+      Seq(table -> rowsOf(sv))
+    /** Stream payloads of this arm's kind as media records. */
+    private[ops] def records(rows: DataFrame)
+        : org.apache.spark.sql.Dataset[graft.multimodal.MediaOps.MediaRecord] = {
+      import rows.sparkSession.implicits._
+      rows.select(col("doc_id").as("media_id"),
+          struct(lit(kind).as("kind"), lit(0).as("declaredWidth"),
+                 lit(0).as("declaredHeight"), lit(0).as("sampleRate")).as("meta"),
+          col("payload"))
+        .as[graft.multimodal.MediaOps.MediaRecord]
+    }
+    /** The comparison is exact BIT width, not rounded word count
+      * (ADVICE r15 #5: a 9x6 grid packs the same one word as 8x6 but
+      * diverges from a 42-bit stamped geometry at verdict time): a
+      * w x h dHash grid emits h*(w-1) comparison bits, which must equal
+      * the geometry's banded capacity exactly. */
+    private[graft] override def requireGrid(): Unit =
+      require(gh * (gw - 1) == geom.fpBits,
+        s"$kind grid ${gw}x$gh emits ${gh * (gw - 1)} fingerprint bits but " +
+        s"geometry ${geom.params} verdicts ${geom.fpBits}-bit fingerprints")
+  }
+
+  /** The media arm (q158 family — images, audio, embeddings): `marks`,
+    * one row per distinct fingerprint. `geom` must match the store's
+    * stamped geometry (the params discipline). */
+  final case class Media(geom: MarksGeom = NarrowMarks, gw: Int = 8,
+                         gh: Int = 6) extends FpArm {
+    val modality = "media"
+    val kind = "image"
+    private[ops] val tables = Seq("marks")
+    private[ops] def statsKey = s"marks-hist-${geom.params}"
+    private[graft] def prepare(rows: DataFrame): DataFrame =
+      graft.multimodal.MediaOps.dHashWide(records(rows), gw, gh)
+        .filter(col("decoded") === 1L)
+        .select(col("media_id"), col("dhash").as("fp"))
+        .localCheckpoint() // verdict + append read it twice
+    private[ops] def tableFrame(spark: SparkSession, dir: String,
+                                snap: IndexStore.Snapshot): DataFrame =
+      IndexStore.marksFrame(spark, dir, snap, IndexStore.MARKS_DDL)
+    private[ops] def sides(spark: SparkSession, batch: DataFrame,
+                           near: DataFrame, dir: String,
+                           snap: IndexStore.Snapshot): Sides = {
+      val raw = tableFrame(spark, dir, snap)
+      val bm = checked(batch, "media batch")
+        .select(col("media_id").as("bid"), col("fp").as("bfp"))
+      Sides(raw.select(col("fp").as("bfp"), col("owner")), bm, Seq("bfp"),
+        banded(checked(raw.select(col("fp"), col("owner")), "marks")),
+        banded(bm.select(col("bid"), col("bfp").as("fp")))
+          .select(col("band"), col("bkey"), col("bid"), col("fp").as("bfp")),
+        raw)
+    }
+    private[ops] def near(cand: DataFrame): DataFrame =
+      cand.filter(withinHamming)
+        .groupBy(col("bid")).agg(min(col("owner")).as("near_of"))
+    private[ops] override def sentinel(tableRows: => Long,
+                                       batch: DataFrame): Unit =
+      DedupOps.warnIfSaturated(tableRows, geom.bands, geom.bandBits)
+    private[ops] def rowsOf(fps: DataFrame): DataFrame = markRows(fps)
+  }
+
+  /** The video arm (q169 family): `seqs`, per-position fingerprint rows
+    * of each admitted sequence. Exact = identical sequence (stored
+    * digest equi-join); near = the temporal vote, ≥ 3 of the 4 sampled
+    * positions within `geom.maxHamming` of one owner's. */
+  final case class Video(geom: MarksGeom = NarrowMarks, gw: Int = 8,
+                         gh: Int = 6) extends FpArm {
+    val modality = "video"
+    val kind = "video"
+    private[ops] val tables = Seq("seqs")
+    private[ops] def statsKey = s"seqs-hist-${geom.params}"
+    private[ops] override val bandKeys = Seq("f", "band", "bkey")
+    private[graft] def prepare(rows: DataFrame): DataFrame =
+      graft.multimodal.MediaOps.frameDHashWide(records(rows), 4, gw, gh)
+        .select(col("media_id"), col("frame_idx").as("f"), col("fhash").as("fp"))
+        .localCheckpoint() // verdict + append read it twice
+    private[ops] def tableFrame(spark: SparkSession, dir: String,
+                                snap: IndexStore.Snapshot): DataFrame =
+      IndexStore.seqsFrame(spark, dir, snap)
+    private[ops] def sides(spark: SparkSession, batch: DataFrame,
+                           near: DataFrame, dir: String,
+                           snap: IndexStore.Snapshot): Sides = {
+      val raw = tableFrame(spark, dir, snap)
+      require(raw.columns.contains("seqhash"),
+        s"seqs store under $dir predates the sequence-digest schema " +
+        "(no seqhash column) — rebuild it or backfill digests; reading " +
+        "it would silently drop every pre-digest owner from the exact arm")
+      val cb = checked(batch, "video batch")
+      // exact arm: canonical sequence equality via the STORED digest —
+      // the batch side derives its digests over the increment, the
+      // ledger side streams (no corpus-side array rebuild per verdict).
+      // Deliberately NO one-row-per-owner pre-filter (ADVICE r15 #3: the
+      // old `f = 0` filter assumed every owner stored a position-0 row;
+      // a partial decode that samples only later frames would make the
+      // owner permanently invisible to the exact arm): every row of a
+      // MATCHING owner reaches the join — F redundant rows per match,
+      // bounded by the increment's duplicate count, never corpus-shaped
+      // — and the min() collapses them.
+      val bseqs = cb.select(col("media_id").as("bid"), col("f"), col("fp"))
+        .groupBy(col("bid"))
+        .agg(sort_array(collect_list(struct(col("f"), col("fp")))).as("seq"))
+        .select(col("bid"), seqDigest.as("seqhash"))
+      Sides(raw.select(col("seqhash"), col("owner")), bseqs, Seq("seqhash"),
+        banded(checked(raw.select(col("owner"), col("f"), col("fp")), "seqs")),
+        banded(cb.select(col("media_id").as("bid"), col("f"), col("fp")))
+          .select(col("f"), col("band"), col("bkey"), col("bid"),
+                  col("fp").as("bfp")),
+        raw)
+    }
+    private[ops] def near(cand: DataFrame): DataFrame =
+      cand.filter(withinHamming)
+        // several bands can match the same (video, owner, position) —
+        // one vote per position
+        .select(col("bid"), col("owner"), col("f")).distinct()
+        .groupBy(col("bid"), col("owner"))
+        .agg(count(lit(1)).as("n_agree"))
+        .filter(col("n_agree") >= 3)
+        .groupBy(col("bid")).agg(min(col("owner")).as("near_of"))
+    // each position is its own keyspace: the table total over-counts a
+    // position's load by the frame count, so the increment-sized
+    // positions count runs only when that conservative screen saturates
+    // (exact when every video carries the same frame count, the ingest
+    // invariant)
+    private[ops] override def sentinel(tableRows: => Long,
+                                       batch: DataFrame): Unit =
+      if (!DedupOps.saturationSafe(tableRows, geom.bands, geom.bandBits)) {
+        val positions = math.max(1L, batch.select(col("f")).distinct().count())
+        DedupOps.warnIfSaturated(tableRows / positions, geom.bands, geom.bandBits)
+      }
+    private[ops] override def batchIds(batch: DataFrame): DataFrame =
+      batch.select(col("media_id")).distinct()
+    private[ops] def rowsOf(frames: DataFrame): DataFrame = seqRows(frames)
+  }
+
+  private def filesOf(snap: IndexStore.Snapshot, table: String): Seq[String] =
+    table match {
+      case "codes" => snap.codes
+      case "vectors" => snap.vectors
+      case "marks" => snap.marks
+      case "seqs" => snap.seqs
     }
 
-  /** Verdict of a VIDEO batch `(media_id, f, fp: array<bigint>)` —
-    * one row per sampled frame position, the
-    * [[graft.multimodal.MediaOps.frameDHashWide]] shape — against the
-    * ledger's seqs at `snap`: `(media_id, exact_of, near_of, keep)`.
-    * EXACT = an owner with the IDENTICAL fingerprint sequence
-    * (canonical sorted (f, fp) list equi-joined — frame count and
-    * every position must agree). NEAR = the temporal vote: ≥
-    * `minAgree` positions carry fingerprints within `geom.maxHamming`
-    * of the owner's (per-position pigeonhole banding, so recall per
-    * position is exact); both arms resolve to the smallest matching
-    * owner. Topology: the ledger streams from the snapshot's file
-    * list; candidates form on a (position, band, key) equi-join
-    * (bounded keys, nothing quadratic); the batch side broadcasts
-    * only under the size gate. With `pairBudgetPerItem`, hot
-    * (position, band, key) ledger buckets shed exactly as the marks
-    * arm's do — a shared intro frame across the admitted corpus is
-    * ONE ledger row per position by the seqRows dedup-first rule, so
-    * the cap's job is residual near-collision mass only. */
-  def dedupVideoAgainstLedger(spark: SparkSession, batch: DataFrame,
-                              dir: String, snap: IndexStore.Snapshot,
-                              geom: MarksGeom = NarrowMarks,
-                              minAgree: Int = 3,
-                              maxBroadcast: Long = 256L << 20,
-                              pairBudgetPerItem: Option[Int] =
-                                DedupOps.DEFAULT_PAIR_BUDGET): DataFrame = {
+  /** Cell-clustered write: each cell lands as one file set, not one
+    * fragment per upstream task. */
+  private def writeCells(rows: DataFrame, path: String, mode: String): Unit =
+    rows.repartition(col("cell"))
+      .write.mode(mode).partitionBy("cell").parquet(path)
+
+  /** REBUILD-commit a ledger: every arm's tables from its history, all
+    * under one snapshot (a reader never sees the modalities half a
+    * batch apart), each arm's exact write-time stats stamped before the
+    * publish. `modalities` is the store's declared set — a mixed store
+    * declares EVERY modality the router can send it, so absence of any
+    * one table is bootstrap, not misconfiguration. */
+  def build(dir: String, modalities: String,
+            history: (LedgerArm, DataFrame)*): Int = {
+    IndexStore.setProps(dir, Map("modalities" -> modalities))
+    val v = IndexStore.commitRebuild(dir) {
+      for ((arm, h) <- history) {
+        val rows = arm.buildRows(h)
+        rows.foreach { case (t, r) => writeCells(r, s"$dir/$t", "overwrite") }
+        refreshArmStats(dir, arm.statsKey, arm.banded(rows.toMap.apply(arm.table)),
+          arm.bandKeys)
+      }
+    }
+    if (history.exists(_._1 == Text)) stampLedgerDdls(dir)
+    v
+  }
+
+  /** Verdict of `batch` against the ledger at `snap` through `arm`: one
+    * row per batch item — `(idCol, exact_of, near_of, keep)`. EXACT = the
+    * arm's exact key equi-joined (text: sha2 of the text; media:
+    * fingerprint equality; video: the canonical sequence digest); NEAR =
+    * the banded candidates that pass the arm's predicate (text: ≥
+    * [[SIG_MIN]] agreeing minhash positions; media: popcount ≤
+    * `geom.maxHamming`, exact recall at any admitted geometry; video:
+    * the temporal vote, ≥ 3 agreeing positions, per-position pigeonhole
+    * banding so recall per position is exact). Both arms resolve to the
+    * smallest matching owner; `keep` = 1 iff neither fired.
+    *
+    * Topology: the ledger side streams from the snapshot's explicit
+    * file list; the batch side broadcasts ONLY while it is measurably
+    * small (round-12 VERDICT #1: the increment scales with ingest rate,
+    * not corpus size — a hard `broadcast()` hint on a 100 GB/day
+    * increment is a guaranteed driver OOM, the exact latent-OOM pattern
+    * `broadcastIfSmall` was built to ban). Past `maxBroadcast` the hint
+    * drops away and AQE picks a shuffle-hash join on the same keys — a
+    * verdict-identical topology change, pinned for all three arms by
+    * LedgerTopologySpec's forced-shuffle runs (the q103 salted-join
+    * discipline: prove the plan shape is oracle-invisible). ONE gate
+    * decision covers every batch-derived frame, taken on the batch's
+    * OWN plan stats: every broadcast side (exact keys, band rows, the
+    * two verdict arms) is ≤ O(batch rows) by construction and narrower
+    * than the batch, but the verdict arms are post-join aggregates whose
+    * Catalyst size estimates are inflated products of their join
+    * children (no CBO stats on temp frames) — gating each frame on its
+    * own estimate rejects kilobyte-sized aggregates and silently
+    * de-broadcasts the verdict (caught by PlanGuardSpec q139).
+    *
+    * An empty arm table bootstraps only when the store's STAMPED
+    * modalities declare the arm ([[requireModality]], whose scaladoc
+    * carries the pre-stamp migration note); otherwise the verdict fails
+    * by name instead of silently admitting every duplicate. The
+    * fingerprint arms run the width guard ([[FpArm.checked]]) on both
+    * banded inputs and on the batch's exact keys: a word-count mismatch
+    * fails the job by name instead of nulling the hamming filter.
+    *
+    * With `pairBudgetPerItem` set (the default), the LEDGER side sheds
+    * its hottest band buckets ([[shedUnlessAffordable]]) so per-item
+    * fan-out stays bounded as the arm table grows; exact duplicates are
+    * immune (the exact arm is a separate equi-join). The bound comes
+    * from the persisted write-time stats when they are at least as new
+    * as `snap` (zero jobs), else from a footer count memoized per
+    * snapshot. For the text arm, hitsPerBucket = 1: the minhash band key
+    * is a string pair over a ~2^62 hash keyspace, so any batch's
+    * expected occupancy of one ledger bucket is ≪ 1, and it carries no
+    * saturation sentinel (that keyspace is not a fixed bit geometry the
+    * model speaks about). The fingerprint arms log when the geometry
+    * has outgrown the table (ADVICE r16 #2, on both budget settings).
+    * In the video arm a shared intro frame across the admitted corpus
+    * is ONE ledger row per position by the [[seqRows]] dedup-first rule,
+    * so the cap's job is residual near-collision mass only. */
+  def verdict(arm: LedgerArm, spark: SparkSession, batch: DataFrame,
+              dir: String, snap: IndexStore.Snapshot,
+              maxBroadcast: Long = 256L << 20,
+              pairBudgetPerItem: Option[Int] =
+                DedupOps.DEFAULT_PAIR_BUDGET): DataFrame =
+    verdictOf(arm, spark, batch, arm.nearRows(batch), dir, snap,
+      maxBroadcast, pairBudgetPerItem)
+
+  private def verdictOf(arm: LedgerArm, spark: SparkSession, batch: DataFrame,
+                        near: DataFrame, dir: String,
+                        snap: IndexStore.Snapshot, maxBroadcast: Long,
+                        pairBudgetPerItem: Option[Int]): DataFrame = {
     val small = maxBroadcast > 0 &&
       batch.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBroadcast
     def gate(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // an empty seqs snapshot bootstraps only when the store declares
-    // the modality (stamped stores) or predates the stamp (legacy
-    // tolerate — the seqs arm's historical default)
-    requireModality(dir, snap.seqs, "video", legacyAllowed = true)
-    // RAW frame for the exact arm and the sentinel: the width guard
-    // lives on the banded/zip_with path only, so the digest join keeps
-    // its column pruning (seqhash + owner, never the fp arrays)
-    // and count() stays a footer read; the vote arm always runs over
-    // the same store, so a width mismatch still fails loudly
-    val ledRaw = IndexStore.seqsFrame(spark, dir, snap)
-    require(ledRaw.columns.contains("seqhash"),
-      s"seqs store under $dir predates the sequence-digest schema " +
-      "(no seqhash column) — rebuild it or backfill digests; reading " +
-      "it would silently drop every pre-digest owner from the exact arm")
-    val checkedBatch = withWidthCheck(batch, geom, "video batch")
-    // exact arm: canonical sequence equality via the STORED digest —
-    // the batch side derives its digests over the increment, the
-    // ledger side streams (no corpus-side array rebuild per verdict).
-    // Deliberately NO one-row-per-owner pre-filter (ADVICE r15 #3: the
-    // old `f = 0` filter assumed every owner stored a position-0 row;
-    // a partial decode that samples only later frames would make the
-    // owner permanently invisible to the exact arm): every row of a
-    // MATCHING owner reaches the join — F redundant rows per match,
-    // bounded by the increment's duplicate count, never corpus-shaped
-    // — and the existing min() collapses them.
-    val bseqs = checkedBatch
-      .select(col("media_id").as("bid"), col("f"), col("fp"))
-      .groupBy(col("bid"))
-      .agg(sort_array(collect_list(struct(col("f"), col("fp")))).as("seq"))
-      .select(col("bid"), seqDigest.as("seqhash"))
-    val ex = ledRaw
-      .select(col("seqhash"), col("owner"))
-      .join(gate(bseqs), Seq("seqhash"))
-      .groupBy(col("bid")).agg(min(col("owner")).as("exact_of"))
-    // vote arm: per-position banded candidates -> agreeing positions
-    val lb0 = mediaBandsOf(
-      withWidthCheck(ledRaw.select(col("owner"), col("f"), col("fp")),
-        geom, "seqs"),
-      geom)
-    val bb = mediaBandsOf(
-        checkedBatch.select(col("media_id").as("bid"), col("f"), col("fp")),
-        geom)
-      .select(col("f"), col("band"), col("bkey"), col("bid"),
-              col("fp").as("bfp"))
-    val (lb, bbJ) = pairBudgetPerItem match {
-      case None =>
-        // each position is its own keyspace; a per-position groupBy
-        // over the corpus-sized seqs table would be a real shuffle per
-        // verdict, so the sentinel ESTIMATES the per-position load as
-        // total ledger rows (footer-cheap count-star, memoized per
-        // snapshot) / distinct batch positions (increment-sized count)
-        // — exact when every video carries the same frame count, the
-        // ingest-path invariant
-        val positions =
-          math.max(1L, batch.select(col("f")).distinct().count())
-        DedupOps.warnIfSaturated(
-          memoizedCount(dir, snap.version, "seqs")(ledRaw.count()) / positions,
-          geom.bands, geom.bandBits)
-        (lb0, bb)
+    requireModality(dir, filesOf(snap, arm.tables.head), arm.modality,
+      arm.legacyAllowed)
+    val sd = arm.sides(spark, batch, near, dir, snap)
+    val ex = sd.ledgerExact.join(gate(sd.batchExact), sd.exactKey)
+      .groupBy(col(arm.bid)).agg(min(col("owner")).as("exact_of"))
+    val persisted = IndexStore.armStats(dir, arm.statsKey)
+      .filter(_.version >= snap.version) // stale stats prove nothing
+    // band rows = table rows × bands: every row lands in one bucket per band
+    lazy val tableRows = persisted.map(_.rows / arm.bands).getOrElse(
+      memoizedCount(dir, snap.version, arm.table)(sd.table.count()))
+    arm.sentinel(tableRows, batch)
+    val (lb, bb) = pairBudgetPerItem match {
+      case None => (sd.ledgerBands, sd.batchBands)
       case Some(perItem) =>
-        // bucket sizes are bounded by the seqs row count (footer read,
-        // memoized — conservative: per-position buckets are smaller);
-        // the batch bands' measured max occupancy bounds the true
-        // join volume. items = batch (video, position) rows — the
-        // budget is per banded batch row, the same grain the join
-        // fans out on. Saturation sentinel on this branch too (ADVICE
-        // r16 #2), behind a zero-extra-job screen: the memoized total
-        // over-counts each position's keyspace by the frame count, so
-        // the increment-sized positions count runs only when the
-        // conservative screen itself saturates
-        val persisted = IndexStore.armStats(dir, s"seqs-hist-${geom.params}")
-          .filter(_.version >= snap.version) // stale stats prove nothing
-        val n = persisted.map(_.rows / geom.bands).getOrElse(
-          memoizedCount(dir, snap.version, "seqs")(ledRaw.count()))
-        if (!DedupOps.saturationSafe(n, geom.bands, geom.bandBits)) {
-          val positions =
-            math.max(1L, batch.select(col("f")).distinct().count())
-          DedupOps.warnIfSaturated(n / positions, geom.bands, geom.bandBits)
-        }
-        shedUnlessAffordable(lb0, Seq("f", "band", "bkey"), perItem,
-          n * geom.bands,
-          bb, _ / geom.bands,
-          dir, snap.version, s"seqs-hist-${geom.params}", persisted)
+        shedUnlessAffordable(sd.ledgerBands, arm.bandKeys, perItem,
+          tableRows * arm.bands, sd.batchBands, _ / arm.bands,
+          dir, snap.version, arm.statsKey, persisted)
     }
-    val nr = lb.join(gate(bbJ), Seq("f", "band", "bkey"))
-      .filter(expr("aggregate(zip_with(fp, bfp, (x, y) -> bit_count(x ^ y)), " +
-        s"0, (acc, v) -> acc + v) <= ${geom.maxHamming}"))
-      // several bands can match the same (video, owner, position) —
-      // one vote per position
-      .select(col("bid"), col("owner"), col("f")).distinct()
-      .groupBy(col("bid"), col("owner"))
-      .agg(count(lit(1)).as("n_agree"))
-      .filter(col("n_agree") >= minAgree)
-      .groupBy(col("bid")).agg(min(col("owner")).as("near_of"))
-    batch.select(col("media_id")).distinct()
-      .join(gate(ex.withColumnRenamed("bid", "media_id")), Seq("media_id"), "left")
-      .join(gate(nr.withColumnRenamed("bid", "media_id")), Seq("media_id"), "left")
+    val nr = arm.near(lb.join(gate(bb), arm.bandKeys))
+    arm.batchIds(batch)
+      .join(gate(ex.withColumnRenamed(arm.bid, arm.idCol)), Seq(arm.idCol), "left")
+      .join(gate(nr.withColumnRenamed(arm.bid, arm.idCol)), Seq(arm.idCol), "left")
       .withColumn("keep", when(col("exact_of").isNull && col("near_of").isNull,
         1L).otherwise(0L))
-      .orderBy(col("media_id"))
+      .orderBy(col(arm.idCol))
   }
+
+  /** The batch rows whose verdict kept them. */
+  private[graft] def keepers(arm: LedgerArm, batch: DataFrame,
+                             verdict: DataFrame): DataFrame =
+    batch.join(verdict.filter(col("keep") === 1L).select(col(arm.idCol)),
+      Seq(arm.idCol), "left_semi")
+
+  /** Append `survivors` through `arm` as one idempotent tagged delta
+    * (exact-collapsed: one row per distinct exact key, owner = the
+    * smallest id). The increment is materialized ONCE, inside the
+    * idempotency gate (a replayed tag skips even that): callers pass a
+    * LAZY batch ⋉ verdict.keep join, and the delta references it more
+    * than once (table rows, stats bump) — without the checkpoint each
+    * reference re-executed the whole verdict plan, ~4 s of a ~6 s
+    * streamed tick at sf0.1 (round-16 TickProfile). Increment-sized by
+    * contract. */
+  def append(arm: LedgerArm, survivors: DataFrame, dir: String,
+             tag: String): Int =
+    IndexStore.commitDelta(dir, Some(tag)) {
+      val sv = survivors.localCheckpoint()
+      writeDelta(arm, sv, arm.nearRows(sv), dir)
+    }
+
+  /** A delta's table writes over materialized survivors `sv`, with the
+    * arm's stats bump. The writes (and the bump's aggregation) are
+    * independent DAGs over materialized inputs — overlapped; the commit
+    * lambda returns only when every file set is on disk, so the
+    * manifest diff sees them exactly as a serial form would. The bump
+    * keys on the SAME geometry the arm's verdicts consult. */
+  private def writeDelta(arm: LedgerArm, sv: DataFrame, near: DataFrame,
+                         dir: String): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: scala.concurrent.ExecutionContext = armWriteEc
+    val rows = arm.deltaRows(sv, near)
+    // the arm's published files BEFORE this delta (pre-publish, under
+    // the writer lock; empty for a never-published store)
+    val before = IndexStore.headVersion(dir)
+      .map(v => filesOf(IndexStore.snapshotAt(dir, v), arm.table)).getOrElse(Nil)
+    bumpArmStats(dir, arm.statsKey, arm.banded(rows.toMap.apply(arm.table)),
+      arm.bandKeys, before, arm.table,
+      arm.banded(arm.tableFrame(sv.sparkSession, dir, IndexStore.snapshot(dir)))) {
+      rows.map { case (t, r) => Future(writeCells(r, s"$dir/$t", "append")) }
+        .foreach(Await.result(_, Duration.Inf))
+    }
+  }
+
+  /** One arm's share of an ingest step — the streamed tick's per-arm
+    * body: verdict `batch` against `snap`, materialize the keepers, and
+    * return the commit that appends them under `tag`. The near side
+    * ([[LedgerArm.sharedNear]]) is computed once and read by both the
+    * verdict and the append (the text arm's one shingle → MinHash pass).
+    * A mixed tick stages every arm against ONE pre-tick snapshot in
+    * parallel, then runs the commits in a fixed order. */
+  private[graft] def stage(arm: LedgerArm, batch: DataFrame, dir: String,
+                           snap: IndexStore.Snapshot, tag: String): () => Int = {
+    val near = arm.sharedNear(batch)
+    val v = verdictOf(arm, batch.sparkSession, batch, near, dir, snap,
+      256L << 20, DedupOps.DEFAULT_PAIR_BUDGET)
+    val sv = keepers(arm, batch, v).localCheckpoint()
+    () => IndexStore.commitDelta(dir, Some(tag))(writeDelta(arm, sv, near, dir))
+  }
+
+  /** One ingest GENERATION: verdict against the current snapshot, then
+    * the keepers' rows appended under `tag`. */
+  def ingest(arm: LedgerArm, batch: DataFrame, dir: String, tag: String): Int =
+    stage(arm, batch, dir, IndexStore.snapshot(dir), tag)()
 
   /** q158's media fixture formula: (pixel key, edit bump) per id.
     * History bases 0–99; tick 1 (100–149) = 20 exact copies of bases
@@ -1282,39 +1255,36 @@ object DedupLedger {
       .select(col("media_id"), col("dhash").as("fp"))
   }
 
-  /** The two chained batch media generations q162, q166 and q168 all
-    * run over a seeded store (one definition — a change to the
-    * survivor-join or tagging discipline cannot silently split the
-    * gates): per generation, verdict against the current snapshot,
-    * then the keeps' fingerprints append under the generation's tag. */
-  private def ingestMediaGenerations(s: SparkSession, d: String, dir: String,
-                                     geom: MarksGeom = NarrowMarks,
-                                     gw: Int = 8, gh: Int = 6,
-                                     pairBudgetPerItem: Option[Int] = None): Unit =
-    for ((lo, hi, tag) <- Seq((100L, 150L, "gen-a"), (150L, 200L, "gen-b"))) {
-      val fps = q158Fps(s, d, lo, hi, gw, gh).localCheckpoint()
-      val v = dedupMediaAgainstLedger(s, fps, dir, IndexStore.snapshot(dir),
-        geom, pairBudgetPerItem = pairBudgetPerItem)
-      appendMediaSurvivors(
-        fps.join(v.filter(col("keep") === 1L).select(col("media_id")),
-          Seq("media_id"), "left_semi"),
-        dir, tag, geom) // bump the SAME stats key the verdict consults
+  /** The two chained batch generations the media (q162, q166, q168)
+    * and video (q170, q171, q172) store gates run over a seeded store
+    * (one definition — a change to the survivor-join or tagging
+    * discipline cannot silently split the gates): ids 100–149 under
+    * `<prefix>-a`, then 150–199 under `<prefix>-b`. */
+  private def ingestGenerations(arm: LedgerArm, dir: String, prefix: String)
+                               (batch: (Long, Long) => DataFrame): Unit =
+    for ((lo, hi, g) <- Seq((100L, 150L, "a"), (150L, 200L, "b"))) {
+      ingest(arm, batch(lo, hi).localCheckpoint(), dir, s"$prefix-$g")
       ()
     }
 
-  /** q169 video payloads: the q158 key/bump map over 4-frame 8×6
-    * animated GIFs (the q157 construction via
-    * [[graft.jobs.JobRecordGate.encodeTemporalGifKeyed]]): exact
-    * copies share every frame; edits bump pixel (3, 2) of frame
-    * id % 4 (≤ 2 comparisons flip, so that frame still AGREES and the
-    * vote reads 4-of-4 at ham_sum ≤ 2 — a near-dup); novels are
-    * unrelated at every position. */
-  private def q169Payloads(s: SparkSession, d: String, lo: Long,
-                           hi: Long): DataFrame = {
+  /** q169/q172 video payloads: the q158 key/bump map over 4-frame
+    * videos. Exact copies share every frame; edits bump pixel (3, 2) of
+    * frame id % 4 (≤ 2 comparisons flip, so that frame still AGREES and
+    * the vote reads 4-of-4 at ham_sum ≤ 2 — a near-dup); novels are
+    * unrelated at every position.
+    *   - q169: 8×6 animated GIFs (the q157 construction via
+    *     [[graft.jobs.JobRecordGate.encodeTemporalGifKeyed]]).
+    *   - q172 (`avi`): raw-DIB AVI at the 16×8 grid — a TRUE RIFF video
+    *     container through the vote arm (VERDICT r15 Next #2), at the
+    *     wide geometry a 10⁶⁺ corpus runs. Same md5 pixel formula, so
+    *     the oracle derivation is container-agnostic by construction. */
+  private def videoPayloads(s: SparkSession, d: String, lo: Long, hi: Long,
+                            avi: Boolean = false): DataFrame = {
     val enc = udf((id: Long) => {
       val (key, bump) = q158KeyBump(id)
-      graft.jobs.JobRecordGate.encodeTemporalGifKeyed(key,
-        if (bump == 1) (id % 4).toInt else -1, 8, 6, 4)
+      val edit = if (bump == 1) (id % 4).toInt else -1
+      if (avi) graft.jobs.JobRecordGate.encodeTemporalAviKeyed(key, edit, 16, 8, 4)
+      else graft.jobs.JobRecordGate.encodeTemporalGifKeyed(key, edit, 8, 6, 4)
     })
     Tables.rebalance(Tables.documents(s, d)
         .filter(col("doc_id") >= lo && col("doc_id") < hi)
@@ -1322,65 +1292,22 @@ object DedupLedger {
       .withColumn("payload", enc(col("media_id")))
   }
 
-  /** The REAL video fingerprint chain: GIF encode → composed-frame
-    * decode → per-position dHash words (decode drift sits inside the
-    * gate, as everywhere in the media family). */
-  /** Exposed for VidProfile (round-18 drift A/B) only. */
-  private[graft] def q169FramesFor(s: SparkSession, d: String, lo: Long,
-                                   hi: Long): DataFrame =
-    q169Frames(s, d, lo, hi)
-
-  private def q169Frames(s: SparkSession, d: String, lo: Long,
-                         hi: Long): DataFrame = {
+  /** The REAL video fingerprint chain over [[videoPayloads]]: container
+    * decode (GIF frame composition, or the AVI walk on executors) →
+    * per-position dHash words at the payload's grid (decode drift sits
+    * inside the gate, as everywhere in the media family). */
+  private def videoFrames(s: SparkSession, d: String, lo: Long, hi: Long,
+                          avi: Boolean = false): DataFrame = {
     import s.implicits._
-    val recs = q169Payloads(s, d, lo, hi)
+    val (w, h) = if (avi) (16, 8) else (8, 6)
+    val recs = videoPayloads(s, d, lo, hi, avi)
       .select(col("media_id"),
-        struct(lit("video").as("kind"), lit(8).as("declaredWidth"),
-               lit(6).as("declaredHeight"), lit(0).as("sampleRate")).as("meta"),
+        struct(lit("video").as("kind"), lit(w).as("declaredWidth"),
+               lit(h).as("declaredHeight"), lit(0).as("sampleRate")).as("meta"),
         col("payload"))
       .as[graft.multimodal.MediaOps.MediaRecord]
-    graft.multimodal.MediaOps.frameDHashWide(recs, 4, 8, 6)
+    graft.multimodal.MediaOps.frameDHashWide(recs, 4, w, h)
       .select(col("media_id"), col("frame_idx").as("f"), col("fhash").as("fp"))
-  }
-
-  /** The two chained batch VIDEO generations q170/q171 (GIF, narrow
-    * geometry) and q172 (AVI, wide geometry) run over a cloned video
-    * seed — the sequence-arm analog of [[ingestMediaGenerations]], one
-    * definition for all three gates. */
-  private def ingestVideoGenerations(s: SparkSession, d: String,
-                                     dir: String,
-                                     frames: (Long, Long) => DataFrame =
-                                       null,
-                                     geom: MarksGeom = NarrowMarks): Unit = {
-    val mk = Option(frames).getOrElse(q169Frames(s, d, _: Long, _: Long))
-    for ((lo, hi, tag) <- Seq((100L, 150L, "vgen-a"), (150L, 200L, "vgen-b"))) {
-      val fr = mk(lo, hi).localCheckpoint()
-      val v = dedupVideoAgainstLedger(s, fr, dir, IndexStore.snapshot(dir),
-        geom)
-      appendVideoSurvivors(
-        fr.join(v.filter(col("keep") === 1L).select(col("media_id")),
-          Seq("media_id"), "left_semi"),
-        dir, tag, geom) // bump the SAME stats key the verdict consults
-      ()
-    }
-  }
-
-  /** q172's AVI payloads: the q169 key/bump map re-encoded as raw-DIB
-    * AVI at the 16×8 grid — a TRUE RIFF video container through the
-    * vote arm (VERDICT r15 Next #2), at the wide geometry a 10⁶⁺
-    * corpus runs. Same md5 pixel formula, so the oracle derivation is
-    * container-agnostic by construction. */
-  private def q172Payloads(s: SparkSession, d: String, lo: Long,
-                           hi: Long): DataFrame = {
-    val enc = udf((id: Long) => {
-      val (key, bump) = q158KeyBump(id)
-      graft.jobs.JobRecordGate.encodeTemporalAviKeyed(key,
-        if (bump == 1) (id % 4).toInt else -1, 16, 8, 4)
-    })
-    Tables.rebalance(Tables.documents(s, d)
-        .filter(col("doc_id") >= lo && col("doc_id") < hi)
-        .select(col("doc_id").as("media_id")))
-      .withColumn("payload", enc(col("media_id")))
   }
 
   /** The marks-arm geometry for the 49-comparison audio energy hash
@@ -1421,22 +1348,6 @@ object DedupLedger {
       .as[graft.multimodal.MediaOps.MediaRecord]
   }
 
-  /** Container walk → per-position 120-bit frame dHash words: the q172
-    * fingerprint chain (AVI parse on executors, the [[q169Frames]]
-    * analog at 16×8). */
-  private def q172Frames(s: SparkSession, d: String, lo: Long,
-                         hi: Long): DataFrame = {
-    import s.implicits._
-    val recs = q172Payloads(s, d, lo, hi)
-      .select(col("media_id"),
-        struct(lit("video").as("kind"), lit(16).as("declaredWidth"),
-               lit(8).as("declaredHeight"), lit(0).as("sampleRate")).as("meta"),
-        col("payload"))
-      .as[graft.multimodal.MediaOps.MediaRecord]
-    graft.multimodal.MediaOps.frameDHashWide(recs, 4, 16, 8)
-      .select(col("media_id"), col("frame_idx").as("f"), col("fhash").as("fp"))
-  }
-
   /** Cached AVI/WIDE video history ledger: sequence rows for videos
     * 0–99 at the 16×8 grid — the seed q172 clones per execution. */
   private[graft] def ensureAviVideoHistoryLedger(s: SparkSession,
@@ -1444,13 +1355,8 @@ object DedupLedger {
     VectorOps.ensureIndex(d, "ledgeravi",
         ledgerParams + s"|avi|${WideMarks.params}|agree=3|F=4|seqhash|props",
         "documents.parquet") { base =>
-      IndexStore.setProps(base.getPath, Map("modalities" -> "video"))
-      IndexStore.commitRebuild(base.getPath) {
-        seqRows(q172Frames(s, d, 0L, 100L))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"${base.getPath}/seqs")
-      }
+      build(base.getPath, "video",
+        Video(WideMarks, 16, 8) -> videoFrames(s, d, 0L, 100L, avi = true))
       ()
     }
 
@@ -1461,13 +1367,7 @@ object DedupLedger {
     VectorOps.ensureIndex(d, "ledgervid",
         ledgerParams + s"|video|${NarrowMarks.params}|agree=3|F=4|seqhash|props",
         "documents.parquet") { base =>
-      IndexStore.setProps(base.getPath, Map("modalities" -> "video"))
-      IndexStore.commitRebuild(base.getPath) {
-        seqRows(q169Frames(s, d, 0L, 100L))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"${base.getPath}/seqs")
-      }
+      build(base.getPath, "video", Video() -> videoFrames(s, d, 0L, 100L))
       ()
     }
 
@@ -1480,45 +1380,32 @@ object DedupLedger {
         ledgerParams + s"|mixed|fpw|${NarrowMarks.params}",
         "documents.parquet") { base =>
       val docs = Tables.rebalance(Tables.documents(s, d))
-      buildMixedLedger(docs.filter(col("doc_id") < cutoffOf(docs)),
-        q158Fps(s, d, 0L, 100L), base.getPath)
+      build(base.getPath, "text,media,video",
+        Text -> docs.filter(col("doc_id") < cutoffOf(docs)),
+        Media() -> q158Fps(s, d, 0L, 100L))
       ()
     }
 
   /** Build-once gate for q139/q140: v1 = ledger over history (doc_id <
     * max*9/10), v2 = v1 + the batch's survivors appended under the
     * idempotency tag. Rebuilt whenever documents.parquet or any
-    * fingerprint-shaping constant changes. */
+    * fingerprint-shaping constant changes. The leading format tag is
+    * bumped whenever a builder's output changes: the seed cache
+    * ([[VectorOps.ensureIndex]]) fingerprints this string and the
+    * source file, never the code that built a cached store (v3: every
+    * seed, the seqs ones included, carries arm stats). */
   private def ledgerParams =
-    s"v2|seeds=${DedupOps.NUM_SEEDS}|rows=${DedupOps.ROWS_PER_BAND}" +
+    s"v3|seeds=${DedupOps.NUM_SEEDS}|rows=${DedupOps.ROWS_PER_BAND}" +
     s"|sigmin=$SIG_MIN|cut90"
-
-  /** One text ingest GENERATION — verdict against the current
-    * snapshot, survivors' fingerprints appended under `tag` — the
-    * text analog of [[ingestMediaGenerations]]' step, shared by every
-    * seed builder that chains generations (one definition: a change
-    * to the survivor-join or tagging discipline cannot silently split
-    * the gates). */
-  private def ingestTextGeneration(s: SparkSession, docs: DataFrame,
-                                   dir: String, lo: Long, hi: Long,
-                                   tag: String): Unit = {
-    val b = docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
-      .localCheckpoint()
-    val v = dedupAgainstLedger(s, b, dir, IndexStore.snapshot(dir))
-    appendSurvivors(
-      b.join(v.filter(col("keep") === 1L).select(col("doc_id")),
-        Seq("doc_id"), "left_semi"),
-      dir, tag)
-    ()
-  }
 
   private[graft] def ensureLedger(s: SparkSession, d: String): String =
     VectorOps.ensureIndex(d, "ledger", ledgerParams, "documents.parquet") { base =>
       val docs = Tables.rebalance(Tables.documents(s, d))
       val cutoff = cutoffOf(docs)
       buildLedger(docs.filter(col("doc_id") < cutoff), base.getPath)
-      ingestTextGeneration(s, docs, base.getPath, cutoff, Long.MaxValue,
-        tag = s"batch@$cutoff")
+      ingest(Text, docs.filter(col("doc_id") >= cutoff).localCheckpoint(),
+        base.getPath, s"batch@$cutoff")
+      ()
     }
 
   /** Build-once gate for q151: the full STORE lifecycle under the
@@ -1543,7 +1430,8 @@ object DedupLedger {
       val dir = base.getPath
       buildLedger(docs.filter(col("doc_id") < c8), dir)
       for ((lo, hi, tag) <- Seq((c8, c9, s"gen@$c8"), (c9, mx + 1L, s"gen@$c9")))
-        ingestTextGeneration(s, docs, dir, lo, hi, tag)
+        ingest(Text, docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
+          .localCheckpoint(), dir, tag)
       IndexStore.compact(s, dir)
       IndexStore.vacuum(dir)
       ()
@@ -1600,7 +1488,7 @@ object DedupLedger {
       val dir = ensureLedger(s, d)
       val docs = Tables.rebalance(Tables.documents(s, d))
       val cutoff = cutoffOf(docs)
-      dedupAgainstLedger(s, docs.filter(col("doc_id") >= cutoff), dir,
+      verdict(Text, s, docs.filter(col("doc_id") >= cutoff), dir,
         IndexStore.snapshotAt(dir, 1))
     }),
 
@@ -1636,7 +1524,7 @@ object DedupLedger {
       val dir = ensureLedger(s, d)
       val docs = Tables.rebalance(Tables.documents(s, d))
       val cutoff = cutoffOf(docs)
-      dedupAgainstLedger(s, docs.filter(col("doc_id") >= cutoff), dir,
+      verdict(Text, s, docs.filter(col("doc_id") >= cutoff), dir,
         IndexStore.snapshot(dir))
     }),
 
@@ -1653,7 +1541,7 @@ object DedupLedger {
       val dir = ensureCompactLedger(s, d)
       val docs = Tables.rebalance(Tables.documents(s, d))
       val c8 = docs.agg(max(col("doc_id"))).head.getLong(0) * 8L / 10L
-      dedupAgainstLedger(s, docs.filter(col("doc_id") >= c8), dir,
+      verdict(Text, s, docs.filter(col("doc_id") >= c8), dir,
         IndexStore.snapshot(dir))
     }),
 
@@ -1684,27 +1572,23 @@ object DedupLedger {
       val dir = new java.io.File(zone, "ledger").getAbsolutePath
       cloneStore(ensureHistoryLedger(s, d), dir)
       val batch = docs.filter(col("doc_id") >= cutoff).localCheckpoint()
-      val doomed = dedupAgainstLedger(s, batch, dir,
-          IndexStore.snapshot(dir))
+      val doomed = verdict(Text, s, batch, dir, IndexStore.snapshot(dir))
         .filter(col("exact_of").isNotNull)
         .select(col("exact_of").as("owner")).distinct()
       IndexStore.forget(s, dir, "text", doomed, Some("takedown-1"))
       // gen 1 verdicts MERGE-ON-READ — through the live tombstone
       // anti-join — so the hashed output pins that read path, not just
       // the folded one
-      val g1 = dedupAgainstLedger(s, batch, dir, IndexStore.snapshot(dir))
+      val g1 = verdict(Text, s, batch, dir, IndexStore.snapshot(dir))
         .localCheckpoint()
-      appendSurvivors(
-        batch.join(g1.filter(col("keep") === 1L).select(col("doc_id")),
-          Seq("doc_id"), "left_semi"),
-        dir, tag = "readmit-1")
+      append(Text, keepers(Text, batch, g1), dir, "readmit-1")
       IndexStore.compact(s, dir)
       IndexStore.vacuum(dir)
       require(IndexStore.snapshot(dir).tombs.isEmpty,
         "q177: compaction must fold the tombstones into a physical drop")
       // gen 2 verdicts the FOLDED store — both paths must agree with
       // the one content-only oracle
-      val g2 = dedupAgainstLedger(s, batch, dir, IndexStore.snapshot(dir))
+      val g2 = verdict(Text, s, batch, dir, IndexStore.snapshot(dir))
       g1.withColumn("gen", lit(1L))
         .unionByName(g2.withColumn("gen", lit(2L)))
         .select(col("gen"), col("doc_id"), col("exact_of"),
@@ -1755,7 +1639,7 @@ object DedupLedger {
         .select(col("doc_id"), col("text")).repartition(1)
         .write.mode("append").json(landing)
       drainTick()
-      dedupAgainstLedger(s, docs.filter(col("doc_id") >= c9), dir,
+      verdict(Text, s, docs.filter(col("doc_id") >= c9), dir,
         IndexStore.snapshot(dir))
     }),
 
@@ -1810,11 +1694,10 @@ object DedupLedger {
         .repartition(1).write.mode("append").json(landing)
       drainTick()
       val snap = IndexStore.snapshot(dir)
-      val tv = dedupAgainstLedger(s, docs.filter(col("doc_id") >= c9),
+      val tv = verdict(Text, s, docs.filter(col("doc_id") >= c9),
           dir, snap)
         .withColumn("kind", lit("text"))
-      val mv = dedupMediaAgainstLedger(s, q158Fps(s, d, 100L, 200L),
-          dir, snap)
+      val mv = verdict(Media(), s, q158Fps(s, d, 100L, 200L), dir, snap)
         .withColumnRenamed("media_id", "doc_id")
         .withColumn("kind", lit("image"))
       tv.unionByName(mv)
@@ -1839,10 +1722,10 @@ object DedupLedger {
       val zone = graft.jobs.JobRecordGate.freshZone("graft-mxcompact-", d)
       val dir = new java.io.File(zone, "ledger").getAbsolutePath
       cloneStore(ensureMixedHistoryLedger(s, d), dir)
-      ingestMediaGenerations(s, d, dir)
+      ingestGenerations(Media(), dir, "gen")(q158Fps(s, d, _, _))
       IndexStore.compact(s, dir)
       IndexStore.vacuum(dir)
-      dedupMediaAgainstLedger(s, q158Fps(s, d, 100L, 200L), dir,
+      verdict(Media(), s, q158Fps(s, d, 100L, 200L), dir,
         IndexStore.snapshot(dir))
     }),
 
@@ -1862,7 +1745,7 @@ object DedupLedger {
       val dir = new java.io.File(zone, "ledger").getAbsolutePath
       cloneStore(ensureMixedHistoryLedger(s, d), dir)
       val v0 = IndexStore.snapshot(dir)
-      ingestMediaGenerations(s, d, dir)
+      ingestGenerations(Media(), dir, "gen")(q158Fps(s, d, _, _))
       IndexStore.diffMarks(s, dir, v0, IndexStore.snapshot(dir),
           IndexStore.MARKS_DDL)
         // this store's stamped geometry is NarrowMarks (42-bit) — word
@@ -1892,17 +1775,13 @@ object DedupLedger {
     "q168_wide_media_ledger" -> ((s, d) => {
       val zone = graft.jobs.JobRecordGate.freshZone("graft-widemarks-", d)
       val dir = new java.io.File(zone, "ledger").getAbsolutePath
-      IndexStore.commitRebuild(dir) {
-        markRows(q158Fps(s, d, 0L, 100L, 16, 8))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/marks")
-      }
-      ingestMediaGenerations(s, d, dir, WideMarks, 16, 8,
-        pairBudgetPerItem = Some(1000))
+      val wide = Media(WideMarks, 16, 8)
+      build(dir, "media", wide -> q158Fps(s, d, 0L, 100L, 16, 8))
+      ingestGenerations(wide, dir, "gen")(q158Fps(s, d, _, _, 16, 8))
       IndexStore.compact(s, dir)
       IndexStore.vacuum(dir)
-      dedupMediaAgainstLedger(s, q158Fps(s, d, 100L, 200L, 16, 8), dir,
-        IndexStore.snapshot(dir), WideMarks, pairBudgetPerItem = Some(1000))
+      verdict(wide, s, q158Fps(s, d, 100L, 200L, 16, 8), dir,
+        IndexStore.snapshot(dir))
     }),
 
     // ---- q169: the VIDEO streamed tick (VERDICT r14 missing #3 /
@@ -1938,14 +1817,14 @@ object DedupLedger {
         graft.streaming.DedupMaintenance.mixedSink(stream, dir, ckpt)
           .start().awaitTermination()
       def videoRows(lo: Long, hi: Long) =
-        q169Payloads(s, d, lo, hi)
+        videoPayloads(s, d, lo, hi)
           .select(lit("video").as("kind"), col("media_id").as("doc_id"),
                   lit(null).cast("string").as("text"), col("payload"))
       videoRows(100L, 150L).repartition(1).write.mode("overwrite").json(landing)
       drainTick()
       videoRows(150L, 200L).repartition(1).write.mode("append").json(landing)
       drainTick()
-      dedupVideoAgainstLedger(s, q169Frames(s, d, 100L, 200L), dir,
+      verdict(Video(), s, videoFrames(s, d, 100L, 200L), dir,
         IndexStore.snapshot(dir))
     }),
 
@@ -1964,10 +1843,10 @@ object DedupLedger {
       val zone = graft.jobs.JobRecordGate.freshZone("graft-vidcompact-", d)
       val dir = new java.io.File(zone, "ledger").getAbsolutePath
       cloneStore(ensureVideoHistoryLedger(s, d), dir)
-      ingestVideoGenerations(s, d, dir)
+      ingestGenerations(Video(), dir, "vgen")(videoFrames(s, d, _, _))
       IndexStore.compact(s, dir)
       IndexStore.vacuum(dir)
-      dedupVideoAgainstLedger(s, q169Frames(s, d, 100L, 200L), dir,
+      verdict(Video(), s, videoFrames(s, d, 100L, 200L), dir,
         IndexStore.snapshot(dir))
     }),
 
@@ -1986,7 +1865,7 @@ object DedupLedger {
       val dir = new java.io.File(zone, "ledger").getAbsolutePath
       cloneStore(ensureVideoHistoryLedger(s, d), dir)
       val v0 = IndexStore.snapshot(dir)
-      ingestVideoGenerations(s, d, dir)
+      ingestGenerations(Video(), dir, "vgen")(videoFrames(s, d, _, _))
       IndexStore.diffSeqs(s, dir, v0, IndexStore.snapshot(dir))
         .select(col("owner").as("media_id"), col("f"),
                 expr("element_at(fp, 1)").as("fp"))
@@ -2018,14 +1897,14 @@ object DedupLedger {
       // seqs arm); phase 2 verdicts the FOLDED store after compaction +
       // vacuum — the oracle derivation is identical for both, so the
       // two read paths must agree row-for-row
-      val m1 = dedupVideoAgainstLedger(s, q169Frames(s, d, 100L, 150L),
-        dir, IndexStore.snapshot(dir)).localCheckpoint()
+      val m1 = verdict(Video(), s, videoFrames(s, d, 100L, 150L), dir,
+        IndexStore.snapshot(dir)).localCheckpoint()
       IndexStore.compact(s, dir)
       IndexStore.vacuum(dir)
       require(IndexStore.snapshot(dir).tombs.isEmpty,
         "q179: compaction must fold the tombstones into a physical drop")
-      val m2 = dedupVideoAgainstLedger(s, q169Frames(s, d, 100L, 150L),
-        dir, IndexStore.snapshot(dir))
+      val m2 = verdict(Video(), s, videoFrames(s, d, 100L, 150L), dir,
+        IndexStore.snapshot(dir))
       m1.withColumn("phase", lit(1L))
         .unionByName(m2.withColumn("phase", lit(2L)))
         .select(col("phase"), col("media_id"), col("exact_of"),
@@ -2051,12 +1930,12 @@ object DedupLedger {
       val zone = graft.jobs.JobRecordGate.freshZone("graft-avivid-", d)
       val dir = new java.io.File(zone, "ledger").getAbsolutePath
       cloneStore(ensureAviVideoHistoryLedger(s, d), dir)
-      ingestVideoGenerations(s, d, dir, q172Frames(s, d, _: Long, _: Long),
-        WideMarks)
+      val wide = Video(WideMarks, 16, 8)
+      ingestGenerations(wide, dir, "vgen")(videoFrames(s, d, _, _, avi = true))
       IndexStore.compact(s, dir)
       IndexStore.vacuum(dir)
-      dedupVideoAgainstLedger(s, q172Frames(s, d, 100L, 200L), dir,
-        IndexStore.snapshot(dir), WideMarks)
+      verdict(wide, s, videoFrames(s, d, 100L, 200L, avi = true), dir,
+        IndexStore.snapshot(dir))
     }),
 
     // ---- q175: the JOINT A/V verdict (round 17) — ONE RIFF container
@@ -2089,22 +1968,16 @@ object DedupLedger {
         .filter(col("decoded") === 1L)
         .select(col("media_id"), array(col("ahash")).as("fp"))
         .localCheckpoint() // one audio demux: seed write + verdict
-      IndexStore.setProps(dir, Map("modalities" -> "media,video"))
-      IndexStore.commitRebuild(dir) {
-        markRows(audio.filter(col("media_id") < 100L))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/marks")
-        seqRows(frames.filter(col("media_id") < 100L))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/seqs")
-      }
+      build(dir, "media,video",
+        Media(AudioMarks) -> audio.filter(col("media_id") < 100L),
+        Video(WideMarks) -> frames.filter(col("media_id") < 100L))
       val snap = IndexStore.snapshot(dir)
-      val vv = dedupVideoAgainstLedger(s,
-          frames.filter(col("media_id") >= 100L), dir, snap, WideMarks)
+      val vv = verdict(Video(WideMarks), s,
+          frames.filter(col("media_id") >= 100L), dir, snap)
         .select(col("media_id"), col("exact_of").as("v_exact_of"),
                 col("near_of").as("v_near_of"), col("keep").as("vk"))
-      val av = dedupMediaAgainstLedger(s,
-          audio.filter(col("media_id") >= 100L), dir, snap, AudioMarks)
+      val av = verdict(Media(AudioMarks), s,
+          audio.filter(col("media_id") >= 100L), dir, snap)
         .select(col("media_id"), col("exact_of").as("a_exact_of"),
                 col("near_of").as("a_near_of"), col("keep").as("ak"))
       // anchor on the BATCH ID SET with left joins, mirroring the
@@ -2125,9 +1998,8 @@ object DedupLedger {
     // SRP sign fingerprints seed a marks-only store, the batch is the
     // last decile PLUS re-uploaded copies of history vectors (ids
     // shifted +100000 — same embedding, same fingerprint), one
-    // verdict+append generation runs through the SAME
-    // dedupMediaAgainstLedger / appendMediaSurvivors machinery images
-    // use, and the output is the q140-style growth verdict against
+    // verdict+append generation runs through the SAME Media arm
+    // images use, and the output is the q140-style growth verdict against
     // HEAD: every batch vector must now be a duplicate (copies
     // exact-match history, survivors exact-match their own appended
     // fingerprint, near-dropped vectors still match what dropped them)
@@ -2142,11 +2014,7 @@ object DedupLedger {
       val c9 = mx * 9L / 10L
       val zone = graft.jobs.JobRecordGate.freshZone("graft-embledger-", d)
       val dir = new java.io.File(zone, "ledger").getAbsolutePath
-      IndexStore.commitRebuild(dir) {
-        markRows(srpFps(emb.filter(col("vec_id") < c9)))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/marks")
-      }
+      build(dir, "media", Media() -> srpFps(emb.filter(col("vec_id") < c9)))
       // copies shift by mx+1, not a constant: a fixed +100000 would
       // collide with genuine batch ids once max(vec_id) crosses ~111k
       // (review find) — mx+1+id is collision-free at every scale and
@@ -2155,12 +2023,8 @@ object DedupLedger {
         .unionByName(srpFps(emb.filter(col("vec_id") < 50))
           .withColumn("media_id", col("media_id") + lit(mx + 1L)))
         .localCheckpoint()
-      val v1 = dedupMediaAgainstLedger(s, batch, dir, IndexStore.snapshot(dir))
-      appendMediaSurvivors(
-        batch.join(v1.filter(col("keep") === 1L).select(col("media_id")),
-          Seq("media_id"), "left_semi"),
-        dir, tag = "emb-gen")
-      dedupMediaAgainstLedger(s, batch, dir, IndexStore.snapshot(dir))
+      ingest(Media(), batch, dir, "emb-gen")
+      verdict(Media(), s, batch, dir, IndexStore.snapshot(dir))
         .withColumnRenamed("media_id", "vec_id")
         .orderBy(col("vec_id"))
     })

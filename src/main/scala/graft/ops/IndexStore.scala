@@ -1325,9 +1325,9 @@ object IndexStore {
     * whole DataSource resolution pipeline per construct — path
     * qualification + existence probes over every file, fresh Hadoop
     * conf copies, file re-listing — measured at ~0.027 s of a ~0.035 s
-    * warm 16-file construct (ConstructProfile r21; the listing itself
-    * is ~0.005 s and relation+analysis ~0.003 s). A ledger tick
-    * constructs each table 2-6x, so the machinery dominated the
+    * warm 16-file construct (round 21, OPTIMIZATION_r21.md; the
+    * listing itself is ~0.005 s and relation+analysis ~0.003 s). A
+    * ledger tick constructs each table 2-6x, so the machinery dominated the
     * verdict-construct residue VERDICT r20 Next #1 names. Build the
     * SAME relation directly instead:
     *

@@ -24,7 +24,7 @@ object ScaleOps {
     *   - stored-serve query rows (`servedIvfPqTopK` & co): `numQueries`
     *     rows, required ≤ SEED_FROM by `requireHeldOut`.
     *   - bucket-size HISTOGRAMS (`DedupOps.adaptiveBandCap`,
-    *     `dropHotBuckets`, `DedupLedger.shedHotBuckets`): one row per
+    *     `dropHotBuckets`, `DedupLedger.shedUnlessAffordable`): one row per
     *     DISTINCT bucket size — ≤ √(2 · total band rows) distinct
     *     values can exist (sizes are positive integers summing to the
     *     row count), and in practice tens; guarded by

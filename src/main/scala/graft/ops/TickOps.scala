@@ -51,10 +51,9 @@ object TickOps {
       val cutoff = DedupLedger.cutoffOf(docs)
       val dir = DedupLedger.ensureLedger(s, d)
       val batch = docs.filter(col("doc_id") >= cutoff)
-      val verdict = DedupLedger.dedupAgainstLedger(s, batch, dir,
+      val verdict = DedupLedger.verdict(DedupLedger.Text, s, batch, dir,
         IndexStore.snapshotAt(dir, 1)).localCheckpoint()
-      val keepIds = verdict.filter(col("keep") === 1L).select(col("doc_id"))
-      val survivors = batch.join(keepIds, Seq("doc_id"), "left_semi")
+      val survivors = DedupLedger.keepers(DedupLedger.Text, batch, verdict)
       val scored = qualityScore(survivors).localCheckpoint()
       val admitted = scored.filter(col("score") >= 0.5)
         .select(col("doc_id"), col("text")).localCheckpoint()

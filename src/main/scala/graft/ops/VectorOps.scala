@@ -1758,7 +1758,7 @@ object VectorOps {
       tombs = Nil)
     val v = IndexStore.commitReplace(dir, baseScope) {
       // independent DAGs over the checkpointed assignment — overlap
-      // them (the appendSurvivors discipline); the commit lambda
+      // them (the ledger append discipline); the commit lambda
       // returns only when both file sets are on disk
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration

@@ -20,7 +20,7 @@ import graft.ops.{DedupLedger, IndexStore}
   * Exactly-once: same discipline as [[IndexMaintenance]] — foreachBatch
   * replays are no-ops through the `stream-<batchId>` idempotency tag.
   * Within a micro-batch, exact duplicates collapse to one appended
-  * fingerprint ([[DedupLedger.appendSurvivors]]'s representative rule);
+  * fingerprint ([[DedupLedger.append]]'s representative rule);
   * near-duplicate pairs WITHIN one micro-batch are deliberately not
   * cross-checked (that is the batch family's job — q49 over the
   * landing zone; a tick-sized batch is small enough to re-run it) —
@@ -31,194 +31,97 @@ object DedupMaintenance {
   /** Attach online dedup to a document stream (schema: doc_id, text).
     * The ledger must already be published (build it over the seed
     * corpus first); the returned writer drains available data and
-    * stops (AvailableNow — the engine's per-tick convention). */
+    * stops (AvailableNow — the engine's per-tick convention). Each
+    * micro-batch is the text arm's tick step ([[DedupLedger.stage]]),
+    * committed under `stream-<batchId>`. */
   def dedupSink(stream: DataFrame, ledgerDir: String,
                 checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = batch.localCheckpoint() // verdict + append read it twice
-          // ONE shingle→minhash pass per tick, shared by the verdict
-          // and the survivor append (round-17 tick trim — the media
-          // arms already share their one decode the same way)
-          val sigs = DedupLedger.signatureRows(b).localCheckpoint()
-          val verdict = DedupLedger.dedupAgainstLedger(
-            s, b, ledgerDir, IndexStore.snapshot(ledgerDir),
-            batchSigs = Some(sigs))
-          DedupLedger.appendSurvivors(
-            b.join(verdict.filter(col("keep") === 1L).select(col("doc_id")),
-              Seq("doc_id"), "left_semi"),
-            ledgerDir, tag = s"stream-$id", precomputedSigs = Some(sigs))
-          ()
-        }
-      }
+    sink(stream, checkpointDir) { (b, id) =>
+      DedupLedger.stage(DedupLedger.Text, DedupLedger.Text.prepare(b),
+        ledgerDir, IndexStore.snapshot(ledgerDir), s"stream-$id")()
+      ()
+    }
 
   /** MIXED-modality online dedup (q158/q169): one stream carries text
     * docs AND media payloads (schema: kind, doc_id, text, payload —
     * text rows have payload null, image/video rows text null); each
-    * micro-batch routes by kind against the SAME ledger snapshot —
-    * text through the exact/near signature arms, images through
-    * decode → dHash → the marks-table hamming arm, VIDEOS through
-    * frame sampling → per-frame dHash → the seqs-table temporal vote
-    * arm — and each modality's survivors append under their own
+    * micro-batch routes by kind through the ledger arms against the
+    * SAME snapshot — text through the exact/near signature arms, images
+    * through decode → dHash → the marks-table hamming arm, VIDEOS
+    * through frame sampling → per-frame dHash → the seqs-table temporal
+    * vote arm — and each arm's survivors append under their own
     * idempotency tag (`stream-<id>-text` / `-media` / `-video`), so a
     * replayed batch is a no-op on every table. The ledger store
     * versions all four tables in one snapshot, so tick N+1's verdicts
     * all see exactly what tick N admitted, never half a tick.
-    * `maxFrames`/`gw`/`gh` size the video fingerprints, `imgGw`/`imgGh`
-    * the still-image ones, and `geom` is the band geometry the
+    * `gw`/`gh` size the video fingerprints (4 frames), `imgGw`/`imgGh`
+    * the still-image ones, and `geom` is the band geometry both
     * fingerprint arms verdict under — all must match the seed store's
     * stamped geometry (DedupLedger.MarksGeom params discipline). The
-    * marks and seqs tables are independent, so a deployment may stream
-    * narrow images beside wide video fingerprints against one store:
-    * `imgGeom`/`vidGeom` override `geom` PER ARM (ADVICE r15 #5). The
     * defaults are the narrow 42-bit gate config; a 10⁶⁺-item corpus
     * streams at `DedupLedger.WideMarks` with 16×8 grids — the wide
     * family enters the streamed path through these parameters, not a
     * code change. */
   def mixedSink(stream: DataFrame, ledgerDir: String,
-                checkpointDir: String, maxFrames: Int = 4,
-                gw: Int = 8, gh: Int = 6,
+                checkpointDir: String, gw: Int = 8, gh: Int = 6,
                 imgGw: Int = 8, imgGh: Int = 6,
-                geom: DedupLedger.MarksGeom = DedupLedger.NarrowMarks,
-                imgGeom: Option[DedupLedger.MarksGeom] = None,
-                vidGeom: Option[DedupLedger.MarksGeom] = None)
+                geom: DedupLedger.MarksGeom = DedupLedger.NarrowMarks)
       : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val iGeom = imgGeom.getOrElse(geom)
-    val vGeom = vidGeom.getOrElse(geom)
+    val arms = Seq(DedupLedger.Text, DedupLedger.Media(geom, imgGw, imgGh),
+      DedupLedger.Video(geom, gw, gh))
     // grid/geometry consistency fails at SINK CONSTRUCTION, not when
     // the first record of an unlucky modality arrives mid-stream (the
-    // per-row width guard would fail every replay of that micro-batch).
-    // The comparison is exact BIT width, not rounded word count
-    // (ADVICE r15 #5: a 9x6 grid packs the same one word as 8x6 but
-    // diverges from a 42-bit stamped geometry at verdict time): a
-    // w x h dHash grid emits h*(w-1) comparison bits, which must equal
-    // the geometry's banded capacity exactly.
-    def bits(w: Int, h: Int) = h * (w - 1)
-    require(bits(gw, gh) == vGeom.fpBits,
-      s"video grid ${gw}x$gh emits ${bits(gw, gh)} fingerprint bits but " +
-      s"geometry ${vGeom.params} verdicts ${vGeom.fpBits}-bit fingerprints")
-    require(bits(imgGw, imgGh) == iGeom.fpBits,
-      s"image grid ${imgGw}x$imgGh emits ${bits(imgGw, imgGh)} fingerprint " +
-      s"bits but geometry ${iGeom.params} verdicts ${iGeom.fpBits}-bit " +
-      "fingerprints")
+    // per-row width guard would fail every replay of that micro-batch)
+    arms.foreach(_.requireGrid())
+    sink(stream, checkpointDir) { (b, id) =>
+      // ONE pass over the checkpointed batch decides which modality
+      // arms run (VERDICT r14 Next #7: per-arm isEmpty probes were
+      // one extra Spark job each per micro-batch). Filter to the
+      // KNOWN kinds before the distinct: dirty data with free-text
+      // kinds must be ignored (the pre-round-16 behavior), never
+      // fail the bounded collect — inside foreachBatch that throw
+      // would replay the same poisoned batch forever (round-16
+      // second review pass)
+      val kinds = graft.ops.ScaleOps.boundedCollect(
+        b.filter(col("kind").isin(arms.map(_.kind): _*))
+          .select(col("kind")).distinct(), arms.size.toLong,
+        "stream modality kinds")
+        .map(_.getString(0)).toSet
+      // PARALLEL arm phase (round-17 tick trim): the modality
+      // pipelines are independent DAGs over disjoint store tables —
+      // each arm's verdict + survivor materialization runs
+      // concurrently (job-submission futures; the work itself is
+      // Spark tasks over idle cores). All verdicts read the SAME
+      // pre-tick snapshot. The COMMITS stay serial in fixed
+      // text→image→video order: the store writer lock serializes
+      // manifest publishes anyway, and the fixed order keeps version
+      // numbering deterministic. A replayed batch is still a no-op per
+      // arm through the idempotency tags.
+      val snap0 = IndexStore.snapshot(ledgerDir)
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      implicit val ec: scala.concurrent.ExecutionContext =
+        DedupLedger.armWriteEc
+      arms.filter(a => kinds(a.kind))
+        .map(arm => Future(DedupLedger.stage(arm,
+          arm.prepare(b.filter(col("kind") === arm.kind)), ledgerDir, snap0,
+          s"stream-$id-${arm.modality}")))
+        .map(Await.result(_, Duration.Inf))
+        .foreach(_.apply())
+    }
+  }
+
+  /** A checkpointed AvailableNow sink running `tick` over each
+    * non-empty micro-batch, materialized once (every arm reads it). */
+  private def sink(stream: DataFrame, checkpointDir: String)
+                  (tick: (DataFrame, Long) => Unit)
+      : DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = batch.localCheckpoint()
-          // ONE pass over the checkpointed batch decides which modality
-          // arms run (VERDICT r14 Next #7: per-arm isEmpty probes were
-          // one extra Spark job each per micro-batch). Filter to the
-          // KNOWN kinds before the distinct: dirty data with free-text
-          // kinds must be ignored (the pre-round-16 behavior), never
-          // fail the bounded collect — inside foreachBatch that throw
-          // would replay the same poisoned batch forever (round-16
-          // second review pass)
-          val kinds = graft.ops.ScaleOps.boundedCollect(
-            b.filter(col("kind").isin("text", "image", "video"))
-              .select(col("kind")).distinct(), 3L, "stream modality kinds")
-            .map(_.getString(0)).toSet
-          // PARALLEL arm phase (round-17 tick trim): the modality
-          // pipelines are independent DAGs over disjoint store tables
-          // — each arm's verdict + survivor materialization runs
-          // concurrently (job-submission futures; the work itself is
-          // Spark tasks over idle cores). All three verdicts read the
-          // SAME pre-tick snapshot (they always saw identical content
-          // — the arms verdict disjoint tables — now it is also
-          // literal). The COMMITS stay serial in fixed
-          // text→image→video order: the store writer lock serializes
-          // manifest publishes anyway, and the fixed order keeps
-          // version numbering deterministic. A replayed batch is
-          // still a no-op per arm through the idempotency tags.
-          val snap0 = IndexStore.snapshot(ledgerDir)
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec: scala.concurrent.ExecutionContext =
-            DedupLedger.armWriteEc
-          val txt = b.filter(org.apache.spark.sql.functions.col("kind") === "text")
-            .select(col("doc_id"), col("text"))
-          val textArm: Option[Future[() => Unit]] =
-            if (!kinds("text")) None else Some(Future {
-              // one shingle→minhash pass for verdict AND append, like
-              // the media arms' shared decode
-              val sigs = DedupLedger.signatureRows(txt).localCheckpoint()
-              val verdict = DedupLedger.dedupAgainstLedger(
-                s, txt, ledgerDir, snap0, batchSigs = Some(sigs))
-              val sv = txt.join(
-                  verdict.filter(col("keep") === 1L).select(col("doc_id")),
-                  Seq("doc_id"), "left_semi").localCheckpoint()
-              () => {
-                DedupLedger.appendSurvivors(sv, ledgerDir,
-                  tag = s"stream-$id-text", precomputedSigs = Some(sigs),
-                  assumeMaterialized = true)
-                ()
-              }
-            })
-          val med = b.filter(col("kind") === "image")
-          val imageArm: Option[Future[() => Unit]] =
-            if (!kinds("image")) None else Some(Future {
-              import s.implicits._
-              import org.apache.spark.sql.functions.{lit, struct}
-              val recs = med.select(col("doc_id").as("media_id"),
-                  struct(lit("image").as("kind"), lit(0).as("declaredWidth"),
-                         lit(0).as("declaredHeight"), lit(0).as("sampleRate"))
-                    .as("meta"),
-                  col("payload"))
-                .as[graft.multimodal.MediaOps.MediaRecord]
-              val fps = graft.multimodal.MediaOps.dHashWide(recs, imgGw, imgGh)
-                .filter(col("decoded") === 1L)
-                .select(col("media_id"), col("dhash").as("fp"))
-                .localCheckpoint() // verdict + append read it twice
-              val verdict = DedupLedger.dedupMediaAgainstLedger(
-                s, fps, ledgerDir, snap0, iGeom)
-              val sv = fps.join(
-                  verdict.filter(col("keep") === 1L).select(col("media_id")),
-                  Seq("media_id"), "left_semi").localCheckpoint()
-              () => {
-                DedupLedger.appendMediaSurvivors(sv, ledgerDir,
-                  tag = s"stream-$id-media", iGeom)
-                ()
-              }
-            })
-          val vid = b.filter(col("kind") === "video")
-          val videoArm: Option[Future[() => Unit]] =
-            if (!kinds("video")) None else Some(Future {
-              import s.implicits._
-              import org.apache.spark.sql.functions.{lit, struct}
-              val recs = vid.select(col("doc_id").as("media_id"),
-                  struct(lit("video").as("kind"), lit(0).as("declaredWidth"),
-                         lit(0).as("declaredHeight"), lit(0).as("sampleRate"))
-                    .as("meta"),
-                  col("payload"))
-                .as[graft.multimodal.MediaOps.MediaRecord]
-              val frames = graft.multimodal.MediaOps
-                .frameDHashWide(recs, maxFrames, gw, gh)
-                .select(col("media_id"), col("frame_idx").as("f"),
-                        col("fhash").as("fp"))
-                .localCheckpoint() // verdict + append read it twice
-              val verdict = DedupLedger.dedupVideoAgainstLedger(
-                s, frames, ledgerDir, snap0, vGeom)
-              val sv = frames.join(
-                  verdict.filter(col("keep") === 1L).select(col("media_id")),
-                  Seq("media_id"), "left_semi").localCheckpoint()
-              () => {
-                DedupLedger.appendVideoSurvivors(sv, ledgerDir,
-                  tag = s"stream-$id-video", vGeom)
-                ()
-              }
-            })
-          Seq(textArm, imageArm, videoArm).flatten
-            .map(Await.result(_, Duration.Inf))
-            .foreach(_.apply())
-        }
+        if (!batch.isEmpty) tick(batch.localCheckpoint(), id)
       }
-  }
 
   /** Snapshot version a monitor watches to confirm the tailer publishes. */
   def publishedVersion(ledgerDir: String): Option[Int] =

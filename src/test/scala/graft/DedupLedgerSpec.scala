@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{DedupLedger, IndexStore, TextOps}
+import graft.ops.DedupLedger.{Media, Text}
 
 /** The incremental-dedup ledger (q139/q140) and the exact-substring
   * span map (q138): the two round-12 additions to the dedup family.
@@ -43,7 +44,7 @@ class DedupLedgerSpec extends SparkSpec {
       11L -> (words(30, "h") + " tail"),
       12L -> words(30, "z"))
     DedupLedger.buildLedger(history, dir)
-    val v = DedupLedger.dedupAgainstLedger(spark, batch, dir,
+    val v = DedupLedger.verdict(Text, spark, batch, dir,
       IndexStore.snapshot(dir)).collect()
       .map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)), r.getLong(3)))
       .toMap
@@ -60,7 +61,7 @@ class DedupLedgerSpec extends SparkSpec {
     DedupLedger.buildLedger(docs(0L -> words(25, "h")), dir)
     // two identical surviving texts: only the min-id rep may land
     val survivors = docs(20L -> words(25, "s"), 21L -> words(25, "s"))
-    val v1 = DedupLedger.appendSurvivors(survivors, dir, tag = "batch-1")
+    val v1 = DedupLedger.append(Text, survivors, dir, tag = "batch-1")
     val (exact, sigs) = IndexStore.frames(spark, dir, IndexStore.snapshot(dir))
     val added = exact.filter(col("owner") >= 20L).collect()
     assert(added.length == 1 && added.head.getAs[Long]("owner") == 20L,
@@ -70,7 +71,7 @@ class DedupLedgerSpec extends SparkSpec {
     assert(sigs.filter(col("doc_id") === 20L).count() == 1,
       "the representative contributes exactly one signature row")
     // replay: same tag → same version, nothing appended twice
-    val v2 = DedupLedger.appendSurvivors(survivors, dir, tag = "batch-1")
+    val v2 = DedupLedger.append(Text, survivors, dir, tag = "batch-1")
     assert(v2 == v1, s"tag replay must not publish a new version ($v1 -> $v2)")
     assert(IndexStore.frames(spark, dir, IndexStore.snapshot(dir))
       ._1.count() == exact.count())
@@ -82,15 +83,15 @@ class DedupLedgerSpec extends SparkSpec {
     val batch = docs(10L -> words(25, "h"), 11L -> words(25, "n"))
     DedupLedger.buildLedger(history, dir)
     val pinned = IndexStore.snapshot(dir)
-    val before = DedupLedger.dedupAgainstLedger(spark, batch, dir, pinned)
+    val before = DedupLedger.verdict(Text, spark, batch, dir, pinned)
       .collect().toSeq
-    DedupLedger.appendSurvivors(docs(11L -> words(25, "n")), dir, "b1")
-    val after = DedupLedger.dedupAgainstLedger(spark, batch, dir, pinned)
+    DedupLedger.append(Text, docs(11L -> words(25, "n")), dir, "b1")
+    val after = DedupLedger.verdict(Text, spark, batch, dir, pinned)
       .collect().toSeq
     assert(before == after,
       "a verdict against the pinned snapshot must not see the append")
     // and HEAD does see it: 11's own fingerprint now exact-matches
-    val head = DedupLedger.dedupAgainstLedger(spark, batch, dir,
+    val head = DedupLedger.verdict(Text, spark, batch, dir,
       IndexStore.snapshot(dir)).filter(col("doc_id") === 11L).collect().head
     assert(head.getAs[Long]("exact_of") == 11L)
   }
@@ -150,7 +151,8 @@ class DedupLedgerSpec extends SparkSpec {
     val histFps = MediaOps.dHashWide(histRecs, 16, 8)
       .filter(col("decoded") === 1L)
       .select(col("media_id"), col("dhash").as("fp"))
-    DedupLedger.buildMixedLedger(docs(0L -> words(25, "h")), histFps, dir)
+    DedupLedger.build(dir, "text,media,video",
+      Text -> docs(0L -> words(25, "h")), Media() -> histFps)
 
     implicit val sc = spark.sqlContext
     val src = MemoryStream[(String, Long, String, Array[Byte])]
@@ -182,8 +184,8 @@ class DedupLedgerSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ledger-diff").toString
     DedupLedger.buildLedger(docs(0L -> words(25, "h"), 1L -> words(25, "g")), dir)
     val v1 = IndexStore.snapshot(dir)
-    DedupLedger.appendSurvivors(docs(10L -> words(25, "a")), dir, "b1")
-    DedupLedger.appendSurvivors(docs(11L -> words(25, "b")), dir, "b2")
+    DedupLedger.append(Text, docs(10L -> words(25, "a")), dir, "b1")
+    DedupLedger.append(Text, docs(11L -> words(25, "b")), dir, "b2")
     val (ex, sg) = IndexStore.diffFrames(spark, dir, v1, IndexStore.snapshot(dir))
     assert(ex.select(col("owner")).collect().map(_.getLong(0)).toSet ==
       Set(10L, 11L), "changelog exact rows != the two appended batches")
@@ -199,15 +201,15 @@ class DedupLedgerSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ledger-compact").toString
     DedupLedger.buildLedger(docs(0L -> words(25, "h"), 1L -> words(25, "g")), dir)
     for (i <- 0 until 3) // three append generations → small-file decay
-      DedupLedger.appendSurvivors(
-        docs((10L + i) -> words(25, s"s$i")), dir, tag = s"b$i")
+      DedupLedger.append(Text, docs((10L + i) -> words(25, s"s$i")), dir,
+        tag = s"b$i")
     val probe = docs(30L -> words(25, "h"), 31L -> words(25, "s1"),
                      32L -> words(25, "w"))
-    val before = DedupLedger.dedupAgainstLedger(spark, probe, dir,
+    val before = DedupLedger.verdict(Text, spark, probe, dir,
       IndexStore.snapshot(dir)).collect().toSeq
     IndexStore.compact(spark, dir)
     IndexStore.vacuum(dir)
-    val after = DedupLedger.dedupAgainstLedger(spark, probe, dir,
+    val after = DedupLedger.verdict(Text, spark, probe, dir,
       IndexStore.snapshot(dir)).collect().toSeq
     assert(before == after, "compaction/vacuum changed ledger verdicts")
     // sized layout: each exact cell directory holds exactly one file
@@ -266,19 +268,19 @@ class DedupLedgerSpec extends SparkSpec {
     DedupLedger.cloneStore(src, dst)
     // the clone serves identically at its own location
     val probe = docs(10L -> words(25, "h"), 11L -> words(25, "w"))
-    val fromSrc = DedupLedger.dedupAgainstLedger(spark, probe, src, srcSnap)
+    val fromSrc = DedupLedger.verdict(Text, spark, probe, src, srcSnap)
       .collect().map(_.toSeq).toSeq
-    val fromDst = DedupLedger.dedupAgainstLedger(spark, probe, dst,
+    val fromDst = DedupLedger.verdict(Text, spark, probe, dst,
       IndexStore.snapshot(dst)).collect().map(_.toSeq).toSeq
     assert(fromDst == fromSrc, "clone must serve the source's verdicts")
     // mutate the clone: append + compact + vacuum
-    DedupLedger.appendSurvivors(docs(11L -> words(25, "w")), dst, "c1")
+    DedupLedger.append(Text, docs(11L -> words(25, "w")), dst, "c1")
     IndexStore.compact(spark, dst)
     IndexStore.vacuum(dst)
     // the source is bit-untouched: same head, same file list, same verdict
     assert(IndexStore.snapshot(src) == srcSnap,
       "mutating the clone changed the source's snapshot")
-    assert(DedupLedger.dedupAgainstLedger(spark, probe, src,
+    assert(DedupLedger.verdict(Text, spark, probe, src,
       IndexStore.snapshot(src)).collect().map(_.toSeq).toSeq == fromSrc,
       "mutating the clone changed the source's verdicts")
     // and the mutation is visible in the clone

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{DedupLedger, IndexStore}
+import graft.ops.DedupLedger.{Media, Text, Video}
 
 /** Write-time arm statistics (round 17, VERDICT r16 #1): the shed
   * ladder's healthy-store decision must come from stats the PUBLISHER
@@ -39,6 +40,12 @@ class LedgerStatsSpec extends SparkSpec {
   private def seedDoc =
     Seq((0L, "stats spec seed doc")).toDF("doc_id", "text")
 
+  /** A one-doc text arm beside `marks` at the spec's geometry. */
+  private def mixedLedger(dir: String,
+                          marks: org.apache.spark.sql.DataFrame): Int =
+    DedupLedger.build(dir, "text,media,video", Text -> seedDoc,
+      Media(geom) -> marks)
+
   private val textKey = "vectors-hist"
   private val textBands = 6 // DedupOps.NUM_SEEDS / ROWS_PER_BAND
 
@@ -66,9 +73,9 @@ class LedgerStatsSpec extends SparkSpec {
     val batch = textBatch
     DedupLedger.clearShedMemos()
     val (vd, jd) = countJobs(
-      DedupLedger.dedupAgainstLedger(spark, batch, dir, snap))
+      DedupLedger.verdict(Text, spark, batch, dir, snap))
     DedupLedger.clearShedMemos()
-    val (vn, jn) = countJobs(DedupLedger.dedupAgainstLedger(spark, batch,
+    val (vn, jn) = countJobs(DedupLedger.verdict(Text, spark, batch,
       dir, snap, pairBudgetPerItem = None))
     assert(vd.collect().toSeq == vn.collect().toSeq,
       "the stats fast path changed the text verdict vs uncapped")
@@ -78,7 +85,7 @@ class LedgerStatsSpec extends SparkSpec {
   test("rebuild stamps exact stats; the healthy verdict consults them with " +
        "ZERO jobs and matches the uncapped verdict row for row") {
     val dir = java.nio.file.Files.createTempDirectory("stats-healthy").toString
-    DedupLedger.buildMixedLedger(seedDoc, healthyMarks(40000), dir, geom)
+    mixedLedger(dir, healthyMarks(40000))
     val st = IndexStore.armStats(dir, statsKey)
       .getOrElse(fail("rebuild of a corpus-scale store must stamp arm stats"))
     assert(st.slack == 0L, "a fresh rebuild's stats carry no slack")
@@ -104,11 +111,11 @@ class LedgerStatsSpec extends SparkSpec {
     // measurements all elided by the persisted stats
     DedupLedger.clearShedMemos()
     val (verdictDefault, jobs) = countJobs {
-      DedupLedger.dedupMediaAgainstLedger(spark, batch, dir, snap, geom)
+      DedupLedger.verdict(Media(geom), spark, batch, dir, snap)
     }
     DedupLedger.clearShedMemos()
     val (verdictNone, jobsNone) = countJobs {
-      DedupLedger.dedupMediaAgainstLedger(spark, batch, dir, snap, geom,
+      DedupLedger.verdict(Media(geom), spark, batch, dir, snap,
         pairBudgetPerItem = None)
     }
     // DEFAULT runs FIRST (cold frame memo), so <= proves the ladder
@@ -139,7 +146,7 @@ class LedgerStatsSpec extends SparkSpec {
     // the mixed builder stamps its text and marks arms; the seqs arm
     // gets exact stats from its first delta
     val mixed = java.nio.file.Files.createTempDirectory("stats-mixed").toString
-    DedupLedger.buildMixedLedger(seedDoc, healthyMarks(500), mixed, geom)
+    mixedLedger(mixed, healthyMarks(500))
     assert(IndexStore.armStats(mixed, textKey).exists(_.rows == textBands),
       "the mixed build must stamp its text arm")
     assert(IndexStore.armStats(mixed, statsKey)
@@ -149,16 +156,46 @@ class LedgerStatsSpec extends SparkSpec {
       .select(col("id").as("media_id"), col("f"),
         expr(s"array(cast(conv(substring(md5(concat(id, '/', f)), 1, 11), " +
           s"16, 10) as bigint) & $mask42)").as("fp"))
-    DedupLedger.appendVideoSurvivors(frames, mixed, tag = "seqs-1", geom)
+    DedupLedger.append(Video(geom), frames, mixed, tag = "seqs-1")
     assert(IndexStore.armStats(mixed, s"seqs-hist-${geom.params}")
       .exists(s => s.slack == 0L && s.rows == 40L * geom.bands),
       "the first video delta must stamp exact seqs stats")
+    // the seqs SEED builders (the stores q169-q172 clone) stamp exact
+    // stats as well: the first verdict against each runs no more jobs
+    // than one against a store whose first delta stamped fresh stats
+    val fixture = java.nio.file.Files.createTempDirectory("stats-seeds").toString
+    textDocs(0L until 100L).write.parquet(s"$fixture/documents.parquet")
+    for ((seed, arm) <- Seq(
+        DedupLedger.ensureVideoHistoryLedger(spark, fixture) -> Video(),
+        DedupLedger.ensureAviVideoHistoryLedger(spark, fixture) ->
+          Video(DedupLedger.WideMarks))) {
+      val words = (arm.geom.fpBits + 63) / 64
+      def seqs(ids: Seq[Long]) = ids.flatMap(i => (0L until 4L).map(f =>
+          (i, f, Seq.tabulate(words)(w =>
+            new scala.util.Random(i * 131 + f * 7 + w).nextLong() & mask42))))
+        .toDF("media_id", "f", "fp")
+      val fresh = java.nio.file.Files.createTempDirectory("stats-fresh").toString
+      DedupLedger.append(arm, seqs(0L until 10L), fresh, tag = "seed")
+      val probe = seqs(1000L until 1010L).localCheckpoint()
+      def verdictJobs(dir: String): Int = {
+        DedupLedger.clearShedMemos()
+        countJobs(DedupLedger.verdict(arm, spark, probe, dir,
+          IndexStore.snapshot(dir)))._2
+      }
+      val (js, jf) = (verdictJobs(seed), verdictJobs(fresh))
+      assert(js <= jf, s"the ${arm.geom.params} seqs seed's first verdict " +
+        s"ran $js jobs to a fresh-stats store's $jf: its builder stamped " +
+        "no arm stats")
+      // the seed cache keys on this fixture's path: nothing reuses it
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(seed))
+      new java.io.File(s"$seed.lock").delete()
+    }
   }
 
   test("compaction carries the stats to the version it publishes, and the " +
        "next verdict still measures nothing") {
     val dir = textLedger(64)
-    DedupLedger.appendSurvivors(textDocs(200L until 210L), dir, tag = "c-1")
+    DedupLedger.append(Text, textDocs(200L until 210L), dir, tag = "c-1")
     val st0 = IndexStore.armStats(dir, textKey).get
     assert(st0.version == IndexStore.headVersion(dir).get)
     val v = IndexStore.compact(spark, dir)
@@ -190,7 +227,7 @@ class LedgerStatsSpec extends SparkSpec {
         .partitionBy("cell").parquet(s"$dir/vectors")
       // the append lands after the rewrite was staged, before the
       // replacement publishes: the carry adopts its files
-      DedupLedger.appendSurvivors(textDocs(300L until 320L), dir,
+      DedupLedger.append(Text, textDocs(300L until 320L), dir,
         tag = "mid-replace")
       ()
     }
@@ -208,7 +245,7 @@ class LedgerStatsSpec extends SparkSpec {
   test("delta commits bump slack and rows soundly; rebuild clears stale " +
        "stats before the new content publishes") {
     val dir = java.nio.file.Files.createTempDirectory("stats-bump").toString
-    DedupLedger.buildMixedLedger(seedDoc, healthyMarks(40000), dir, geom)
+    mixedLedger(dir, healthyMarks(40000))
     val st0 = IndexStore.armStats(dir, statsKey).get
     // a 200-item delta: every fingerprint lands in some bucket, so the
     // bump must record max-per-bucket slack >= 1 and exactly the
@@ -217,20 +254,20 @@ class LedgerStatsSpec extends SparkSpec {
       .select(col("id").as("media_id"),
         expr(s"array(cast(conv(substring(md5(cast(id as string)), 1, 11), " +
           s"16, 10) as bigint) & $mask42)").as("fp"))
-    DedupLedger.appendMediaSurvivors(delta, dir, tag = "bump-1", geom)
+    DedupLedger.append(Media(geom), delta, dir, tag = "bump-1")
     val st1 = IndexStore.armStats(dir, statsKey).get
     assert(st1.slack >= 1L, "a non-empty delta must bump slack")
     assert(st1.rows == st0.rows + 200L * geom.bands,
       s"rows must grow by the delta's banded rows, got ${st1.rows}")
     assert(st1.maxBound >= st0.maxBound, "maxBound must be monotone under appends")
     // idempotent replay: the same tag must not double-bump
-    DedupLedger.appendMediaSurvivors(delta, dir, tag = "bump-1", geom)
+    DedupLedger.append(Media(geom), delta, dir, tag = "bump-1")
     val st1r = IndexStore.armStats(dir, statsKey).get
     assert((st1r.version, st1r.slack, st1r.rows, st1r.hist.toSeq) ==
       ((st1.version, st1.slack, st1.rows, st1.hist.toSeq)),
       "a replayed tagged delta must not bump stats twice")
     // rebuild: stale stats cleared, fresh exact stats stamped
-    DedupLedger.buildMixedLedger(seedDoc, healthyMarks(35000), dir, geom)
+    mixedLedger(dir, healthyMarks(35000))
     val st2 = IndexStore.armStats(dir, statsKey).get
     assert(st2.slack == 0L && st2.rows == 35000L * geom.bands,
       s"rebuild must restamp exact stats, got $st2")
@@ -247,7 +284,7 @@ class LedgerStatsSpec extends SparkSpec {
         expr(s"""array(CASE WHEN id < 1000 THEN shiftleft(id, 14)
           |ELSE cast(conv(substring(md5(cast(id as string)), 1, 11), 16, 10)
           |     as bigint) & $mask42 END)""".stripMargin).as("fp"))
-    DedupLedger.buildMixedLedger(seedDoc, marks, dir, geom)
+    mixedLedger(dir, marks)
     val st = IndexStore.armStats(dir, statsKey).get
     assert(st.maxBound > graft.ops.DedupOps.BAND_CAP,
       s"the planted hot bucket must push maxBound past the floor, got $st")
@@ -260,15 +297,15 @@ class LedgerStatsSpec extends SparkSpec {
           |ELSE shiftleft(id + 5000, 14) END)""".stripMargin).as("fp"))
       .localCheckpoint()
     DedupLedger.clearShedMemos()
-    val withStats = DedupLedger.dedupMediaAgainstLedger(
-      spark, batch, dir, snap, geom).collect().toSeq
+    val withStats = DedupLedger.verdict(Media(geom), spark, batch, dir, snap)
+      .collect().toSeq
     // delete the stats file, clear memos: the pure runtime path
     val f = new java.io.File(s"$dir/_manifest").listFiles()
       .find(_.getName.startsWith("stats.")).get
     assert(f.delete())
     DedupLedger.clearShedMemos()
-    val without = DedupLedger.dedupMediaAgainstLedger(
-      spark, batch, dir, snap, geom).collect().toSeq
+    val without = DedupLedger.verdict(Media(geom), spark, batch, dir, snap)
+      .collect().toSeq
     assert(withStats == without,
       "stats presence changed a hot store's shed verdict")
   }
@@ -283,7 +320,7 @@ class LedgerStatsSpec extends SparkSpec {
        "write side pays one exact full-arm refresh inside the commit it " +
        "already holds the lock for") {
     val dir = java.nio.file.Files.createTempDirectory("stats-escal").toString
-    DedupLedger.buildMixedLedger(seedDoc, healthyMarks(400000), dir, geom)
+    mixedLedger(dir, healthyMarks(400000))
     // the legacy / starved store: corpus-scale content, NO stats
     deleteStats(dir)
     assert(IndexStore.armStats(dir, statsKey).isEmpty)
@@ -298,7 +335,7 @@ class LedgerStatsSpec extends SparkSpec {
       .select(col("id").as("media_id"),
         expr(s"array(cast(conv(substring(md5(cast(id as string)), 1, 11), " +
           s"16, 10) as bigint) & $mask42)").as("fp"))
-    DedupLedger.appendMediaSurvivors(delta, dir, tag = "escal-1", geom)
+    DedupLedger.append(Media(geom), delta, dir, tag = "escal-1")
     val st = IndexStore.armStats(dir, statsKey)
     assert(st.isDefined, "one tick must converge a stats-less corpus store")
     assert(st.get.slack == 0L &&
@@ -307,16 +344,16 @@ class LedgerStatsSpec extends SparkSpec {
     assert(st.get.version == IndexStore.headVersion(dir).get,
       "the refresh must stamp the version this commit publishes")
     // subsequent deltas take the cheap bump branch (no more full scans)
-    DedupLedger.appendMediaSurvivors(
+    DedupLedger.append(Media(geom),
       delta.withColumn("media_id", col("media_id") + 1000L),
-      dir, tag = "escal-2", geom)
+      dir, tag = "escal-2")
     val st2 = IndexStore.armStats(dir, statsKey).get
     assert(st2.rows == st.get.rows + 200L * geom.bands && st2.slack >= 1L)
     // and fixture-scale stores stay stats-less (the byte gate holds):
     val small = java.nio.file.Files.createTempDirectory("stats-small").toString
-    DedupLedger.buildMixedLedger(seedDoc, healthyMarks(2000), small, geom)
+    mixedLedger(small, healthyMarks(2000))
     deleteStats(small)
-    DedupLedger.appendMediaSurvivors(delta, small, tag = "s-1", geom)
+    DedupLedger.append(Media(geom), delta, small, tag = "s-1")
     assert(IndexStore.armStats(small, statsKey).isEmpty,
       "a fixture-scale store must not pay the escalated refresh")
   }
@@ -324,7 +361,7 @@ class LedgerStatsSpec extends SparkSpec {
   test("verdict-side self-heal escalates to a BLOCKING stats write after " +
        "3 consecutive skipped opportunistic attempts (contended lock)") {
     val dir = java.nio.file.Files.createTempDirectory("stats-block").toString
-    DedupLedger.buildMixedLedger(seedDoc, healthyMarks(400000), dir, geom)
+    mixedLedger(dir, healthyMarks(400000))
     deleteStats(dir)
     val snap = IndexStore.snapshot(dir)
     val batch = spark.range(0, 50, 1, 2)
@@ -343,7 +380,7 @@ class LedgerStatsSpec extends SparkSpec {
     holder.start(); held.await()
     def verdict(): Unit = {
       DedupLedger.clearShedMemos() // force the histogram + heal attempt
-      DedupLedger.dedupMediaAgainstLedger(spark, batch, dir, snap, geom)
+      DedupLedger.verdict(Media(geom), spark, batch, dir, snap)
         .collect()
       ()
     }

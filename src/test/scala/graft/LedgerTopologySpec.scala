@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{DedupLedger, IndexStore}
+import graft.ops.DedupLedger.{Media, Text, Video}
 
 /** Round-12 VERDICT #1: the ledger verdict's batch side must BROADCAST
   * only while measurably small — the increment scales with ingest rate,
@@ -19,6 +20,37 @@ class LedgerTopologySpec extends SparkSpec {
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
   private def words(n: Int, seed: String) =
     (0 until n).map(i => s"$seed$i").mkString(" ")
+  /** A one-doc text arm beside the narrow media marks `fps`. */
+  private def mixedLedger(dir: String,
+                          fps: org.apache.spark.sql.DataFrame): Int =
+    DedupLedger.build(dir, "text,media,video",
+      Text -> docs(0L -> words(30, "h")), Media() -> fps)
+
+  /** The q103 discipline for one arm's verdict: run it with the size
+    * gate open, then forced shut (maxBroadcast = 0 AND
+    * autoBroadcastJoinThreshold = -1); the forced plan must run shuffle
+    * joins, never broadcast, and return the identical verdict. Returns
+    * the broadcast run's rows. */
+  private def forcedShuffleParity(arm: String)
+      (verdict: Long => org.apache.spark.sql.DataFrame): Seq[Seq[Any]] = {
+    val broadcastRun = verdict(256L << 20).collect().map(_.toSeq).toSeq
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val gated = verdict(0L)
+      val shuffleRun = gated.collect().map(_.toSeq).toSeq
+      // materialize first, then read the ADAPTIVE final plan
+      val plan = gated.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastHashJoin") &&
+             !plan.contains("BroadcastExchange"),
+        s"size-gated $arm verdict must not broadcast when the gate is shut:\n$plan")
+      assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"),
+        s"expected shuffle joins in the forced $arm plan:\n$plan")
+      assert(shuffleRun == broadcastRun,
+        s"$arm verdict must be identical under shuffle-join topology")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    broadcastRun
+  }
 
   test("forced-shuffle ledger verdict: no broadcast in the plan, identical verdict") {
     val dir = java.nio.file.Files.createTempDirectory("ledger-topo").toString
@@ -33,26 +65,9 @@ class LedgerTopologySpec extends SparkSpec {
     DedupLedger.buildLedger(history, dir)
     val snap = IndexStore.snapshot(dir)
 
-    val broadcastRun = DedupLedger
-      .dedupAgainstLedger(spark, batch, dir, snap)
-      .collect().map(_.toSeq).toSeq
-
-    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val gated = DedupLedger
-        .dedupAgainstLedger(spark, batch, dir, snap, maxBroadcast = 0L)
-      val shuffleRun = gated.collect().map(_.toSeq).toSeq
-      // materialize first, then read the ADAPTIVE final plan
-      val plan = gated.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin") &&
-             !plan.contains("BroadcastExchange"),
-        s"size-gated verdict must not broadcast when the gate is shut:\n$plan")
-      assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"),
-        s"expected shuffle joins in the forced plan:\n$plan")
-      assert(shuffleRun == broadcastRun,
-        "verdict must be identical under shuffle-join topology")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    forcedShuffleParity("text") { maxBroadcast =>
+      DedupLedger.verdict(Text, spark, batch, dir, snap, maxBroadcast)
+    }
   }
 
   test("forced-shuffle MEDIA verdict: the marks-table hamming arm is " +
@@ -63,7 +78,7 @@ class LedgerTopologySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ledger-topo-m").toString
     val histFps = Seq((0L, Seq(0x1234567890aL)), (1L, Seq(0x0fedcba9876L)),
                       (2L, Seq(0x24680ace135L))).toDF("media_id", "fp")
-    DedupLedger.buildMixedLedger(docs(0L -> words(30, "h")), histFps, dir)
+    mixedLedger(dir, histFps)
     val snap = IndexStore.snapshot(dir)
     val batch = Seq(
       (10L, Seq(0x1234567890aL)),               // exact
@@ -71,27 +86,36 @@ class LedgerTopologySpec extends SparkSpec {
       (12L, Seq(0x3b3b3b3b3b3L))                // keep
     ).toDF("media_id", "fp")
 
-    val broadcastRun = DedupLedger
-      .dedupMediaAgainstLedger(spark, batch, dir, snap)
-      .collect().map(_.toSeq).toSeq
+    val broadcastRun = forcedShuffleParity("media") { maxBroadcast =>
+      DedupLedger.verdict(Media(), spark, batch, dir, snap, maxBroadcast)
+    }
     assert(broadcastRun.map(r => (r.head, r.last)) ==
       Seq((10L, 0L), (11L, 0L), (12L, 1L)), s"fixture truth drifted: $broadcastRun")
+  }
 
-    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val gated = DedupLedger
-        .dedupMediaAgainstLedger(spark, batch, dir, snap, maxBroadcast = 0L)
-      val shuffleRun = gated.collect().map(_.toSeq).toSeq
-      val plan = gated.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin") &&
-             !plan.contains("BroadcastExchange"),
-        s"size-gated media verdict must not broadcast when the gate is shut:\n$plan")
-      assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"),
-        s"expected shuffle joins in the forced plan:\n$plan")
-      assert(shuffleRun == broadcastRun,
-        "media verdict must be identical under shuffle-join topology")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+  test("forced-shuffle VIDEO verdict: the seqs-table vote arm is " +
+       "topology-invariant too") {
+    // history videos 0-2 (4 positions each); batch: an exact re-upload
+    // of 0, a near copy of 1 (one position 2 bits off: the vote still
+    // reads 4-of-4 within hamming 2) and a clean keep
+    def fp(o: Long, f: Long): Long =
+      new scala.util.Random(o * 31 + f).nextLong() & 0x3ffffffffffL
+    def frames(rows: (Long, Long => Long)*) =
+      rows.flatMap { case (id, at) => (0L until 4L).map(f => (id, f, Seq(at(f)))) }
+        .toDF("media_id", "f", "fp")
+    val dir = java.nio.file.Files.createTempDirectory("ledger-topo-vs").toString
+    DedupLedger.append(Video(),
+      frames((0L until 3L).map(o => o -> (fp(o, _: Long))): _*), dir, "seed")
+    val snap = IndexStore.snapshot(dir)
+    val batch = frames(
+      10L -> (fp(0, _: Long)),
+      11L -> ((f: Long) => if (f == 2L) fp(1, f) ^ 3L else fp(1, f)),
+      12L -> (fp(50, _: Long)))
+    val broadcastRun = forcedShuffleParity("video") { maxBroadcast =>
+      DedupLedger.verdict(Video(), spark, batch, dir, snap, maxBroadcast)
+    }
+    assert(broadcastRun.map(r => (r.head, r.last)) ==
+      Seq((10L, 0L), (11L, 0L), (12L, 1L)), s"fixture truth drifted: $broadcastRun")
   }
 
   test("ledger band join sheds a planted hot mark bucket under the " +
@@ -109,7 +133,7 @@ class LedgerTopologySpec extends SparkSpec {
     val hot = (0 until 300).map(i => (i.toLong, Seq(i.toLong << 14)))
     val histFps = (hot :+ (900L, Seq(0x155551555515555L)))
       .toDF("media_id", "fp")
-    DedupLedger.buildMixedLedger(docs(0L -> words(30, "h")), histFps, dir)
+    mixedLedger(dir, histFps)
     val snap = IndexStore.snapshot(dir)
     // 1001 flips two bits INSIDE band 1 (bits 22-23), so its only
     // surviving pigeonhole matches against mark 9 are the two HOT
@@ -124,13 +148,13 @@ class LedgerTopologySpec extends SparkSpec {
     ).toDF("media_id", "fp")
 
     val uncapped = DedupLedger
-      .dedupMediaAgainstLedger(spark, batch, dir, snap)
+      .verdict(Media(), spark, batch, dir, snap)
       .collect().map(r => (r.getLong(0), r.getLong(3))).toSeq
     assert(uncapped == Seq((1000L, 0L), (1001L, 0L), (1002L, 0L), (1003L, 1L)),
       s"fixture truth drifted: $uncapped")
 
     val capped = DedupLedger
-      .dedupMediaAgainstLedger(spark, batch, dir, snap,
+      .verdict(Media(), spark, batch, dir, snap,
         pairBudgetPerItem = Some(1))
       .collect().map(r => (r.getLong(0), r.getLong(3))).toSeq
     // 1000 exact-matches through the equality arm (budget-immune);
@@ -156,8 +180,7 @@ class LedgerTopologySpec extends SparkSpec {
     // `None` at the call site.
     val dir = java.nio.file.Files.createTempDirectory("ledger-topo-def").toString
     val hot = (0 until 2500).map(i => (i.toLong, Seq(i.toLong << 14)))
-    DedupLedger.buildMixedLedger(docs(0L -> words(30, "h")),
-      hot.toDF("media_id", "fp"), dir)
+    mixedLedger(dir, hot.toDF("media_id", "fp"))
     val snap = IndexStore.snapshot(dir)
     // hamming 2 off hot member 9, flips at band 1's TOP bits (26-27):
     // its band-1 key 9 ^ 12288 collides with no member (keys 0-1099,
@@ -169,11 +192,11 @@ class LedgerTopologySpec extends SparkSpec {
     def keepOf(v: org.apache.spark.sql.DataFrame) =
       v.collect().map(r => (r.getLong(0), r.getLong(3))).toSeq
     val defaultRun = keepOf(DedupLedger
-      .dedupMediaAgainstLedger(spark, batch, dir, snap))
+      .verdict(Media(), spark, batch, dir, snap))
     assert(defaultRun == Seq((5000L, 1L)),
       s"default path must shed the planted hot bucket: $defaultRun")
     val optOut = keepOf(DedupLedger
-      .dedupMediaAgainstLedger(spark, batch, dir, snap,
+      .verdict(Media(), spark, batch, dir, snap,
         pairBudgetPerItem = None))
     assert(optOut == Seq((5000L, 0L)),
       s"explicit None opt-out must keep the hot bucket: $optOut")
@@ -182,12 +205,11 @@ class LedgerTopologySpec extends SparkSpec {
   test("width guard: probing one-word marks at the wide geometry fails " +
        "by name instead of silently admitting every near-duplicate") {
     val dir = java.nio.file.Files.createTempDirectory("ledger-topo-wg").toString
-    DedupLedger.buildMixedLedger(docs(0L -> words(30, "h")),
-      Seq((0L, Seq(0x1234567890aL))).toDF("media_id", "fp"), dir)
+    mixedLedger(dir, Seq((0L, Seq(0x1234567890aL))).toDF("media_id", "fp"))
     val batch = Seq((10L, Seq(0x1234567890aL))).toDF("media_id", "fp")
     val ex = intercept[Exception] {
-      DedupLedger.dedupMediaAgainstLedger(spark, batch, dir,
-        IndexStore.snapshot(dir), DedupLedger.WideMarks).collect()
+      DedupLedger.verdict(Media(DedupLedger.WideMarks), spark, batch, dir,
+        IndexStore.snapshot(dir)).collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e =>
@@ -209,8 +231,7 @@ class LedgerTopologySpec extends SparkSpec {
     // way.
     val dir = java.nio.file.Files.createTempDirectory("ledger-topo-corr").toString
     val hot = (0 until 5000).map(i => (i.toLong, Seq(i.toLong << 14)))
-    DedupLedger.buildMixedLedger(docs(0L -> words(30, "h")),
-      hot.toDF("media_id", "fp"), dir)
+    mixedLedger(dir, hot.toDF("media_id", "fp"))
     val snap = IndexStore.snapshot(dir)
     val batch = ((0 until 20).map { i =>
       (5000L + i, Seq((i.toLong << 14) ^ (3L << 26)))
@@ -218,10 +239,10 @@ class LedgerTopologySpec extends SparkSpec {
       .toDF("media_id", "fp")
     def run(budget: Option[Option[Int]]) = {
       val v = budget match {
-        case None => DedupLedger.dedupMediaAgainstLedger(
-          spark, batch, dir, snap) // the DEFAULT
-        case Some(b) => DedupLedger.dedupMediaAgainstLedger(
-          spark, batch, dir, snap, pairBudgetPerItem = b)
+        case None => // the DEFAULT
+          DedupLedger.verdict(Media(), spark, batch, dir, snap)
+        case Some(b) => DedupLedger.verdict(Media(), spark, batch, dir, snap,
+          pairBudgetPerItem = b)
       }
       v.collect().map(r => (r.getLong(0), r.getLong(3))).toMap
     }
@@ -251,7 +272,7 @@ class LedgerTopologySpec extends SparkSpec {
     }
     val batch = docs(10L -> words(30, "h"))
     val ex = intercept[Exception] {
-      DedupLedger.dedupAgainstLedger(spark, batch, mediaOnly,
+      DedupLedger.verdict(Text, spark, batch, mediaOnly,
         IndexStore.snapshot(mediaOnly)).collect()
     }
     assert(ex.getMessage.contains("modalities"),
@@ -261,11 +282,12 @@ class LedgerTopologySpec extends SparkSpec {
     // legitimate bootstrap: the stamp declares text, so the first text
     // verdict runs against empty history and keeps everything
     val mixed = java.nio.file.Files.createTempDirectory("ledger-mg2").toString
-    DedupLedger.buildMixedLedger(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    DedupLedger.build(mixed, "text,media,video",
+      Text -> spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL("doc_id LONG, text STRING")),
-      Seq((0L, Seq(42L))).toDF("media_id", "fp"), mixed)
-    val v = DedupLedger.dedupAgainstLedger(spark, batch, mixed,
+      Media() -> Seq((0L, Seq(42L))).toDF("media_id", "fp"))
+    val v = DedupLedger.verdict(Text, spark, batch, mixed,
         IndexStore.snapshot(mixed))
       .collect().map(r => (r.getLong(0), r.getLong(3))).toSeq
     assert(v == Seq((10L, 1L)),
@@ -283,9 +305,9 @@ class LedgerTopologySpec extends SparkSpec {
       12L -> words(35, "z"))
     DedupLedger.buildLedger(history, dir)
     val snap = IndexStore.snapshot(dir)
-    val uncapped = DedupLedger.dedupAgainstLedger(spark, batch, dir, snap)
+    val uncapped = DedupLedger.verdict(Text, spark, batch, dir, snap)
       .collect().map(_.toSeq).toSeq
-    val capped = DedupLedger.dedupAgainstLedger(spark, batch, dir, snap,
+    val capped = DedupLedger.verdict(Text, spark, batch, dir, snap,
         pairBudgetPerItem = Some(5))
       .collect().map(_.toSeq).toSeq
     assert(capped == uncapped,
@@ -312,7 +334,7 @@ class LedgerTopologySpec extends SparkSpec {
     val histFrames = (0L until 300L)
       .flatMap(o => (0L until 4L).map(f => (o, f, Seq(fp(o, f)))))
       .toDF("media_id", "f", "fp")
-    DedupLedger.appendVideoSurvivors(histFrames, dir, tag = "seed")
+    DedupLedger.append(Video(), histFrames, dir, tag = "seed")
     val snap = IndexStore.snapshot(dir)
     val batch = (
       (0L until 4L).map(f => (1000L, f, Seq(fp(3, f)))) ++        // exact of 3
@@ -322,7 +344,7 @@ class LedgerTopologySpec extends SparkSpec {
         Seq(if (f == 0) intro else mix(90000 + f) & mask42)))     // intro only
     ).toDF("media_id", "f", "fp")
     def run(budget: Option[Int]) = DedupLedger
-      .dedupVideoAgainstLedger(spark, batch, dir, snap,
+      .verdict(Video(), spark, batch, dir, snap,
         pairBudgetPerItem = budget)
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) -1L else r.getLong(1),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.ops.DedupLedger.Video
 
 /** Plan-shape regression guard: the performance-critical plan properties
   * PLANS.md documents, asserted so a future refactor can't silently
@@ -407,7 +408,7 @@ class PlanGuardSpec extends SparkSpec {
     // filter that inlines the trigram lambda over split(text, ' ') and
     // lands below the rebalance exchange: O(tokens²) per doc on one core
     val docs = Tables.documents(spark, sf)
-    val sigs = graft.ops.DedupLedger.signatureRows(docs)
+    val sigs = graft.ops.DedupLedger.sigRows(docs)
     assert(lambdaSplitFilters(sigs).isEmpty, sigs.queryExecution.optimizedPlan)
     val verdict = SparkEntry.queries("q139_ledger_dedup")(spark, sf)
     assert(lambdaSplitFilters(verdict).isEmpty, verdict.queryExecution.optimizedPlan)
@@ -458,10 +459,10 @@ class PlanGuardSpec extends SparkSpec {
     val hist = (0L until 20L)
       .flatMap(o => (0L until 4L).map(f => (o, f, Seq(o * 1000 + f))))
       .toDF("media_id", "f", "fp")
-    DedupLedger.appendVideoSurvivors(hist, dir, tag = "seed")
+    DedupLedger.append(Video(), hist, dir, tag = "seed")
     val batch = (0L until 4L).map(f => (100L, f, Seq(3000 + f)))
       .toDF("media_id", "f", "fp")
-    val v = DedupLedger.dedupVideoAgainstLedger(spark, batch, dir,
+    val v = DedupLedger.verdict(Video(), spark, batch, dir,
       IndexStore.snapshot(dir))
     v.collect() // materialize so the adaptive plan finalizes
     val p = v.queryExecution.executedPlan.toString

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{DedupLedger, IndexStore}
+import graft.ops.DedupLedger.Text
 
 /** Round 21: the declared-schema readers construct their relation
   * DIRECTLY (InMemoryFileIndex over cached manifest file statuses +
@@ -104,8 +105,7 @@ class RelationParitySpec extends SparkSpec {
     assert(read() eq read(),
       "same (session, fileset, ddl) must hit the frame memo")
     val before = read().count()
-    DedupLedger.appendSurvivors(
-      Seq((1000L, "omega psi chi phi upsilon tau extra doc"))
+    DedupLedger.append(Text, Seq((1000L, "omega psi chi phi upsilon tau extra doc"))
         .toDF("doc_id", "text"), dir, tag = "relpar-append")
     val snap2 = IndexStore.snapshot(dir)
     val after = IndexStore.frames(spark, dir, snap2,
@@ -122,8 +122,7 @@ class RelationParitySpec extends SparkSpec {
   test("diffFrames with declared ledger DDLs matches the inference path") {
     val dir = freshLedger()
     val v1 = IndexStore.snapshot(dir)
-    DedupLedger.appendSurvivors(
-      Seq((2000L, "nu xi omicron pi rho sigma fresh doc"))
+    DedupLedger.append(Text, Seq((2000L, "nu xi omicron pi rho sigma fresh doc"))
         .toDF("doc_id", "text"), dir, tag = "relpar-diff")
     val head = IndexStore.snapshot(dir)
     val (dx, dv) = IndexStore.diffFrames(spark, dir, v1, head,

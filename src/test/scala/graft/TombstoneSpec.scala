@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{DedupLedger, IndexStore, VectorOps}
+import graft.ops.DedupLedger.{Media, Text, Video}
 
 /** TOMBSTONE deletes — the takedown lifecycle (round 17). A takedown
   * at 100 TB must cost O(deleted), not O(corpus): [[IndexStore.forget]]
@@ -107,25 +108,25 @@ class TombstoneSpec extends SparkSpec {
       dir)
     // premise: a verbatim copy of doc 0 exact-drops against the ledger
     val batch = Seq(10L -> words(30, "h")).toDF("doc_id", "text")
-    val pre = DedupLedger.dedupAgainstLedger(spark, batch, dir,
+    val pre = DedupLedger.verdict(Text, spark, batch, dir,
       IndexStore.snapshot(dir)).collect()
     assert(pre.length == 1 && pre(0).getAs[Long]("keep") == 0L &&
       pre(0).getAs[Long]("exact_of") == 0L)
 
     IndexStore.forget(spark, dir, "text", Seq(0L).toDF("owner"))
-    val post = DedupLedger.dedupAgainstLedger(spark, batch, dir,
+    val post = DedupLedger.verdict(Text, spark, batch, dir,
       IndexStore.snapshot(dir)).collect()
     assert(post.length == 1 && post(0).getAs[Long]("keep") == 1,
       s"content whose only owner was forgotten must re-admit: ${post.toSeq}")
     // and the re-admission appends under the NEW owner
-    DedupLedger.appendSurvivors(batch, dir, tag = "readmit")
-    val re = DedupLedger.dedupAgainstLedger(spark, batch, dir,
+    DedupLedger.append(Text, batch, dir, tag = "readmit")
+    val re = DedupLedger.verdict(Text, spark, batch, dir,
       IndexStore.snapshot(dir)).collect()
     assert(re(0).getAs[Long]("keep") == 0 &&
       re(0).getAs[Long]("exact_of") == 10L,
       "the re-admitted copy owns its content now")
     // the untouched owner still suppresses
-    val other = DedupLedger.dedupAgainstLedger(spark,
+    val other = DedupLedger.verdict(Text, spark,
       Seq(20L -> words(30, "x")).toDF("doc_id", "text"), dir,
       IndexStore.snapshot(dir)).collect()
     assert(other(0).getAs[Long]("keep") == 0 &&
@@ -137,10 +138,9 @@ class TombstoneSpec extends SparkSpec {
        "takedown for a modality the store never ingested") {
     val dir = java.nio.file.Files.createTempDirectory("mix-tomb").toString
     IndexStore.setProps(dir, Map("modalities" -> "media,video"))
-    DedupLedger.appendMediaSurvivors(
-      Seq((5L, Array(100L)), (6L, Array(200L)))
+    DedupLedger.append(Media(), Seq((5L, Array(100L)), (6L, Array(200L)))
         .toDF("media_id", "fp"), dir, tag = "m1")
-    DedupLedger.appendVideoSurvivors(
+    DedupLedger.append(Video(),
       Seq((5L, 0L, Array(300L)), (5L, 1L, Array(301L)),
           (7L, 0L, Array(400L)), (7L, 1L, Array(401L)))
         .toDF("media_id", "f", "fp"), dir, tag = "v1")
@@ -280,8 +280,8 @@ class TombstoneSpec extends SparkSpec {
       Seq((0, "aa"), (1, "bb")).toDF("cell", "h")
         .write.mode("append").parquet(s"$dir/codes")
     }
-    DedupLedger.appendMediaSurvivors(
-      Seq((5L, Array(100L))).toDF("media_id", "fp"), dir, tag = "m1")
+    DedupLedger.append(Media(), Seq((5L, Array(100L))).toDF("media_id", "fp"),
+      dir, tag = "m1")
     val vPre = IndexStore.headVersion(dir).get
     IndexStore.forget(spark, dir, "media", Seq(5L).toDF("owner"))
     val snap = IndexStore.snapshot(dir)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.DedupOps
+import graft.ops.DedupLedger.{Media, Text}
 
 /** The wide-fingerprint hamming family (VERDICT r13 Next #1): the
   * array-of-longs form must be bit-identical to the proven single-long
@@ -324,12 +325,12 @@ class WideHammingSpec extends SparkSpec {
       }
       (id, fp)
     }
-    DedupLedger.buildMixedLedger(
-      Seq((0L, (0 until 30).map(i => s"w$i").mkString(" "))).toDF("doc_id", "text"),
-      hist.toDF("media_id", "h")
-        .select(col("media_id"), array(col("h")).as("fp")),
-      dir)
-    val got = DedupLedger.dedupMediaAgainstLedger(spark,
+    DedupLedger.build(dir, "text,media,video",
+      Text -> Seq((0L, (0 until 30).map(i => s"w$i").mkString(" ")))
+        .toDF("doc_id", "text"),
+      Media() -> hist.toDF("media_id", "h")
+        .select(col("media_id"), array(col("h")).as("fp")))
+    val got = DedupLedger.verdict(Media(), spark,
         batch.toDF("media_id", "h")
           .select(col("media_id"), array(col("h")).as("fp")),
         dir, IndexStore.snapshot(dir))
