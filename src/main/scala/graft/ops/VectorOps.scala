@@ -835,11 +835,11 @@ object VectorOps {
     (quantL, coarse, cb, codes, assigned)
   }
 
-  /** The compressed-domain scan every serve mode shares: each probed-cell
-    * code row joins the (tiny, broadcast) routed-query set on its ONE
-    * cell, then folds M table lookups — no float vector math in the
-    * scan, and no corpus-sized join anywhere (codes already carry their
-    * cell). */
+  /** The in-query (q127) compressed-domain scan: each probed-cell code
+    * row joins the (tiny, broadcast) routed-query set on its ONE cell,
+    * then folds M table lookups — no float vector math in the scan, and
+    * no corpus-sized join anywhere (codes already carry their cell). The
+    * stored serve runs the same fold inside [[graft.plans.IvfPqServe]]. */
   private def scanCandidates(qcellsDf: DataFrame, dtabsDf: DataFrame,
                              codesDf: DataFrame, rerank: Int): DataFrame = {
     val wAdc = org.apache.spark.sql.expressions.Window
@@ -927,17 +927,18 @@ object VectorOps {
     * inputs are bounded regardless of corpus size (numQueries query
     * vectors, k coarse cells, ≤ M×kSub codebook rows); the outputs are
     * ≤ numQueries×probes routing rows and as many dense dtab arrays
-    * (M×kSub doubles each, ≈30k values total), re-injected as
-    * LocalRelations. This deletes the qresid → qrsubs → qdist → grid →
-    * dtabs join chain (3–4 joins + a grid cross join + an aggregation)
-    * from every serve — the fixed plan overhead VERDICT r11 #2 measured
-    * as the residual serve cost. Every arithmetic step replicates the
-    * distributed expressions BIT-IDENTICALLY: exact int64 numerators,
-    * one IEEE division by (n*n).toDouble, floor-quantized residuals
+    * (M×kSub doubles each, ≈30k values total), held by the
+    * [[graft.plans.IvfPqServe]] node as request state. This deletes the
+    * qresid → qrsubs → qdist → grid → dtabs join chain (3–4 joins + a
+    * grid cross join + an aggregation) from every serve — the fixed plan
+    * overhead VERDICT r11 #2 measured as the residual serve cost. Every
+    * arithmetic step replicates the distributed expressions
+    * BIT-IDENTICALLY: exact int64 numerators, one IEEE division by
+    * (n*n).toDouble, floor-quantized residuals
     * ([[residExpr]]) — so the stored serve stays hash-identical to the
     * in-query q127 path.
     */
-  private def routeAndTables(qRows: Array[(Long, Array[Long])],
+  private[graft] def routeAndTables(qRows: Array[(Long, Array[Long])],
       meta: IvfPqMeta, probes: Int)
       : (Seq[(Long, Int)], Seq[(Long, Int, Array[Double])]) = {
     // route: `probes` nearest cells by exact-int numerator, (dist, cell)
@@ -978,27 +979,6 @@ object VectorOps {
         (qid, cell, dtab)
       }
     (routed, dtabRows)
-  }
-
-  /** Stages 1+2 of the stored serve (route + pruned probed-cell ADC
-    * scan): returns the `rerank`-capped candidate frame (qid, vec_id,
-    * adist) WITHOUT executing it — exposed so PlanGuardSpec can pin the
-    * scan's PartitionFilters, and so callers can see the three-stage
-    * server topology explicitly. */
-  private[graft] def ivfPqCandidatesStored(spark: SparkSession,
-      qRows: Array[(Long, Array[Long])], meta: IvfPqMeta, codes: DataFrame,
-      probes: Int, rerank: Int): DataFrame = {
-    val (routed, dtabRows) = routeAndTables(qRows, meta, probes)
-    import spark.implicits._
-    val qcellsLit = routed.toDF("qid", "cell")
-    val dtabsLit = dtabRows.toDF("qid", "cell", "dtab")
-    // the probed cells become a literal IN on the partition column, so
-    // the parquet source prunes whole cell=... directories statically
-    // (the filter cannot change the answer — the candidate scan
-    // inner-joins the routed set on cell anyway)
-    val probed = routed.map(_._2).distinct.sorted
-    scanCandidates(qcellsLit, dtabsLit,
-      codes.filter(col("cell").isin(probed: _*)), rerank)
   }
 
   /** IN-QUERY candidates (q127): the routing and ADC tables stay in the
@@ -1058,9 +1038,10 @@ object VectorOps {
     scanCandidates(qcells, dtabs, codes, rerank)
   }
 
-  /** The exact re-rank expression both serve modes share (stage 3):
-    * full-precision cosine for candidates ONLY, (cos desc, vec_id)
-    * tie-break, top-`topK` per query. */
+  /** The in-query (q127) exact re-rank (stage 3): full-precision cosine
+    * for candidates ONLY, (cos desc, vec_id) tie-break, top-`topK` per
+    * query. [[graft.plans.IvfPqServe]] computes the same cosines for the
+    * stored serve. */
   private def rerankTop(norms: DataFrame, candDf: DataFrame, qn: DataFrame,
                         topK: Int): DataFrame = {
     val wTop = org.apache.spark.sql.expressions.Window
@@ -1092,19 +1073,20 @@ object VectorOps {
     rerankTop(norms, cand, qn, topK)
   }
 
-  /** STORED serve over pre-collected query rows: ONE Spark job. Stage 1
-    * (routing + ADC tables + query norms) is pure driver math over the
-    * cached store metadata. Stages 2+3 fuse into a single lazy plan:
-    * the pruned probed-cell code scan folds ADC distances and
-    * window-caps to ≤ numQueries × rerank candidates, which broadcast
-    * straight into a join against the index's OWN vector lists —
-    * [[buildIvfPqIndex]] stores the quantized vectors partitioned by
-    * cell (the FAISS inverted-list layout: raw vectors live beside the
-    * codes precisely so the re-rank never goes back to the corpus), so
-    * the full-precision fetch prunes to the same probed-cell
-    * directories and no driver round-trip separates the ADC scan from
-    * the re-rank. At 100 TB the serve therefore reads probes/k of the
-    * code table + probes/k of the vector lists and nothing else.
+  /** STORED serve over pre-collected query rows: at most TWO Spark jobs.
+    * Stage 1 (routing + ADC tables + query norms) is pure driver math
+    * over the cached store metadata. Stages 2+3 run inside one
+    * [[graft.plans.IvfPqServe]] operator: one pass over the pruned
+    * probed-cell code scan folds ADC distances into bounded per-query
+    * candidate heaps (merged on the driver to ≤ numQueries × rerank
+    * ids), then one pass over the index's OWN vector lists re-ranks
+    * just those ids exactly — [[buildIvfPqIndex]] stores the quantized
+    * vectors partitioned by cell (the FAISS inverted-list layout: raw
+    * vectors live beside the codes precisely so the re-rank never goes
+    * back to the corpus), so the full-precision fetch prunes to the
+    * same probed-cell directories. No shuffle and no broadcast exchange
+    * on a store without tombstones; at 100 TB the serve reads probes/k
+    * of the code table + probes/k of the vector lists and nothing else.
     */
   private[graft] def serveIvfPqStoredRows(spark: SparkSession,
       indexDir: String, qRows: Array[(Long, Array[Long])], probes: Int,
@@ -1137,21 +1119,21 @@ object VectorOps {
   }
 
   /** The STORED serve half: answers top-`topK` from a persisted index's
-    * codes and vectors frames. The routed cells are collected
-    * driver-side (≤ numQueries × probes values — the ANN router's
-    * natural home is the coordinator) and applied as a LITERAL filter,
-    * so both cell-partitioned scans prune to probed-cell directories
-    * (PartitionFilters in the plan; PlanGuardSpec pins it). */
+    * codes and vectors frames through one [[graft.plans.IvfPqServe]]
+    * node. The routed cells are computed driver-side (≤ numQueries ×
+    * probes values — the ANN router's natural home is the coordinator)
+    * and applied as a LITERAL filter, so both cell-partitioned scans
+    * prune to probed-cell directories (PartitionFilters in the plan;
+    * PlanGuardSpec pins it). */
   private def serveFromStoreFrames(spark: SparkSession, indexDir: String,
       codesDf: DataFrame, vecsDf: DataFrame,
       qRows: Array[(Long, Array[Long])], probes: Int, rerank: Int,
       topK: Int, candFilter: Option[Column]): DataFrame = {
-    val meta = storeMeta(spark, indexDir)
-    val (routed, dtabRows) = routeAndTables(qRows, meta, probes)
-    import spark.implicits._
-    val qcellsLit = routed.toDF("qid", "cell")
-    val dtabsLit = dtabRows.toDF("qid", "cell", "dtab")
-    val probed = routed.map(_._2).distinct.sorted
+    val (routed, dtabRows) =
+      routeAndTables(qRows, storeMeta(spark, indexDir), probes)
+    val req = new graft.plans.IvfPqRequest(qRows.map(_._1), qRows.map(_._2),
+      routed.toArray, dtabRows.map(_._3).toArray, PQ_M, PQ_KSUB, rerank, topK)
+    val probed = req.probed
     // FILTERED search (q134): the metadata predicate lands on the code
     // table scan itself — the stored rows carry their filterable
     // attributes (rider columns through the encode), so the filter
@@ -1161,20 +1143,11 @@ object VectorOps {
     // satisfy the predicate, instead of post-filtering a top-k that
     // may go empty — the FAISS/vector-store "pre-filtered search".
     val codesPruned = codesDf.filter(col("cell").isin(probed: _*))
-    val cand = scanCandidates(qcellsLit, dtabsLit,
-      candFilter.map(codesPruned.filter).getOrElse(codesPruned), rerank)
-    // the re-rank's query side from the already-collected vectors:
-    // qnorm is the same exact int64 self-dot ldot computes
-    val qnLit = qRows.toSeq.map { case (qid, q) =>
-      var s = 0L; var d = 0
-      while (d < q.length) { s += q(d) * q(d); d += 1 }
-      (qid, q, s)
-    }.toDF("qid", "qv", "qnorm")
-    val norms = vecsDf
-      .filter(col("cell").isin(probed: _*))
+    val codes = candFilter.map(codesPruned.filter).getOrElse(codesPruned)
+      .select(col("vec_id"), col("cell"), col("codes"))
+    val vecs = vecsDf.filter(col("cell").isin(probed: _*))
       .select(col("vec_id"), col("q"))
-      .withColumn("norm", ldot(col("q"), col("q")))
-    rerankTop(norms, cand, qnLit, topK)
+    graft.plans.IvfPqServe.frame(spark, codes, vecs, req)
   }
 
   /** The store's codes + vectors DataFrames, cached per (session,
@@ -1789,9 +1762,10 @@ object VectorOps {
   }
 
   /** Serve q127's exact answer from a [[buildIvfPqIndex]] store: the
-    * corpus is touched only twice — the pruned probed-cell code scan and
-    * the one re-rank stream against a broadcast candidate set — and the
-    * build pipeline appears nowhere in the plan.
+    * store is touched only twice — one pass over the pruned probed-cell
+    * codes and one over the same cells' vectors for the merged
+    * candidates ([[serveIvfPqStoredRows]]) — and the build pipeline
+    * appears nowhere in the plan.
     */
   def servedIvfPqTopK(spark: SparkSession, indexDir: String, emb: DataFrame,
                       numQueries: Int, probes: Int, rerank: Int,
@@ -1802,22 +1776,6 @@ object VectorOps {
       .select(col("vec_id"), col("q")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
     serveIvfPqStoredRows(spark, indexDir, qRows, probes, rerank, topK)
-  }
-
-  /** The stored-serve ADC stage on its own (route + pruned probed-cell
-    * scan, lazily planned) — PlanGuardSpec pins its PartitionFilters;
-    * [[serveIvfPqStored]] executes the same frame internally. */
-  private[graft] def servedIvfPqCandidates(spark: SparkSession,
-      indexDir: String, emb: DataFrame, numQueries: Int, probes: Int,
-      rerank: Int): DataFrame = {
-    requireHeldOut(numQueries)
-    val quant = emb.withColumn("q", expr(quantExpr))
-      .select(col("vec_id"), col("q"))
-    val qRows = quant.filter(col("vec_id") < numQueries)
-      .select(col("vec_id"), col("q")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
-    ivfPqCandidatesStored(spark, qRows, storeMeta(spark, indexDir),
-      storeFrames(spark, indexDir)._1, probes, rerank)
   }
 
   /** Incremental index MAINTENANCE: coarse-assign + residual-encode NEW
@@ -1888,41 +1846,53 @@ object VectorOps {
   }
 
   /** Build-once gate for the q128/q129 catalog entries: the index lives
-    * outside the repo (tmpdir), keyed by an MD5 of the source dir's FULL
-    * path (a `String.hashCode` collision between two fixture dirs would
-    * make them share a base dir and thrash alternating rebuilds —
-    * VERDICT r11 #4), and is rebuilt whenever the source parquet's
-    * (path, length, mtime) set or any index-shaping parameter changes —
-    * a regenerated fixture or a code-level constant bump can never serve
-    * a stale index.
+    * outside the repo (tmpdir) in `graft_<tag>_<slug>_<fp8>`. `slug` is
+    * an MD5 of the source dir's FULL path (a `String.hashCode` collision
+    * between two fixture dirs would make them share a base dir and
+    * thrash alternating rebuilds — VERDICT r11 #4); `fp8` is a short MD5
+    * of the params string, so two code versions whose index-shaping
+    * parameters differ keep separate stores instead of rebuilding each
+    * other's. Inside its directory a store is rebuilt whenever the
+    * source parquet's (path, length, mtime) set changes, and a params
+    * change lands in another directory — a regenerated fixture or a
+    * code-level constant bump can never serve a stale index.
     *
     * Concurrency (round-11 ADVICE): the JVM-local monitor serializes
-    * threads in this process; an OS-level `FileChannel` lock on a
-    * sibling lockfile serializes OTHER JVMs (bench + test forks share
+    * threads in this process; an OS-level `FileChannel` lock on the
+    * `graft_<tag>_<slug>.lock` lockfile, shared by every params
+    * fingerprint, serializes OTHER JVMs (bench + test forks share
     * java.io.tmpdir). The build lands in a temp sibling dir that is
     * atomically renamed into place, so a reader never observes a
     * half-built store even across crash boundaries — the fingerprint
-    * marker travels INSIDE the renamed dir.
+    * marker travels INSIDE the renamed dir. After a build, still under
+    * the lock, sibling fingerprints past the newest [[SEED_RETENTION]]
+    * are deleted.
     */
   private val indexLock = new Object
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private[ops] def ensureIndex(d: String, tag: String, params: String,
-                               srcFile: String = "embeddings.parquet")
-                              (build: java.io.File => Unit): String = {
+
+  /** Params fingerprints of one (tag, source) kept side by side. */
+  private[graft] val SEED_RETENTION = 2
+
+  private[graft] def ensureIndex(d: String, tag: String, params: String,
+                                 srcFile: String = "embeddings.parquet")
+                                (build: java.io.File => Unit): String = {
     val src = Fingerprint.of(d, srcFile)
     val fp = md5hex(s"$params|$src")
     val slug = md5hex(new java.io.File(d).getAbsolutePath).take(16)
+    val stem = s"graft_${tag}_$slug"
+    val name = s"${stem}_${md5hex(params).take(8)}"
     val tmpRoot = new java.io.File(sys.props("java.io.tmpdir"))
-    val base = new java.io.File(tmpRoot, s"graft_${tag}_$slug")
+    val base = new java.io.File(tmpRoot, name)
     val marker = new java.io.File(base, "_INDEX_FINGERPRINT")
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
       f.delete(); ()
     }
     indexLock.synchronized {
-      val lockFile = new java.io.File(tmpRoot, s"graft_${tag}_$slug.lock")
+      val lockFile = new java.io.File(tmpRoot, s"$stem.lock")
       val ch = java.nio.channels.FileChannel.open(lockFile.toPath,
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.WRITE)
@@ -1932,7 +1902,7 @@ object VectorOps {
           new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == fp
         if (!fresh) {
           val staging = new java.io.File(tmpRoot,
-            s"graft_${tag}_$slug.build_${java.lang.ProcessHandle.current().pid()}")
+            s"$name.build_${java.lang.ProcessHandle.current().pid()}")
           rm(staging); staging.mkdirs()
           build(staging)
           java.nio.file.Files.write(
@@ -1944,6 +1914,13 @@ object VectorOps {
           rm(base)
           java.nio.file.Files.move(staging.toPath, base.toPath,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          // retention: the newest fingerprints by build time survive
+          val sibling = (java.util.regex.Pattern.quote(stem) + "_[0-9a-f]{8}").r
+          Option(tmpRoot.listFiles()).toSeq.flatten
+            .filter(f => f.isDirectory && sibling.matches(f.getName))
+            .sortBy(f => (f != base,
+              -new java.io.File(f, "_INDEX_FINGERPRINT").lastModified, f.getName))
+            .drop(SEED_RETENTION).foreach(rm)
         }
       } finally { osLock.release(); ch.close() }
     }

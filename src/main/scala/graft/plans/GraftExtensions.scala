@@ -83,6 +83,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => RewriteIntersectOverlap)
     e.injectOptimizerRule(_ => RewriteMapPivot)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => IvfPqServeStrategy)
     e.injectFunction((FunctionIdentifier("is_similar_rgb"),
       new ExpressionInfo(classOf[IsSimilarRgb].getName, "is_similar_rgb"),
       (exprs: Seq[Expression]) => IsSimilarRgb(exprs(0), exprs(1), exprs(2))))

@@ -294,56 +294,67 @@ class PlanGuardSpec extends SparkSpec {
       assert(lambdaArgmins(p).isEmpty, p)
   }
 
-  test("q128: serve plan prunes to probed-cell partitions; no build stage present") {
-    // stage 1+2 (route + ADC scan — executes eagerly inside the full
-    // serve, so pin its plan separately): the stored codes scan must
-    // carry a LITERAL partition filter on cell — whole cell=...
-    // directories pruned before any IO
-    val idx = graft.ops.VectorOps.ensureIvfPqIndex(spark, sf, k = 8)
-    val candPlan = graft.ops.VectorOps.servedIvfPqCandidates(
-        spark, idx, Tables.rebalance(Tables.embeddings(spark, sf)),
-        numQueries = 10, probes = 3, rerank = 20)
-      .queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[cell#\\d+ IN \\(".r.findFirstIn(candPlan).isDefined,
-      s"codes scan not partition-pruned:\n$candPlan")
-    assert(!candPlan.contains("SortMergeJoin") &&
-           !candPlan.contains("CartesianProduct"), candPlan)
-    // the full serve frame: ONE lazy plan — pruned ADC scan broadcast
-    // into the re-rank against the index's own inverted lists (vectors
-    // partitioned by cell), both scans partition-pruned
-    val df = SparkEntry.queries("q128_ann_serve_stored")(spark, sf)
-    val p = df.queryExecution.executedPlan.toString
+  /** The stored-serve operator of a catalog serve frame, with the
+    * executed plan's string. */
+  private def servePlan(q: String)
+      : (graft.plans.IvfPqServeExec, String) = {
+    val df = SparkEntry.queries(q)(spark, sf)
+    val plan = df.queryExecution.executedPlan
+    val exec = plan.collectFirst {
+      case e: graft.plans.IvfPqServeExec => e
+    }.getOrElse(fail(s"$q is not served by the IvfPqServe operator:\n$plan"))
+    (exec, plan.toString)
+  }
+
+  private val cellIn = "PartitionFilters: \\[cell#\\d+ IN \\(".r
+
+  /** The shape every stored serve keeps: both children (the codes scan
+    * and the vectors inverted-list scan) prune to the probed cells by a
+    * literal partition filter; no sort-merge, cartesian or exchange;
+    * zero corpus scans; no build stage; the node prints the probed
+    * cells and request sizes, never its ADC tables. */
+  private def assertServeShape(q: String,
+      exec: graft.plans.IvfPqServeExec, p: String): Unit = {
+    assert(cellIn.findFirstIn(exec.left.toString).isDefined,
+      s"$q: codes scan not partition-pruned:\n$p")
+    assert(cellIn.findFirstIn(exec.right.toString).isDefined,
+      s"$q: vectors (inverted-list) scan not partition-pruned:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
-    assert("PartitionFilters: \\[cell#\\d+ IN \\(".r.findAllIn(p).size >= 2,
-      s"expected BOTH the codes scan and the vectors (inverted-list) scan " +
-        s"to carry literal cell partition filters:\n$p")
+    assert(!p.contains("Exchange"), s"$q: a stored serve exchanged:\n$p")
     // the corpus itself appears NOWHERE in the serve plan: queries are
     // driver state (cached collect), candidates re-rank against the
     // stored inverted lists — zero embeddings scans of any kind
-    val corpusScans = p.linesIterator
-      .filter(l => l.contains("embeddings.parquet")).size
-    assert(corpusScans == 0, s"$corpusScans corpus scans in serve plan:\n$p")
-    // and nothing in the plan recomputes the index: no k-means update
+    val corpusScans = p.linesIterator.count(_.contains("embeddings.parquet"))
+    assert(corpusScans == 0, s"$corpusScans corpus scans in $q's serve plan:\n$p")
+    // nothing in the plan recomputes the index: no k-means update
     // aggregation (posexplode of corpus vectors) may appear at serve time
-    assert(!p.contains("posexplode"), s"build stage leaked into serve plan:\n$p")
+    assert(!p.contains("posexplode"), s"build stage leaked into $q's serve plan:\n$p")
+    assert(("IvfPqServe probed=\\[[\\d,]+\\], queries=\\d+, routed=\\d+, " +
+      "rerank=\\d+, topK=\\d+").r.findFirstIn(p).isDefined,
+      s"$q: the serve node does not print its probed cells and sizes:\n$p")
+    assert(!p.contains("[D@") && !p.contains("dtab") && !p.contains("Infinity"),
+      s"$q: the serve node printed its ADC tables:\n$p")
   }
 
-  test("q130: compacted-store serve keeps the pruned single-job plan shape") {
+  test("q128: serve plan prunes to probed-cell partitions; no build stage present") {
+    // stages 1+2+3 run in ONE operator over two pruned scans: the
+    // routed cells become a literal IN on the partition column of both
+    // the codes and the vectors scan, so whole cell=... directories are
+    // pruned before any IO
+    val (exec, p) = servePlan("q128_ann_serve_stored")
+    assertServeShape("q128", exec, p)
+  }
+
+  test("q130: compacted-store serve keeps the pruned two-pass plan shape") {
     // compaction rewrites the cell directories through the manifest
     // layer; the serve plan over the compacted+vacuumed store must be
     // indistinguishable in SHAPE from q128's: literal cell partition
     // filters on both the codes scan and the inverted-list scan, no
-    // sort-merge/cartesian, zero corpus scans, no build stage — a
-    // compaction that dropped the cell= layout (or a reader that fell
+    // sort-merge/cartesian/exchange, zero corpus scans, no build stage —
+    // a compaction that dropped the cell= layout (or a reader that fell
     // back to a directory listing) would surface here
-    val df = SparkEntry.queries("q130_ann_index_compact")(spark, sf)
-    val p = df.queryExecution.executedPlan.toString
-    assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
-    assert("PartitionFilters: \\[cell#\\d+ IN \\(".r.findAllIn(p).size >= 2,
-      s"compacted store lost its literal cell partition pruning:\n$p")
-    assert(p.linesIterator.count(_.contains("embeddings.parquet")) == 0,
-      s"corpus scan leaked into the compacted-store serve plan:\n$p")
-    assert(!p.contains("posexplode"), s"build stage leaked into serve plan:\n$p")
+    val (exec, p) = servePlan("q130_ann_index_compact")
+    assertServeShape("q130", exec, p)
   }
 
   test("q134: metadata predicate reaches the code-table scan (pre-filtered search)") {
@@ -351,13 +362,15 @@ class PlanGuardSpec extends SparkSpec {
     // code rows, next to the cell partition pruning — not as a
     // post-filter on the finished top-k (which can go empty under a
     // selective predicate)
-    val df = SparkEntry.queries("q134_ann_filtered_serve")(spark, sf)
-    val p = df.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[cell#\\d+ IN \\(".r.findFirstIn(p).isDefined,
+    val (exec, p) = servePlan("q134_ann_filtered_serve")
+    val codes = exec.left.toString
+    assert(cellIn.findFirstIn(codes).isDefined,
       s"filtered serve lost the cell partition pruning:\n$p")
-    assert("PushedFilters: \\[.*label".r.findFirstIn(p).isDefined ||
-           p.contains("(label"),
+    assert("PushedFilters: \\[.*label".r.findFirstIn(codes).isDefined ||
+           codes.contains("(label"),
       s"label predicate did not reach the code scan:\n$p")
+    assert(!exec.right.toString.contains("(label"),
+      s"label predicate landed on the vectors side:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
     assert(p.linesIterator.count(_.contains("embeddings.parquet")) == 0,
       s"corpus scan leaked into the filtered serve plan:\n$p")

@@ -162,12 +162,16 @@ class RelationParitySpec extends SparkSpec {
     val emb = GenFixtures.clusteredEmbeddings(spark, 300).localCheckpoint()
     val idx = java.nio.file.Files.createTempDirectory("relpar-ann").toString
     VectorOps.buildIvfPqIndex(emb, idx, k = 4)
-    for (s <- Seq(spark, other)) {
-      VectorOps.servedIvfPqCandidates(s, idx, emb, numQueries = 3,
-        probes = 2, rerank = 5)
+    val served = for (s <- Seq(spark, other)) yield {
+      val df = VectorOps.servedIvfPqTopK(s, idx, emb, numQueries = 3,
+        probes = 2, rerank = 5, topK = 2)
+      assert(df.sparkSession eq s)
       val cached = VectorOps.storeFramesCache.get(s"${sessionId(s)}|$idx")
       assert(cached.exists(_._2.sparkSession eq s),
         "ANN store frames must be cached under their own session's id")
+      // each session plans the serve operator itself
+      df.collect().toSeq
     }
+    assert(served(0).length == 6 && served(1) == served(0))
   }
 }
