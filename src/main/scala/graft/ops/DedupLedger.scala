@@ -21,7 +21,10 @@ import graft.Tables
   *     `(cell, h, owner)` — `h` = sha2-256 of the text, `owner` = the
   *     smallest doc_id that carried it, `cell` = h's first hex nibble
   *     (16 partitions: gives compaction a sizing key and keeps any one
-  *     directory's listing 1/16th of the ledger).
+  *     directory's listing 1/16th of the ledger). Rebuilds and
+  *     compactions lay the rows out by cell; a delta lands as one flat
+  *     file with `cell` as a data column, since no verdict prunes by
+  *     cell.
   *   - `vectors` = NEAR ledger: the q49 MinHash machinery persisted —
   *     ONE row per doc, `(cell = doc_id mod 16, doc_id, sig)`; the LSH
   *     band keys are derived row-locally at read time ([[bandsOf]]),
@@ -115,14 +118,31 @@ object DedupLedger {
               col("doc_id"), col("sig"))
   }
 
+  /** A streamed tick's text rows: `(doc_id, h, sig)` for EVERY batch
+    * doc, from one shingle → MinHash pass — `h` the exact key, `sig`
+    * the [[sigRows]] signature (null for a doc under 3 tokens). The
+    * exact arm, the near arm and the delta all read these rows, so the
+    * keepers checkpoint carries both keys and the delta needs no join
+    * back to the batch. */
+  private def tickRows(docs: DataFrame): DataFrame =
+    DedupOps.minhashSignaturesOuter(
+        TextOps.shingled(docs.withColumn("h", sha2(col("text"), 256)), "h"),
+        Seq("doc_id", "h"))
+      .select(col("doc_id"), col("h"),
+        when(col("m0").isNotNull,
+          array((0 until DedupOps.NUM_SEEDS).map(i => col(s"m$i")): _*))
+          .as("sig"))
+
+  /** The exact table's cell: `h`'s first hex nibble. */
+  private val hashCell: Column =
+    expr("conv(substring(h, 1, 1), 16, 10)").cast("int").as("cell")
+
   /** Exact-ledger rows for `docs`, collapsed to one `(cell, h, owner)`
     * per distinct text. */
   private[ops] def exactRows(docs: DataFrame): DataFrame =
     docs.select(sha2(col("text"), 256).as("h"), col("doc_id"))
       .groupBy(col("h")).agg(min(col("doc_id")).as("owner"))
-      .withColumn("cell",
-        expr("conv(substring(h, 1, 1), 16, 10)").cast("int"))
-      .select(col("cell"), col("h"), col("owner"))
+      .select(hashCell, col("h"), col("owner"))
 
   /** Build (REBUILD-commit) a text-only ledger from `history` — the
     * text arm's call of [[build]]. */
@@ -502,8 +522,10 @@ object DedupLedger {
     * byte-gated escalation below persists one). An empty `before`
     * (the arm's first delta) computes the exact histogram instead.
     * `write` is the delta's table write: it runs here so that, on the
-    * bump branch, the one aggregation over the materialized delta
-    * overlaps it instead of following it.
+    * bump branch, the bump's one job over the materialized delta
+    * ([[deltaBump]]) overlaps it instead of following it. A delta that
+    * adds no band rows still restamps the version: the stats stay an
+    * upper bound, and the next verdict keeps its zero-job fast path.
     *
     * The stamped version is `headVersion + 1` computed PRE-publish —
     * exact under the fenced writer lock (the CAS cannot race while we
@@ -521,19 +543,13 @@ object DedupLedger {
       case Some(st) =>
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
-        val bump = Future {
-          val r = bandedDelta.groupBy(keys.map(col): _*)
-            .agg(count(lit(1)).as("n"))
-            .agg(max(col("n")), sum(col("n"))).head
-          if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
-        }(armWriteEc)
+        val bump = Future(deltaBump(bandedDelta, keys))(armWriteEc)
         try write finally { Await.ready(bump, Duration.Inf); () }
         val (d, rows) = Await.result(bump, Duration.Inf)
-        if (d > 0L)
-          IndexStore.writeArmStats(dir, key, st.copy(
-            version = IndexStore.headVersion(dir).getOrElse(0) + 1,
-            slack = st.slack + d,
-            rows = st.rows + rows))
+        IndexStore.writeArmStats(dir, key, st.copy(
+          version = IndexStore.headVersion(dir).getOrElse(0) + 1,
+          slack = st.slack + d,
+          rows = st.rows + rows))
       case None if before.isEmpty =>
         write
         refreshArmStats(dir, key, bandedDelta, keys)
@@ -560,6 +576,19 @@ object DedupLedger {
             keys)
         }
     }
+
+  /** `(largest per-bucket count, rows)` of a delta's band rows in ONE
+    * Spark job: the rows are counted per bucket in one task (a delta is
+    * increment-sized; the write puts it through one task as well).
+    * Summing per-task maxima keeps the first element an upper bound
+    * whatever the task count. */
+  private def deltaBump(banded: DataFrame, keys: Seq[String]): (Long, Long) =
+    banded.select(keys.map(col): _*).coalesce(1).rdd.mapPartitions { rs =>
+      val n = scala.collection.mutable.HashMap.empty[org.apache.spark.sql.Row, Long]
+      var rows = 0L
+      rs.foreach { r => n(r) = n.getOrElse(r, 0L) + 1L; rows += 1L }
+      Iterator((if (n.isEmpty) 0L else n.values.max, rows))
+    }.collect().foldLeft((0L, 0L)) { case ((d, r), (d1, r1)) => (d + d1, r + r1) }
 
   private val sentinelCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Int, Long)]()
@@ -688,10 +717,13 @@ object DedupLedger {
     *   - its batch shape (`idCol`) and preparation: a stream kind's
     *     rows become doc_id/text rows (text) or fingerprints at the
     *     arm's grid (images, video), and the near side derives from
-    *     the batch (text: the shingle → MinHash signatures, checkpointed
-    *     once per tick; fingerprint arms: the batch itself);
+    *     the batch (a verdict's text arm: the shingle → MinHash
+    *     signatures; fingerprint arms: the batch itself);
+    *   - the rows a tick's keepers plan and its delta read (`keyed`:
+    *     text carries `h` and `sig` per doc; fingerprint arms: the
+    *     batch) and the exact collapse of the keepers (`collapse`);
     *   - its exact key, band derivation and band key columns;
-    *   - its near predicate and aggregate;
+    *   - its near predicate and aggregate, and its near hits;
     *   - its stats key, modality stamp and bootstrap polarity
     *     ([[requireModality]]), width guard and saturation sentinel. */
   sealed abstract class LedgerArm {
@@ -714,10 +746,16 @@ object DedupLedger {
     private[ops] def legacyAllowed: Boolean = true
     /** Stream rows of this arm's kind → the arm's batch shape. */
     private[graft] def prepare(rows: DataFrame): DataFrame
-    /** The batch's near-side rows, lazily. */
+    /** A verdict's near-side rows of `batch`, lazily. */
     private[ops] def nearRows(batch: DataFrame): DataFrame = batch
-    /** The near-side rows one verdict and its append both read. */
-    private[ops] def sharedNear(batch: DataFrame): DataFrame = batch
+    /** The rows a tick's keepers plan and its delta read, lazily. */
+    private[ops] def keyed(batch: DataFrame): DataFrame = batch
+    /** [[keyed]] as a tick reads it: materialized once when it costs
+      * a pass (the fingerprint arms' batches come checkpointed from
+      * [[prepare]]). */
+    private[ops] def pinned(batch: DataFrame): DataFrame = batch
+    /** The near-side rows of [[keyed]] rows. */
+    private[ops] def keyedNear(keyed: DataFrame): DataFrame = keyed
     /** Band rows of the band table's rows (both join sides, and stats). */
     private[ops] def banded(rows: DataFrame): DataFrame
     /** The band table as stored at `snap`. */
@@ -728,13 +766,19 @@ object DedupLedger {
                            snap: IndexStore.Snapshot): Sides
     /** Band-join candidates → `(bid, near_of)`. */
     private[ops] def near(cand: DataFrame): DataFrame
+    /** Band-join candidates → `bid` of every batch item whose
+      * [[near]] `near_of` is not null (one row per hit or more). */
+    private[ops] def nearHits(cand: DataFrame): DataFrame =
+      near(cand).filter(col("near_of").isNotNull).select(col(bid))
     private[ops] def sentinel(tableRows: => Long, batch: DataFrame): Unit = ()
     private[ops] def batchIds(batch: DataFrame): DataFrame = batch.select(col(idCol))
     /** `(table, rows)` a rebuild writes; the band table materialized. */
     private[ops] def buildRows(history: DataFrame): Seq[(String, DataFrame)]
-    /** `(table, rows)` a delta over materialized survivors writes. */
-    private[ops] def deltaRows(sv: DataFrame,
-                               near: DataFrame): Seq[(String, DataFrame)]
+    /** Keepers ([[keyed]] rows) → one row per distinct exact key,
+      * owner = the smallest id: what a delta materializes. */
+    private[ops] def collapse(kept: DataFrame): DataFrame
+    /** `(table, rows)` a delta over a materialized [[collapse]] writes. */
+    private[ops] def deltaRows(collapsed: DataFrame): Seq[(String, DataFrame)]
     /** Fails a sink whose grid cannot feed this arm's geometry. */
     private[graft] def requireGrid(): Unit = ()
   }
@@ -763,8 +807,11 @@ object DedupLedger {
     private[graft] def prepare(rows: DataFrame): DataFrame =
       rows.select(col("doc_id"), col("text"))
     private[ops] override def nearRows(batch: DataFrame): DataFrame = sigRows(batch)
-    private[ops] override def sharedNear(batch: DataFrame): DataFrame =
-      sigRows(batch).localCheckpoint()
+    private[ops] override def keyed(batch: DataFrame): DataFrame = tickRows(batch)
+    private[ops] override def pinned(batch: DataFrame): DataFrame =
+      tickRows(batch).localCheckpoint()
+    private[ops] override def keyedNear(keyed: DataFrame): DataFrame =
+      keyed.filter(col("sig").isNotNull)
     private[ops] def banded(rows: DataFrame): DataFrame = bandsOf(rows)
     private[ops] def tableFrame(spark: SparkSession, dir: String,
                                 snap: IndexStore.Snapshot): DataFrame =
@@ -777,36 +824,45 @@ object DedupLedger {
       val (exact, sigs) = IndexStore.frames(spark, dir, snap,
         Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
         declaredSchema = true)
+      // tick rows ([[tickRows]]) carry their hash; a verdict's batch
+      // hashes its text
+      val h = if (batch.columns.contains("h")) col("h")
+        else sha2(col("text"), 256)
       // stored sigs re-derive their band keys row-locally in-flight:
       // the scan reads one sig row per doc, the explode costs no storage
-      Sides(exact,
-        batch.select(col("doc_id").as("bdoc"), sha2(col("text"), 256).as("h")),
+      Sides(exact, batch.select(col("doc_id").as("bdoc"), h.as("h")),
         Seq("h"), bandsOf(sigs),
         bandsOf(near).select(col("band"), col("bkey"),
           col("doc_id").as("bdoc"), col("sig").as("bsig")),
         sigs)
     }
+    private val agree = expr(
+      "aggregate(zip_with(sig, bsig, (x, y) -> IF(x = y, 1, 0)), 0, (a, v) -> a + v)")
     private[ops] def near(cand: DataFrame): DataFrame =
-      cand.withColumn("agree", expr(
-          "aggregate(zip_with(sig, bsig, (x, y) -> IF(x = y, 1, 0)), 0, (a, v) -> a + v)"))
+      cand.withColumn("agree", agree)
         .groupBy(col("bdoc"))
         .agg(min(when(col("agree") >= SIG_MIN, col("doc_id"))).as("near_of"))
+    // near_of is not null iff some candidate agrees with a non-null
+    // doc_id: a filter, no aggregate
+    private[ops] override def nearHits(cand: DataFrame): DataFrame =
+      cand.filter(agree >= SIG_MIN && col("doc_id").isNotNull)
+        .select(col("bdoc"))
     // history stores EVERY doc's signature; a delta stores its exact
     // representatives' only (an exact-identical text would carry an
-    // identical signature — storing it twice buys nothing), as a
-    // semi-join of the batch's signature rows: row-identical to
-    // re-signing the representatives (sigRows is per-doc
-    // deterministic; cell = pmod(doc_id, 16))
+    // identical signature — storing it twice buys nothing): the
+    // collapse keeps the representative's own signature (sigRows is
+    // per-doc deterministic; cell = pmod(doc_id, 16))
     private[ops] def buildRows(history: DataFrame): Seq[(String, DataFrame)] =
       Seq("codes" -> exactRows(history),
           "vectors" -> sigRows(history).localCheckpoint())
-    private[ops] def deltaRows(sv: DataFrame,
-                               near: DataFrame): Seq[(String, DataFrame)] = {
-      val reps = exactRows(sv).localCheckpoint()
-      Seq("codes" -> reps,
-          "vectors" -> near.join(reps.select(col("owner").as("doc_id")),
-            Seq("doc_id"), "left_semi"))
-    }
+    private[ops] def collapse(kept: DataFrame): DataFrame =
+      kept.groupBy(col("h")).agg(min(col("doc_id")).as("owner"),
+        min_by(col("sig"), col("doc_id")).as("sig"))
+    private[ops] def deltaRows(collapsed: DataFrame): Seq[(String, DataFrame)] =
+      Seq("codes" -> collapsed.select(hashCell, col("h"), col("owner")),
+          "vectors" -> collapsed.filter(col("sig").isNotNull)
+            .select(pmod(col("owner"), lit(16L)).cast("int").as("cell"),
+                    col("owner").as("doc_id"), col("sig")))
   }
 
   /** The fingerprint arms: `fp: array<bigint>` rows banded at `geom`,
@@ -859,9 +915,9 @@ object DedupLedger {
     private[ops] def rowsOf(fps: DataFrame): DataFrame
     private[ops] def buildRows(fps: DataFrame): Seq[(String, DataFrame)] =
       Seq(table -> rowsOf(fps).localCheckpoint())
-    private[ops] def deltaRows(sv: DataFrame,
-                               near: DataFrame): Seq[(String, DataFrame)] =
-      Seq(table -> rowsOf(sv))
+    private[ops] def collapse(kept: DataFrame): DataFrame = rowsOf(kept)
+    private[ops] def deltaRows(collapsed: DataFrame): Seq[(String, DataFrame)] =
+      Seq(table -> collapsed)
     /** Stream payloads of this arm's kind as media records. */
     private[ops] def records(rows: DataFrame)
         : org.apache.spark.sql.Dataset[graft.multimodal.MediaOps.MediaRecord] = {
@@ -915,6 +971,8 @@ object DedupLedger {
     private[ops] def near(cand: DataFrame): DataFrame =
       cand.filter(withinHamming)
         .groupBy(col("bid")).agg(min(col("owner")).as("near_of"))
+    private[ops] override def nearHits(cand: DataFrame): DataFrame =
+      cand.filter(withinHamming && col("owner").isNotNull).select(col("bid"))
     private[ops] override def sentinel(tableRows: => Long,
                                        batch: DataFrame): Unit =
       DedupOps.warnIfSaturated(tableRows, geom.bands, geom.bandBits)
@@ -1002,11 +1060,18 @@ object DedupLedger {
       case "seqs" => snap.seqs
     }
 
-  /** Cell-clustered write: each cell lands as one file set, not one
-    * fragment per upstream task. */
+  /** A rebuild's cell-clustered write: each cell lands as one file
+    * set under `cell=<n>/`, not one fragment per upstream task. */
   private def writeCells(rows: DataFrame, path: String, mode: String): Unit =
     rows.repartition(col("cell"))
       .write.mode(mode).partitionBy("cell").parquet(path)
+
+  /** A delta's write: ONE flat file at the table root, `cell` a data
+    * column in it (the ledger's verdicts never prune by cell). The
+    * next [[IndexStore.compact]] gives the rows their cell layout back;
+    * readers split a mixed fileset by layout. */
+  private def writeFlat(rows: DataFrame, path: String): Unit =
+    rows.coalesce(1).write.mode("append").parquet(path)
 
   /** REBUILD-commit a ledger: every arm's tables from its history, all
     * under one snapshot (a reader never sees the modalities half a
@@ -1090,18 +1155,26 @@ object DedupLedger {
     verdictOf(arm, spark, batch, arm.nearRows(batch), dir, snap,
       maxBroadcast, pairBudgetPerItem)
 
-  private def verdictOf(arm: LedgerArm, spark: SparkSession, batch: DataFrame,
-                        near: DataFrame, dir: String,
-                        snap: IndexStore.Snapshot, maxBroadcast: Long,
-                        pairBudgetPerItem: Option[Int]): DataFrame = {
+  /** The candidate joins a verdict and a tick's keepers share, behind
+    * one broadcast gate: `exact` = `(bid, owner)` rows of the exact
+    * key equi-join, `cand` = the band join the arm's near predicate
+    * reads, after the modality check, the saturation sentinel and the
+    * shed ladder. */
+  private final case class Joins(gate: DataFrame => DataFrame,
+                                 exact: DataFrame, cand: DataFrame)
+
+  private def joinsOf(arm: LedgerArm, spark: SparkSession, batch: DataFrame,
+                      rows: DataFrame, near: DataFrame, dir: String,
+                      snap: IndexStore.Snapshot, maxBroadcast: Long,
+                      pairBudgetPerItem: Option[Int]): Joins = {
+    // the gate reads the batch's own plan stats: derived rows (a
+    // checkpoint of an aggregate) may carry no size estimate at all
     val small = maxBroadcast > 0 &&
       batch.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBroadcast
     def gate(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     requireModality(dir, filesOf(snap, arm.tables.head), arm.modality,
       arm.legacyAllowed)
-    val sd = arm.sides(spark, batch, near, dir, snap)
-    val ex = sd.ledgerExact.join(gate(sd.batchExact), sd.exactKey)
-      .groupBy(col(arm.bid)).agg(min(col("owner")).as("exact_of"))
+    val sd = arm.sides(spark, rows, near, dir, snap)
     val persisted = IndexStore.armStats(dir, arm.statsKey)
       .filter(_.version >= snap.version) // stale stats prove nothing
     // band rows = table rows × bands: every row lands in one bucket per band
@@ -1115,10 +1188,21 @@ object DedupLedger {
           tableRows * arm.bands, sd.batchBands, _ / arm.bands,
           dir, snap.version, arm.statsKey, persisted)
     }
-    val nr = arm.near(lb.join(gate(bb), arm.bandKeys))
+    Joins(gate, sd.ledgerExact.join(gate(sd.batchExact), sd.exactKey),
+      lb.join(gate(bb), arm.bandKeys))
+  }
+
+  private def verdictOf(arm: LedgerArm, spark: SparkSession, batch: DataFrame,
+                        near: DataFrame, dir: String,
+                        snap: IndexStore.Snapshot, maxBroadcast: Long,
+                        pairBudgetPerItem: Option[Int]): DataFrame = {
+    val j = joinsOf(arm, spark, batch, batch, near, dir, snap, maxBroadcast,
+      pairBudgetPerItem)
+    val ex = j.exact.groupBy(col(arm.bid)).agg(min(col("owner")).as("exact_of"))
+    val nr = arm.near(j.cand)
     arm.batchIds(batch)
-      .join(gate(ex.withColumnRenamed(arm.bid, arm.idCol)), Seq(arm.idCol), "left")
-      .join(gate(nr.withColumnRenamed(arm.bid, arm.idCol)), Seq(arm.idCol), "left")
+      .join(j.gate(ex.withColumnRenamed(arm.bid, arm.idCol)), Seq(arm.idCol), "left")
+      .join(j.gate(nr.withColumnRenamed(arm.bid, arm.idCol)), Seq(arm.idCol), "left")
       .withColumn("keep", when(col("exact_of").isNull && col("near_of").isNull,
         1L).otherwise(0L))
       .orderBy(col(arm.idCol))
@@ -1130,11 +1214,34 @@ object DedupLedger {
     batch.join(verdict.filter(col("keep") === 1L).select(col(arm.idCol)),
       Seq(arm.idCol), "left_semi")
 
+  /** The KEEPERS of `batch` against the ledger at `snap`, as the arm's
+    * [[LedgerArm.pinned]] rows, without the per-item verdict: the rows anti-joined with the ids that have an
+    * exact hit or a near hit, from the same [[joinsOf]] candidates
+    * [[verdict]] aggregates. The same items as [[keepers]] over
+    * `verdict(...)` on the same batch and snapshot, with no
+    * `min(owner)` aggregate, left join or semi-join (LedgerTopologySpec
+    * and LedgerStatsSpec pin the equality per arm, forced shuffle and a
+    * shedding store included). */
+  private[graft] def keepersOf(arm: LedgerArm, spark: SparkSession,
+                               batch: DataFrame, dir: String,
+                               snap: IndexStore.Snapshot,
+                               maxBroadcast: Long = 256L << 20,
+                               pairBudgetPerItem: Option[Int] =
+                                 DedupOps.DEFAULT_PAIR_BUDGET): DataFrame = {
+    val keyed = arm.pinned(batch)
+    val j = joinsOf(arm, spark, batch, keyed, arm.keyedNear(keyed), dir, snap,
+      maxBroadcast, pairBudgetPerItem)
+    val hits = j.exact.filter(col("owner").isNotNull).select(col(arm.bid))
+      .union(arm.nearHits(j.cand))
+    keyed.join(j.gate(hits.withColumnRenamed(arm.bid, arm.idCol)),
+      Seq(arm.idCol), "left_anti")
+  }
+
   /** Append `survivors` through `arm` as one idempotent tagged delta
     * (exact-collapsed: one row per distinct exact key, owner = the
-    * smallest id). The increment is materialized ONCE, inside the
-    * idempotency gate (a replayed tag skips even that): callers pass a
-    * LAZY batch ⋉ verdict.keep join, and the delta references it more
+    * smallest id). The collapsed increment is materialized ONCE, inside
+    * the idempotency gate (a replayed tag skips even that): callers pass
+    * a LAZY batch ⋉ verdict.keep join, and the delta references it more
     * than once (table rows, stats bump) — without the checkpoint each
     * reference re-executed the whole verdict plan, ~4 s of a ~6 s
     * streamed tick at sf0.1 (round-16 TickProfile). Increment-sized by
@@ -1142,48 +1249,47 @@ object DedupLedger {
   def append(arm: LedgerArm, survivors: DataFrame, dir: String,
              tag: String): Int =
     IndexStore.commitDelta(dir, Some(tag)) {
-      val sv = survivors.localCheckpoint()
-      writeDelta(arm, sv, arm.nearRows(sv), dir)
+      writeDelta(arm, arm.collapse(arm.keyed(survivors)).localCheckpoint(), dir)
     }
 
-  /** A delta's table writes over materialized survivors `sv`, with the
-    * arm's stats bump. The writes (and the bump's aggregation) are
-    * independent DAGs over materialized inputs — overlapped; the commit
-    * lambda returns only when every file set is on disk, so the
-    * manifest diff sees them exactly as a serial form would. The bump
-    * keys on the SAME geometry the arm's verdicts consult. */
-  private def writeDelta(arm: LedgerArm, sv: DataFrame, near: DataFrame,
+  /** A delta's table writes over a materialized [[LedgerArm.collapse]],
+    * one flat file per table ([[writeFlat]]), with the arm's stats
+    * bump. The writes and the bump are independent one-job DAGs over
+    * the materialized rows — overlapped; the commit lambda returns only
+    * when every file is on disk, so the manifest diff sees them exactly
+    * as a serial form would. The bump keys on the SAME geometry the
+    * arm's verdicts consult. */
+  private def writeDelta(arm: LedgerArm, collapsed: DataFrame,
                          dir: String): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = armWriteEc
-    val rows = arm.deltaRows(sv, near)
+    val rows = arm.deltaRows(collapsed)
     // the arm's published files BEFORE this delta (pre-publish, under
     // the writer lock; empty for a never-published store)
     val before = IndexStore.headVersion(dir)
       .map(v => filesOf(IndexStore.snapshotAt(dir, v), arm.table)).getOrElse(Nil)
     bumpArmStats(dir, arm.statsKey, arm.banded(rows.toMap.apply(arm.table)),
       arm.bandKeys, before, arm.table,
-      arm.banded(arm.tableFrame(sv.sparkSession, dir, IndexStore.snapshot(dir)))) {
-      rows.map { case (t, r) => Future(writeCells(r, s"$dir/$t", "append")) }
+      arm.banded(arm.tableFrame(collapsed.sparkSession, dir,
+        IndexStore.snapshot(dir)))) {
+      rows.map { case (t, r) => Future(writeFlat(r, s"$dir/$t")) }
         .foreach(Await.result(_, Duration.Inf))
     }
   }
 
   /** One arm's share of an ingest step — the streamed tick's per-arm
-    * body: verdict `batch` against `snap`, materialize the keepers, and
-    * return the commit that appends them under `tag`. The near side
-    * ([[LedgerArm.sharedNear]]) is computed once and read by both the
-    * verdict and the append (the text arm's one shingle → MinHash pass).
-    * A mixed tick stages every arm against ONE pre-tick snapshot in
-    * parallel, then runs the commits in a fixed order. */
+    * body: the keepers of `batch` against `snap` ([[keepersOf]] over
+    * the arm's [[LedgerArm.pinned]] rows — the text arm's one shingle
+    * → MinHash pass, carrying `h` and `sig`), exact-collapsed and
+    * materialized in ONE checkpoint, and the commit that appends them
+    * under `tag`. A mixed tick stages every arm against ONE pre-tick
+    * snapshot in parallel, then runs the commits in a fixed order. */
   private[graft] def stage(arm: LedgerArm, batch: DataFrame, dir: String,
                            snap: IndexStore.Snapshot, tag: String): () => Int = {
-    val near = arm.sharedNear(batch)
-    val v = verdictOf(arm, batch.sparkSession, batch, near, dir, snap,
-      256L << 20, DedupOps.DEFAULT_PAIR_BUDGET)
-    val sv = keepers(arm, batch, v).localCheckpoint()
-    () => IndexStore.commitDelta(dir, Some(tag))(writeDelta(arm, sv, near, dir))
+    val delta = arm.collapse(keepersOf(arm, batch.sparkSession, batch, dir,
+      snap)).localCheckpoint()
+    () => IndexStore.commitDelta(dir, Some(tag))(writeDelta(arm, delta, dir))
   }
 
   /** One ingest GENERATION: verdict against the current snapshot, then
@@ -1393,9 +1499,10 @@ object DedupLedger {
     * bumped whenever a builder's output changes: the seed cache
     * ([[VectorOps.ensureIndex]]) fingerprints this string and the
     * source file, never the code that built a cached store (v3: every
-    * seed, the seqs ones included, carries arm stats). */
+    * seed, the seqs ones included, carries arm stats; v4: seed deltas
+    * land as one flat file per table). */
   private def ledgerParams =
-    s"v3|seeds=${DedupOps.NUM_SEEDS}|rows=${DedupOps.ROWS_PER_BAND}" +
+    s"v4|seeds=${DedupOps.NUM_SEEDS}|rows=${DedupOps.ROWS_PER_BAND}" +
     s"|sigmin=$SIG_MIN|cut90"
 
   private[graft] def ensureLedger(s: SparkSession, d: String): String =

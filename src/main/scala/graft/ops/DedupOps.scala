@@ -131,14 +131,25 @@ object DedupOps {
     * groupBy over the shingle rows (no seed explosion: the exploded
     * form pushes NUM_SEEDS x |shingles| rows through two shuffles).
     * The q49 family and the text dedup ledger both sign with this. */
-  private[ops] def minhashSignatures(g0: DataFrame): DataFrame = {
-    val withHm = gramRows(g0, "doc_id")
+  private[ops] def minhashSignatures(g0: DataFrame): DataFrame =
+    minhashOver(gramRows(g0, "doc_id"), Seq("doc_id"))
+
+  /** [[minhashSignatures]] keyed by `keys` that keeps EVERY doc of `g0`:
+    * a doc without shingles gets one row whose minima are null (its
+    * one `explode_outer` row has a null gram, which `min` ignores). */
+  private[ops] def minhashSignaturesOuter(g0: DataFrame,
+                                          keys: Seq[String]): DataFrame =
+    minhashOver(g0.select(keys.map(col) :+
+      explode_outer(col("grams")).as("gram"): _*), keys)
+
+  private def minhashOver(grams: DataFrame, keys: Seq[String]): DataFrame = {
+    val withHm = grams
       .withColumn("hv", expr(s"conv(substring(md5(gram), 1, 15), 16, 10)").cast("long"))
       .withColumn("hm", expr(s"hv % $HASH_P"))
     val minAggs = (0 until NUM_SEEDS).map { sd =>
       min(expr(s"(hm * ${2 * sd + 1} + ${7919 * sd}) % $HASH_P")).as(s"m$sd")
     }
-    withHm.groupBy(col("doc_id")).agg(minAggs.head, minAggs.tail: _*)
+    withHm.groupBy(keys.map(col): _*).agg(minAggs.head, minAggs.tail: _*)
   }
 
   /** MinHash signatures -> LSH band buckets -> candidate pairs -> exact

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * reduced to the two tables this store has):
   *
   *   - DATA FILES are immutable — builds, appends, and compactions only
-  *     ever ADD part files under `codes/cell=*` / `vectors/cell=*`;
+  *     ever ADD part files (under `codes/cell=*` / `vectors/cell=*`, or
+  *     a ledger delta's one flat file per table at the table root);
   *     nothing rewrites a published file in place.
   *   - A SNAPSHOT (`_manifest/v<N>.list`) names exactly the data files
   *     that make up one consistent version of the store — codes and
@@ -27,16 +28,20 @@ import org.apache.spark.sql.functions._
   *
   * Readers therefore NEVER list the data directories — they read the
   * snapshot's explicit file list (with `basePath` set so the `cell=`
-  * partition column and its pruning survive). Writers serialize through
-  * an OS-level FileChannel lock (same cross-JVM discipline as
-  * VectorOps.ensureIndex), readers take no lock at all.
+  * partition column and its pruning survive; flat files, whose `cell`
+  * is a data column, read as a second relation unioned by name).
+  * Writers serialize through an OS-level FileChannel lock (same
+  * cross-JVM discipline as VectorOps.ensureIndex), readers take no
+  * lock at all.
   *
-  * At 100 TB this is exactly the split that matters: appends land as a
-  * few files per touched cell and publish in O(1); compaction rewrites
-  * a cell's accumulated small files into sized ones and publishes a
-  * snapshot that references ONLY the rewrites; vacuum physically
-  * deletes what no live snapshot references — each step independent,
-  * each atomic to concurrent serves.
+  * At 100 TB this is exactly the split that matters: appends publish in
+  * O(1) — an ANN append as one file per touched cell (its serves prune
+  * by cell), a ledger delta as one flat file per table (its verdicts
+  * never prune by cell) — compaction rewrites the accumulated small
+  * files into sized per-cell ones and publishes a snapshot that
+  * references ONLY the rewrites, the way an LSM tree merges its level-0
+  * runs; vacuum physically deletes what no live snapshot references —
+  * each step independent, each atomic to concurrent serves.
   */
 object IndexStore {
 
@@ -1279,7 +1284,8 @@ object IndexStore {
 
   /** The one explicit-file-list reader every table accessor shares:
     * `basePath` set so the `cell=` partition column — and its static
-    * pruning — survive. An empty file list reads as an empty frame at
+    * pruning — survive ([[readFiles]] splits a fileset that also holds
+    * flat files). An empty file list reads as an empty frame at
     * `emptyDdl` when the caller DECLARES the modality optional (a
     * text-only ledger probed by a media verdict, [[compact]] rewriting
     * whatever tables exist); with no declared fallback it fails BY
@@ -1314,10 +1320,37 @@ object IndexStore {
       // cols) is unobservable; stamped DDLs are recorded in inference
       // order anyway.
       case Some(ddl) => readDeclared(spark, dir, sub, files, ddl)
+      case None => readFiles(spark, dir, sub, files, None)
+    }
+
+  /** A fileset split by layout: files under a `k=v/` partition
+    * directory, and flat files at the table root (a ledger delta's
+    * one-file write, whose `cell` is a data column). */
+  private def byLayout(files: Seq[String]): (Seq[String], Seq[String]) =
+    files.partition(_.contains('/'))
+
+  /** Read a fileset of either layout or both. Spark's `basePath`
+    * partition discovery silently drops the files at the table root
+    * once any `cell=` directory is in the set, so a MIXED fileset reads
+    * as two relations — the partitioned files exactly as an
+    * all-partitioned set reads, the flat files with no partition
+    * column — unioned by name: the union has the partitioned read's
+    * column order, and a flat file missing a partition column fails by
+    * name instead of losing rows. A one-layout fileset is one relation,
+    * so an all-partitioned store plans exactly as before. `ddl` given:
+    * declared relations ([[relationOf]]); else footer inference. */
+  private def readFiles(spark: SparkSession, dir: String, sub: String,
+                        files: Seq[String], ddl: Option[String]): DataFrame = {
+    def one(fs: Seq[String]): DataFrame = ddl match {
+      case Some(d) => relationOf(spark, s"$dir/$sub", fs, d)
       case None =>
         spark.read.option("basePath", s"$dir/$sub")
-          .parquet(files.map(f => s"$dir/$sub/$f"): _*)
+          .parquet(fs.map(f => s"$dir/$sub/$f"): _*)
     }
+    val (parted, flat) = byLayout(files)
+    if (parted.isEmpty || flat.isEmpty) one(files)
+    else one(parted).unionByName(one(flat))
+  }
 
   /** Direct-relation construct for DECLARED-schema reads (round 21,
     * guide §1.2/§7.3 — driver-side work): with the schema already
@@ -1397,30 +1430,35 @@ object IndexStore {
 
   private def readDeclared(spark: SparkSession, dir: String, sub: String,
                            files: Seq[String], ddl: String): DataFrame = {
-    val base = s"$dir/$sub"
     val fkey = (org.apache.spark.sql.graftshim.Shim.sessionId(spark),
-      s"$base|$ddl", files.mkString("\n"))
+      s"$dir/$sub|$ddl", files.mkString("\n"))
     declaredFrameCache.get(fkey).getOrElse {
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-      // qualify like DataSource does (scheme-full paths in the scan's
-      // Location), via the context conf — no per-read conf copy
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val idx = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-        spark,
-        files.map(f => fs.makeQualified(new org.apache.hadoop.fs.Path(s"$base/$f"))),
-        Map("basePath" -> base), Some(schema), new ManifestStatusCache(fs))
-      val ps = idx.partitionSchema
-      val dataSchema = org.apache.spark.sql.types.StructType(
-        schema.filterNot(f => ps.exists(_.name.equalsIgnoreCase(f.name))))
-      val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        idx, ps, dataSchema, None,
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-        Map("basePath" -> base))(spark)
-      val df = spark.baseRelationToDataFrame(rel)
+      val df = readFiles(spark, dir, sub, files, Some(ddl))
       declaredFrameCache.put(fkey, df)
       df
     }
+  }
+
+  /** One declared relation over a one-layout fileset under `base`. */
+  private def relationOf(spark: SparkSession, base: String,
+                         files: Seq[String], ddl: String): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    // qualify like DataSource does (scheme-full paths in the scan's
+    // Location), via the context conf — no per-read conf copy
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val idx = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+      spark,
+      files.map(f => fs.makeQualified(new org.apache.hadoop.fs.Path(s"$base/$f"))),
+      Map("basePath" -> base), Some(schema), new ManifestStatusCache(fs))
+    val ps = idx.partitionSchema
+    val dataSchema = org.apache.spark.sql.types.StructType(
+      schema.filterNot(f => ps.exists(_.name.equalsIgnoreCase(f.name))))
+    val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      idx, ps, dataSchema, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+      Map("basePath" -> base))(spark)
+    spark.baseRelationToDataFrame(rel)
   }
 
   /** The snapshot's codes / vectors tables as DataFrames (see
@@ -1512,9 +1550,7 @@ object IndexStore {
           .parquet(s"$dir/$sub").limit(0)
       else rs(sub, if (sub == "codes") codesDdl else vectorsDdl) match {
         case Some(ddl) => readDeclared(spark, dir, sub, files, ddl)
-        case None =>
-          spark.read.option("basePath", s"$dir/$sub")
-            .parquet(files.map(f => s"$dir/$sub/$f"): _*)
+        case None => readFiles(spark, dir, sub, files, None)
       }
     (applyTombs(spark, dir, to, "codes",
        read("codes", (to.codes.toSet -- from.codes.toSet).toSeq.sorted)),

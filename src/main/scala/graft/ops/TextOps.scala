@@ -412,10 +412,12 @@ object TextOps {
       .select(col("doc_id"), col("fps"))
   }
 
-  /** (doc_id, grams) shingle frame for a (doc_id, text) corpus. */
-  def shingled(docs: DataFrame): DataFrame =
+  /** (doc_id, grams) shingle frame for a (doc_id, text) corpus; `keep`
+    * names further columns of `docs` to carry between the two. */
+  def shingled(docs: DataFrame, keep: String*): DataFrame =
     Tables.rebalance(docs).withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), array_distinct(expr(trigramExpr)).as("grams"))
+      .select((col("doc_id") +: keep.map(col)) :+
+        array_distinct(expr(trigramExpr)).as("grams"): _*)
 
   /** Exact-dedup-first composition: collapse sha2-identical texts to one
     * representative (min doc_id) BEFORE shingling, then near-dup only the

@@ -1806,12 +1806,6 @@ object VectorOps {
       .select((Seq(col("vec_id"), col("q")) ++ riders): _*)
     import spark.implicits._
     val coarseLocal = cents.toDF("cell", "s", "n")
-    // a vector landing in a refined cell encodes against that cell's
-    // GENERATION codebook (refineDriftedCells); the never-refined
-    // store takes the single-codebook path unchanged
-    val codes = encodeGenAwareRows(
-      residualsOfAssigned(kmeansAssignRows(quant, cents), coarseLocal),
-      metaCbRows(meta.codebook), meta.cellGen, meta.genCodebooks)
     // one snapshot covers BOTH appends: a serve planned mid-append sees
     // the pre-append manifest (new part files exist but are unlisted),
     // a serve planned after sees codes and vectors move together —
@@ -1822,6 +1816,15 @@ object VectorOps {
       import scala.concurrent.duration.Duration
       implicit val ec: scala.concurrent.ExecutionContext =
         DedupLedger.armWriteEc
+      // the batch is assigned ONCE and pinned, as the build does: both
+      // table writes read the one assignment
+      val assigned = kmeansAssignRows(quant, cents).localCheckpoint()
+      // a vector landing in a refined cell encodes against that cell's
+      // GENERATION codebook (refineDriftedCells); the never-refined
+      // store takes the single-codebook path unchanged
+      val codes = encodeGenAwareRows(
+        residualsOfAssigned(assigned, coarseLocal),
+        metaCbRows(meta.codebook), meta.cellGen, meta.genCodebooks)
       // cell-clustered like the build write: an append batch adds at
       // most one file per touched cell instead of one per (task × cell).
       // The two table writes are independent DAGs over the same
@@ -1834,8 +1837,7 @@ object VectorOps {
       // batch's vectors append to the same frozen-cell directories
       val vecCols = Seq(col("vec_id"), col("q"), col("cell")) ++ riders
       val wVecs = Future {
-        kmeansAssignRows(quant, cents)
-          .select(vecCols: _*)
+        assigned.select(vecCols: _*)
           .repartition(col("cell"))
           .write.mode("append").partitionBy("cell").parquet(s"$dir/vectors")
       }
@@ -2162,20 +2164,21 @@ object VectorOps {
         "q178: compaction must fold the tombstones into a physical drop")
       val served = serveIvfPqStoredRows(s, dir, qRows,
         probes = IVFPQ_PROBES, rerank = IVFPQ_RERANK, topK = 5)
+      // one aggregation over ONE served frame, unpivoted: the count and
+      // clean rows of a query come from the same serve
       val perQ = served.groupBy(col("qid")).agg(
-        count(lit(1)).as("cnt"),
-        min(when(col("vec_id") < c9 - 5L || col("vec_id") >= c9,
-          lit(1L)).otherwise(lit(0L))).as("clean"))
+          count(lit(1)).cast("long").as("cnt"),
+          min(when(col("vec_id") < c9 - 5L || col("vec_id") >= c9,
+            lit(1L)).otherwise(lit(0L))).cast("long").as("clean"))
+        .select(expr("stack(2, 'count', qid, cnt, 'clean', qid, clean) " +
+          "AS (kind, id, val)"))
       val (codesF, vecsF) = IndexStore.frames(s, dir,
         IndexStore.snapshot(dir))
       vecsF.select(lit("stored").as("kind"),
           col("vec_id").cast("long").as("id"), lit(1L).as("val"))
         .unionByName(codesF.select(lit("coded").as("kind"),
           col("vec_id").cast("long").as("id"), lit(1L).as("val")))
-        .unionByName(perQ.select(lit("count").as("kind"),
-          col("qid").as("id"), col("cnt").cast("long").as("val")))
-        .unionByName(perQ.select(lit("clean").as("kind"),
-          col("qid").as("id"), col("clean").cast("long").as("val")))
+        .unionByName(perQ)
         .orderBy(col("kind"), col("id"))
     }),
 

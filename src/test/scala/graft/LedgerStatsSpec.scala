@@ -299,6 +299,12 @@ class LedgerStatsSpec extends SparkSpec {
     DedupLedger.clearShedMemos()
     val withStats = DedupLedger.verdict(Media(geom), spark, batch, dir, snap)
       .collect().toSeq
+    // a streamed tick's keepers plan sheds through the same ladder: it
+    // keeps exactly the items this shedding verdict keeps
+    val kept = DedupLedger.keepersOf(Media(geom), spark, batch, dir, snap)
+      .select(col("media_id")).collect().map(_.getLong(0)).toSet
+    assert(kept == withStats.filter(_.getLong(3) == 1L).map(_.getLong(0)).toSet,
+      "the keepers plan kept other items than the shedding verdict")
     // delete the stats file, clear memos: the pure runtime path
     val f = new java.io.File(s"$dir/_manifest").listFiles()
       .find(_.getName.startsWith("stats.")).get

@@ -52,6 +52,34 @@ class LedgerTopologySpec extends SparkSpec {
     broadcastRun
   }
 
+  /** A streamed tick's keepers plan ([[DedupLedger.keepersOf]]: the
+    * batch anti-joined with its exact and near hit ids) keeps exactly
+    * the items the verdict keeps, with the size gate open and forced
+    * shut; the forced plan runs no broadcast either. */
+  private def keepersParity(arm: DedupLedger.LedgerArm,
+                            batch: org.apache.spark.sql.DataFrame,
+                            dir: String, snap: IndexStore.Snapshot): Unit = {
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select(col(arm.idCol)).collect().map(_.getLong(0)).toSet
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try for (maxBroadcast <- Seq(256L << 20, 0L)) {
+      if (maxBroadcast == 0L)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val want = ids(DedupLedger.verdict(arm, spark, batch, dir, snap,
+        maxBroadcast).filter(col("keep") === 1L))
+      val kept = DedupLedger.keepersOf(arm, spark, batch, dir, snap,
+        maxBroadcast)
+      val got = ids(kept)
+      assert(got == want, s"${arm.modality} keepers at maxBroadcast=" +
+        s"$maxBroadcast: $got, the verdict keeps $want")
+      if (maxBroadcast == 0L) {
+        val plan = kept.queryExecution.executedPlan.toString
+        assert(!plan.contains("BroadcastExchange"),
+          s"the forced ${arm.modality} keepers plan broadcast:\n$plan")
+      }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+  }
+
   test("forced-shuffle ledger verdict: no broadcast in the plan, identical verdict") {
     val dir = java.nio.file.Files.createTempDirectory("ledger-topo").toString
     val history = docs(
@@ -68,6 +96,7 @@ class LedgerTopologySpec extends SparkSpec {
     forcedShuffleParity("text") { maxBroadcast =>
       DedupLedger.verdict(Text, spark, batch, dir, snap, maxBroadcast)
     }
+    keepersParity(Text, batch, dir, snap)
   }
 
   test("forced-shuffle MEDIA verdict: the marks-table hamming arm is " +
@@ -91,6 +120,7 @@ class LedgerTopologySpec extends SparkSpec {
     }
     assert(broadcastRun.map(r => (r.head, r.last)) ==
       Seq((10L, 0L), (11L, 0L), (12L, 1L)), s"fixture truth drifted: $broadcastRun")
+    keepersParity(Media(), batch, dir, snap)
   }
 
   test("forced-shuffle VIDEO verdict: the seqs-table vote arm is " +
@@ -116,6 +146,7 @@ class LedgerTopologySpec extends SparkSpec {
     }
     assert(broadcastRun.map(r => (r.head, r.last)) ==
       Seq((10L, 0L), (11L, 0L), (12L, 1L)), s"fixture truth drifted: $broadcastRun")
+    keepersParity(Video(), batch, dir, snap)
   }
 
   test("ledger band join sheds a planted hot mark bucket under the " +

@@ -135,6 +135,160 @@ class RelationParitySpec extends SparkSpec {
       iv.select(dv.columns.map(col): _*).orderBy("doc_id").collect().toSeq)
   }
 
+  /** Every row of `files` under `dir/sub`, read file by file (a
+    * partitioned file's `k=v` directories become columns): the truth a
+    * table reader must return, as sorted strings over `cols`. */
+  private def fileRows(dir: String, sub: String, files: Seq[String],
+                       cols: Seq[String]): Seq[String] =
+    files.flatMap { f =>
+      f.split('/').init.foldLeft(spark.read.parquet(s"$dir/$sub/$f")) {
+        (d, seg) =>
+          val Array(k, v) = seg.split("=", 2)
+          d.withColumn(k, lit(v.toInt))
+      }.select(cols.map(col): _*).collect().map(_.toString).toSeq
+    }.sorted
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame,
+                     cols: Seq[String]): Seq[String] =
+    df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
+
+  /** (name, type) of `ddl` in a partitioned read's order: data columns,
+    * then `cell`. */
+  private def readOrder(ddl: String): Seq[(String, String)] = {
+    val st = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    (st.filterNot(_.name == "cell") ++ st.filter(_.name == "cell"))
+      .map(f => (f.name, f.dataType.simpleString))
+  }
+
+  private def nameTypes(df: org.apache.spark.sql.DataFrame) =
+    df.schema.map(f => (f.name, f.dataType.simpleString))
+
+  test("a store holding cell= files and flat delta files returns every row " +
+       "through frames (declared and inference) and diffFrames, in the " +
+       "partitioned read's column order; compaction keeps every row") {
+    // hand-built and unstamped, so the no-DDL reads infer from footers:
+    // a cell-partitioned rebuild (48 rows over cells 0-3), then a flat
+    // delta (16 rows, `cell` a data column) as a ledger tick writes it
+    val dir = java.nio.file.Files.createTempDirectory("relpar-mixed")
+      .toString + "/led"
+    def codes(ids: Seq[Long]) =
+      ids.map(i => ((i % 4).toInt, s"h$i", i)).toDF("cell", "h", "owner")
+    def sigs(ids: Seq[Long]) =
+      ids.map(i => ((i % 4).toInt, i, Seq(i, i + 1))).toDF("cell", "doc_id", "sig")
+    IndexStore.setProps(dir, Map("modalities" -> "text"))
+    IndexStore.commitRebuild(dir) {
+      codes(0L until 48L).repartition(2).write.mode("overwrite")
+        .partitionBy("cell").parquet(s"$dir/codes")
+      sigs(0L until 48L).repartition(2).write.mode("overwrite")
+        .partitionBy("cell").parquet(s"$dir/vectors")
+    }
+    val v1 = IndexStore.snapshot(dir)
+    IndexStore.commitDelta(dir, Some("flat-delta")) {
+      codes(48L until 64L).coalesce(1).write.mode("append").parquet(s"$dir/codes")
+      sigs(48L until 64L).coalesce(1).write.mode("append").parquet(s"$dir/vectors")
+    }
+    val head = IndexStore.snapshot(dir)
+    for (fs <- Seq(head.codes, head.vectors))
+      assert(fs.exists(_.startsWith("cell=")) && fs.count(!_.contains('/')) == 1,
+        s"fixture must mix both layouts: $fs")
+    val codeCols = Seq("cell", "h", "owner")
+    val sigCols = Seq("cell", "doc_id", "sig")
+    val wantCodes = fileRows(dir, "codes", head.codes, codeCols)
+    val wantSigs = fileRows(dir, "vectors", head.vectors, sigCols)
+    assert(wantCodes.size == 64 && wantSigs.size == 64)
+
+    // negative control: Spark's stock basePath read silently drops the
+    // flat file at the table root once a cell= directory is present
+    val stock = spark.read.option("basePath", s"$dir/vectors")
+      .parquet(head.vectors.map(f => s"$dir/vectors/$f"): _*)
+    assert(stock.count() == 48L,
+      "negative control: the stock read is expected to lose the flat file")
+
+    val (dx, dv) = IndexStore.frames(spark, dir, head,
+      Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
+      declaredSchema = true)
+    assert(rowsOf(dx, codeCols) == wantCodes && rowsOf(dv, sigCols) == wantSigs,
+      "the declared read lost or duplicated rows of the mixed fileset")
+    assert(nameTypes(dx) == readOrder(IndexStore.CODES_DDL) &&
+      nameTypes(dv) == readOrder(IndexStore.VECTORS_DDL),
+      s"declared mixed read order/types: ${dx.schema.toDDL}, ${dv.schema.toDDL}")
+    // the all-partitioned read of the same DDL has that same shape
+    val (px, _) = IndexStore.frames(spark, dir, v1,
+      Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
+      declaredSchema = true)
+    assert(nameTypes(px) == nameTypes(dx))
+    val (ix, iv) = IndexStore.frames(spark, dir, head)
+    assert(rowsOf(ix, codeCols) == wantCodes && rowsOf(iv, sigCols) == wantSigs,
+      "the inference read lost or duplicated rows of the mixed fileset")
+    assert(nameTypes(ix) == readOrder(IndexStore.CODES_DDL) &&
+      nameTypes(iv) == readOrder(IndexStore.VECTORS_DDL))
+
+    // diffFrames over v1 -> head reads the delta's flat files only
+    val deltaCodes = fileRows(dir, "codes", head.codes.diff(v1.codes), codeCols)
+    for ((x, v) <- Seq(IndexStore.diffFrames(spark, dir, v1, head,
+                         Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
+                         declaredSchema = true),
+                       IndexStore.diffFrames(spark, dir, v1, head))) {
+      assert(rowsOf(x, codeCols) == deltaCodes && deltaCodes.size == 16)
+      assert(v.count() == 16L)
+    }
+    // a diff over the whole mixed fileset (from an empty snapshot)
+    val (ax, _) = IndexStore.diffFrames(spark, dir, v1.copy(codes = Nil,
+      vectors = Nil), head, Some(IndexStore.CODES_DDL),
+      Some(IndexStore.VECTORS_DDL), declaredSchema = true)
+    assert(rowsOf(ax, codeCols) == wantCodes)
+
+    // compaction reads the mixed fileset and gives every row its cell back
+    IndexStore.compact(spark, dir)
+    val c = IndexStore.snapshot(dir)
+    assert((c.codes ++ c.vectors).forall(_.startsWith("cell=")),
+      s"compaction must restore the cell layout: ${c.codes ++ c.vectors}")
+    val (cx, cv) = IndexStore.frames(spark, dir, c)
+    assert(rowsOf(cx, codeCols) == wantCodes && rowsOf(cv, sigCols) == wantSigs,
+      "compaction lost or duplicated rows of the mixed fileset")
+  }
+
+  test("marksFrame and seqsFrame return every row of a mixed-layout store; " +
+       "compaction keeps them") {
+    import graft.ops.DedupLedger.{Media, Video}
+    val dir = java.nio.file.Files.createTempDirectory("relpar-mixed-mv")
+      .toString + "/led"
+    def fps(ids: Seq[Long]) =
+      ids.map(i => (i, Seq((i * 2654435761L) & ((1L << 42) - 1))))
+        .toDF("media_id", "fp")
+    def frames(ids: Seq[Long]) = ids.flatMap(i => (0L until 4L).map(f =>
+        (i, f, Seq((i * 40503L + f * 2654435761L) & ((1L << 42) - 1)))))
+      .toDF("media_id", "f", "fp")
+    DedupLedger.build(dir, "text,media,video", Media() -> fps(0L until 40L),
+      Video() -> frames(0L until 10L))
+    // deltas: one flat file per table
+    DedupLedger.append(Media(), fps(1000L until 1020L), dir, "m-delta")
+    DedupLedger.append(Video(), frames(1000L until 1005L), dir, "v-delta")
+    val head = IndexStore.snapshot(dir)
+    for (fs <- Seq(head.marks, head.seqs))
+      assert(fs.exists(_.startsWith("cell=")) && fs.count(!_.contains('/')) == 1,
+        s"fixture must mix both layouts: $fs")
+    val markCols = Seq("cell", "fp", "owner")
+    val seqCols = Seq("cell", "owner", "f", "fp", "seqhash")
+    val wantMarks = fileRows(dir, "marks", head.marks, markCols)
+    val wantSeqs = fileRows(dir, "seqs", head.seqs, seqCols)
+    assert(wantMarks.size == 60 && wantSeqs.size == 60)
+    def check(snap: IndexStore.Snapshot): Unit = {
+      val m = IndexStore.marksFrame(spark, dir, snap, IndexStore.MARKS_DDL)
+      val q = IndexStore.seqsFrame(spark, dir, snap)
+      assert(rowsOf(m, markCols) == wantMarks, "marks rows")
+      assert(rowsOf(q, seqCols) == wantSeqs, "seqs rows")
+      assert(nameTypes(m) == readOrder(IndexStore.MARKS_DDL) &&
+        nameTypes(q) == readOrder(IndexStore.SEQS_DDL),
+        s"order/types: ${m.schema.toDDL}, ${q.schema.toDDL}")
+    }
+    check(head)
+    IndexStore.compact(spark, dir)
+    val c = IndexStore.snapshot(dir)
+    assert((c.marks ++ c.seqs).forall(_.startsWith("cell=")))
+    check(c)
+  }
+
   test("two live sessions: each frame memo serves only the session that built it") {
     import org.apache.spark.sql.graftshim.Shim.sessionId
     import graft.ops.VectorOps
