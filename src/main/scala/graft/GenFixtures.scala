@@ -161,23 +161,6 @@ object GenFixtures {
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
   }
 
-  /** The planted dup ground truth: one row per dup doc (d1 = its base
-    * partner, d2 = the dup, kind = near|exact). Pure in id, so it can be
-    * produced without regenerating the corpus; the sf1 RECALL
-    * measurement (SCALING.md) joins this against the dedup family's
-    * outputs. Never fed to the engine — measurement harness only.
-    */
-  def plantedPairs(spark: SparkSession, n: Long): DataFrame = {
-    import spark.implicits._
-    spark.range(0, n, 1, 32).flatMap { id =>
-      role(id) match {
-        case 1 => Some((partner(id), id, "near"))
-        case 2 => Some((partner(id), id, "exact"))
-        case _ => None
-      }
-    }.toDF("d1", "d2", "kind")
-  }
-
   // ---- embeddings ----------------------------------------------------
   /** 64-dim unit vectors (isotropic gaussian, normalized) + uniform
     * label in [0,10) — the sf0.1 table has no cluster structure
@@ -198,14 +181,14 @@ object GenFixtures {
   // mirrors it) has NO geometric structure: labels are independent of
   // the vectors, so IVF recall on it is the trivial cells-probed/cells
   // and planted near-dups don't exist. The `vecs` fixture gives the
-  // embedding families ground truth the way `tailed`/`mid` do for the
-  // text families (VERDICT r8 #3): 10 directional cluster centroids,
-  // label = the generating centroid (within-cluster cosine ~0.4,
-  // cross-cluster ~0 — the regime where IVF cell-pruning is the right
-  // trade), plus planted near-dup rows — a unit-normalized perturbation
-  // of an earlier vector targeting a cosine drawn uniform from
-  // [0.45, 0.995], spanning the verify threshold COS_T=0.4 up to the
-  // near-exact regime so band-collision recall can be read per stratum.
+  // embedding families ground truth (VERDICT r8 #3): 10 directional
+  // cluster centroids, label = the generating centroid (within-cluster
+  // cosine ~0.4, cross-cluster ~0 — the regime where IVF cell-pruning is
+  // the right trade), plus planted near-dup rows — a unit-normalized
+  // perturbation of an earlier vector targeting a cosine drawn uniform
+  // from [0.45, 0.995], spanning the verify threshold COS_T=0.4 up to
+  // the near-exact regime so band-collision recall can be read per
+  // stratum.
   private val PVecNear = 0.03
   private val VecDim = 64
   private val NumCells = 10
@@ -280,7 +263,7 @@ object GenFixtures {
   /** Planted vector ground truth: one row per near-dup vector, with the
     * exact realized cosine of the FLOAT vectors (the target t drifts a
     * little through the two normalizations — measurement joins use this
-    * realized value). Measurement harness only; never fed to the engine.
+    * realized value). Recall ground truth only; never fed to the engine.
     */
   def plantedVecPairs(spark: SparkSession, n: Long,
                       spread: Double = 0.15): DataFrame = {
@@ -354,16 +337,6 @@ object GenFixtures {
       println(s"wrote $name")
     }
 
-    // `GenFixtures <dir> <mult> pairs`: (re)write only the planted-pair
-    // ground truth — pure in id, so it needs no corpus regeneration (and
-    // must not trigger one: a full rerun would drop events.parquet's
-    // TIMESTAMP(NANOS) post-annotation, tools/fix_events_ns.py).
-    if (args.length > 2 && args(2) == "pairs") {
-      write(plantedPairs(spark, 5000L * mult), "planted_pairs")
-      spark.stop()
-      return
-    }
-
     // `GenFixtures <dir> <mult> events`: (re)write only the events table
     // — it is deliberately NOT git-tracked at sf1 (1M rows of pure
     // generator output; everything needed to reproduce it is this code),
@@ -378,25 +351,23 @@ object GenFixtures {
 
     // `GenFixtures <dir> <mult> tailed` — the TAILED corpus shape (20k
     // vocabulary: rare shingle tail survives at scale); `... mid [V]` —
-    // a MID-DIVERSITY shape (default vocab 100 — measured by RouteSweep
-    // to sit in the q122 routing gray band at 50k docs: witness ratio
-    // 0.62, between the 5% and 75% thresholds). Both emit documents +
-    // planted_pairs only (role/partner are vocab-independent): these
-    // fixtures exist to measure the q122 router across corpus regimes
-    // (MeasureRecall), not to bench the TPC-H families.
+    // a MID-DIVERSITY shape (default vocab 100 — measured to sit in the
+    // q122 routing gray band at 50k docs: witness ratio 0.62, between
+    // the 5% and 75% thresholds; SCALING.md "Round-8/9"). Both emit
+    // documents only: these fixtures exist to exercise the q122 router
+    // across corpus regimes, not to bench the TPC-H families.
     if (args.length > 2 && (args(2) == "tailed" || args(2) == "mid")) {
       val vocab =
         if (args(2) == "tailed") TailVocabSize
         else if (args.length > 3) args(3).toInt else 100
       write(documents(spark, 5000L * mult, vocab), "documents")
-      write(plantedPairs(spark, 5000L * mult), "planted_pairs")
       spark.stop()
       return
     }
 
     // `GenFixtures <dir> <mult> vecs [spread]` — the CLUSTERED embedding
     // fixture (see clusteredEmbeddings): embeddings + planted_vec_pairs
-    // only, for the embedding-family recall study (MeasureVecRecall).
+    // only, the embedding-family recall ground truth RecallSpec reads.
     // Default spread 0.15 = well-separated cells (fixtures/sf1vec,
     // tracked); 0.35 = boundary-blurred cells, the multi-probe regime.
     if (args.length > 2 && args(2) == "vecs") {
@@ -440,7 +411,6 @@ object GenFixtures {
       "lineitem")
 
     write(documents(spark, 5000L * mult), "documents")
-    write(plantedPairs(spark, 5000L * mult), "planted_pairs")
     write(embeddings(spark, 2000L * mult), "embeddings")
     write(events(spark, 100000L * mult, 1500L * mult), "events")
 

@@ -132,11 +132,12 @@ object BpeOps {
     * tree `merges.length` deep. That is the right shape at the gated
     * N_MERGES=12 (one codegen'd Project, bit-replayable in DuckDB), but
     * it does NOT extend to a production vocabulary — and the cliff is
-    * a CRASH, not a slowdown: measured at M=500 (BpeStudy, two
-    * independent runs), codegen collapses (generated method > 64 KB),
-    * the interpreted fallback's per-row eval() recursion overflows the
-    * executor thread stacks, and Spark's uncaught-exception handler
-    * treats StackOverflowError as fatal and kills the whole container.
+    * a CRASH, not a slowdown: measured at M=500 (SCALING.md "Round-13:
+    * the production-vocabulary BPE encoder", two independent runs),
+    * codegen collapses (generated method > 64 KB), the interpreted
+    * fallback's per-row eval() recursion overflows the executor thread
+    * stacks, and Spark's uncaught-exception handler treats
+    * StackOverflowError as fatal and kills the whole container.
     * Production encode is [[bpeEncodeRanked]] —
     * one mapPartitions pass applying merge RANKS per word,
     * O(doclen · fires) per row with no per-merge plan nodes; q150 gates

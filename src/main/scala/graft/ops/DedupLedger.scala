@@ -459,7 +459,7 @@ object DedupLedger {
   private val MEMO_MAX = 4096
   private def boundCache(m: java.util.concurrent.ConcurrentHashMap[_, _]): Unit =
     if (m.size > MEMO_MAX) m.clear()
-  /** Study/spec hook: drop every per-store memo so a measurement can
+  /** Spec hook: drop every per-store memo so a measurement can
     * observe the COLD path (first verdict against a fresh version)
     * repeatedly without rebuilding the store. Never called by
     * operators. */
@@ -1244,8 +1244,8 @@ object DedupLedger {
     * a LAZY batch ⋉ verdict.keep join, and the delta references it more
     * than once (table rows, stats bump) — without the checkpoint each
     * reference re-executed the whole verdict plan, ~4 s of a ~6 s
-    * streamed tick at sf0.1 (round-16 TickProfile). Increment-sized by
-    * contract. */
+    * streamed tick at sf0.1 (SCALING.md "Round 16", addendum 2).
+    * Increment-sized by contract. */
   def append(arm: LedgerArm, survivors: DataFrame, dir: String,
              tag: String): Int =
     IndexStore.commitDelta(dir, Some(tag)) {

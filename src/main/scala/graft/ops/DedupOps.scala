@@ -27,8 +27,8 @@ object DedupOps {
   private[ops] val ROWS_PER_BAND = 2
   private val JACCARD_T = 0.5
   private[graft] val COS_T = 0.4
-  private[graft] val SRP_BANDS = 4  // q97: LSH bands over sign bits
-  private[graft] val SRP_BITS = 8   // q97: sign bits (hyperplanes) per band
+  private val SRP_BANDS = 4  // q97: LSH bands over sign bits
+  private val SRP_BITS = 8   // q97: sign bits (hyperplanes) per band
 
   /** q97's banding as pure SQL higher-order functions — the reference
     * formulation for [[graft.functions.SrpBandCodes]]; VectorExprSpec
@@ -379,13 +379,14 @@ object DedupOps {
     *
     * `pairBudgetPerDoc` derives the bucket cap from the corpus the same
     * way the minhash family does (floor = the static cap). The first
-    * embedding-recall study (MeasureVecRecall on the clustered sf1vec
-    * fixture, round 9) caught the static cap eating recall exactly as
-    * it once did for q79: on a corpus with real cluster geometry, band
-    * buckets are cluster-sized (~2000 >> 200), the static cap dropped
-    * them wholesale, and measured recall read 17.8% against the 43.4%
-    * the SRP collision physics predicts; budget-derived, the cap
-    * follows the corpus and recall returns to the physics line.
+    * embedding-recall study on the clustered sf1vec fixture (SCALING.md
+    * "Round-9: first embedding-family recall study") caught the static
+    * cap eating recall exactly as it once did for q79: on a corpus with
+    * real cluster geometry, band buckets are cluster-sized (~2000 >>
+    * 200), the static cap dropped them wholesale, and measured recall
+    * read 17.8% against the 43.4% the SRP collision physics predicts;
+    * budget-derived, the cap follows the corpus and recall returns to
+    * the physics line.
     */
   def srpLshPairs(emb: DataFrame, bands: Int = SRP_BANDS, bits: Int = SRP_BITS,
                   bandCap: Int = BAND_CAP, cosT: Double = COS_T,
@@ -645,7 +646,8 @@ object DedupOps {
     * wanting cluster semantics feed the reps to q75's connected
     * components instead. Band width is the scale knob: 2^bandBits
     * buckets saturate at corpus ~ sqrt(2 · 2^bandBits / bands) distinct
-    * fingerprints (MediaDedupStudy) — widen bandBits with the corpus. */
+    * fingerprints (SCALING.md "Round-13 addendum 3") — widen bandBits
+    * with the corpus. */
   def hammingPairs(hashed: DataFrame, idCol: String, hashCol: String,
                    bands: Int, bandBits: Int, maxHamming: Int,
                    pairBudgetPerDoc: Option[Int] = DEFAULT_PAIR_BUDGET): DataFrame = {

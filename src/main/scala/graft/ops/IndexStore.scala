@@ -632,7 +632,7 @@ object IndexStore {
       }
     }
 
-    /** OBJECT-STORE semantics for specs and studies: the winner is
+    /** OBJECT-STORE semantics for specs: the winner is
       * decided by a conditional PUT (an atomic register keyed on the
       * target path — S3 If-None-Match), with NO hard links and NO
       * atomic rename anywhere; the winner then lands the body via a
@@ -664,13 +664,13 @@ object IndexStore {
   }
 
   /** The active commit primitive — production always [[CommitPrimitive.HardLink]]
-    * (self-degrading); specs/studies swap in
+    * (self-degrading); specs swap in
     * [[CommitPrimitive.SimulatedPutIfAbsent]] to prove the protocol
     * under object-store semantics. */
   @volatile private[graft] var commitPrimitive: CommitPrimitive =
     CommitPrimitive.HardLink
 
-  /** Run `body` with commits routed through `p` (spec/study hook —
+  /** Run `body` with commits routed through `p` (spec hook —
     * global, so callers serialize; suites run sequentially). */
   private[graft] def withCommitPrimitive[A](p: CommitPrimitive)(body: => A): A = {
     val old = commitPrimitive
@@ -743,9 +743,10 @@ object IndexStore {
       scala.util.Try(new String(b, "UTF-8").trim.toInt).toOption)
 
   /** CAS losses observed across all commit paths in this JVM — an
-    * operability counter (OccStudy reads deltas of it; a deployment
-    * would export it). Each increment is one publishCas attempt that
-    * lost the version race and re-derived its carry. */
+    * operability counter (the benchmark reports it as
+    * `indexstore.cas_retries`; a deployment would export it). Each
+    * increment is one publishCas attempt that lost the version race and
+    * re-derived its carry. */
   private[graft] val casRetries = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Publish with retry — for commits whose file lists do not depend

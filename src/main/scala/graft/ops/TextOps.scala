@@ -48,9 +48,9 @@ object TextOps {
   private val trigramSqlDuck =
     "[toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] FOR i IN range(1, len(toks) - 1)]"
 
-  // private[graft]: RouteSweep calibrates the q122 router against these
-  // exact values — a harness-local copy could silently measure a
-  // different index than the router ships (ADVICE r8)
+  // the q122 router was calibrated against these exact values (SCALING.md
+  // "Round-8/9: the witness-ratio router"): a calibration that used a
+  // copy could silently measure a different index than the router ships
   private[graft] val DF_CAP = 3
   private[graft] val PAIR_BUDGET_PER_DOC = 1000 // minhash family default (q49/q79/q122 + their oracles' literal)
   private val BAND_CAP = 200 // q79 band-bucket width cap (C(cap,2) pair bound)
@@ -73,7 +73,8 @@ object TextOps {
   //   between                -> 'both'    (union of the two exact-verified
   //                                        pair sets: recall >= max of the
   //                                        branches, still precise)
-  // Set from the RouteSweep measurement at 50k docs (SCALING.md).
+  // Set from the routing sweep at 50k docs (SCALING.md "Round-8/9: the
+  // witness-ratio router").
   private[ops] val ROUTE_HI_PCT = 75
   private[ops] val ROUTE_LO_PCT = 5
 
@@ -132,16 +133,17 @@ object TextOps {
     * probability, which is what pair recall exponentiates over (~90
     * shared grams per pair at fixture shape).
     *
-    * Chosen over the two rejected alternatives by the RouteSweep
-    * measurement at 50k docs (SCALING.md): the raw nonzero retained
-    * count (round 7's dispatch) is all-or-nothing — a vocab-60 corpus
-    * reads retained=554 > 0 while the index recovers 0.3% of planted
-    * pairs; and the doc-coverage fraction (docs carrying >= 1 retained
-    * gram, the round-7 ADVICE suggestion, kept as
-    * [[coverageDiagnostic]]) is NON-MONOTONE with index recall — a
-    * high-diversity corpus reads coverage 0.09 (background grams are
-    * df=1, so few docs touch a df-2 gram) at 100% index recall, while a
-    * vocab-80 corpus reads coverage 0.95 at 77% recall. The conditional
+    * Chosen over the two rejected alternatives by the routing sweep at
+    * 50k docs (SCALING.md "Round-8/9: the witness-ratio router"): the
+    * raw nonzero retained count (round 7's dispatch) is all-or-nothing
+    * — a vocab-60 corpus reads retained=554 > 0 while the index
+    * recovers 0.3% of planted pairs; and the doc-coverage fraction
+    * (docs carrying >= 1 retained gram, the round-7 ADVICE suggestion)
+    * is NON-MONOTONE with index recall, because background docs and
+    * pair members see different df distributions — a high-diversity
+    * corpus reads coverage 0.09 (background grams are df=1, so few docs
+    * touch a df-2 gram) at 100% index recall, while a vocab-80 corpus
+    * reads coverage 0.95 at 77% recall. The conditional
     * ratio is monotone across the same sweep: 0 -> 0%, 0.003 -> 0.3%,
     * 0.22 -> 77%, 0.62 -> 99.1%, >= 0.94 -> 100%.
     *
@@ -158,30 +160,6 @@ object TextOps {
              lit(0L)).as("witnesses"))
       .head()
     (r.getLong(0), r.getLong(1))
-  }
-
-  /** Coverage form of the diagnostic — what fraction of DOCUMENTS carry
-    * at least one retained shingle: (covered docs, total docs). Kept as
-    * a corpus-inspection tool and for the RouteSweep table; REJECTED as
-    * the routing statistic because it is non-monotone with index recall
-    * (see [[pairWitnessDiagnostic]] — background docs and pair members
-    * see different df distributions, so doc visibility does not track
-    * pair visibility).
-    *
-    * Cost: the same df aggregation as [[rareTailDiagnostic]] plus one
-    * semi-join of the exploded gram table against the retained grams and
-    * a distinct-count — all map-side-combinable shuffles on bounded
-    * keys; the driver reads two longs. Run over an already-materialized
-    * (checkpointed) shingle frame, like every diagnostic in this family.
-    */
-  def coverageDiagnostic(g0: DataFrame, dfCap: Int = DF_CAP): (Long, Long) = {
-    val g = DedupOps.gramRows(g0, "doc_id")
-    val rare = g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, dfCap))
-    val covered = g.join(rare.select(col("gram")), Seq("gram"), "left_semi")
-      .agg(countDistinct(col("doc_id")).as("covered"))
-      .head().getLong(0)
-    (covered, g0.count())
   }
 
   /** In-bucket candidate pairs (d1 < d2) from a df-capped inverted
@@ -233,7 +211,7 @@ object TextOps {
     * (no internal checkpoint) — for callers that share one checkpoint
     * across a diagnostic pass and the pipeline ([[routedNearDupPairs]]).
     */
-  private[graft] def jaccardPairsOn(gc: DataFrame, dfCap: Int): DataFrame = {
+  private def jaccardPairsOn(gc: DataFrame, dfCap: Int): DataFrame = {
     invertedIndexCandidates(gc, dfCap)
       .join(gc.select(col("doc_id").as("d1"), col("grams").as("g1")), "d1")
       .join(gc.select(col("doc_id").as("d2"), col("grams").as("g2")), "d2")
@@ -469,7 +447,8 @@ object TextOps {
     *   in between    -> DISTINCT UNION of both branches  (route = 'both')
     *
     * The gray band exists because no cheap scalar separates the regimes
-    * sharply (RouteSweep: ratio 0.22 -> 77% index recall, 0.49 -> 99.1%);
+    * sharply (SCALING.md "Round-8/9": ratio 0.22 -> 77% index recall,
+    * 0.49 -> 99.1%);
     * inside it both branches run and their exact-Jaccard-verified pair
     * sets union — recall >= max(branches) >= minhash's floor, precision
     * still exact, at the cost of both candidate passes over the one

@@ -267,8 +267,9 @@ object VectorOps {
     * replaced by the index this engine built itself. At the gated
     * (k=10, iters=[[ROUTER_ITERS]]) the learned router BEATS the
     * fixture's own labels single-probe on both corpus shapes
-    * (RouteStudy round-12). Corpus streams, queries broadcast; the
-    * cell equality is a row-local predicate on the broadcast join.
+    * (SCALING.md "Round 12", routing-only ceilings). Corpus streams,
+    * queries broadcast; the cell equality is a row-local predicate on
+    * the broadcast join.
     */
   def learnedCellTopK(emb: DataFrame, k: Int, numQueries: Int,
                       topK: Int,
@@ -481,8 +482,9 @@ object VectorOps {
   // arithmetic, and full-precision vectors are fetched for only
   // |queries| x rerank rows — the raw corpus is never joined wide.
   // Re-rank repairs ADC quantization error inside the probed cells;
-  // recall is then bounded by cell routing alone (measured in
-  // MeasureVecRecall's k-sweep for the probe side).
+  // recall is then bounded by cell routing alone (measured by the k-sweep
+  // for the probe side, SCALING.md "Round-9: first embedding-family recall
+  // study").
 
   // probes=3 is the measured knee under the HELD-OUT init (round-11
   // sweep, recall@5 at rerank=20: sf1vec 46→50→52%, sf1vecwide
@@ -491,12 +493,12 @@ object VectorOps {
   // without widening rerank dilutes the fixed candidate budget across
   // more cells, letting ADC misrankings crowd out true neighbors. The
   // sweep table and protocol live in SCALING.md round-11.
-  // ---- The GATED serving configuration (round-12 joint calibration,
-  // AnnCalibrate on both committed fixture shapes — SCALING.md round-12
-  // tables). k=10/coarseIters=4 is the stack knee: on the blurred
-  // corpus iters=4 beats both the budget build (iters=1: routing-bound)
-  // and convergence (iters=8+: the PQ residuals retrain against
-  // centroids the re-rank no longer needs, costing ADC ordering);
+  // ---- The GATED serving configuration (round-12 joint calibration on
+  // both committed fixture shapes — SCALING.md "Round 12" tables).
+  // k=10/coarseIters=4 is the stack knee: on the blurred corpus iters=4
+  // beats both the budget build (iters=1: routing-bound) and
+  // convergence (iters=8+: the PQ residuals retrain against centroids
+  // the re-rank no longer needs, costing ADC ordering);
   // probes=4 of k=10 cells reads a SMALLER corpus fraction than the
   // round-11 3-of-8 while buying +4 recall points on the blurred shape;
   // rerank=100 is where the rerank curve is still paying ~+10 points
@@ -510,7 +512,7 @@ object VectorOps {
   private[graft] val IVFPQ_RERANK = 100
   /** q125's ROUTER gate trains deeper (iters=8): the routing-only
     * ceiling keeps improving with Lloyd rounds once dead cells are
-    * re-seeded (RouteStudy round-12: single-probe 70% vs true-label
+    * re-seeded (SCALING.md "Round 12": single-probe 70% vs true-label
     * 60% on the blurred corpus, 100% vs 100% on the separated one) —
     * the serving stack's iters=4 knee is a PQ-interaction, not a
     * routing optimum. */
@@ -805,8 +807,7 @@ object VectorOps {
     * exact-int machinery verbatim.
     */
   private[graft] def ivfPqBuild(emb: DataFrame, k: Int,
-      checkpointDir: Option[String] = None,
-      coarseIters: Int = IVF_COARSE_ITERS)
+      checkpointDir: Option[String] = None)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     // filterable metadata (the fixture's `label`) rides the encode
     // pipeline when the input carries it — row-local passthrough, zero
@@ -819,11 +820,9 @@ object VectorOps {
     val quantL = pin(emb.withColumn("q", expr(quantExpr))
       .select((Seq(col("vec_id"), col("q")) ++ riders): _*), checkpointDir)
     val quant = quantL.select(col("vec_id"), col("q"))
-    // coarse quantizer: q124's trajectory at the default coarseIters=1 —
-    // centroids after one Lloyd update, final assignment against them
-    // (the oracle's c1n/a2); more rounds are a measured-only knob
-    // (SCALING.md round-11 iters sweep)
-    val coarse = pin(kmeansFit(quant, k, coarseIters, checkpointDir),
+    // coarse quantizer: IVF_COARSE_ITERS Lloyd updates, final assignment
+    // against them (SCALING.md round-11 iters sweep, round-12 knee)
+    val coarse = pin(kmeansFit(quant, k, IVF_COARSE_ITERS, checkpointDir),
       checkpointDir) // k rows: (cell, s, n)
     val assigned = pin(kmeansAssign(quantL, coarse), checkpointDir)
     val resid = pin(residualsOfAssigned(assigned, coarse), checkpointDir)
@@ -879,14 +878,8 @@ object VectorOps {
     */
   private[graft] def storeMeta(spark: SparkSession,
                                indexDir: String): IvfPqMeta = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
-      else Seq(f)
-    val fp = (walk(new java.io.File(s"$indexDir/coarse")) ++
-              walk(new java.io.File(s"$indexDir/codebook")) ++
-              walk(new java.io.File(s"$indexDir/codebook2")))
-      .map(f => s"${f.getPath}:${f.length}:${f.lastModified}").mkString("|")
+    val fp = Seq("coarse", "codebook", "codebook2")
+      .map(Fingerprint.of(indexDir, _)).mkString("|")
     val cached = storeMetaCache.get(indexDir).orNull
     if (cached != null && cached._1 == fp) cached._2
     else {
@@ -1060,7 +1053,7 @@ object VectorOps {
   /** IN-QUERY serve (q127): candidates stay a lazy subplan; the exact
     * re-rank streams the corpus once against the broadcast candidate
     * set — one DAG for the whole build+serve. */
-  private[graft] def serveIvfPq(quant: DataFrame, coarse: DataFrame,
+  private def serveIvfPq(quant: DataFrame, coarse: DataFrame,
       cb: DataFrame, codes: DataFrame, numQueries: Int, probes: Int,
       rerank: Int, topK: Int): DataFrame = {
     val cand = ivfPqCandidates(quant, coarse, cb, codes, numQueries,
@@ -1196,12 +1189,7 @@ object VectorOps {
   private[graft] def cachedQueryRows(spark: SparkSession, d: String,
       numQueries: Int): Array[(Long, Array[Long])] = {
     requireHeldOut(numQueries)
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
-      else Seq(f)
-    val fp = walk(new java.io.File(s"$d/embeddings.parquet"))
-      .map(f => s"${f.getPath}:${f.length}:${f.lastModified}").mkString("|")
+    val fp = Fingerprint.of(d, "embeddings.parquet")
     val key = s"$d|$numQueries"
     val cached = queryRowsCache.get(key).orNull
     if (cached != null && cached._1 == fp) cached._2
@@ -1218,9 +1206,8 @@ object VectorOps {
 
   def ivfPqRerankTopK(emb: DataFrame, k: Int, numQueries: Int,
                       probes: Int, rerank: Int, topK: Int,
-                      checkpointDir: Option[String] = None,
-                      coarseIters: Int = IVF_COARSE_ITERS): DataFrame = {
-    val (quant, coarse, cb, codes, _) = ivfPqBuild(emb, k, checkpointDir, coarseIters)
+                      checkpointDir: Option[String] = None): DataFrame = {
+    val (quant, coarse, cb, codes, _) = ivfPqBuild(emb, k, checkpointDir)
     serveIvfPq(quant, coarse, cb, codes, numQueries, probes, rerank, topK)
   }
 
@@ -1230,8 +1217,8 @@ object VectorOps {
     * near some centroid (error ≈ the training-time mean, stamped as
     * `qe_base`); appended vectors from a DIVERGED distribution land far
     * from every trained cell, their residuals overflow the PQ
-    * codebook's range, and serve recall decays (AnnDriftStudy measures
-    * the decay curve — SCALING.md round-16). One avg over the frame,
+    * codebook's range, and serve recall decays (the decay curve is
+    * SCALING.md "Round-16 addendum 4"). One avg over the frame,
     * exact-integer inner distances like every k-means stage here. */
   private[graft] def meanCoarseQe(assigned: DataFrame): Double = {
     val row = assigned.agg(avg(col("dist"))).head
@@ -1279,9 +1266,9 @@ object VectorOps {
     * not green. Otherwise: retrain the
     * coarse router + PQ codebook when the appended population's mean
     * quantization error exceeds `threshold` × the training-time error.
-    * The default 1.5 sits well below the drift the study measured at
-    * the recall knee (AnnDriftStudy: in-distribution appends hold
-    * ratio ≈ 1.0x while recall holds; a diverged append population
+    * The default 1.5 sits well below the drift measured at the recall
+    * knee (SCALING.md "Round-16 addendum 4": in-distribution appends
+    * hold ratio ≈ 1.0x while recall holds; a diverged append population
     * reads several ×, with recall@10 over the appended region already
     * degrading) — so the policy fires before the store quietly decays.
     * A deployment wires this after each append tick:
@@ -1403,7 +1390,7 @@ object VectorOps {
     * error (the same manifest-native diff read as
     * [[appendedDriftRatio]], grouped by assigned cell) names the cells
     * whose appended population out-grew their centroid; each such cell
-    * SPLITS — `splitFactor` new centroids seeded by the deterministic
+    * SPLITS — [[SPLIT_FACTOR]] new centroids seeded by the deterministic
     * k-center greedy over the cell's own lowest-id sample (the
     * [[kmeansInit]] discipline applied cell-locally), `refineIters`
     * cell-local Lloyd rounds, then the cell's vectors re-assign
@@ -1413,18 +1400,19 @@ object VectorOps {
     * re-encode against a RE-FITTED generation codebook dedicated to
     * the split cells ([[encodeGenAware]] / `codebook2`) — dedicated
     * centroids shrink the residuals AND the new codewords fit the
-    * diverged residual distribution (AnnDriftStudy round-17 measures
-    * the recall recovery). Cost is proportional to the DRIFTED CELLS'
-    * content, never the corpus: untouched cells' files are carried
-    * byte-identical through a replacement commit that rewrites only
-    * the split cells' partitions.
+    * diverged residual distribution (SCALING.md "Round-17 addendum 2"
+    * measures the recall recovery). Cost is proportional to the
+    * DRIFTED CELLS' content, never the corpus: untouched cells' files
+    * are carried byte-identical through a replacement commit that
+    * rewrites only the split cells' partitions.
     *
     * `maxRefineFraction` is the PROPORTIONALITY GUARD: when the
     * drifted cells hold more than that fraction of the stored rows,
     * the incremental premise is void — "refining" most of the store
     * is a worse rebuild (at 100 TB, an 80%-drifted store rewritten
-    * cell-by-cell pays full-corpus IO for sub-rebuild recall, the
-    * AnnDriftStudy global-divergence arm measures exactly this) — so
+    * cell-by-cell pays full-corpus IO for sub-rebuild recall; the
+    * global-divergence arm of SCALING.md "Round-17 addendum 2"
+    * measures exactly this) — so
     * the call DECLINES by name (log + empty result) and the caller
     * falls back to [[buildIvfPqIndex]]. The deployment wiring is one
     * line either way:
@@ -1439,15 +1427,17 @@ object VectorOps {
     * unavailable — same None conditions as [[appendedDriftRatio]]). */
   def refineDriftedCells(spark: SparkSession, dir: String,
                          threshold: Double = 1.5,
-                         splitFactor: Int = 2,
                          minCellMass: Long = 50L,
                          refineIters: Int = 3,
                          maxRefineFraction: Double = 0.5): Seq[Int] =
     // no global-ratio gate here (the pre-r18 contract): a direct caller
     // refines any cell whose own appended mass drifted, even when the
     // store-wide mean sits under the trigger
-    assessAndRefine(spark, dir, threshold, splitFactor, minCellMass,
+    assessAndRefine(spark, dir, threshold, minCellMass,
       refineIters, maxRefineFraction, globalGate = false)._2
+
+  /** New centroids each drifted cell splits into. */
+  private val SPLIT_FACTOR = 2
 
   /** ONE-PASS policy read + response for the streamed tailer
     * (VERDICT r17 #3): the per-cell appended drift is computed ONCE —
@@ -1462,7 +1452,6 @@ object VectorOps {
     * threshold/mass, or the proportionality guard). */
   private[graft] def assessAndRefine(spark: SparkSession, dir: String,
                          threshold: Double = 1.5,
-                         splitFactor: Int = 2,
                          minCellMass: Long = 50L,
                          refineIters: Int = 3,
                          maxRefineFraction: Double = 0.5,
@@ -1528,7 +1517,7 @@ object VectorOps {
                 (fired, Nil)
               } else {
                 refineCells(spark, dir, head, coarse, cents, drifted,
-                  splitFactor, refineIters, assignedApp)
+                  refineIters, assignedApp)
                 (true, drifted)
               }
             }
@@ -1540,7 +1529,7 @@ object VectorOps {
   private def refineCells(spark: SparkSession, dir: String,
                           head: IndexStore.Snapshot, coarse: DataFrame,
                           cents: Seq[(Int, Seq[Long], Long)],
-                          drifted: Seq[Int], splitFactor: Int,
+                          drifted: Seq[Int],
                           refineIters: Int,
                           assignedApp: DataFrame): Unit = {
     // phase timing at INFO: a refine is a rare maintenance response
@@ -1575,7 +1564,7 @@ object VectorOps {
     // is dominated by old residents whose ids sort first — a sample
     // drawn from residents alone would never place a seed on the
     // diverged blob the split exists to separate; measured: +7 recall
-    // points on AnnDriftStudy's diverged corpus)
+    // points on the diverged corpus of SCALING.md "Round-17 addendum 2")
     // assignedApp is the caller's already-materialized assignment of
     // the appended rows against the current router — re-used here
     // instead of a second kmeansAssign pass (VERDICT r17 #3)
@@ -1618,7 +1607,7 @@ object VectorOps {
         val chosenIds = scala.collection.mutable.HashSet(first._1)
         val minD = scala.collection.mutable.HashMap.empty[Long, Long]
         pts.foreach { case (id, q) => minD(id) = d2(q, first._2) }
-        while (chosen.length < math.min(splitFactor, pts.length)) {
+        while (chosen.length < math.min(SPLIT_FACTOR, pts.length)) {
           val next = pts.iterator.filterNot(p => chosenIds(p._1))
             .maxBy { case (id, _) => (minD(id), -id) }
           chosen += next; chosenIds += next._1
@@ -1675,7 +1664,8 @@ object VectorOps {
     // trained on exactly the content being rewritten: dedicated
     // centroids shrink the residuals, but the BUILD codebook's
     // codewords were fitted to the build-time residual distribution —
-    // measured on AnnDriftStudy's diverged corpus, the stale codewords'
+    // measured on the diverged corpus (SCALING.md "Round-17 addendum 2"),
+    // the stale codewords'
     // ADC ordering alone cost 9 recall points (candidates present in
     // every probed cell, mis-ranked below the rerank cutoff). Training
     // is increment-sized: the split cells' residual sub-vectors only.
@@ -1961,7 +1951,7 @@ object VectorOps {
     * (it arrives through the checkpointed stream inside the gate).
     * Cached like every ensure; q159 clones it per execution so the
     * streamed appends never dirty the seed. */
-  private[graft] def ensureIvfPq90Index(s: SparkSession, d: String,
+  private def ensureIvfPq90Index(s: SparkSession, d: String,
                                         k: Int): String =
     ensureIndex(d, s"ivfpq90_k$k", ivfParams(k) + "|build90only") { base =>
       val emb = Tables.rebalance(Tables.embeddings(s, d))
@@ -2442,8 +2432,8 @@ object VectorOps {
     // another cell and changes the served neighbor set. The ROUTER_ITERS
     // training consumes the shared fitted-centroid artifact (the q131
     // fittedCents discipline — bit-identical rationals, so the oracle's
-    // in-query kmeansCteDuck replay still matches); RouteStudy and the
-    // RecallSpec router floor keep gating the fit path itself.
+    // in-query kmeansCteDuck replay still matches); the RecallSpec router
+    // floor keeps gating the fit path itself.
     "q125_ann_learned_cells" -> ((s, d) =>
       learnedCellTopK(Tables.rebalance(Tables.embeddings(s, d)),
                       k = GATED_K, numQueries = NUM_QUERIES, topK = 5,

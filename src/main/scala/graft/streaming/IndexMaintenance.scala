@@ -82,7 +82,6 @@ object IndexMaintenance {
   def driftSink(stream: DataFrame, indexDir: String,
                 checkpointDir: String,
                 threshold: Double = 1.5,
-                splitFactor: Int = 2,
                 minCellMass: Long = 50L,
                 refineIters: Int = 3,
                 maxRefineFraction: Double = 0.5): DataStreamWriter[org.apache.spark.sql.Row] =
@@ -98,8 +97,7 @@ object IndexMaintenance {
           // needsRetrain-then-refine pair re-derived the manifest diff
           // and re-assigned the appended rows per call
           val (fired, refined) = VectorOps.assessAndRefine(s, indexDir,
-            threshold, splitFactor, minCellMass, refineIters,
-            maxRefineFraction)
+            threshold, minCellMass, refineIters, maxRefineFraction)
           val declined = fired && refined.isEmpty
           if (declined)
             org.apache.log4j.Logger.getLogger(getClass).warn(

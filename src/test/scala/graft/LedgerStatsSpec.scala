@@ -29,22 +29,35 @@ class LedgerStatsSpec extends SparkSpec {
   private val statsKey = s"marks-hist-${geom.params}"
   private val mask42 = (1L << 42) - 1
 
-  /** Distinct pseudo-random narrow fingerprints — 3x14 banding over
-    * 40k of these stays far under the 200-row shed floor per bucket. */
-  private def healthyMarks(n: Long) =
+  /** Distinct pseudo-random fingerprints at geometry `g` — banding 40k
+    * of these stays far under the 200-row shed floor per bucket. */
+  private def healthyMarks(n: Long, g: DedupLedger.MarksGeom = geom) =
     spark.range(0, n, 1, 4)
       .select(col("id").as("media_id"),
-        expr(s"array(cast(conv(substring(md5(cast(id as string)), 1, 11), " +
-          s"16, 10) as bigint) & $mask42)").as("fp"))
+        expr(fpOf("cast(id as string)", g)).as("fp"))
+
+  /** A pseudo-random fingerprint keyed on the SQL string `key`, at the
+    * width of `g`: one 42-bit word, or two 60-bit words for the wide
+    * 120-bit geometry. */
+  private def fpOf(key: String, g: DedupLedger.MarksGeom): String =
+    if (g.fpBits <= 64)
+      s"array(cast(conv(substring(md5($key), 1, 11), 16, 10) as bigint) & $mask42)"
+    else {
+      val mask60 = (1L << 60) - 1
+      def word(salt: String) = s"cast(conv(substring(md5(concat($key, " +
+        s"'|$salt')), 1, 15), 16, 10) as bigint) & $mask60"
+      s"array(${word("a")}, ${word("b")})"
+    }
 
   private def seedDoc =
     Seq((0L, "stats spec seed doc")).toDF("doc_id", "text")
 
-  /** A one-doc text arm beside `marks` at the spec's geometry. */
+  /** A one-doc text arm beside `marks` at geometry `g`. */
   private def mixedLedger(dir: String,
-                          marks: org.apache.spark.sql.DataFrame): Int =
+                          marks: org.apache.spark.sql.DataFrame,
+                          g: DedupLedger.MarksGeom = geom): Int =
     DedupLedger.build(dir, "text,media,video", Text -> seedDoc,
-      Media(geom) -> marks)
+      Media(g) -> marks)
 
   private val textKey = "vectors-hist"
   private val textBands = 6 // DedupOps.NUM_SEEDS / ROWS_PER_BAND
@@ -84,52 +97,87 @@ class LedgerStatsSpec extends SparkSpec {
 
   test("rebuild stamps exact stats; the healthy verdict consults them with " +
        "ZERO jobs and matches the uncapped verdict row for row") {
-    val dir = java.nio.file.Files.createTempDirectory("stats-healthy").toString
-    mixedLedger(dir, healthyMarks(40000))
-    val st = IndexStore.armStats(dir, statsKey)
-      .getOrElse(fail("rebuild of a corpus-scale store must stamp arm stats"))
-    assert(st.slack == 0L, "a fresh rebuild's stats carry no slack")
-    assert(st.rows == 40000L * geom.bands,
-      s"stats rows must equal banded rows, got ${st.rows}")
-    assert(st.maxBound <= graft.ops.DedupOps.BAND_CAP,
-      "40k random fingerprints over 2^14-key bands must stay under the floor")
+    // both marks geometries: the narrow 42-bit one and the wide 120-bit
+    // one, whose healthy-store default verdict must keep exactly what
+    // the uncapped verdict keeps
+    for (g <- Seq(geom, DedupLedger.WideMarks)) withClue(s"${g.params}: ") {
+      val dir = java.nio.file.Files.createTempDirectory("stats-healthy").toString
+      mixedLedger(dir, healthyMarks(40000, g), g)
+      val st = IndexStore.armStats(dir, s"marks-hist-${g.params}")
+        .getOrElse(fail("rebuild of a corpus-scale store must stamp arm stats"))
+      assert(st.slack == 0L, "a fresh rebuild's stats carry no slack")
+      assert(st.rows == 40000L * g.bands,
+        s"stats rows must equal banded rows, got ${st.rows}")
+      assert(st.maxBound <= graft.ops.DedupOps.BAND_CAP,
+        "40k random fingerprints over the bands must stay under the floor")
 
-    val snap = IndexStore.snapshot(dir)
-    // batch: 100 copies of stored marks + 400 novels
-    val batch = spark.range(0, 500, 1, 4)
-      .select((col("id") + 1000000L).as("media_id"),
-        expr(s"""CASE WHEN id < 100 THEN
-          |array(cast(conv(substring(md5(cast(id as string)), 1, 11), 16, 10)
-          |      as bigint) & $mask42)
-          |ELSE array(cast(conv(substring(md5(concat(id, '|novel')), 1, 11),
-          |      16, 10) as bigint) & $mask42) END""".stripMargin).as("fp"))
-      .localCheckpoint()
-    // the uncapped (None) baseline pays only the saturation
-    // sentinel's footer count (declared reads construct from the
-    // manifest's file statuses, with no listing job); the DEFAULT path
-    // must plan with no more jobs — the ladder's histogram/occupancy
-    // measurements all elided by the persisted stats
-    DedupLedger.clearShedMemos()
-    val (verdictDefault, jobs) = countJobs {
-      DedupLedger.verdict(Media(geom), spark, batch, dir, snap)
+      val snap = IndexStore.snapshot(dir)
+      // batch: 100 copies of stored marks + 400 novels
+      val batch = spark.range(0, 500, 1, 4)
+        .select((col("id") + 1000000L).as("media_id"),
+          expr(s"CASE WHEN id < 100 THEN ${fpOf("cast(id as string)", g)} " +
+            s"ELSE ${fpOf("concat(id, '|novel')", g)} END").as("fp"))
+        .localCheckpoint()
+      // the uncapped (None) baseline pays only the saturation
+      // sentinel's footer count (declared reads construct from the
+      // manifest's file statuses, with no listing job); the DEFAULT path
+      // must plan with no more jobs — the ladder's histogram/occupancy
+      // measurements all elided by the persisted stats
+      DedupLedger.clearShedMemos()
+      val (verdictDefault, jobs) = countJobs {
+        DedupLedger.verdict(Media(g), spark, batch, dir, snap)
+      }
+      DedupLedger.clearShedMemos()
+      val (verdictNone, jobsNone) = countJobs {
+        DedupLedger.verdict(Media(g), spark, batch, dir, snap,
+          pairBudgetPerItem = None)
+      }
+      // DEFAULT runs FIRST (cold frame memo), so <= proves the ladder
+      // added nothing: in practice it plans CHEAPER than None, which
+      // pays the saturation sentinel's footer count
+      assert(jobs <= jobsNone,
+        s"a healthy stats-carrying store must plan the default verdict with " +
+        s"no auxiliary jobs beyond the uncapped path's ($jobsNone), ran $jobs")
+      val got = verdictDefault.collect().map(r =>
+        (r.getLong(0), r.isNullAt(1), r.isNullAt(2), r.getLong(3))).toSeq
+      val want = verdictNone.collect().map(r =>
+        (r.getLong(0), r.isNullAt(1), r.isNullAt(2), r.getLong(3))).toSeq
+      assert(got == want, "stats fast path changed the verdict vs uncapped")
+      assert(got.count(_._4 == 0L) == 100, "the 100 exact copies must drop")
+
+      // the seqs arm at the same geometry: 2000 four-frame videos, then a
+      // batch of 10 re-uploads, 20 near copies (one frame two bits off)
+      // and 20 novels
+      val seqDir = java.nio.file.Files.createTempDirectory("stats-healthy-seqs")
+        .toString
+      def frames(n: Long) = spark.range(0, n, 1, 4)
+        .select(col("id"), explode(sequence(lit(0L), lit(3L))).as("f"))
+      val frameFp = fpOf("concat(id, '|', f)", g)
+      DedupLedger.append(Video(g), frames(2000).select(col("id").as("media_id"),
+        col("f"), expr(frameFp).as("fp")), seqDir, tag = "seed")
+      val seqBatch = frames(50)
+        .select((col("id") + 1000000L).as("media_id"), col("f"),
+          expr(s"""CASE WHEN id < 10 THEN $frameFp
+            |WHEN id < 30 AND f = id % 4 THEN
+            |  transform($frameFp, (w, i) -> IF(i = 0, w ^ 3L, w))
+            |WHEN id < 30 THEN $frameFp
+            |ELSE ${fpOf("concat(id, '|novel|', f)", g)} END""".stripMargin)
+            .as("fp"))
+        .localCheckpoint()
+      def seqVerdict(budget: Option[Option[Int]]) = {
+        DedupLedger.clearShedMemos()
+        val snapS = IndexStore.snapshot(seqDir)
+        budget.fold(DedupLedger.verdict(Video(g), spark, seqBatch, seqDir, snapS))(
+          b => DedupLedger.verdict(Video(g), spark, seqBatch, seqDir, snapS,
+            pairBudgetPerItem = b))
+          .collect().map(r => (r.getLong(0), r.getLong(3))).toSeq.sorted
+      }
+      val seqDefault = seqVerdict(None)
+      assert(seqDefault == seqVerdict(Some(None)),
+        "the default seqs verdict changed the keeps vs uncapped")
+      assert(seqDefault.count(_._2 == 1L) == 20,
+        s"re-uploads and near copies must drop, novels stay: $seqDefault")
     }
-    DedupLedger.clearShedMemos()
-    val (verdictNone, jobsNone) = countJobs {
-      DedupLedger.verdict(Media(geom), spark, batch, dir, snap,
-        pairBudgetPerItem = None)
-    }
-    // DEFAULT runs FIRST (cold frame memo), so <= proves the ladder
-    // added nothing: in practice it plans CHEAPER than None, which
-    // pays the saturation sentinel's footer count
-    assert(jobs <= jobsNone,
-      s"a healthy stats-carrying store must plan the default verdict with " +
-      s"no auxiliary jobs beyond the uncapped path's ($jobsNone), ran $jobs")
-    val got = verdictDefault.collect().map(r =>
-      (r.getLong(0), r.isNullAt(1), r.isNullAt(2), r.getLong(3))).toSeq
-    val want = verdictNone.collect().map(r =>
-      (r.getLong(0), r.isNullAt(1), r.isNullAt(2), r.getLong(3))).toSeq
-    assert(got == want, "stats fast path changed the verdict vs uncapped")
-    assert(got.count(_._4 == 0L) == 100, "the 100 exact copies must drop")
   }
 
   test("every built store carries exact stats whatever its size: a 64-doc " +

@@ -84,7 +84,7 @@ class RetrainSpec extends SparkSpec {
     assert(codes.select($"vec_id").distinct().count() == 700 &&
       codes.count() == 700, "refine lost or duplicated code rows")
     assert(vecs.count() == 700, "refine lost or duplicated vector rows")
-    // the router gained the split cells (net: -1 drifted +splitFactor)
+    // the router gained the split cells (net: -1 drifted +SPLIT_FACTOR)
     val coarseAfter = spark.read.parquet(s"$dir2/coarse")
     assert(coarseAfter.count() > coarseBefore - split.size,
       "refine must add sub-centroids for the split cells")
