@@ -55,36 +55,6 @@ object GenFixtures {
     "spark", "stream", "table", "the", "value", "vector", "window")
   private val Langs       = Array("zh", "es", "fr", "de")
 
-  /** TAILED corpus shape: a ~20k-word synthetic vocabulary instead of the
-    * 31-word one. With 50k docs the trigram space stays sparse — planted
-    * dup pairs share df=2 shingles while background trigrams are df=1 —
-    * so the rare-tail diagnostic reads retained > 0 and the q122 router
-    * must take the INDEX branch (the GenFixtures default corpus at sf1 is
-    * the opposite regime: no tail, minhash branch). Words are 6
-    * deterministic lowercase letters from the mixed index (26^6 >> 20k,
-    * so indices are effectively collision-free).
-    */
-  private val TailVocabSize = 20000
-  private def tailWord(i: Int): String = {
-    var h = mix(SEED ^ 0x7a11000000000000L ^ i.toLong)
-    val sb = new StringBuilder
-    var k = 0
-    while (k < 6) {
-      sb.append(('a' + java.lang.Long.remainderUnsigned(h, 26).toInt).toChar)
-      h = mix(h); k += 1
-    }
-    sb.toString
-  }
-
-  /** One vocab draw — `vocabSize` only changes WHICH vocabulary the
-    * single nextInt indexes, so the default stream (vocabSize = 0, the
-    * 31-word Vocab — and hence the committed sf1 fixture bytes) is
-    * untouched, and the tailed shape (vocabSize = TailVocabSize) keeps
-    * its exact draw sequence from when it was a boolean flag.
-    */
-  private def drawWord(vocabSize: Int, rng: java.util.Random): String =
-    if (vocabSize > 0) tailWord(rng.nextInt(vocabSize))
-    else Vocab(rng.nextInt(Vocab.length))
   private val PNearDup    = 0.045  // rows that are a 1-token mutation of an earlier doc
   private val PExactDup   = 0.0016 // rows that are a byte-exact copy of an earlier doc
   private val PEnglish    = 0.412
@@ -100,14 +70,14 @@ object GenFixtures {
     * 31-word vocab, token count uniform in [10,100] like the sf0.1
     * corpus). Dup rows never call this with their own id.
     */
-  private def baseText(id: Long, vocabSize: Int = 0): String = {
+  private def baseText(id: Long): String = {
     val rng = rngFor(id, 2)
     val n = 10 + rng.nextInt(91)
     val sb = new StringBuilder
     var i = 0
     while (i < n) {
       if (i > 0) sb.append(' ')
-      sb.append(drawWord(vocabSize, rng))
+      sb.append(Vocab(rng.nextInt(Vocab.length)))
       i += 1
     }
     sb.toString
@@ -124,27 +94,20 @@ object GenFixtures {
     p
   }
 
-  private def docText(id: Long, vocabSize: Int = 0): String = role(id) match {
-    case 0 => baseText(id, vocabSize)
-    case 2 => baseText(partner(id), vocabSize)
+  private def docText(id: Long): String = role(id) match {
+    case 0 => baseText(id)
+    case 2 => baseText(partner(id))
     case _ => // near-dup: replace one token (bigram-Jaccard ~0.98)
-      val toks = baseText(partner(id), vocabSize).split(' ')
+      val toks = baseText(partner(id)).split(' ')
       val rng = rngFor(id, 4)
-      toks(rng.nextInt(toks.length)) = drawWord(vocabSize, rng)
+      toks(rng.nextInt(toks.length)) = Vocab(rng.nextInt(Vocab.length))
       toks.mkString(" ")
   }
 
-  /** vocabSize = 0 -> the 31-word measured Vocab (the collapsed shape);
-    * vocabSize = TailVocabSize -> the tailed shape; anything between is
-    * a MID-DIVERSITY shape (the q122 routing gray band's subject: small
-    * vocabularies leave only a sliver of rare trigrams, and a router
-    * that trusts a raw nonzero count picks an index that can't see most
-    * of the corpus).
-    */
-  def documents(spark: SparkSession, n: Long, vocabSize: Int = 0): DataFrame = {
+  def documents(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     spark.range(0, n, 1, 32).map { id =>
-      val text = docText(id, vocabSize)
+      val text = docText(id)
       // BpeOps preconditions, asserted at generation time (round-12
       // ADVICE): the wrapped-symbol BPE machinery reserves U+0001/U+0002
       // as symbol delimiters and "</w>" as the end-of-word marker — a
@@ -345,22 +308,6 @@ object GenFixtures {
     // tools/fix_events_ns.py if the sweep needs NANOS physical type.
     if (args.length > 2 && args(2) == "events") {
       write(events(spark, 100000L * mult, 1500L * mult), "events")
-      spark.stop()
-      return
-    }
-
-    // `GenFixtures <dir> <mult> tailed` — the TAILED corpus shape (20k
-    // vocabulary: rare shingle tail survives at scale); `... mid [V]` —
-    // a MID-DIVERSITY shape (default vocab 100 — measured to sit in the
-    // q122 routing gray band at 50k docs: witness ratio 0.62, between
-    // the 5% and 75% thresholds; SCALING.md "Round-8/9"). Both emit
-    // documents only: these fixtures exist to exercise the q122 router
-    // across corpus regimes, not to bench the TPC-H families.
-    if (args.length > 2 && (args(2) == "tailed" || args(2) == "mid")) {
-      val vocab =
-        if (args(2) == "tailed") TailVocabSize
-        else if (args.length > 3) args(3).toInt else 100
-      write(documents(spark, 5000L * mult, vocab), "documents")
       spark.stop()
       return
     }

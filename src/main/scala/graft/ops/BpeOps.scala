@@ -361,27 +361,21 @@ object BpeOps {
     * 12-round loop per query. Values are the exact collected rows, so
     * hashes are unaffected; a regenerated fixture invalidates by
     * fingerprint. */
-  private val mergesCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[(Long, String, String, Long, String)])]()
+  private[graft] val mergesCache =
+    new DriverCache[String, Seq[(Long, String, String, Long, String)]](64)
   private[graft] def trainedMerges(s: SparkSession, d: String,
                                  historyOnly: Boolean = false)
-      : Seq[(Long, String, String, Long, String)] = {
-    val fp = Fingerprint.of(d, "documents.parquet")
-    val key = s"$d|hist=$historyOnly"
-    val cached = mergesCache.get(key)
-    if (cached != null && cached._1 == fp) cached._2
-    else {
+      : Seq[(Long, String, String, Long, String)] =
+    mergesCache.stamped(s"$d|hist=$historyOnly",
+        Fingerprint.of(d, "documents.parquet")) {
       val docs = Tables.documents(s, d)
       val src =
         if (!historyOnly) docs
         else docs.filter(col("doc_id") < DedupLedger.cutoffOf(docs))
-      val m = bpeTrain(src).collect()
+      bpeTrain(src).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getLong(3), r.getString(4))).toSeq
-      mergesCache.put(key, (fp, m))
-      m
     }
-  }
 
   /** Versioned TOKENIZER REGISTRY — the third persisted-artifact
     * lifecycle beside the dedup ledger and the ANN index, on the same

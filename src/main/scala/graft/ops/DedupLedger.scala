@@ -322,8 +322,6 @@ object DedupLedger {
     * for the escalated stats write — enough for a delta commit to
     * clear, far less than a compaction (ADVICE r18 #2). */
   private val ESCALATE_WAIT_MS = 5000L
-  private val healSkips =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private def shedUnlessAffordable(lb: DataFrame, keys: Seq[String],
                                    perItem: Int, bandedRows: Long,
                                    batchBands: DataFrame,
@@ -358,7 +356,8 @@ object DedupLedger {
         return (lb, batchBands)
       case _ => ()
     }
-    val hist = memoizedHist(dir, version, what) {
+    val memoKey = s"${IndexStore.storeId(dir)}:$what"
+    val hist = histCache.stamped(memoKey, version) {
       ScaleOps.boundedCollect(
         lb.groupBy(keys.map(col): _*).agg(count(lit(1)).as("sz"))
           .groupBy(col("sz")).agg(count(lit(1)).as("n")),
@@ -382,9 +381,8 @@ object DedupLedger {
             hist))
           true
         } else false
-      val healKey = s"${IndexStore.storeId(dir)}:$what"
       val wrote = IndexStore.tryWithWriterLock(dir)(writeIfCurrent())
-      if (wrote.contains(true)) healSkips.remove(healKey)
+      if (wrote.contains(true)) healSkips.update(memoKey)(_ => None)
       else {
         // ESCALATION (VERDICT r17 #4): N consecutive verdicts failed
         // the opportunistic write — a persistently contended lock
@@ -401,19 +399,16 @@ object DedupLedger {
         // live and will persist stats itself. Either way the read path
         // degrades back to opportunistic heals instead of re-blocking
         // on every verdict.
-        val n = healSkips.merge(healKey, 1,
-          (a: Integer, b: Integer) => Integer.valueOf(a + b)).intValue
+        val n = healSkips.update(memoKey)(n => Some(n.getOrElse(0) + 1)).get
         if (n >= HEAL_ESCALATE_AFTER) {
           log.warn(s"DedupLedger: $what self-heal skipped $n consecutive " +
             s"times on $dir — escalating to a bounded blocking stats " +
             s"write (≤$ESCALATE_WAIT_MS ms)")
           IndexStore.timedWithWriterLock(dir, ESCALATE_WAIT_MS)(
             writeIfCurrent())
-          healSkips.remove(healKey)
-          ()
+          healSkips.update(memoKey)(_ => None)
         }
       }
-      boundCache(healSkips)
     }
     if (hist.forall(_._1 <= DedupOps.BAND_CAP)) return (lb, batchBands)
     val bb = batchBands.localCheckpoint()
@@ -445,20 +440,16 @@ object DedupLedger {
     * store's DURABLE identity ([[IndexStore.storeId]] — a store
     * deleted and rebuilt at the same path gets a fresh UUID, closing
     * the round-15 stale-alias caveat) plus the table name, holding
-    * ONLY the latest version's value — bounded by the number of live
-    * stores in the JVM (a long-lived streaming service publishes
-    * versions per tick; keying on version would grow forever), and
-    * snapshots are immutable so a version hit is exact. Computation
-    * runs OUTSIDE any map lock (a racy duplicate compute is idempotent
-    * and cheaper than serializing verdicts of unrelated stores through
-    * one bin lock). */
-  // crude but absolute size bound for both memo maps: a long-lived
-  // service creating stores per tick would otherwise accumulate dead
-  // entries forever (round-16 review find); a rare full clear costs one
-  // recompute per live store, never correctness (snapshots immutable)
-  private val MEMO_MAX = 4096
-  private def boundCache(m: java.util.concurrent.ConcurrentHashMap[_, _]): Unit =
-    if (m.size > MEMO_MAX) m.clear()
+    * ONLY the latest version's value: the snapshot version is the
+    * [[DriverCache.stamped]] stamp (a long-lived streaming service
+    * publishes versions per tick; keying on version would grow
+    * forever), and snapshots are immutable so a version hit is exact.
+    * `healSkips` counts consecutive skipped self-heals per store arm
+    * under the same key. */
+  private[graft] val sentinelCache = new DriverCache[String, Long](4096)
+  private[graft] val histCache =
+    new DriverCache[String, Array[(Int, Long)]](4096)
+  private[graft] val healSkips = new DriverCache[String, Int](4096)
   /** Spec hook: drop every per-store memo so a measurement can
     * observe the COLD path (first verdict against a fresh version)
     * repeatedly without rebuilding the store. Never called by
@@ -589,35 +580,6 @@ object DedupLedger {
       rs.foreach { r => n(r) = n.getOrElse(r, 0L) + 1L; rows += 1L }
       Iterator((if (n.isEmpty) 0L else n.values.max, rows))
     }.collect().foldLeft((0L, 0L)) { case ((d, r), (d1, r1)) => (d + d1, r + r1) }
-
-  private val sentinelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Long)]()
-  private def memoizedCount(dir: String, version: Int, what: String)
-                           (compute: => Long): Long = {
-    val key = s"${IndexStore.storeId(dir)}:$what"
-    Option(sentinelCache.get(key)) match {
-      case Some((v, n)) if v == version => n
-      case _ =>
-        val n = compute
-        boundCache(sentinelCache)
-        sentinelCache.put(key, (version, n))
-        n
-    }
-  }
-  private val histCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Array[(Int, Long)])]()
-  private def memoizedHist(dir: String, version: Int, what: String)
-                          (compute: => Array[(Int, Long)]): Array[(Int, Long)] = {
-    val key = s"${IndexStore.storeId(dir)}:$what"
-    Option(histCache.get(key)) match {
-      case Some((v, h)) if v == version => h
-      case _ =>
-        val h = compute
-        boundCache(histCache)
-        histCache.put(key, (version, h))
-        h
-    }
-  }
 
   /** Fail BY NAME when a verdict arm would read a modality the store
     * never declared (ADVICE r15 #1): an empty-table fallback is
@@ -1179,7 +1141,8 @@ object DedupLedger {
       .filter(_.version >= snap.version) // stale stats prove nothing
     // band rows = table rows × bands: every row lands in one bucket per band
     lazy val tableRows = persisted.map(_.rows / arm.bands).getOrElse(
-      memoizedCount(dir, snap.version, arm.table)(sd.table.count()))
+      sentinelCache.stamped(s"${IndexStore.storeId(dir)}:${arm.table}",
+        snap.version)(sd.table.count()))
     arm.sentinel(tableRows, batch)
     val (lb, bb) = pairBudgetPerItem match {
       case None => (sd.ledgerBands, sd.batchBands)

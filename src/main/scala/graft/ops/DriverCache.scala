@@ -1,30 +1,68 @@
 package graft.ops
 
-/** Bounded driver-side artifact memo (VERDICT r18 Next #3): the ANN
-  * serve path keeps per-store artifacts on the driver — k×dim centroid
-  * sets, PQ codebooks, snapshot-keyed serve frames, fixture query rows
-  * — which the previous `ConcurrentHashMap`s grew one entry per store
-  * directory FOREVER: gate zones mint a fresh dir per execution, so a
-  * long-lived tailer serving many stores leaked without bound.
+/** The one memo policy for driver-side state. A long-lived driver (a
+  * streaming tailer, a serve loop) outlives every store, fixture and
+  * session it touches, so each memo it keeps must be bounded and must
+  * never serve a stale value. Every driver memo is one of these:
   *
-  * This is an access-order `LinkedHashMap` under its own monitor,
-  * evicting least-recently-used past `max`. Eviction is always safe:
-  * every consumer treats a miss as "recompute and re-insert" with
-  * values derived deterministically from fingerprinted on-disk state,
-  * so a bound can only cost a recompute, never change a result (zero
-  * hash changes — DriverCacheSpec churns 1,000 stores through a cache
-  * and pins both the bound and value fidelity). Driver-side only and
-  * low-traffic (a handful of ops per serve CALL, not per row), so one
-  * monitor is cheaper than lock-striping.
+  *  - key → (stamp, value). [[stamped]] returns the value when the
+  *    stored stamp equals the caller's (`==`) and otherwise runs
+  *    `compute` and replaces the entry in place. The stamp is whatever
+  *    proves the value current: a source fingerprint (fitted cents,
+  *    BPE merges, fixture query rows, store metadata), a snapshot
+  *    signature (serve frames) or a snapshot version (ledger sentinel
+  *    counts and histograms). Unstamped memos ([[getOrCompute]]) hold
+  *    values that cannot go stale under their key: a part file's
+  *    status, a frame keyed by its fileset, a store's IO handle.
+  *  - `compute` runs OUTSIDE the monitor, so a slow recompute never
+  *    serializes lookups of other keys; two racing misses both compute
+  *    and the later write wins, which is harmless because values are
+  *    derived deterministically from the stamped state.
+  *  - An access-order `LinkedHashMap` under its own monitor evicts the
+  *    least-recently-used entry past `max`. A miss costs a recompute,
+  *    never a different result (DriverCacheSpec churns 1,000 keys
+  *    through a cache, and pins the stamp semantics and every driver
+  *    memo's bound).
+  *  - [[update]] is the one read-modify-write, atomic under the
+  *    monitor, for counters that must not lose an increment.
+  *
+  * Driver-side and low-traffic (a handful of lookups per serve, verdict
+  * or read, never per row), so one monitor is cheaper than striping.
+  * Locks and put-if-absent registers are synchronization and safety
+  * state, not memos: they never live here.
   */
 private[graft] final class DriverCache[K, V](val max: Int) {
   require(max > 0, "DriverCache bound must be positive")
-  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-      size() > max
+  import DriverCache.Entry
+  private val m = new java.util.LinkedHashMap[K, Entry[V]](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, Entry[V]]): Boolean =
+      this.size() > max
   }
-  def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
-  def put(k: K, v: V): Unit = m.synchronized { m.put(k, v); () }
+
+  def stamped(k: K, stamp: Any)(compute: => V): V =
+    m.synchronized(Option(m.get(k))) match {
+      case Some(e) if e.stamp == stamp => e.value
+      case _ =>
+        val v = compute
+        m.synchronized(m.put(k, Entry(stamp, v)))
+        v
+    }
+  def getOrCompute(k: K)(compute: => V): V = stamped(k, ())(compute)
+  /** Replace (`Some`) or drop (`None`) the entry from its current value
+    * in one step under the monitor. */
+  def update(k: K)(f: Option[V] => Option[V]): Option[V] = m.synchronized {
+    val next = f(Option(m.get(k)).map(_.value))
+    next match {
+      case Some(v) => m.put(k, Entry((), v))
+      case None => m.remove(k)
+    }
+    next
+  }
+  def get(k: K): Option[V] = m.synchronized(Option(m.get(k)).map(_.value))
   def size: Int = m.synchronized(m.size())
   private[graft] def clear(): Unit = m.synchronized { m.clear() }
+}
+
+private object DriverCache {
+  private final case class Entry[V](stamp: Any, value: V)
 }

@@ -33,7 +33,8 @@ object ScaleOps {
     *     one row per distinct `kind` — the stream schema admits 3.
     *   - shard prefix-sum subtotals (`PipelineOps`): one row per
     *     partition (`numPartitions`).
-    *   - sentinel counts / drift ratios (`DedupLedger.memoizedCount`,
+    *   - sentinel counts / drift ratios (the table count
+    *     `DedupLedger.sentinelCache` memoizes,
     *     `VectorOps.appendedDriftRatio`): single aggregate rows.
     *   - `SqliteWriter`: `toLocalIterator` — streams one partition at a
     *     time; driver live-set is one row (the sink is inherently

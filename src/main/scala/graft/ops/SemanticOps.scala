@@ -88,7 +88,7 @@ object SemanticOps {
                     probes: Int = 1): DataFrame = {
     val quant = emb.withColumn("q", expr(VectorOps.quantExpr))
       .select(col("vec_id"), col("q"))
-    val cents = fitted.getOrElse(VectorOps.kmeansFit(quant, k, iters, None))
+    val cents = fitted.getOrElse(VectorOps.kmeansFit(quant, k, iters))
     // (vec_id, q, cell, dist): dist = exact-int numerator / n² to the
     // ASSIGNED centroid — the keep policy's ranking key, computed once
     // here and never re-derived
@@ -146,7 +146,7 @@ object SemanticOps {
     val quant = emb.withColumn("q", expr(VectorOps.quantExpr))
       .select(col("vec_id"), col("q"))
     val assigned = VectorOps.kmeansAssign(quant,
-      fitted.getOrElse(VectorOps.kmeansFit(quant, k, iters, None)))
+      fitted.getOrElse(VectorOps.kmeansFit(quant, k, iters)))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cell"))
       .orderBy(col("h"), col("vec_id"))

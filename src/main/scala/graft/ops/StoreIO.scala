@@ -364,9 +364,8 @@ private[graft] object StoreIO {
   private object HadoopStoreIO {
     /** The conditional-put register for object-store schemes (see
       * [[IndexStore.CommitPrimitive.SimulatedPutIfAbsent]] — same
-      * semantics, same spec hook). */
+      * semantics; it lives for the JVM). */
     private val putRegister =
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    private[graft] def resetRegister(): Unit = putRegister.clear()
   }
 }

@@ -283,7 +283,7 @@ object VectorOps {
       checkpointDir) // shared by init + every assignment pass + serve
     val assigned =
       kmeansAssign(quant,
-        fitted.getOrElse(kmeansFit(quant, k, iters, checkpointDir)))
+        fitted.getOrElse(kmeansFit(quant, k, iters)))
         .withColumn("norm", ldot(col("q"), col("q")))
         .select(col("vec_id"), col("cell"), col("q"), col("norm"))
     val queriesDf = assigned.filter(col("vec_id") < numQueries)
@@ -532,24 +532,18 @@ object VectorOps {
     * unaffected; a regenerated fixture invalidates by fingerprint.
     */
   private[graft] val centsCache =
-    new DriverCache[String, (String, Array[(Int, Array[Long], Long)])](64)
+    new DriverCache[String, Array[(Int, Array[Long], Long)]](64)
   private[ops] def fittedCents(spark: SparkSession, d: String,
                                k: Int, iters: Int): DataFrame = {
-    val fp = Fingerprint.of(d, "embeddings.parquet")
-    val key = s"$d|k=$k|it=$iters"
-    val cached = centsCache.get(key).orNull
-    val rows =
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        val quant = Tables.rebalance(Tables.embeddings(spark, d))
-          .withColumn("q", expr(quantExpr))
-          .select(col("vec_id"), col("q"))
-        val r = kmeansFit(quant, k, iters, None)
-          .select(col("cell"), col("s"), col("n")).collect()
-          .map(x => (x.getInt(0), x.getSeq[Long](1).toArray, x.getLong(2)))
-        centsCache.put(key, (fp, r))
-        r
-      }
+    val rows = centsCache.stamped(s"$d|k=$k|it=$iters",
+        Fingerprint.of(d, "embeddings.parquet")) {
+      val quant = Tables.rebalance(Tables.embeddings(spark, d))
+        .withColumn("q", expr(quantExpr))
+        .select(col("vec_id"), col("q"))
+      kmeansFit(quant, k, iters)
+        .select(col("cell"), col("s"), col("n")).collect()
+        .map(x => (x.getInt(0), x.getSeq[Long](1).toArray, x.getLong(2)))
+    }
     import spark.implicits._
     rows.toSeq.toDF("cell", "s", "n")
   }
@@ -571,18 +565,18 @@ object VectorOps {
     * lineage pinned so the plan doesn't nest. Exactness envelope per
     * round is q124's (~19k members/cell for the int64 numerator).
     */
-  private[graft] def kmeansFit(quant: DataFrame, k: Int, iters: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
-    // `checkpointDir` is kept for API stability but per-round lineage
-    // pinning is obsolete: each round's centroids COLLECT to the driver
-    // (k bounded rows) and re-enter the next round as a literal, so the
-    // plan never nests — a round is exactly ONE distributed job (the
-    // k×dim partial-sum update over the row-local assignment), and an
-    // executor loss recomputes from the caller-pinned `quant`, not from
-    // a round-deep lineage chain. At iters=8 this deletes 8 corpus
-    // localCheckpoint materializations AND the double evaluation the
-    // old DataFrame-typed loop paid (reseedDead's live-cell collect +
-    // the next assign's broadcast each re-ran the update aggregation).
+  private[graft] def kmeansFit(quant: DataFrame, k: Int,
+                               iters: Int): DataFrame = {
+    // no per-round lineage pinning: each round's centroids COLLECT to
+    // the driver (k bounded rows) and re-enter the next round as a
+    // literal, so the plan never nests — a round is exactly ONE
+    // distributed job (the k×dim partial-sum update over the row-local
+    // assignment), and an executor loss recomputes from the
+    // caller-pinned `quant`, not from a round-deep lineage chain. At
+    // iters=8 this deletes 8 corpus localCheckpoint materializations AND
+    // the double evaluation the old DataFrame-typed loop paid
+    // (reseedDead's live-cell collect + the next assign's broadcast each
+    // re-ran the update aggregation).
     val spark = quant.sparkSession
     import spark.implicits._
     var rows = centRowsOf(kmeansInit(quant, k))
@@ -822,7 +816,7 @@ object VectorOps {
     val quant = quantL.select(col("vec_id"), col("q"))
     // coarse quantizer: IVF_COARSE_ITERS Lloyd updates, final assignment
     // against them (SCALING.md round-11 iters sweep, round-12 knee)
-    val coarse = pin(kmeansFit(quant, k, IVF_COARSE_ITERS, checkpointDir),
+    val coarse = pin(kmeansFit(quant, k, IVF_COARSE_ITERS),
       checkpointDir) // k rows: (cell, s, n)
     val assigned = pin(kmeansAssign(quantL, coarse), checkpointDir)
     val resid = pin(residualsOfAssigned(assigned, coarse), checkpointDir)
@@ -866,8 +860,7 @@ object VectorOps {
       cellGen: Map[Int, Int] = Map.empty,
       genCodebooks: Map[Int, Array[(Int, Int, Array[Long], Long)]] = Map.empty)
 
-  private[graft] val storeMetaCache =
-    new DriverCache[String, (String, IvfPqMeta)](256)
+  private[graft] val storeMetaCache = new DriverCache[String, IvfPqMeta](256)
 
   /** Load (and cache) a store's coarse cells + codebook on the driver.
     * Invalidation keys on the (path, length, mtime) set of the two
@@ -880,9 +873,7 @@ object VectorOps {
                                indexDir: String): IvfPqMeta = {
     val fp = Seq("coarse", "codebook", "codebook2")
       .map(Fingerprint.of(indexDir, _)).mkString("|")
-    val cached = storeMetaCache.get(indexDir).orNull
-    if (cached != null && cached._1 == fp) cached._2
-    else {
+    storeMetaCache.stamped(indexDir, fp) {
       val coarseDf = spark.read.parquet(s"$indexDir/coarse")
       val cells = coarseDf
         .select(col("cell"), col("s"), col("n")).collect()
@@ -900,9 +891,7 @@ object VectorOps {
           .map(r => (r.getInt(0), (r.getInt(1), r.getInt(2),
             r.getSeq[Long](3).toArray, r.getLong(4))))
           .groupBy(_._1).map { case (g, rs) => g -> rs.map(_._2) }
-      val m = IvfPqMeta(cells, cbRows, gens, genCbs)
-      storeMetaCache.put(indexDir, (fp, m))
-      m
+      IvfPqMeta(cells, cbRows, gens, genCbs)
     }
   }
 
@@ -1161,21 +1150,16 @@ object VectorOps {
     * tombstones participate because they change frame content at the
     * same data-file set. */
   private[graft] val storeFramesCache =
-    new DriverCache[String, (Long, DataFrame, DataFrame)](256)
+    new DriverCache[String, (DataFrame, DataFrame)](256)
   private def storeFrames(spark: SparkSession,
                           indexDir: String): (DataFrame, DataFrame) = {
     val snap = IndexStore.snapshot(indexDir)
     val sig = (snap.version.toLong << 32) ^
       scala.util.hashing.MurmurHash3.orderedHash(
         snap.codes ++ snap.vectors ++ snap.tombs).toLong
-    val key = s"${org.apache.spark.sql.graftshim.Shim.sessionId(spark)}|$indexDir"
-    val cached = storeFramesCache.get(key).orNull
-    if (cached != null && cached._1 == sig) (cached._2, cached._3)
-    else {
-      val (codes, vecs) = IndexStore.frames(spark, indexDir, snap)
-      storeFramesCache.put(key, (sig, codes, vecs))
-      (codes, vecs)
-    }
+    storeFramesCache.stamped(
+        s"${org.apache.spark.sql.graftshim.Shim.sessionId(spark)}|$indexDir",
+        sig)(IndexStore.frames(spark, indexDir, snap))
   }
 
   /** Query vectors for the catalog's stored-serve entries, cached on
@@ -1185,22 +1169,17 @@ object VectorOps {
     * real server; here the fixture plays that role).
     */
   private[graft] val queryRowsCache =
-    new DriverCache[String, (String, Array[(Long, Array[Long])])](64)
+    new DriverCache[String, Array[(Long, Array[Long])]](64)
   private[graft] def cachedQueryRows(spark: SparkSession, d: String,
       numQueries: Int): Array[(Long, Array[Long])] = {
     requireHeldOut(numQueries)
-    val fp = Fingerprint.of(d, "embeddings.parquet")
-    val key = s"$d|$numQueries"
-    val cached = queryRowsCache.get(key).orNull
-    if (cached != null && cached._1 == fp) cached._2
-    else {
-      val rows = Tables.embeddings(spark, d)
+    queryRowsCache.stamped(s"$d|$numQueries",
+        Fingerprint.of(d, "embeddings.parquet")) {
+      Tables.embeddings(spark, d)
         .withColumn("q", expr(quantExpr))
         .filter(col("vec_id") < numQueries)
         .select(col("vec_id"), col("q")).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
-      queryRowsCache.put(key, (fp, rows))
-      rows
     }
   }
 

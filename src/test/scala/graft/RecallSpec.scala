@@ -241,7 +241,7 @@ class RecallSpec extends SparkSpec {
         .withColumn("q", expr(VectorOps.quantExpr))
         .select(col("vec_id"), col("q")).localCheckpoint()
       val cents = VectorOps.kmeansFit(quant, VectorOps.GATED_K,
-        VectorOps.IVF_COARSE_ITERS, None)
+        VectorOps.IVF_COARSE_ITERS)
       val probed = VectorOps.kmeansAssignTopP(quant, cents, probes)
         .select(col("vec_id"), col("cell")).localCheckpoint()
       val covered = probed.select(col("vec_id").as("v1"), col("cell"))

@@ -321,7 +321,7 @@ class RelationParitySpec extends SparkSpec {
         probes = 2, rerank = 5, topK = 2)
       assert(df.sparkSession eq s)
       val cached = VectorOps.storeFramesCache.get(s"${sessionId(s)}|$idx")
-      assert(cached.exists(_._2.sparkSession eq s),
+      assert(cached.exists(_._1.sparkSession eq s),
         "ANN store frames must be cached under their own session's id")
       // each session plans the serve operator itself
       df.collect().toSeq

@@ -28,7 +28,7 @@ class SemanticOpsSpec extends SparkSpec {
       .select(col("vec_id"), col("q"))
     val assigned = VectorOps.kmeansAssign(quant,
       VectorOps.kmeansFit(quant, VectorOps.GATED_K,
-        VectorOps.IVF_COARSE_ITERS, None))
+        VectorOps.IVF_COARSE_ITERS))
       .withColumn("norm", graft.functions.VectorFunctions.ldot(col("q"), col("q")))
     val a = assigned.select(col("vec_id").as("v1"), col("cell"),
       col("q").as("q1"), col("norm").as("m1"), col("dist").as("d1"))
