@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Runtime kernel for [[LongArrayDot]]: tight primitive loop over the
   * unsafe array data — no per-element lambda dispatch (Spark's
@@ -253,6 +254,48 @@ object IvfKernels {
   }
 }
 
+/** Runtime kernel for [[MinHashSig]]: the MinHash signature of one
+  * doc's shingle array in one pass over its grams, bit-identical to the
+  * `explode` → md5 → `groupBy` formulation the DuckDB oracle replays
+  * (`DedupOps.minhashPairsDuck`):
+  *  - `hv` = the first 15 hex digits of md5(gram's UTF-8 bytes) as a
+  *    long, i.e. the digest's first 8 bytes shifted right by 4;
+  *  - `hm = hv % p`, and seed s keeps min over grams of
+  *    `(hm * (2s + 1) + 7919 * s) % p` (exact: `p` < 2^31, so no term
+  *    overflows);
+  *  - a null gram is skipped, as `min` skips its null hash; a doc with
+  *    no non-null gram has no signature (null).
+  */
+object MinHashKernel {
+  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  def sig(grams: ArrayData, seeds: Int, p: Long): ArrayData = {
+    val md = md5.get()
+    val mins = Array.fill(seeds)(Long.MaxValue)
+    var seen = false
+    var i = 0
+    while (i < grams.numElements()) {
+      if (!grams.isNullAt(i)) {
+        val d = md.digest(grams.getUTF8String(i).getBytes)
+        var hv = 0L
+        var k = 0
+        while (k < 8) { hv = (hv << 8) | (d(k) & 0xffL); k += 1 }
+        val hm = (hv >>> 4) % p
+        var s = 0
+        while (s < seeds) {
+          val m = (hm * (2 * s + 1) + 7919L * s) % p
+          if (m < mins(s)) mins(s) = m
+          s += 1
+        }
+        seen = true
+      }
+      i += 1
+    }
+    if (seen) UnsafeArrayData.fromPrimitiveArray(mins) else null
+  }
+}
+
 /** Nearest rational centroid of an array<bigint> vector:
   * `struct<dist: double, cell: int>` against a foldable
   * (cell, s, n) table — k-means assignment as one static call per row.
@@ -364,6 +407,36 @@ case class AdcFold(left: Expression, right: Expression, m: Int, ksub: Int)
     copy(left = newLeft, right = newRight)
 }
 
+/** The MinHash signature of an `array<string>` shingle column:
+  * `array<bigint>` of `seeds` minima mod `p` ([[MinHashKernel]]), null
+  * for a null or empty array. One row in, one row out: a doc signs in
+  * the projection that shingles it, with no explode, aggregate or
+  * shuffle. */
+case class MinHashSig(child: Expression, seeds: Int, p: Long)
+    extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"minhash grams must be array<string>, not ${t.catalogString}")
+  }
+
+  override def nullSafeEval(grams: Any): Any =
+    MinHashKernel.sig(grams.asInstanceOf[ArrayData], seeds, p)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, g =>
+      s"""${ev.value} = graft.functions.MinHashKernel.sig($g, $seeds, ${p}L);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object VectorFunctions {
   /** Codegen'd exact int64 dot product over quantized vectors. */
   def ldot(a: Column, b: Column): Column = {
@@ -394,5 +467,11 @@ object VectorFunctions {
   def adcFold(codes: Column, dtab: Column, m: Int, ksub: Int): Column = {
     import org.apache.spark.sql.graftshim.Shim.{column, expression}
     column(AdcFold(expression(codes), expression(dtab), m, ksub))
+  }
+
+  /** Codegen'd MinHash signature of a shingle array. */
+  def minhashSig(grams: Column, seeds: Int, p: Long): Column = {
+    import org.apache.spark.sql.graftshim.Shim.{column, expression}
+    column(MinHashSig(expression(grams), seeds, p))
   }
 }

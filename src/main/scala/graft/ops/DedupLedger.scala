@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -87,9 +88,10 @@ object DedupLedger {
 
   /** Per-doc minhash signature: `(cell = doc_id mod 16, doc_id, sig)` —
     * ONE row per doc, `sig` = the [[DedupOps.minhashSignatures]] minima
-    * (the q49 family's own kernel) in seed order. Docs with < 3 tokens
-    * have no shingles and emit no rows (they can only exact-match).
-    * The LSH band keys are NOT stored —
+    * (the q49 family's own kernel) in seed order, signed row-locally.
+    * Docs with < 3 tokens have no shingles and a null `sig`: they can
+    * only exact-match, [[bandsOf]] gives them no band rows and a build
+    * stores no row for them. The LSH band keys are NOT stored —
     * band b's key is just `sig[2b] "|" sig[2b+1]`, fully derivable
     * row-locally at read time ([[bandsOf]]), so persisting band rows
     * would store the signature 6× for zero information (measured: the
@@ -99,39 +101,39 @@ object DedupLedger {
   private[graft] def sigRows(docs: DataFrame): DataFrame =
     DedupOps.minhashSignatures(TextOps.shingled(docs))
       .select(pmod(col("doc_id"), lit(16L)).cast("int").as("cell"),
-              col("doc_id"),
-              array((0 until DedupOps.NUM_SEEDS).map(i => col(s"m$i")): _*).as("sig"))
+              col("doc_id"), col("sig"))
 
   /** Row-local LSH band derivation over a `(doc_id, sig)` frame — used
     * on BOTH sides of the near join (the streamed store scan and the
     * broadcast batch), so the key strings agree by construction. */
-  private def bandsOf(sigs: DataFrame): DataFrame = {
-    import DedupOps.{NUM_SEEDS, ROWS_PER_BAND}
-    val bandStructs = (0 until NUM_SEEDS / ROWS_PER_BAND).map { b =>
-      val ms = (0 until ROWS_PER_BAND)
-        .map(r => s"element_at(sig, ${b * ROWS_PER_BAND + r + 1})")
-      s"named_struct('band', $b, 'bkey', concat_ws('|', ${ms.mkString(", ")}))"
-    }
-    sigs.select(col("doc_id"), col("sig"),
-        explode(expr(s"array(${bandStructs.mkString(", ")})")).as("bs"))
+  private def bandsOf(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), col("sig"), explode(DedupOps.sigBands).as("bs"))
       .select(col("bs.band").as("band"), col("bs.bkey").as("bkey"),
               col("doc_id"), col("sig"))
-  }
 
-  /** A streamed tick's text rows: `(doc_id, h, sig)` for EVERY batch
-    * doc, from one shingle → MinHash pass — `h` the exact key, `sig`
-    * the [[sigRows]] signature (null for a doc under 3 tokens). The
-    * exact arm, the near arm and the delta all read these rows, so the
-    * keepers checkpoint carries both keys and the delta needs no join
-    * back to the batch. */
-  private def tickRows(docs: DataFrame): DataFrame =
-    DedupOps.minhashSignaturesOuter(
-        TextOps.shingled(docs.withColumn("h", sha2(col("text"), 256)), "h"),
-        Seq("doc_id", "h"))
-      .select(col("doc_id"), col("h"),
-        when(col("m0").isNotNull,
-          array((0 until DedupOps.NUM_SEEDS).map(i => col(s"m$i")): _*))
-          .as("sig"))
+  /** A tick's text rows in ONE keyed pass: the batch partitioned by its
+    * exact key `h` (sha2 of the text), then shingled, signed and ranked
+    * inside each partition — `(doc_id, h, sig, rep)` per distinct
+    * `(doc_id, h)`, `sig` the [[sigRows]] signature (null for a doc
+    * under 3 tokens), `rep` true on exactly one row per `h`, its
+    * smallest doc_id. The exact arm, the near arm and the delta all read
+    * these rows, so the keepers checkpoint carries both keys, the delta
+    * needs no join back to the batch, and the exact collapse is a
+    * filter on `rep` ([[Text.collapse]]): the rows of one `h` share a
+    * text, hence a signature and every exact and near hit, so a tick's
+    * keepers hold all of them or none (a doc_id names one text within a
+    * batch). */
+  private def tickRows(docs: DataFrame): DataFrame = {
+    val byH = Window.partitionBy(col("h")).orderBy(col("doc_id").asc_nulls_last)
+    TextOps.gramsOf(docs.select(col("doc_id"), col("text"),
+        sha2(col("text"), 256).as("h")).repartition(col("h")), "h")
+      .select(col("doc_id"), col("h"), DedupOps.minhashSig(col("grams")).as("sig"),
+        (row_number().over(byH) === 1).as("rep"),
+        lag(col("doc_id"), 1).over(byH).as("prev"))
+      // a repeated (doc_id, text) keeps one row
+      .filter(col("rep") || !(col("prev") <=> col("doc_id")))
+      .drop("prev")
+  }
 
   /** The exact table's cell: `h`'s first hex nibble. */
   private val hashCell: Column =
@@ -682,8 +684,10 @@ object DedupLedger {
     *     the batch (a verdict's text arm: the shingle → MinHash
     *     signatures; fingerprint arms: the batch itself);
     *   - the rows a tick's keepers plan and its delta read (`keyed`:
-    *     text carries `h` and `sig` per doc; fingerprint arms: the
-    *     batch) and the exact collapse of the keepers (`collapse`);
+    *     text carries `h`, `sig` and its exact representative per doc;
+    *     fingerprint arms: the batch) and the exact collapse of the
+    *     keepers (`collapse`);
+    *   - a bound on its broadcast bytes per batch row (`rowBytes`);
     *   - its exact key, band derivation and band key columns;
     *   - its near predicate and aggregate, and its near hits;
     *   - its stats key, modality stamp and bootstrap polarity
@@ -716,8 +720,11 @@ object DedupLedger {
       * a pass (the fingerprint arms' batches come checkpointed from
       * [[prepare]]). */
     private[ops] def pinned(batch: DataFrame): DataFrame = batch
-    /** The near-side rows of [[keyed]] rows. */
-    private[ops] def keyedNear(keyed: DataFrame): DataFrame = keyed
+    /** Upper bound on the batch-derived broadcast sides' bytes per batch
+      * row: times a counted batch's rows, it caps the broadcast gate's
+      * plan estimate (a checkpointed in-memory micro-batch has none).
+      * None trusts the plan alone. */
+    private[ops] def rowBytes: Option[Long] = None
     /** Band rows of the band table's rows (both join sides, and stats). */
     private[ops] def banded(rows: DataFrame): DataFrame
     /** The band table as stored at `snap`. */
@@ -738,7 +745,7 @@ object DedupLedger {
     private[ops] def buildRows(history: DataFrame): Seq[(String, DataFrame)]
     /** Keepers ([[keyed]] rows) → one row per distinct exact key,
       * owner = the smallest id: what a delta materializes. */
-    private[ops] def collapse(kept: DataFrame): DataFrame
+    private[graft] def collapse(kept: DataFrame): DataFrame
     /** `(table, rows)` a delta over a materialized [[collapse]] writes. */
     private[ops] def deltaRows(collapsed: DataFrame): Seq[(String, DataFrame)]
     /** Fails a sink whose grid cannot feed this arm's geometry. */
@@ -772,8 +779,11 @@ object DedupLedger {
     private[ops] override def keyed(batch: DataFrame): DataFrame = tickRows(batch)
     private[ops] override def pinned(batch: DataFrame): DataFrame =
       tickRows(batch).localCheckpoint()
-    private[ops] override def keyedNear(keyed: DataFrame): DataFrame =
-      keyed.filter(col("sig").isNotNull)
+    // never the text: the exact side's (bdoc, 64-char h); per band
+    // (band, a two-minhash bkey, bdoc, 12-long bsig); a hit id per
+    // exact and band row
+    private[ops] override val rowBytes: Option[Long] = Some(8L + 64 +
+      bands * (4L + 21 + 8 + 8L * DedupOps.NUM_SEEDS) + 8L * (1 + bands))
     private[ops] def banded(rows: DataFrame): DataFrame = bandsOf(rows)
     private[ops] def tableFrame(spark: SparkSession, dir: String,
                                 snap: IndexStore.Snapshot): DataFrame =
@@ -809,17 +819,25 @@ object DedupLedger {
     private[ops] override def nearHits(cand: DataFrame): DataFrame =
       cand.filter(agree >= SIG_MIN && col("doc_id").isNotNull)
         .select(col("bdoc"))
-    // history stores EVERY doc's signature; a delta stores its exact
-    // representatives' only (an exact-identical text would carry an
-    // identical signature — storing it twice buys nothing): the
+    // history stores EVERY signed doc's signature; a delta stores its
+    // exact representatives' only (an exact-identical text would carry
+    // an identical signature — storing it twice buys nothing): the
     // collapse keeps the representative's own signature (sigRows is
-    // per-doc deterministic; cell = pmod(doc_id, 16))
+    // per-doc deterministic; cell = pmod(doc_id, 16)). Signing keeps
+    // the history's rebalanced partitions, one per core; the signed
+    // rows then rebalance by cell into advisory-size partitions, so the
+    // cell writes and the stats histogram run one task per advisory
+    // size (one hash-aggregation page each), not one per core. The
+    // null-sig filter sits above the checkpoint, where Catalyst cannot
+    // push it (and the signing it would inline) below an exchange.
     private[ops] def buildRows(history: DataFrame): Seq[(String, DataFrame)] =
       Seq("codes" -> exactRows(history),
-          "vectors" -> sigRows(history).localCheckpoint())
-    private[ops] def collapse(kept: DataFrame): DataFrame =
-      kept.groupBy(col("h")).agg(min(col("doc_id")).as("owner"),
-        min_by(col("sig"), col("doc_id")).as("sig"))
+          "vectors" -> sigRows(history).hint("rebalance", col("cell"))
+            .localCheckpoint().filter(col("sig").isNotNull))
+    // the keyed pass marked each h's representative: no shuffle
+    private[graft] def collapse(kept: DataFrame): DataFrame =
+      kept.filter(col("rep"))
+        .select(col("h"), col("doc_id").as("owner"), col("sig"))
     private[ops] def deltaRows(collapsed: DataFrame): Seq[(String, DataFrame)] =
       Seq("codes" -> collapsed.select(hashCell, col("h"), col("owner")),
           "vectors" -> collapsed.filter(col("sig").isNotNull)
@@ -877,7 +895,7 @@ object DedupLedger {
     private[ops] def rowsOf(fps: DataFrame): DataFrame
     private[ops] def buildRows(fps: DataFrame): Seq[(String, DataFrame)] =
       Seq(table -> rowsOf(fps).localCheckpoint())
-    private[ops] def collapse(kept: DataFrame): DataFrame = rowsOf(kept)
+    private[graft] def collapse(kept: DataFrame): DataFrame = rowsOf(kept)
     private[ops] def deltaRows(collapsed: DataFrame): Seq[(String, DataFrame)] =
       Seq(table -> collapsed)
     /** Stream payloads of this arm's kind as media records. */
@@ -1128,11 +1146,17 @@ object DedupLedger {
   private def joinsOf(arm: LedgerArm, spark: SparkSession, batch: DataFrame,
                       rows: DataFrame, near: DataFrame, dir: String,
                       snap: IndexStore.Snapshot, maxBroadcast: Long,
-                      pairBudgetPerItem: Option[Int]): Joins = {
+                      pairBudgetPerItem: Option[Int],
+                      batchRows: Option[Long] = None): Joins = {
     // the gate reads the batch's own plan stats: derived rows (a
-    // checkpoint of an aggregate) may carry no size estimate at all
-    val small = maxBroadcast > 0 &&
-      batch.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBroadcast
+    // checkpoint of an aggregate) may carry no size estimate at all,
+    // and neither does a checkpointed in-memory micro-batch — a caller
+    // that counted the batch caps the estimate at that count times the
+    // arm's broadcast bytes per row
+    val planned = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+    val bound = (for (n <- batchRows; w <- arm.rowBytes) yield BigInt(n) * w)
+      .fold(planned)(_ min planned)
+    val small = maxBroadcast > 0 && bound <= maxBroadcast
     def gate(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     requireModality(dir, filesOf(snap, arm.tables.head), arm.modality,
       arm.legacyAllowed)
@@ -1190,10 +1214,11 @@ object DedupLedger {
                                snap: IndexStore.Snapshot,
                                maxBroadcast: Long = 256L << 20,
                                pairBudgetPerItem: Option[Int] =
-                                 DedupOps.DEFAULT_PAIR_BUDGET): DataFrame = {
+                                 DedupOps.DEFAULT_PAIR_BUDGET,
+                               batchRows: Option[Long] = None): DataFrame = {
     val keyed = arm.pinned(batch)
-    val j = joinsOf(arm, spark, batch, keyed, arm.keyedNear(keyed), dir, snap,
-      maxBroadcast, pairBudgetPerItem)
+    val j = joinsOf(arm, spark, batch, keyed, keyed, dir, snap,
+      maxBroadcast, pairBudgetPerItem, batchRows)
     val hits = j.exact.filter(col("owner").isNotNull).select(col(arm.bid))
       .union(arm.nearHits(j.cand))
     keyed.join(j.gate(hits.withColumnRenamed(arm.bid, arm.idCol)),
@@ -1247,11 +1272,14 @@ object DedupLedger {
     * → MinHash pass, carrying `h` and `sig`), exact-collapsed and
     * materialized in ONE checkpoint, and the commit that appends them
     * under `tag`. A mixed tick stages every arm against ONE pre-tick
-    * snapshot in parallel, then runs the commits in a fixed order. */
+    * snapshot in parallel, then runs the commits in a fixed order.
+    * `batchRows` (at least the batch's row count) caps the broadcast
+    * gate's size estimate ([[LedgerArm.rowBytes]]). */
   private[graft] def stage(arm: LedgerArm, batch: DataFrame, dir: String,
-                           snap: IndexStore.Snapshot, tag: String): () => Int = {
+                           snap: IndexStore.Snapshot, tag: String,
+                           batchRows: Option[Long] = None): () => Int = {
     val delta = arm.collapse(keepersOf(arm, batch.sparkSession, batch, dir,
-      snap)).localCheckpoint()
+      snap, batchRows = batchRows)).localCheckpoint()
     () => IndexStore.commitDelta(dir, Some(tag))(writeDelta(arm, delta, dir))
   }
 

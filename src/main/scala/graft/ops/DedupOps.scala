@@ -14,8 +14,8 @@ import graft.functions.VectorFunctions.ldot
   * correctness check covers the WHOLE pipeline (signatures, banding,
   * candidate join, verification), not just the final set.
   *
-  * Scale notes: signatures are one explode + hash-agg (linear in corpus
-  * shingle count, map-side combinable); the LSH join shuffles on
+  * Scale notes: signatures are one row-local projection (linear in
+  * corpus shingle count, no shuffle); the LSH join shuffles on
   * (band, band_key) whose cardinality ~ n_docs * B, with bucket sizes
   * concentrated near 1 for non-duplicates — no quadratic blowup. This is
   * the standard 100 TB-scale dedup topology (MinHashLSH in Spark MLlib
@@ -23,7 +23,7 @@ import graft.functions.VectorFunctions.ldot
   */
 object DedupOps {
 
-  private[ops] val NUM_SEEDS = 12 // 6 bands x 2 rows
+  private[graft] val NUM_SEEDS = 12 // 6 bands x 2 rows
   private[ops] val ROWS_PER_BAND = 2
   private val JACCARD_T = 0.5
   private[graft] val COS_T = 0.4
@@ -43,7 +43,7 @@ object DedupOps {
        |        a2 + element_at(q, k + 1) *
        |          ((((b * $SRP_BITS + r) * 1000003 + k * 7919) * 2654435761) % 2001 - 1000)) >= 0,
        |      shiftleft(1, r), 0)))""".stripMargin
-  private[ops] val HASH_P = 2147483647L // Mersenne prime; (p-1)*(2*seeds+1) << 2^63
+  private[graft] val HASH_P = 2147483647L // Mersenne prime; (p-1)*(2*seeds+1) << 2^63
   private val MAX_BLOCK = 1000 // chunk width for oversized label blocks
   // A band bucket larger than this emits NO pairs: an adversarial
   // mass-duplicate corpus would otherwise put n near-identical docs into
@@ -110,8 +110,8 @@ object DedupOps {
   }
 
   /** One row per shingle of a `(doc_id, grams, ...)` frame: the `keep`
-    * columns plus `gram`. The MinHash kernel and the TextOps shingle
-    * index explode here: plain `explode` makes Catalyst infer a
+    * columns plus `gram`. The TextOps shingle index explodes here:
+    * plain `explode` makes Catalyst infer a
     * `size(grams) > 0` filter, substitute the grams alias into it (so
     * the tokenizer's `split` re-runs once per trigram, O(tokens²) per
     * doc) and push it below the rebalance exchange, onto the scan's
@@ -121,35 +121,37 @@ object DedupOps {
     g0.select(keep.map(col) :+ explode_outer(col("grams")).as("gram"): _*)
       .filter(col("gram").isNotNull)
 
-  /** MinHash signature per doc of a `(doc_id, grams)` frame: `(doc_id,
-    * m0 .. m11)`, one column per seed. Docs without shingles emit no
-    * row. One md5 per shingle, then NUM_SEEDS cheap derived hashes
+  /** MinHash signature of a `grams` shingle column, as one codegen'd
+    * projection ([[graft.functions.MinHashSig]]): `array<bigint>` of
+    * NUM_SEEDS minima, null for a doc without shingles. One md5 per
+    * shingle, then NUM_SEEDS cheap derived hashes
     * h_s = ((h % P) * (2s+1) + 7919s) % P — exact int64 in both
-    * engines, so the oracle replicates signatures bit-for-bit while
-    * the expensive digest runs once per shingle, not once per seed.
-    * All NUM_SEEDS minima are computed as separate aggregates in ONE
-    * groupBy over the shingle rows (no seed explosion: the exploded
-    * form pushes NUM_SEEDS x |shingles| rows through two shuffles).
-    * The q49 family and the text dedup ledger both sign with this. */
+    * engines, so the oracle replicates signatures bit-for-bit with its
+    * explode + md5 + `min` aggregate while the expensive digest runs
+    * once per shingle, not once per seed. */
+  private[graft] def minhashSig(grams: Column): Column =
+    graft.functions.VectorFunctions.minhashSig(grams, NUM_SEEDS, HASH_P)
+
+  /** MinHash signature per row of a `(doc_id, grams)` frame:
+    * `(doc_id, sig)`, `sig` null for a doc without shingles. Row-local
+    * (no explode, aggregate or shuffle): a doc_id that repeats keeps
+    * one row per input row, so callers sign one row per doc. The q49
+    * family and the text dedup ledger both sign with this. */
   private[ops] def minhashSignatures(g0: DataFrame): DataFrame =
-    minhashOver(gramRows(g0, "doc_id"), Seq("doc_id"))
+    g0.select(col("doc_id"), minhashSig(col("grams")).as("sig"))
 
-  /** [[minhashSignatures]] keyed by `keys` that keeps EVERY doc of `g0`:
-    * a doc without shingles gets one row whose minima are null (its
-    * one `explode_outer` row has a null gram, which `min` ignores). */
-  private[ops] def minhashSignaturesOuter(g0: DataFrame,
-                                          keys: Seq[String]): DataFrame =
-    minhashOver(g0.select(keys.map(col) :+
-      explode_outer(col("grams")).as("gram"): _*), keys)
-
-  private def minhashOver(grams: DataFrame, keys: Seq[String]): DataFrame = {
-    val withHm = grams
-      .withColumn("hv", expr(s"conv(substring(md5(gram), 1, 15), 16, 10)").cast("long"))
-      .withColumn("hm", expr(s"hv % $HASH_P"))
-    val minAggs = (0 until NUM_SEEDS).map { sd =>
-      min(expr(s"(hm * ${2 * sd + 1} + ${7919 * sd}) % $HASH_P")).as(s"m$sd")
+  /** LSH band structs of a `sig` column: band b's key is
+    * `sig[2b] "|" sig[2b+1]` (the band's row minhashes joined in seed
+    * order). Null for a null signature, so `explode` emits no band row
+    * for a doc without shingles. An `explode` over this (not over a
+    * column) infers no filter, so nothing re-signs below an exchange. */
+  private[ops] val sigBands: Column = {
+    val bandStructs = (0 until NUM_SEEDS / ROWS_PER_BAND).map { b =>
+      val ms = (0 until ROWS_PER_BAND)
+        .map(r => s"element_at(sig, ${b * ROWS_PER_BAND + r + 1})")
+      s"named_struct('band', $b, 'bkey', concat_ws('|', ${ms.mkString(", ")}))"
     }
-    withHm.groupBy(keys.map(col): _*).agg(minAggs.head, minAggs.tail: _*)
+    when(col("sig").isNotNull, expr(s"array(${bandStructs.mkString(", ")})"))
   }
 
   /** MinHash signatures -> LSH band buckets -> candidate pairs -> exact
@@ -191,15 +193,8 @@ object DedupOps {
     */
   private[graft] def minhashPairsOn(g0: DataFrame, bandCap: Int = BAND_CAP,
                                     pairBudgetPerDoc: Option[Int] = None): DataFrame = {
-    val sig = minhashSignatures(g0)
-    // band key = the band's row minhashes joined in seed order
-    val bandStructs = (0 until NUM_SEEDS / ROWS_PER_BAND).map { b =>
-      val ms = (0 until ROWS_PER_BAND).map(r => s"m${b * ROWS_PER_BAND + r}")
-      s"named_struct('band', $b, 'bkey', concat_ws('|', ${ms.mkString(", ")}))"
-    }
-    val bands = sig
-      .select(col("doc_id"),
-              explode(expr(s"array(${bandStructs.mkString(", ")})")).as("bs"))
+    val bands = minhashSignatures(g0)
+      .select(col("doc_id"), explode(sigBands).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.bkey").as("bkey"))
     // in-bucket pair generation via collect_list (no self-join: Catalyst
     // would recompute the whole signature pipeline for each side);

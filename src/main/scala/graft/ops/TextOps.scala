@@ -390,10 +390,15 @@ object TextOps {
       .select(col("doc_id"), col("fps"))
   }
 
-  /** (doc_id, grams) shingle frame for a (doc_id, text) corpus; `keep`
-    * names further columns of `docs` to carry between the two. */
-  def shingled(docs: DataFrame, keep: String*): DataFrame =
-    Tables.rebalance(docs).withColumn("toks", split(col("text"), " "))
+  /** (doc_id, grams) shingle frame for a (doc_id, text) corpus, spread
+    * over every core first. */
+  def shingled(docs: DataFrame): DataFrame = gramsOf(Tables.rebalance(docs))
+
+  /** [[shingled]] on `docs`' own partitioning, for a caller that has
+    * just partitioned them by a key; `keep` names further columns of
+    * `docs` to carry. */
+  private[ops] def gramsOf(docs: DataFrame, keep: String*): DataFrame =
+    docs.withColumn("toks", split(col("text"), " "))
       .select((col("doc_id") +: keep.map(col)) :+
         array_distinct(expr(trigramExpr)).as("grams"): _*)
 

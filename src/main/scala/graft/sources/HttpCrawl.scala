@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *
   * Rate limiting (T4: the reference sleeps 5/3/3/2 s between requests,
   * single-browser-sequential — test.py:136,178): `delayMs` is a
-  * PER-HOST minimum interval enforced by a JVM-global token slot
+  * PER-HOST minimum interval enforced by a JVM-global gate
   * ([[hostThrottle]]), so N parallel tasks in an executor cannot
   * multiply the request rate against one host — aggregate rate within
   * an executor is <= 1/delayMs per host regardless of parallelism. On a
@@ -54,32 +54,41 @@ object HttpCrawl {
     */
   val DefaultCrawlParallelism = 3
 
-  /** Per-host politeness gate: `acquire` reserves the next send slot
-    * for `host` (CAS on a monotonically advancing deadline) and sleeps
-    * until it arrives — successive acquisitions for one host are spaced
-    * >= minIntervalMs apart across ALL threads of this JVM, while
-    * distinct hosts never wait on each other.
+  /** Per-host politeness gate: `paced(host, ms)(send)` runs `send` as
+    * `host`'s next request. Requests to one host run one at a time, and
+    * each starts at least `minIntervalMs` after the previous one
+    * returned (the wait sleeps until that deadline, rounded up to the
+    * millisecond, never short of it). Spacing from the previous
+    * request's return, not from its start, holds the interval at the
+    * host even when a request reaches it late: a thread that wakes
+    * late, or a cold first request that takes 100+ ms to arrive, pushes
+    * the next request back instead of leaving it on the old schedule.
+    * So requests to one host arrive >= minIntervalMs apart across ALL
+    * threads of this JVM, while distinct hosts never wait on each
+    * other.
     */
   private[graft] object hostThrottle {
-    private val slots =
-      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    def acquire(host: String, minIntervalMs: Long): Unit = {
-      if (minIntervalMs <= 0) return
-      val slot = slots.computeIfAbsent(host,
-        _ => new java.util.concurrent.atomic.AtomicLong(Long.MinValue))
-      var startNs = 0L
-      var reserved = false
-      while (!reserved) {
-        val now = System.nanoTime()
-        val prev = slot.get()
-        startNs = math.max(now, prev)
-        reserved = slot.compareAndSet(prev, startNs + minIntervalMs * 1000000L)
+    /** The earliest start of `host`'s next request, guarded by itself
+      * (a nanoTime reading: compared by difference, so it never holds a
+      * sentinel that the difference would overflow). */
+    private final class Gate { var next: Long = System.nanoTime() }
+    private val gates = new java.util.concurrent.ConcurrentHashMap[String, Gate]()
+    def paced[A](host: String, minIntervalMs: Long)(send: => A): A =
+      if (minIntervalMs <= 0) send
+      else {
+        val gate = gates.computeIfAbsent(host, _ => new Gate)
+        gate.synchronized {
+          var wait = gate.next - System.nanoTime()
+          while (wait > 0) {
+            Thread.sleep((wait + 999999L) / 1000000L)
+            wait = gate.next - System.nanoTime()
+          }
+          try send
+          finally gate.next = System.nanoTime() + minIntervalMs * 1000000L
+        }
       }
-      val waitMs = (startNs - System.nanoTime()) / 1000000L
-      if (waitMs > 0) Thread.sleep(waitMs)
-    }
-    def acquireFor(url: String, minIntervalMs: Long): Unit =
-      acquire(URI.create(url).getHost, minIntervalMs)
+    def pacedFor[A](url: String, minIntervalMs: Long)(send: => A): A =
+      paced(URI.create(url).getHost, minIntervalMs)(send)
   }
 
   case class JobRow(keyword: String, job_name: String, job_url: String,
@@ -173,8 +182,8 @@ object HttpCrawl {
           try {
             val url = urlTemplate.replace("{keyword}",
               java.net.URLEncoder.encode(kw, "UTF-8"))
-            hostThrottle.acquireFor(url, delayMs)
-            extractJobRows(fetchPage(url)).map { case (n, u, c, d, t, a) =>
+            val page = hostThrottle.pacedFor(url, delayMs)(fetchPage(url))
+            extractJobRows(page).map { case (n, u, c, d, t, a) =>
               JobRow(kw, n, u, c, d, t, a)
             }
           } catch {
@@ -210,8 +219,8 @@ object HttpCrawl {
         var errors = 0
         urls.flatMap { u =>
           try {
-            hostThrottle.acquireFor(u, delayMs)
-            extractDetailRows(fetchPage(u)).map { case (p, l, v) =>
+            val page = hostThrottle.pacedFor(u, delayMs)(fetchPage(u))
+            extractDetailRows(page).map { case (p, l, v) =>
               DetailRow(u, p, l, v)
             }
           } catch {

@@ -36,9 +36,9 @@ object DedupMaintenance {
     * committed under `stream-<batchId>`. */
   def dedupSink(stream: DataFrame, ledgerDir: String,
                 checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    sink(stream, checkpointDir) { (b, id) =>
+    sink(stream, checkpointDir) { (b, id, n) =>
       DedupLedger.stage(DedupLedger.Text, DedupLedger.Text.prepare(b),
-        ledgerDir, IndexStore.snapshot(ledgerDir), s"stream-$id")()
+        ledgerDir, IndexStore.snapshot(ledgerDir), s"stream-$id", Some(n))()
       ()
     }
 
@@ -73,7 +73,7 @@ object DedupMaintenance {
     // the first record of an unlucky modality arrives mid-stream (the
     // per-row width guard would fail every replay of that micro-batch)
     arms.foreach(_.requireGrid())
-    sink(stream, checkpointDir) { (b, id) =>
+    sink(stream, checkpointDir) { (b, id, n) =>
       // ONE pass over the checkpointed batch decides which modality
       // arms run (VERDICT r14 Next #7: per-arm isEmpty probes were
       // one extra Spark job each per micro-batch). Filter to the
@@ -105,22 +105,28 @@ object DedupMaintenance {
       arms.filter(a => kinds(a.kind))
         .map(arm => Future(DedupLedger.stage(arm,
           arm.prepare(b.filter(col("kind") === arm.kind)), ledgerDir, snap0,
-          s"stream-$id-${arm.modality}")))
+          s"stream-$id-${arm.modality}", Some(n))))
         .map(Await.result(_, Duration.Inf))
         .foreach(_.apply())
     }
   }
 
-  /** A checkpointed AvailableNow sink running `tick` over each
-    * non-empty micro-batch, materialized once (every arm reads it). */
+  /** A checkpointed AvailableNow sink running `tick(batch, id, rows)`
+    * over each non-empty micro-batch, materialized once (every arm
+    * reads it) and then counted off the materialized rows: one job
+    * each, and the count gates the arms' broadcasts when the batch's
+    * plan carries no size estimate (an in-memory source). */
   private def sink(stream: DataFrame, checkpointDir: String)
-                  (tick: (DataFrame, Long) => Unit)
+                  (tick: (DataFrame, Long, Long) => Unit)
       : DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) tick(batch.localCheckpoint(), id)
+        val b = batch.localCheckpoint()
+        // the plan's rows as-is: no count aggregate, no exchange
+        val n = b.queryExecution.toRdd.count()
+        if (n > 0) tick(b, id, n)
       }
 
   /** Snapshot version a monitor watches to confirm the tailer publishes. */

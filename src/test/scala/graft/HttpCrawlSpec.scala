@@ -111,7 +111,7 @@ class HttpCrawlSpec extends SparkSpec with BeforeAndAfterAll {
     try {
       val base2 = s"http://127.0.0.1:${srv.getAddress.getPort}"
       // 8 keywords spread over up to 8 tasks, all against ONE host: the
-      // per-host token slot must space the requests >= delayMs apart no
+      // per-host gate must space the requests >= delayMs apart no
       // matter how the partitioner lays them out. Measured at the SERVER
       // (inter-arrival gaps), not as client-side sleep accounting.
       HttpCrawl.crawlKeywords(spark, (0 until 8).map(i => s"kw$i"),
@@ -129,6 +129,7 @@ class HttpCrawlSpec extends SparkSpec with BeforeAndAfterAll {
       // the rate). Assert the rate, not each raw gap: every adjacent
       // PAIR of gaps spans >= 140 ms, every single gap >= 30 ms, and
       // the mean holds near the reservation spacing.
+      info(f"smallest inter-arrival gap ${gapsMs.min}%.1f ms")
       assert(gapsMs.forall(_ >= 30.0), s"inter-arrival gaps $gapsMs ms")
       assert(gapsMs.sliding(2).forall(_.sum >= 140.0),
         s"adjacent gap pairs must hold the rate: $gapsMs ms")
@@ -138,9 +139,9 @@ class HttpCrawlSpec extends SparkSpec with BeforeAndAfterAll {
 
     // distinct hosts never wait on each other
     val t0 = System.nanoTime()
-    HttpCrawl.hostThrottle.acquire("host-a", 500L)
-    HttpCrawl.hostThrottle.acquire("host-b", 500L)
-    HttpCrawl.hostThrottle.acquire("host-c", 500L)
+    HttpCrawl.hostThrottle.paced("host-a", 500L)(())
+    HttpCrawl.hostThrottle.paced("host-b", 500L)(())
+    HttpCrawl.hostThrottle.paced("host-c", 500L)(())
     assert((System.nanoTime() - t0) / 1e6 < 250.0,
       "first acquisition per host must not wait")
   }
@@ -155,7 +156,7 @@ class HttpCrawlSpec extends SparkSpec with BeforeAndAfterAll {
     assert(one.count() == FixtureJobServer.JOBS_PER_KEYWORD)
     assert(one.select("job_name").collect().map(_.getString(0)).toSet ==
       (0 until FixtureJobServer.JOBS_PER_KEYWORD).map(i => s"職位後端$i").toSet)
-    // rate pacing exists (T4): the per-host slot spaces N requests by
+    // rate pacing exists (T4): the per-host gate spaces N requests by
     // N-1 intervals (the first one never waits), so two keywords against
     // one host cost at least one full delayMs regardless of layout
     val t0 = System.nanoTime()

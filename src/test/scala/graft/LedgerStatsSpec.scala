@@ -364,6 +364,32 @@ class LedgerStatsSpec extends SparkSpec {
       "stats presence changed a hot store's shed verdict")
   }
 
+  test("a shedding text store: the keepers' rep collapse equals the " +
+       "groupBy(h) collapse") {
+    // 400 history docs share a 60-token body and differ in one token:
+    // their signatures agree on most positions, so each band has a
+    // ~400-doc bucket past the 200-row shed floor
+    val dir = java.nio.file.Files.createTempDirectory("stats-text-hot").toString
+    val body = (0 until 60).map(i => s"b$i").mkString(" ")
+    DedupLedger.buildLedger((0L until 400L).map(i => i -> s"$body u$i")
+      .toDF("doc_id", "text"), dir)
+    val snap = IndexStore.snapshot(dir)
+    val batch = Seq(
+      1000L -> s"$body fresh",            // near the hot cluster only
+      1001L -> s"$body fresh",            // its in-batch copy
+      1002L -> s"$body u7",               // exact hit
+      1003L -> "a novel text of several tokens",
+      1003L -> "a novel text of several tokens",
+      1004L -> "short doc").toDF("doc_id", "text")
+    def keeps(budget: Option[Int]): Set[Long] = LedgerTopologySpec
+      .textCollapseParity(spark, batch, dir, snap, 256L << 20, budget).map(_._2)
+    val shed = keeps(Some(1))
+    val uncapped = keeps(None)
+    assert(uncapped == Set(1003L, 1004L), s"uncapped keeps $uncapped")
+    assert(shed == Set(1000L, 1003L, 1004L),
+      s"a budget of 1 must shed the hot buckets and keep the near copy: $shed")
+  }
+
   private def deleteStats(dir: String): Unit =
     Option(new java.io.File(s"$dir/_manifest").listFiles()).toSeq.flatten
       .filter(_.getName.startsWith("stats."))

@@ -5,11 +5,15 @@ import graft.ops.{DedupLedger, IndexStore}
 import graft.ops.DedupLedger.Text
 
 /** The streamed ledger tick's budget: a warm text tick through
-  * `dedupSink` runs at most 14 Spark jobs (the sink's two, the
-  * signature pass, ONE keepers-and-collapse checkpoint, and the
-  * commit's two one-file writes plus its one-job stats bump) and adds
-  * exactly one flat data file per table. A mixed tick's count is
-  * recorded beside it. */
+  * `dedupSink` runs at most 11 Spark jobs — the sink's checkpoint and
+  * count, the keyed pass (one exchange by exact key: shingle, sign and
+  * pick each text's representative), the two batch broadcasts, the
+  * ledger scan with the hits broadcast, ONE keepers checkpoint whose
+  * exact collapse is a filter, and the commit's two one-file writes
+  * plus its one-job stats bump — whether the micro-batch comes from a
+  * file source (a measured plan size) or an in-memory one (gated on
+  * the sink's row count), and adds exactly one flat data file per
+  * table. A mixed tick's count is recorded beside it. */
 class LedgerTickSpec extends SparkSpec {
   import spark.implicits._
 
@@ -35,20 +39,15 @@ class LedgerTickSpec extends SparkSpec {
                     after: IndexStore.Snapshot): (Seq[String], Seq[String]) =
     (after.codes.diff(before.codes), after.vectors.diff(before.vectors))
 
-  test("a warm streamed text tick runs at most 14 Spark jobs and adds " +
-       "one flat data file per table") {
-    val dir = java.nio.file.Files.createTempDirectory("tick-budget")
-      .toString + "/led"
-    val ckpt = java.nio.file.Files.createTempDirectory("tick-ckpt").toString
+  /** Builds a 200-doc ledger, lands (`land(t)`, one call per tick) and
+    * drains a warm-up tick through `stream`, then lands tick 2 and
+    * checks its drain against the budget. */
+  private def warmTextTick(name: String, stream: org.apache.spark.sql.DataFrame,
+                           land: Int => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(name).toString + "/led"
+    val ckpt = java.nio.file.Files.createTempDirectory(s"$name-ckpt").toString
     DedupLedger.buildLedger(
       (0L until 200L).map(i => i -> text(i)).toDF("doc_id", "text"), dir)
-    // a parquet landing zone, one file per tick, as the benchmark lands
-    val landing = java.nio.file.Files.createTempDirectory("tick-in").toString
-    def land(t: Int): Unit =
-      tickRows(t).toDF("doc_id", "text").coalesce(1)
-        .write.mode("append").parquet(landing)
-    val stream = spark.readStream.schema("doc_id LONG, text STRING")
-      .parquet(landing)
     def drain(): Unit =
       graft.streaming.DedupMaintenance.dedupSink(stream, dir, ckpt)
         .start().awaitTermination()
@@ -57,11 +56,15 @@ class LedgerTickSpec extends SparkSpec {
     drain()
     land(1)
     val before = IndexStore.snapshot(dir)
-    val (_, jobs) = countJobs(drain())
+    val (_, scopes) = jobScopes(drain())
+    val jobs = scopes.size
     val after = IndexStore.snapshot(dir)
-    info(s"warm dedupSink tick: $jobs Spark jobs")
+    // each job's stage scopes: a job that comes back names its operators
+    info(s"warm dedupSink tick ($name): $jobs Spark jobs: " + scopes.zipWithIndex
+      .map { case (s, i) => s"job ${i + 1} [${s.sorted.mkString(", ")}]" }
+      .mkString("; "))
     assert(after.version == before.version + 1, "the tick must publish")
-    assert(jobs <= 14, s"a warm text tick ran $jobs Spark jobs (budget 14)")
+    assert(jobs <= 11, s"a warm text tick ran $jobs Spark jobs (budget 11)")
     val (codes, vectors) = added(before, after)
     assert(codes.size == 1 && vectors.size == 1,
       s"one data file per table, got codes $codes, vectors $vectors")
@@ -72,6 +75,25 @@ class LedgerTickSpec extends SparkSpec {
       .select(col("owner")).as[Long].collect().toSet
     assert(owners.count(_ >= 2000L) == 40,
       s"tick 2 admitted ${owners.count(_ >= 2000L)} docs, want 40")
+  }
+
+  test("a warm streamed text tick runs at most 11 Spark jobs and adds " +
+       "one flat data file per table") {
+    // a parquet landing zone, one file per tick, as the benchmark lands
+    val landing = java.nio.file.Files.createTempDirectory("tick-in").toString
+    warmTextTick("tick-budget",
+      spark.readStream.schema("doc_id LONG, text STRING").parquet(landing),
+      t => tickRows(t).toDF("doc_id", "text").coalesce(1)
+        .write.mode("append").parquet(landing))
+  }
+
+  test("an in-memory micro-batch (no plan size) keeps the broadcasts and " +
+       "the 11-job budget") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val src = MemoryStream[(Long, String)]
+    warmTextTick("tick-mem", src.toDF().toDF("doc_id", "text"),
+      t => { src.addData(tickRows(t)); () })
   }
 
   test("a warm mixed tick (text and images) adds one flat file per table " +

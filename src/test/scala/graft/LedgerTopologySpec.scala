@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{DedupLedger, IndexStore}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.{DedupLedger, DedupOps, IndexStore}
 import graft.ops.DedupLedger.{Media, Text, Video}
 
 /** Round-12 VERDICT #1: the ledger verdict's batch side must BROADCAST
@@ -97,6 +98,37 @@ class LedgerTopologySpec extends SparkSpec {
       DedupLedger.verdict(Text, spark, batch, dir, snap, maxBroadcast)
     }
     keepersParity(Text, batch, dir, snap)
+  }
+
+  test("text keepers collapse: the rep filter equals the groupBy(h) " +
+       "collapse with in-batch duplicates and a repeated (doc_id, text), " +
+       "gate open and forced shut") {
+    val dir = java.nio.file.Files.createTempDirectory("ledger-topo-c").toString
+    DedupLedger.buildLedger(docs(0L -> words(30, "h"), 1L -> words(30, "x")), dir)
+    val snap = IndexStore.snapshot(dir)
+    val batch = docs(
+      10L -> words(30, "h"),              // exact hit
+      11L -> words(30, "h"),              // its in-batch copy: drops too
+      12L -> (words(30, "x") + " tail"),  // near hit
+      14L -> words(35, "z"),              // kept, with two later copies
+      13L -> words(35, "z"),              //   (the smallest id owns them)
+      15L -> words(35, "z"),
+      16L -> words(33, "r"),              // a repeated (doc_id, text)
+      16L -> words(33, "r"),
+      17L -> "two tokens",                // no signature, exact-only
+      18L -> "two tokens",
+      19L -> words(31, "q"))
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try for (maxBroadcast <- Seq(256L << 20, 0L)) {
+      if (maxBroadcast == 0L)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val rows = LedgerTopologySpec.textCollapseParity(spark, batch, dir, snap,
+        maxBroadcast, DedupOps.DEFAULT_PAIR_BUDGET)
+      assert(rows.map(_._2) == Set(13L, 16L, 17L, 19L),
+        s"maxBroadcast=$maxBroadcast: collapsed owners ${rows.map(_._2)}")
+      assert(rows.filter(_._3 == null).map(_._2) == Set(17L),
+        "only the two-token text carries no signature")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
 
   test("forced-shuffle MEDIA verdict: the marks-table hamming arm is " +
@@ -391,5 +423,35 @@ class LedgerTopologySpec extends SparkSpec {
     val capped = run(Some(1))
     assert(capped == uncapped,
       "shed intro buckets must cost at most one vote, never the verdict")
+  }
+}
+
+object LedgerTopologySpec {
+  /** The text arm's exact collapse of a tick's keepers (the `rep`
+    * filter a delta writes) against the `groupBy(h)` collapse it
+    * replaced (owner = the smallest kept doc_id, with its own
+    * signature), and against the verdict's kept docs collapsed by text
+    * hash. Returns the collapsed `(h, owner, sig)` rows. */
+  def textCollapseParity(spark: SparkSession, batch: DataFrame, dir: String,
+                         snap: IndexStore.Snapshot, maxBroadcast: Long,
+                         budget: Option[Int]): Set[(String, Long, Seq[Long])] = {
+    def rows(df: DataFrame): Set[(String, Long, Seq[Long])] =
+      df.select(col("h"), col("owner"), col("sig")).collect().map(r =>
+        (r.getString(0), r.getLong(1),
+          if (r.isNullAt(2)) null else r.getSeq[Long](2))).toSet
+    val kept = DedupLedger.keepersOf(Text, spark, batch, dir, snap,
+      maxBroadcast, budget)
+    val got = rows(Text.collapse(kept))
+    val grouped = rows(kept.groupBy(col("h")).agg(min(col("doc_id")).as("owner"),
+      min_by(col("sig"), col("doc_id")).as("sig")))
+    assert(got == grouped, s"rep collapse $got, groupBy(h) collapse $grouped")
+    val keepIds = DedupLedger.verdict(Text, spark, batch, dir, snap,
+        maxBroadcast, budget).filter(col("keep") === 1L).select(col("doc_id"))
+    val want = batch.join(keepIds, Seq("doc_id"), "left_semi")
+      .groupBy(sha2(col("text"), 256).as("h")).agg(min(col("doc_id")).as("owner"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(got.map(r => (r._1, r._2)) == want,
+      s"collapsed owners ${got.map(_._2)}, the verdict keeps ${want.map(_._2)}")
+    got
   }
 }

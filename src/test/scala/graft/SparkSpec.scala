@@ -11,11 +11,29 @@ trait SparkSpec extends AnyFunSuite {
 
   /** `f`'s result and the number of Spark jobs started while it ran. */
   protected def countJobs[A](f: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
+    val (a, jobs) = jobScopes(f)
+    (a, jobs.size)
+  }
+
+  /** `f`'s result and, per Spark job started while it ran (in start
+    * order), the distinct RDD operation scopes of the stages that job
+    * ran (`Exchange`, `WholeStageCodegen (2)`, ...): stages a job skips
+    * (shuffle output an earlier job wrote) are left out, so a job that
+    * comes back names the plan operators it runs. */
+  protected def jobScopes[A](f: => A): (A, Seq[Seq[String]]) = {
+    import org.apache.spark.scheduler._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[Int])]
+    val ran = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val scopes = new java.util.concurrent.ConcurrentHashMap[Int, Seq[String]]
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        js.stageInfos.foreach(si =>
+          scopes.put(si.stageId, si.rddInfos.flatMap(_.scope.map(_.name))))
+        jobs.add(js.jobId -> js.stageIds)
+        ()
+      }
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit = {
+        ran.add(ss.stageInfo.stageId); ()
       }
     }
     spark.sparkContext.addSparkListener(l)
@@ -25,7 +43,11 @@ trait SparkSpec extends AnyFunSuite {
       // (a fixed sleep can under-count on a loaded box)
       org.apache.spark.sql.graftshim.Shim.waitForListenerBus(
         spark.sparkContext, 30000L)
-      (a, n.get())
+      import scala.jdk.CollectionConverters._
+      (a, jobs.asScala.toSeq.sortBy(_._1).map { case (_, stages) =>
+        stages.filter(ran.contains).sorted
+          .flatMap(s => scopes.getOrDefault(s, Nil)).distinct
+      })
     } finally spark.sparkContext.removeSparkListener(l)
   }
 }
