@@ -281,8 +281,8 @@ object DedupLedger {
     *
     *   1. `bandedRows ≤ SKIP_SLACK × perItem`: volume ≤ bandedRows ×
     *      batchItems ≤ SKIP_SLACK × budget — skip with ZERO jobs
-    *      (the row bound is the persisted stats' `rows`; only a store
-    *      that lost its stats pays the memoized footer count; every
+    *      (the row bound is the snapshot's stats' `rows`; only a
+    *      stats-less snapshot pays its memoized histogram; every
     *      fixture-scale arm lands here). The slack
     *      factor (4) trades a bounded overshoot of the HEURISTIC
     *      budget for zero measurement cost on small stores: worst
@@ -291,13 +291,15 @@ object DedupLedger {
     *      and 5–6 orders below the measured hang classes, which start
     *      at corpus-scale stores (12M+ banded rows) where this step
     *      never fires.
-    *   2. the LEDGER's bucket-size histogram (memoized per store
-    *      UUID + snapshot version — one job per published version,
-    *      amortized across every verdict and bench run against it):
-    *      no class above the BAND_CAP floor ⇒ nothing can shed at any
-    *      budget ⇒ skip WITHOUT touching the batch (the healthy-
-    *      corpus steady state: batch bands stay a lazy single
-    *      execution inside the verdict join).
+    *   2. the snapshot's stats prove every bucket at or under the
+    *      BAND_CAP floor ⇒ skip with zero jobs (healthy corpus-scale
+    *      stores live here); else the LEDGER's exact bucket-size
+    *      histogram (memoized per store UUID + arm fileset, amortized
+    *      across every verdict against those files, and published by
+    *      the next delta onto them — [[carriedStats]]): no class above
+    *      the floor ⇒ nothing can shed at any budget ⇒ skip WITHOUT
+    *      touching the batch (batch bands stay a lazy single execution
+    *      inside the verdict join).
     *   3. only now CHECKPOINT the increment-sized batch bands
     *      (measuring them would otherwise re-execute the batch's
     *      whole fingerprint pipeline — shingles / image decode — once
@@ -317,101 +319,18 @@ object DedupLedger {
     * is the checkpointed bands when step 3 ran, the caller's original
     * frame otherwise. */
   private val SKIP_SLACK = 4L
-  /** Consecutive skipped opportunistic self-heals before the verdict
-    * side escalates to a BLOCKING stats write (VERDICT r17 #4). */
-  private val HEAL_ESCALATE_AFTER = 3
-  /** Longest a verdict (a READ path) will ever block behind a writer
-    * for the escalated stats write — enough for a delta commit to
-    * clear, far less than a compaction (ADVICE r18 #2). */
-  private val ESCALATE_WAIT_MS = 5000L
   private def shedUnlessAffordable(lb: DataFrame, keys: Seq[String],
                                    perItem: Int, bandedRows: Long,
                                    batchBands: DataFrame,
                                    batchItemsOf: Long => Long,
-                                   dir: String, version: Int,
                                    what: String,
-                                   persisted: Option[IndexStore.ArmStats])
+                                   persisted: Option[IndexStore.ArmStats],
+                                   ledgerHist: => Array[(Int, Long)])
       : (DataFrame, DataFrame) = {
     if (bandedRows <= SKIP_SLACK * perItem) return (lb, batchBands)
-    // write-time stats fast path (VERDICT r16 #1): when the persisted
-    // bound proves no bucket can exceed the shed floor, nothing can
-    // shed at ANY budget — skip with zero jobs, no histogram, no
-    // batch checkpoint. Healthy corpus-scale stores live here.
-    // COHERENCE GATE (round-17 review): trust the file only when it
-    // is at least as new as the snapshot being verdicted. Between
-    // rebuilds the arms grow append-only, so stats stamped at a LATER
-    // version over-bound an older snapshot's buckets (conservative);
-    // stats stamped EARLIER may be missing a delta's growth (an
-    // append that bumped a different geometry key, a writer predating
-    // the stats discipline) and must not prove anything — stale reads
-    // fall back to the runtime histogram, which can only cost time,
-    // never admit an unbounded join. Under UNFENCED concurrent
-    // writers (object store, no advisory locks) the bump's
-    // read-modify-write itself needs the manifest's conditional-put
-    // discipline; until a deployment wires that, the manifest CAS is
-    // the correctness boundary and this fast path is a fenced-writer
-    // optimization — the version gate makes a torn stats file read as
-    // stale, not as proof.
-    persisted match {
-      case Some(st) if st.version >= version &&
-          st.maxBound <= DedupOps.BAND_CAP =>
-        return (lb, batchBands)
-      case _ => ()
-    }
-    val memoKey = s"${IndexStore.storeId(dir)}:$what"
-    val hist = histCache.stamped(memoKey, version) {
-      ScaleOps.boundedCollect(
-        lb.groupBy(keys.map(col): _*).agg(count(lit(1)).as("sz"))
-          .groupBy(col("sz")).agg(count(lit(1)).as("n")),
-        1L << 20, s"$what ledger bucket-size histogram")
-        .map(r => (r.getLong(0).toInt, r.getLong(1)))
-    }
-    // self-heal: the exact histogram we just paid for becomes the next
-    // verdicts' zero-job stats — persisted only when the head did not
-    // move since our snapshot (a later delta's growth would be missing
-    // from it) and the writer lock is FREE (never queue a read path
-    // behind a writer)
-    // (call sites pre-filter `persisted` to version-coherent stats, so
-    // reaching here with Some(st) means st is current — re-stamp only
-    // when accumulated slack has made its bound loose)
-    if (persisted.forall(_.slack > 0)) {
-      def writeIfCurrent(): Boolean =
-        if (IndexStore.headVersion(dir).contains(version)) {
-          IndexStore.writeArmStats(dir, what, IndexStore.ArmStats(
-            version, 0L,
-            hist.foldLeft(0L) { case (a, (sz, n)) => a + sz.toLong * n },
-            hist))
-          true
-        } else false
-      val wrote = IndexStore.tryWithWriterLock(dir)(writeIfCurrent())
-      if (wrote.contains(true)) healSkips.update(memoKey)(_ => None)
-      else {
-        // ESCALATION (VERDICT r17 #4): N consecutive verdicts failed
-        // the opportunistic write — a persistently contended lock
-        // would otherwise keep this read path paying the histogram
-        // forever, silently. Block AT MOST once per N skips and at
-        // most ESCALATE_WAIT_MS (ADVICE r18 #2: withWriterLock's 60 s
-        // deadline covered only the same-JVM overlap retry; its
-        // jvmLock.lock()/ch.lock() queue forever behind a long-running
-        // writer such as a compaction shuffle). The counter resets
-        // after EVERY escalated attempt, successful or not: a
-        // head-moved miss means the histogram is stale and convergence
-        // belongs to the WRITE side's byte-gated full-arm refresh
-        // (bumpArmStats); a timed-out lock means a writer stream is
-        // live and will persist stats itself. Either way the read path
-        // degrades back to opportunistic heals instead of re-blocking
-        // on every verdict.
-        val n = healSkips.update(memoKey)(n => Some(n.getOrElse(0) + 1)).get
-        if (n >= HEAL_ESCALATE_AFTER) {
-          log.warn(s"DedupLedger: $what self-heal skipped $n consecutive " +
-            s"times on $dir — escalating to a bounded blocking stats " +
-            s"write (≤$ESCALATE_WAIT_MS ms)")
-          IndexStore.timedWithWriterLock(dir, ESCALATE_WAIT_MS)(
-            writeIfCurrent())
-          healSkips.update(memoKey)(_ => None)
-        }
-      }
-    }
+    if (persisted.exists(_.maxBound <= DedupOps.BAND_CAP))
+      return (lb, batchBands)
+    val hist = ledgerHist
     if (hist.forall(_._1 <= DedupOps.BAND_CAP)) return (lb, batchBands)
     val bb = batchBands.localCheckpoint()
     val occ = bb.groupBy(keys.map(col): _*)
@@ -437,21 +356,22 @@ object DedupLedger {
     }
   }
 
-  /** Per-store memos for the ledger-side measurements (saturation
-    * sentinel counts; band-bucket size histograms), keyed on the
-    * store's DURABLE identity ([[IndexStore.storeId]] — a store
-    * deleted and rebuilt at the same path gets a fresh UUID, closing
-    * the round-15 stale-alias caveat) plus the table name, holding
-    * ONLY the latest version's value: the snapshot version is the
-    * [[DriverCache.stamped]] stamp (a long-lived streaming service
-    * publishes versions per tick; keying on version would grow
-    * forever), and snapshots are immutable so a version hit is exact.
-    * `healSkips` counts consecutive skipped self-heals per store arm
-    * under the same key. */
+  /** Per-store memos for the ledger-side measurements, keyed on the
+    * store's DURABLE identity ([[IndexStore.storeId]] — a store deleted
+    * and rebuilt at the same path gets a fresh UUID, closing the
+    * round-15 stale-alias caveat) plus the table or stats key, holding
+    * ONLY the latest value ([[DriverCache.stamped]]; a long-lived
+    * streaming service publishes versions per tick, so keying on the
+    * stamp would grow forever). Saturation sentinel counts stamp the
+    * snapshot version; band-bucket histograms stamp the arm table's
+    * file list, which a mixed tick's earlier arm commits leave
+    * unchanged, so a later arm's commit still finds its verdict's
+    * histogram. Data files are immutable, so a stamp hit is exact. */
   private[graft] val sentinelCache = new DriverCache[String, Long](4096)
   private[graft] val histCache =
     new DriverCache[String, Array[(Int, Long)]](4096)
-  private[graft] val healSkips = new DriverCache[String, Int](4096)
+  private def histKey(dir: String, arm: LedgerArm): String =
+    s"${IndexStore.storeId(dir)}:${arm.statsKey}"
   /** Spec hook: drop every per-store memo so a measurement can
     * observe the COLD path (first verdict against a fresh version)
     * repeatedly without rebuilding the store. Never called by
@@ -460,115 +380,43 @@ object DedupLedger {
     sentinelCache.clear(); histCache.clear()
   }
 
-  /** Exact per-arm bucket-size histogram, persisted as the arm's
-    * write-time stats (slack = 0) — called from REBUILD paths over
-    * the content being written (one extra aggregation on a frame the
-    * build already materializes, corpus-proportional like the write
-    * itself), from an arm's FIRST delta (the delta IS the corpus
-    * there) and from the byte-gated escalation. Every store persists
-    * its stats, whatever its size: a streamed store publishes a new
-    * version per tick, so the runtime histogram's per-version memo
-    * never hits there, and each tick would otherwise pay a ledger
-    * count plus the bucket histogram before its verdict (5 of the 27
-    * jobs of a tick on the benchmark's 4500-doc ingest_tick ledger). */
-  private def refreshArmStats(dir: String, key: String, banded: DataFrame,
-                              keys: Seq[String]): Unit = {
-    val hist = ScaleOps.boundedCollect(
+  /** An arm's exact band-bucket size histogram, `(size, buckets)`. */
+  private def bucketHist(banded: DataFrame, keys: Seq[String],
+                         what: String): Array[(Int, Long)] =
+    ScaleOps.boundedCollect(
       banded.groupBy(keys.map(col): _*).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz")).agg(count(lit(1)).as("n")),
-      1L << 20, s"$key write-time stats histogram")
+      1L << 20, s"$what bucket-size histogram")
       .map(r => (r.getLong(0).toInt, r.getLong(1)))
-    val bandedRows = hist.foldLeft(0L) { case (a, (sz, n)) => a + sz.toLong * n }
-    IndexStore.writeArmStats(dir, key, IndexStore.ArmStats(
-      IndexStore.headVersion(dir).getOrElse(0) + 1, 0L, bandedRows, hist))
+
+  private def histRows(hist: Array[(Int, Long)]): Long =
+    hist.foldLeft(0L) { case (a, (sz, n)) => a + sz.toLong * n }
+
+  /** Stats measured over exactly the rows `hist` counts (slack 0). */
+  private def exactStats(hist: Array[(Int, Long)]): IndexStore.ArmStats =
+    IndexStore.ArmStats(0L, histRows(hist), hist.toSeq)
+
+  /** The stats a delta of `arm` publishes onto `base`, given the
+    * delta's `(largest per-bucket count, band rows)`: the base's stats
+    * with this arm's entry bumped — slack += count (sound: every
+    * pre-existing bucket grew by at most that, and a bucket born since
+    * the last measurement holds at most the accumulated slack), rows +=
+    * band rows. The entry bumped is, in order: the exact histogram a
+    * verdict paid over the base's arm files (the self-heal: slack
+    * resets), the base's own entry, zero stats when the base's arm
+    * table has no files (an arm's first delta); a legacy base with
+    * none of these publishes none (its next verdict measures). Called
+    * per CAS attempt, so a loser bumps the winner's stats. */
+  private def carriedStats(arm: LedgerArm, dir: String, bump: (Long, Long),
+                           base: IndexStore.Snapshot)
+      : Map[String, IndexStore.ArmStats] = {
+    val files = filesOf(base, arm.table)
+    histCache.at(histKey(dir, arm), files).map(exactStats)
+      .orElse(base.stats.get(arm.statsKey))
+      .orElse(if (files.isEmpty) Some(exactStats(Array.empty)) else None)
+      .fold(base.stats)(st => base.stats.updated(arm.statsKey,
+        st.copy(slack = st.slack + bump._1, rows = st.rows + bump._2)))
   }
-
-  /** Byte-size proxy for "corpus-scale arm": above this, a stats-less
-    * arm's next delta pays ONE exact full-arm histogram inside the
-    * commit it already holds the writer lock for, instead of leaving
-    * every future verdict on the runtime-histogram path (VERDICT r17
-    * Next #4 — the convergence guarantee a persistent writer needs;
-    * the opportunistic verdict-side self-heal can be starved forever
-    * by that same writer, because its histogram is stale the moment
-    * head moves). Builders stamp stats on every store, so only a store
-    * whose stats were lost (one that predates them, or a deleted stats
-    * file) reaches this gate; below it such a store keeps zero-job
-    * appends and its verdicts restamp stats through the self-heal. */
-  private val STATS_ESCALATE_BYTES = 4L << 20
-
-  /** Pre-publish byte size of an arm's already-published files — the
-    * corpus proxy [[bumpArmStats]]'s escalation gate decides on
-    * (manifest metadata + file stats, no Spark job). */
-  private def armBytes(dir: String, sub: String, before: Seq[String]): Long =
-    before.foldLeft(0L)((a, rel) =>
-      a + IndexStore.dataFileSize(dir, sub, rel))
-
-  /** Delta-commit stats maintenance — increment-proportional: slack +=
-    * the DELTA's max per-bucket count (sound: every pre-existing
-    * bucket grew by at most that, and a bucket born since the last
-    * refresh holds at most the accumulated slack). Runs INSIDE the
-    * delta's commit lambda, BEFORE publish, so a crash between bump
-    * and publish can only over-count (conservative), never leave a
-    * published delta unaccounted. No-ops with zero jobs when the
-    * store carries no stats for this key (a store whose stats were
-    * lost, until a rebuild, the verdict side's self-heal, or the
-    * byte-gated escalation below persists one). An empty `before`
-    * (the arm's first delta) computes the exact histogram instead.
-    * `write` is the delta's table write: it runs here so that, on the
-    * bump branch, the bump's one job over the materialized delta
-    * ([[deltaBump]]) overlaps it instead of following it. A delta that
-    * adds no band rows still restamps the version: the stats stay an
-    * upper bound, and the next verdict keeps its zero-job fast path.
-    *
-    * The stamped version is `headVersion + 1` computed PRE-publish —
-    * exact under the fenced writer lock (the CAS cannot race while we
-    * hold it); under UNFENCED concurrent writers the eventual
-    * published version can be higher, leaving the stamp LOW, which
-    * the verdict-side coherence gate (`st.version >= snap.version`)
-    * turns into a conservative fallback, never an unsound proof. */
-  private def bumpArmStats(dir: String, key: String,
-                           bandedDelta: => DataFrame,
-                           keys: Seq[String], before: Seq[String],
-                           sub: String,
-                           fullArmBanded: => DataFrame)
-                          (write: => Unit): Unit =
-    IndexStore.armStats(dir, key) match {
-      case Some(st) =>
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val bump = Future(deltaBump(bandedDelta, keys))(armWriteEc)
-        try write finally { Await.ready(bump, Duration.Inf); () }
-        val (d, rows) = Await.result(bump, Duration.Inf)
-        IndexStore.writeArmStats(dir, key, st.copy(
-          version = IndexStore.headVersion(dir).getOrElse(0) + 1,
-          slack = st.slack + d,
-          rows = st.rows + rows))
-      case None if before.isEmpty =>
-        write
-        refreshArmStats(dir, key, bandedDelta, keys)
-      case None =>
-        write
-        // ESCALATED convergence (VERDICT r17 #4): a corpus-scale arm
-        // with no persisted stats — a legacy store, or one whose
-        // opportunistic verdict-side self-heal has been starved by
-        // this very write stream — computes the exact FULL-ARM
-        // histogram here, inside the commit already holding the
-        // writer lock, so stats exist from the NEXT verdict on. Once,
-        // by construction: the refresh persists, and every later
-        // delta takes the cheap bump branch above. Bytes are the
-        // corpus proxy (manifest metadata, no job to decide).
-        val bytes = armBytes(dir, sub, before)
-        if (bytes >= STATS_ESCALATE_BYTES) {
-          log.warn(s"DedupLedger: $dir/$sub ($bytes bytes) carries no " +
-            s"'$key' stats — escalating to a blocking full-arm stats " +
-            "refresh inside this append commit (one-time convergence; " +
-            "see SCALING r18)")
-          refreshArmStats(dir, key,
-            fullArmBanded.select(keys.map(col): _*)
-              .unionByName(bandedDelta.select(keys.map(col): _*)),
-            keys)
-        }
-    }
 
   /** `(largest per-bucket count, rows)` of a delta's band rows in ONE
     * Spark job: the rows are counted per bucket in one task (a delta is
@@ -1055,20 +903,19 @@ object DedupLedger {
 
   /** REBUILD-commit a ledger: every arm's tables from its history, all
     * under one snapshot (a reader never sees the modalities half a
-    * batch apart), each arm's exact write-time stats stamped before the
-    * publish. `modalities` is the store's declared set — a mixed store
+    * batch apart) whose manifest carries each arm's exact write-time
+    * stats. `modalities` is the store's declared set — a mixed store
     * declares EVERY modality the router can send it, so absence of any
     * one table is bootstrap, not misconfiguration. */
   def build(dir: String, modalities: String,
             history: (LedgerArm, DataFrame)*): Int = {
     IndexStore.setProps(dir, Map("modalities" -> modalities))
-    val v = IndexStore.commitRebuild(dir) {
-      for ((arm, h) <- history) {
-        val rows = arm.buildRows(h)
-        rows.foreach { case (t, r) => writeCells(r, s"$dir/$t", "overwrite") }
-        refreshArmStats(dir, arm.statsKey, arm.banded(rows.toMap.apply(arm.table)),
-          arm.bandKeys)
-      }
+    val built = history.map { case (arm, h) => arm -> arm.buildRows(h) }
+    val v = IndexStore.commitRebuild(dir, stats = built.map { case (arm, rows) =>
+        arm.statsKey -> exactStats(bucketHist(arm.banded(rows.toMap.apply(
+          arm.table)), arm.bandKeys, s"${arm.statsKey} write-time"))
+      }.toMap) {
+      for ((_, rows) <- built; (t, r) <- rows) writeCells(r, s"$dir/$t", "overwrite")
     }
     if (history.exists(_._1 == Text)) stampLedgerDdls(dir)
     v
@@ -1116,11 +963,11 @@ object DedupLedger {
     * its hottest band buckets ([[shedUnlessAffordable]]) so per-item
     * fan-out stays bounded as the arm table grows; exact duplicates are
     * immune (the exact arm is a separate equi-join). The bound comes
-    * from the persisted write-time stats when they are at least as new
-    * as `snap` (zero jobs), else from a footer count memoized per
-    * snapshot. For the text arm, hitsPerBucket = 1: the minhash band key
-    * is a string pair over a ~2^62 hash keyspace, so any batch's
-    * expected occupancy of one ledger bucket is ≪ 1, and it carries no
+    * from the stats `snap`'s manifest carries (zero jobs), else from the
+    * exact histogram memoized per arm fileset. For the text arm,
+    * hitsPerBucket = 1: the minhash band key is a string pair over a
+    * ~2^62 hash keyspace, so any batch's expected occupancy of one
+    * ledger bucket is ≪ 1, and it carries no
     * saturation sentinel (that keyspace is not a fixed bit geometry the
     * model speaks about). The fingerprint arms log when the geometry
     * has outgrown the table (ADVICE r16 #2, on both budget settings).
@@ -1161,19 +1008,24 @@ object DedupLedger {
     requireModality(dir, filesOf(snap, arm.tables.head), arm.modality,
       arm.legacyAllowed)
     val sd = arm.sides(spark, rows, near, dir, snap)
-    val persisted = IndexStore.armStats(dir, arm.statsKey)
-      .filter(_.version >= snap.version) // stale stats prove nothing
+    val persisted = snap.stats.get(arm.statsKey)
+    // a stats-less snapshot verdicted under a budget measures the exact
+    // histogram, which the next delta onto these files publishes
+    lazy val hist = histCache.stamped(histKey(dir, arm),
+      filesOf(snap, arm.table))(
+      bucketHist(sd.ledgerBands, arm.bandKeys, s"${arm.statsKey} ledger"))
     // band rows = table rows × bands: every row lands in one bucket per band
-    lazy val tableRows = persisted.map(_.rows / arm.bands).getOrElse(
-      sentinelCache.stamped(s"${IndexStore.storeId(dir)}:${arm.table}",
-        snap.version)(sd.table.count()))
+    lazy val tableRows = persisted.map(_.rows)
+      .orElse(pairBudgetPerItem.map(_ => histRows(hist))).map(_ / arm.bands)
+      .getOrElse(sentinelCache.stamped(
+        s"${IndexStore.storeId(dir)}:${arm.table}", snap.version)(sd.table.count()))
     arm.sentinel(tableRows, batch)
     val (lb, bb) = pairBudgetPerItem match {
       case None => (sd.ledgerBands, sd.batchBands)
       case Some(perItem) =>
         shedUnlessAffordable(sd.ledgerBands, arm.bandKeys, perItem,
           tableRows * arm.bands, sd.batchBands, _ / arm.bands,
-          dir, snap.version, arm.statsKey, persisted)
+          arm.statsKey, persisted, hist)
     }
     Joins(gate, sd.ledgerExact.join(gate(sd.batchExact), sd.exactKey),
       lb.join(gate(bb), arm.bandKeys))
@@ -1236,34 +1088,31 @@ object DedupLedger {
     * Increment-sized by contract. */
   def append(arm: LedgerArm, survivors: DataFrame, dir: String,
              tag: String): Int =
-    IndexStore.commitDelta(dir, Some(tag)) {
+    IndexStore.commitDeltaWith(dir, Some(tag)) {
       writeDelta(arm, arm.collapse(arm.keyed(survivors)).localCheckpoint(), dir)
     }
 
   /** A delta's table writes over a materialized [[LedgerArm.collapse]],
-    * one flat file per table ([[writeFlat]]), with the arm's stats
-    * bump. The writes and the bump are independent one-job DAGs over
-    * the materialized rows — overlapped; the commit lambda returns only
-    * when every file is on disk, so the manifest diff sees them exactly
-    * as a serial form would. The bump keys on the SAME geometry the
-    * arm's verdicts consult. */
-  private def writeDelta(arm: LedgerArm, collapsed: DataFrame,
-                         dir: String): Unit = {
+    * one flat file per table ([[writeFlat]]), and the stats its
+    * manifest carries ([[carriedStats]]) as a function of the base
+    * snapshot. The writes and the bump are independent one-job DAGs over
+    * the materialized rows — overlapped; this returns only when every
+    * file is on disk, so the manifest diff sees them exactly as a serial
+    * form would. The bump keys on the SAME geometry the arm's verdicts
+    * consult. */
+  private def writeDelta(arm: LedgerArm, collapsed: DataFrame, dir: String)
+      : IndexStore.Snapshot => Map[String, IndexStore.ArmStats] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = armWriteEc
     val rows = arm.deltaRows(collapsed)
-    // the arm's published files BEFORE this delta (pre-publish, under
-    // the writer lock; empty for a never-published store)
-    val before = IndexStore.headVersion(dir)
-      .map(v => filesOf(IndexStore.snapshotAt(dir, v), arm.table)).getOrElse(Nil)
-    bumpArmStats(dir, arm.statsKey, arm.banded(rows.toMap.apply(arm.table)),
-      arm.bandKeys, before, arm.table,
-      arm.banded(arm.tableFrame(collapsed.sparkSession, dir,
-        IndexStore.snapshot(dir)))) {
-      rows.map { case (t, r) => Future(writeFlat(r, s"$dir/$t")) }
-        .foreach(Await.result(_, Duration.Inf))
-    }
+    val bump = Future(deltaBump(arm.banded(rows.toMap.apply(arm.table)),
+      arm.bandKeys))
+    try rows.map { case (t, r) => Future(writeFlat(r, s"$dir/$t")) }
+      .foreach(Await.result(_, Duration.Inf))
+    finally { Await.ready(bump, Duration.Inf); () }
+    val b = Await.result(bump, Duration.Inf)
+    base => carriedStats(arm, dir, b, base)
   }
 
   /** One arm's share of an ingest step — the streamed tick's per-arm
@@ -1280,7 +1129,7 @@ object DedupLedger {
                            batchRows: Option[Long] = None): () => Int = {
     val delta = arm.collapse(keepersOf(arm, batch.sparkSession, batch, dir,
       snap, batchRows = batchRows)).localCheckpoint()
-    () => IndexStore.commitDelta(dir, Some(tag))(writeDelta(arm, delta, dir))
+    () => IndexStore.commitDeltaWith(dir, Some(tag))(writeDelta(arm, delta, dir))
   }
 
   /** One ingest GENERATION: verdict against the current snapshot, then

@@ -10,8 +10,9 @@ package graft.ops
   *    `compute` and replaces the entry in place. The stamp is whatever
   *    proves the value current: a source fingerprint (fitted cents,
   *    BPE merges, fixture query rows, store metadata), a snapshot
-  *    signature (serve frames) or a snapshot version (ledger sentinel
-  *    counts and histograms). Unstamped memos ([[getOrCompute]]) hold
+  *    signature (serve frames), a snapshot version (ledger sentinel
+  *    counts) or an arm's file list (ledger histograms). [[at]] reads
+  *    a value under its stamp without computing. Unstamped memos ([[getOrCompute]]) hold
   *    values that cannot go stale under their key: a part file's
   *    status, a frame keyed by its fileset, a store's IO handle.
   *  - `compute` runs OUTSIDE the monitor, so a slow recompute never
@@ -48,6 +49,8 @@ private[graft] final class DriverCache[K, V](val max: Int) {
         v
     }
   def getOrCompute(k: K)(compute: => V): V = stamped(k, ())(compute)
+  def at(k: K, stamp: Any): Option[V] =
+    m.synchronized(Option(m.get(k))).collect { case e if e.stamp == stamp => e.value }
   /** Replace (`Some`) or drop (`None`) the entry from its current value
     * in one step under the monitor. */
   def update(k: K)(f: Option[V] => Option[V]): Option[V] = m.synchronized {

@@ -53,12 +53,24 @@ object IndexStore {
     * TOMBSTONE files — `(modality, id)` rows [[forget]] committed;
     * readers subtract them ([[applyTombs]]) and [[compact]] folds them
     * into a physical drop. Empty everywhere except stores a takedown
-    * has touched, so pre-tombstone manifests parse unchanged. */
+    * has touched, so pre-tombstone manifests parse unchanged. `stats`
+    * (per-arm [[ArmStats]]) and `stamps` (build facts: `qe_base`,
+    * `built_version`, `last_replace_version`) are what the commit that
+    * published this manifest decided it carries, so they describe
+    * exactly this snapshot's rows; a legacy manifest carries neither. */
   final case class Snapshot(version: Int, codes: Seq[String],
                             vectors: Seq[String],
                             marks: Seq[String] = Nil,
                             seqs: Seq[String] = Nil,
-                            tombs: Seq[String] = Nil)
+                            tombs: Seq[String] = Nil,
+                            stats: Map[String, ArmStats] = Map.empty,
+                            stamps: Map[String, String] = Map.empty)
+
+  /** The manifest layout generation: 2 = manifests carry their
+    * snapshot's stats and stamps. Seed caches fold it into their params
+    * ([[VectorOps.ensureIndex]]), so a seed an older layout built is
+    * rebuilt instead of read without its facts. */
+  val LAYOUT = 2
 
   /** The store's IO handle ([[StoreIO]] — VERDICT r18 Next #1): every
     * manifest/metadata byte this object reads or writes goes through
@@ -143,7 +155,13 @@ object IndexStore {
       lines.collect { case s if s.startsWith("vectors\t") => s.substring(8) },
       lines.collect { case s if s.startsWith("marks\t") => s.substring(6) },
       lines.collect { case s if s.startsWith("seqs\t") => s.substring(5) },
-      lines.collect { case s if s.startsWith("tombs\t") => s.substring(6) })
+      lines.collect { case s if s.startsWith("tombs\t") => s.substring(6) },
+      lines.collect { case s if s.startsWith(STAT_PREFIX) =>
+        parseStat(s.substring(STAT_PREFIX.length)) }.flatten.toMap,
+      lines.collect { case s if s.startsWith(STAMP_PREFIX) =>
+        val kv = s.substring(STAMP_PREFIX.length)
+        val i = kv.indexOf('=')
+        kv.take(i) -> kv.drop(i + 1) }.toMap)
   }
 
   /** All committed parquet data files under `<dir>/<sub>`, as paths
@@ -180,8 +198,8 @@ object IndexStore {
     * clear-at-65,536 could momentarily hand two threads DIFFERENT
     * monitors for one store. Now an access-order LRU that (a) never
     * evicts a lock that is held or queued on, and (b) is backstopped
-    * by an identity RE-CHECK after every acquisition ([[lockJvm]] /
-    * [[tryLockJvm]]): a thread that locked an evicted instance detects
+    * by an identity RE-CHECK after every acquisition ([[lockJvm]]): a
+    * thread that locked an evicted instance detects
     * `interned(key) ne mine`, releases, and re-acquires the current
     * one — so two threads can NEVER both proceed under different
     * monitors for the same store. */
@@ -219,37 +237,6 @@ object IndexStore {
       l.unlock() // evicted+replaced between intern and lock: take the live one
     }
     sys.error("unreachable")
-  }
-  /** Non-blocking acquisition; None on contention OR on losing the
-    * (rare) eviction race more than a few times in a row — safe,
-    * because every `try` caller treats None as "skip the optional
-    * work". */
-  private def tryLockJvm(key: String):
-      Option[java.util.concurrent.locks.ReentrantLock] = {
-    var attempts = 0
-    while (attempts < 8) {
-      val l = intern(key)
-      if (!l.tryLock()) return None
-      if (interned(key, l)) return Some(l)
-      l.unlock()
-      attempts += 1
-    }
-    None
-  }
-  /** Deadline-bounded acquisition with the same eviction re-check. */
-  private def timedLockJvm(key: String, deadline: Long):
-      Option[java.util.concurrent.locks.ReentrantLock] = {
-    var first = true
-    while (first || System.nanoTime() < deadline) {
-      first = false
-      val l = intern(key)
-      val rem = math.max(0L, deadline - System.nanoTime())
-      if (!l.tryLock(rem, java.util.concurrent.TimeUnit.NANOSECONDS))
-        return None
-      if (interned(key, l)) return Some(l)
-      l.unlock()
-    }
-    None
   }
   /** Canonical store paths whose OS file lock THIS thread already
     * holds, with reentry depth — the cross-CHANNEL reentrancy ledger
@@ -320,95 +307,6 @@ object IndexStore {
     finally jvmLock.unlock()
   }
 
-  /** Non-blocking [[withWriterLock]]: runs `f` under the lock and
-    * returns Some(result) only if both the JVM and OS locks were FREE
-    * (or already held by this thread) — for best-effort maintenance a
-    * READER path may opportunistically perform (e.g. persisting a
-    * freshly computed stats snapshot) without ever queueing behind a
-    * long-running writer. */
-  private[graft] def tryWithWriterLock[A](dir: String)(f: => A): Option[A] = {
-    if (fenceDisabledForTest) return Some(f)
-    val st = io(dir)
-    val key = st.canonicalKey
-    val held = heldLocks.get()
-    if (held.getOrElse(key, 0) > 0) return Some(withOsLock(st, key)(f))
-    val jvmLock = tryLockJvm(key).getOrElse(return None)
-    try {
-      if (!st.supportsFileLock) {
-        held(key) = 1
-        try Some(f) finally { held.remove(key); () }
-      } else {
-        st.mkdirs("")
-        val lockFile = new java.io.File(st.resolve("_writer.lock"))
-        val ch = java.nio.channels.FileChannel.open(lockFile.toPath,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          val osLock =
-            try ch.tryLock()
-            catch { case _: java.nio.channels.OverlappingFileLockException => null }
-          if (osLock == null) None
-          else try {
-            held(key) = 1
-            try Some(f) finally { held.remove(key); () }
-          } finally osLock.release()
-        } finally ch.close()
-      }
-    } finally jvmLock.unlock()
-  }
-
-  /** Deadline-bounded [[withWriterLock]]: blocks for AT MOST
-    * ~`timeoutMs` across BOTH lock levels (JVM `ReentrantLock` via
-    * timed `tryLock`; OS `FileChannel` via a non-blocking `tryLock`
-    * poll), then gives up with None instead of queueing indefinitely
-    * behind a long-running writer. For read-side maintenance that has
-    * decided to escalate from opportunistic ([[tryWithWriterLock]])
-    * to BRIEFLY blocking — ADVICE r18 #2: `withWriterLock`'s 60 s
-    * deadline covers only the same-JVM channel-overlap retry;
-    * `jvmLock.lock()` and `ch.lock()` themselves wait forever behind
-    * e.g. a compaction shuffle, which is exactly the queue a read
-    * path must never join unboundedly. */
-  private[graft] def timedWithWriterLock[A](dir: String, timeoutMs: Long)
-                                           (f: => A): Option[A] = {
-    if (fenceDisabledForTest) return Some(f)
-    val st = io(dir)
-    val key = st.canonicalKey
-    val held = heldLocks.get()
-    if (held.getOrElse(key, 0) > 0) return Some(withOsLock(st, key)(f))
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    val jvmLock = timedLockJvm(key, deadline).getOrElse(return None)
-    try {
-      if (!st.supportsFileLock) {
-        held(key) = 1
-        try Some(f) finally { held.remove(key); () }
-      } else {
-      st.mkdirs("")
-      val ch = java.nio.channels.FileChannel.open(
-        new java.io.File(st.resolve("_writer.lock")).toPath,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        var osLock: java.nio.channels.FileLock = null
-        var timedOut = false
-        while (osLock == null && !timedOut) {
-          osLock =
-            try ch.tryLock()
-            catch { case _: java.nio.channels.OverlappingFileLockException => null }
-          if (osLock == null) {
-            if (System.nanoTime() > deadline) timedOut = true
-            else Thread.sleep(10)
-          }
-        }
-        if (osLock == null) None
-        else try {
-          held(key) = 1
-          try Some(f) finally { held.remove(key); () }
-        } finally osLock.release()
-      } finally ch.close()
-      }
-    } finally jvmLock.unlock()
-  }
-
   /** A store IDENTITY that survives everything but deleting the store
     * directory itself: a random UUID minted by the first publish and
     * kept through every append/compact/vacuum (vacuum prunes only
@@ -438,20 +336,14 @@ object IndexStore {
     * a modality the store never declared must FAIL, not silently
     * find zero history and admit every duplicate forever — the ADVICE
     * r15 finding on the text arm's empty fallback). Writes merge under
-    * the writer lock; reads take no lock. */
+    * the writer lock; reads take no lock. Facts about one snapshot
+    * (stats, build stamps) ride in its manifest instead. */
   def setProps(dir: String, kv: Map[String, String]): Unit =
-    withWriterLock(dir) { setPropsLocked(dir, kv) }
-  /** The body of [[setProps]] for callers ALREADY inside the writer
-    * lock (commit paths): the per-store FileChannel lock is not
-    * reentrant across channels, so nesting withWriterLock would throw
-    * OverlappingFileLockException. */
-  private[ops] def setPropsLocked(dir: String, kv: Map[String, String]): Unit = {
+    withWriterLock(dir) {
       require(kv.forall { case (k, v) =>
         !k.contains('\n') && !k.contains('=') && !v.contains('\n') },
         "store props must be single-line key=value pairs")
-      // an EMPTY value deletes the key — lifecycle code clears stamps
-      // before a rebuild so a crash mid-build can never leave a stale
-      // stamp describing the previous build's data
+      // an EMPTY value deletes the key
       val merged = (props(dir) ++ kv).filter(_._2.nonEmpty)
       // temp-sibling + atomic rename, like _HEAD (StoreIO.writeAtomic):
       // props gate verdict correctness (modality stamps, retrain
@@ -460,7 +352,7 @@ object IndexStore {
       io(dir).writeAtomic("_manifest/props",
         merged.toSeq.sorted.map { case (k, v) => s"$k=$v" }
           .mkString("\n").getBytes("UTF-8"))
-  }
+    }
   def props(dir: String): Map[String, String] =
     io(dir).readBytes("_manifest/props") match {
       case None => Map.empty
@@ -479,84 +371,52 @@ object IndexStore {
 
   /** WRITE-TIME maintained per-arm statistics (round 17, VERDICT r16
     * #1): a band-bucket size histogram the verdict-side shed ladder
-    * can consult with ZERO Spark jobs. `hist` is EXACT as of the
-    * version that last refreshed it; `slack` is the accumulated sound
+    * can consult with ZERO Spark jobs. They ride in the manifest whose
+    * rows they describe ([[Snapshot.stats]]). `hist` is EXACT as of
+    * the commit that last measured it; `slack` is the accumulated sound
     * upper bound on how much ANY single bucket can have grown through
     * the delta commits since (each delta adds its own max per-bucket
     * count — every pre-existing bucket grew by at most that, and a
     * bucket born since the refresh holds at most the sum of them). So
-    * `maxBound` = largest refreshed class + slack bounds EVERY bucket
-    * in the current content: while it stays at or under the shed
-    * floor, nothing can shed at any budget and the verdict skips the
-    * runtime histogram job entirely — the healthy-store steady state
-    * costs no per-tick corpus scan (the round-16 default ladder paid
-    * one bucket-histogram aggregation per published version, which a
+    * `maxBound` = largest measured class + slack bounds EVERY bucket
+    * in the snapshot: while it stays at or under the shed floor,
+    * nothing can shed at any budget and the verdict skips the runtime
+    * histogram job entirely — the healthy-store steady state costs no
+    * per-tick corpus scan (the round-16 default ladder paid one
+    * bucket-histogram aggregation per published version, which a
     * per-tick publisher turns into a corpus-proportional job per
     * tick — the wide-cell A/B isolated it). */
-  final case class ArmStats(version: Int, slack: Long, rows: Long,
-                            hist: Array[(Int, Long)]) {
+  final case class ArmStats(slack: Long, rows: Long,
+                            hist: Seq[(Int, Long)]) {
     def maxBound: Long =
       hist.map(_._1.toLong).foldLeft(0L)(math.max) + slack
   }
 
-  private def statsName(key: String) =
-    "stats." + key.map(c =>
-      if (c.isLetterOrDigit || "._=-".contains(c)) c else '_')
+  private val STAT_PREFIX = "stat\t"
+  private val STAMP_PREFIX = "stamp\t"
 
-  /** Read the persisted stats for one arm key (`None`: never written,
-    * cleared by a rebuild, or unparseable — every miss falls back to
-    * the runtime histogram path, so stats can only ever REMOVE work). */
-  def armStats(dir: String, key: String): Option[ArmStats] =
-    readArmStats(dir, statsName(key))
-
-  private def readArmStats(dir: String, name: String): Option[ArmStats] =
-    io(dir).readBytes(s"_manifest/$name").flatMap { b =>
-      scala.util.Try {
-        val lines = new String(b, "UTF-8").split('\n').filter(_.nonEmpty)
-        val kv = lines.takeWhile(_.contains('='))
-          .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap
-        ArmStats(kv("version").toInt, kv("slack").toLong, kv("rows").toLong,
-          lines.dropWhile(_.contains('=')).map { l =>
-            val p = l.split('\t'); (p(0).toInt, p(1).toLong)
-          })
-      }.toOption
-    }
-
-  /** Persist one arm's stats (temp sibling + atomic rename, so a
-    * racing reader sees old or new, never torn). Read-modify-write
-    * callers (the delta bump) MUST hold the writer lock; the
-    * opportunistic verdict-side refresh goes through
-    * [[tryWithWriterLock]]. */
-  def writeArmStats(dir: String, key: String, st: ArmStats): Unit =
-    writeArmStatsNamed(dir, statsName(key), st)
-
-  private def writeArmStatsNamed(dir: String, name: String,
-                                 st: ArmStats): Unit = {
-    val body = (Seq(s"version=${st.version}", s"slack=${st.slack}",
-      s"rows=${st.rows}") ++
-      st.hist.map { case (sz, n) => s"$sz\t$n" }).mkString("\n")
-    io(dir).writeAtomic(s"_manifest/$name", body.getBytes("UTF-8"))
+  /** A manifest's fact lines: `stat\t<key>\t<slack>\t<rows>\t<sz>:<n>,…`
+    * per arm and `stamp\t<key>=<value>` per stamp, sorted by key. */
+  private def factLines(stats: Map[String, ArmStats],
+                        stamps: Map[String, String]): Seq[String] = {
+    require((stats.keys ++ stamps.keys ++ stamps.values).forall(k =>
+        !k.exists(c => c == '\n' || c == '\r' || c == '\t')) &&
+      !stamps.keys.exists(_.contains('=')),
+      "stat and stamp keys are single-line, tab-free and (stamps) '='-free")
+    stats.toSeq.sortBy(_._1).map { case (k, st) =>
+      s"$STAT_PREFIX$k\t${st.slack}\t${st.rows}\t" +
+        st.hist.map { case (sz, n) => s"$sz:$n" }.mkString(",") } ++
+    stamps.toSeq.sorted.map { case (k, v) => s"$STAMP_PREFIX$k=$v" }
   }
 
-  private def armStatsNames(dir: String): Seq[String] =
-    io(dir).list("_manifest").filter(_.startsWith("stats."))
-
-  /** Drop every persisted arm stat — [[commitRebuild]] calls this
-    * before the replacing write lands. */
-  private def clearArmStats(dir: String): Unit =
-    armStatsNames(dir).foreach { n => io(dir).delete(s"_manifest/$n"); () }
-
-  /** Carry arm stats across a CONTENT-PRESERVING replacement published
-    * at `v` onto head `onto`: every stat coherent with `onto` (version
-    * >= onto, so it already counts every delta the replacement carried
-    * forward) describes the new snapshot's rows too — compaction
-    * rewrites the same rows, or fewer when it folds tombstones, which
-    * only loosens the bound. Stale stats stay stale. Caller holds the
-    * writer lock. */
-  private def restampArmStats(dir: String, onto: Int, v: Int): Unit =
-    for (n <- armStatsNames(dir); st <- readArmStats(dir, n)
-         if st.version >= onto && st.version < v)
-      writeArmStatsNamed(dir, n, st.copy(version = v))
+  private def parseStat(l: String): Option[(String, ArmStats)] =
+    scala.util.Try {
+      val p = l.split("\t", -1)
+      p(0) -> ArmStats(p(1).toLong, p(2).toLong,
+        p(3).split(',').filter(_.nonEmpty).toSeq.map { c =>
+          val i = c.indexOf(':'); (c.take(i).toInt, c.drop(i + 1).toLong)
+        })
+    }.toOption
 
   /** The single conditional-create operation the whole OCC protocol
     * rests on (VERDICT r17 #2): atomically materialize `body` at
@@ -745,24 +605,10 @@ object IndexStore {
     * re-derived its carry. */
   private[graft] val casRetries = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Publish with retry — for commits whose file lists do not depend
-    * on the head they land on (a REBUILD publishes exactly what is on
-    * disk). Delta/replace commits re-derive their lists per attempt
-    * instead ([[commitDelta]], [[commitReplace]]). */
-  private def publish(dir: String, codes: Seq[String],
-                      vectors: Seq[String],
-                      marks: Seq[String] = Nil,
-                      seqs: Seq[String] = Nil,
-                      tombs: Seq[String] = Nil): Int = {
-    var v = headVersion(dir).getOrElse(0) + 1
-    while (!publishCas(dir, v, codes, vectors, marks, seqs, tombs))
-      v = math.max(v + 1, headVersion(dir).getOrElse(0) + 1)
-    v
-  }
-
   /** Commit a DELTA write (append): run `write` (which may only ADD
     * part files), then publish previous-snapshot ∪ the files that
-    * appeared. Returns the new version.
+    * appeared, with the previous snapshot's stats and stamps. Returns
+    * the new version.
     *
     * `tag` makes the commit IDEMPOTENT: a tag already recorded skips
     * the write entirely and returns the current version — the contract
@@ -778,6 +624,14 @@ object IndexStore {
     * not bounded by manifest retention. */
   def commitDelta(dir: String, tag: Option[String] = None)
                  (write: => Unit): Int =
+    commitDeltaWith(dir, tag) { write; _.stats }
+
+  /** [[commitDelta]] whose `write` returns the stats the new manifest
+    * carries as a function of the base snapshot: each CAS attempt
+    * applies it to the head it re-read, so a loser re-applies its
+    * increment onto the winner's stats. Stamps carry unchanged. */
+  private[graft] def commitDeltaWith(dir: String, tag: Option[String])
+                                    (write: => Snapshot => Map[String, ArmStats]): Int =
     withWriterLock(dir) {
       // non-empty: sha256("") is a degenerate idempotency key that
       // would silently dedupe ALL empty-tagged commits; no CR/LF: the
@@ -791,7 +645,7 @@ object IndexStore {
       else {
         val preWrite = Seq("codes", "vectors", "marks", "seqs", "tombs")
           .map(sub => sub -> listData(dir, sub).toSet).toMap
-        write
+        val statsOf = write
         // MY files = what appeared across the write call — frozen once,
         // so OCC retries re-layer only the BASE snapshot (a loser must
         // adopt the winner's files, never re-guess its own; an unfenced
@@ -815,7 +669,8 @@ object IndexStore {
             (before.marks ++ added("marks")).distinct,
             (before.seqs ++ added("seqs")).distinct,
             (before.tombs ++ added("tombs")).distinct,
-            extra = tag.map(t => s"$TAG_PREFIX$t").toSeq)
+            extra = factLines(statsOf(before), before.stamps) ++
+              tag.map(t => s"$TAG_PREFIX$t"))
         }
         // the marker is the O(1) fast path, not the commit point: the
         // manifest line above already made the tag durable, so a crash
@@ -824,13 +679,6 @@ object IndexStore {
         v
       }
     }
-
-  /** Byte size of one published data file (manifest-relative path
-    * under `<dir>/<sub>`), through the store's IO seam — so byte-gated
-    * policies (DedupLedger's stats escalation) work on remote
-    * stores. */
-  def dataFileSize(dir: String, sub: String, rel: String): Long =
-    io(dir).size(s"$sub/$rel")
 
   /** Tag durability is TWO-TIER (round 19). The commit point is the
     * `tag\t<tag>` line inside the CAS-published manifest — atomic with
@@ -940,7 +788,10 @@ object IndexStore {
   /** Commit a FULL (re)build: `write` replaces the data directories
     * outright (`mode("overwrite")`), so the snapshot is exactly what is
     * on disk afterwards — a rebuild over a published store must not
-    * carry forward references to files the overwrite deleted.
+    * carry forward references to files the overwrite deleted. Its
+    * manifest carries ONLY the facts its builder hands it: `stats`
+    * (evaluated once, after `write`) and `stamps` of the version it
+    * publishes — nothing describing the replaced content survives.
     *
     * TOMBSTONES do not survive a rebuild either: the new snapshot's
     * content is exactly what `write` produced, so a caller rebuilding
@@ -948,25 +799,20 @@ object IndexStore {
     * RE-INTRODUCES it — takedowns must be re-applied to the rebuild
     * input (or re-forgotten after), the same contract every
     * content-replacing operation has. */
-  def commitRebuild(dir: String)(write: => Unit): Int =
+  def commitRebuild(dir: String, stats: => Map[String, ArmStats] = Map.empty,
+                    stamps: Int => Map[String, String] = _ => Map.empty)
+                   (write: => Unit): Int =
     withWriterLock(dir) {
-      // a rebuild REPLACES content outright, so every persisted arm
-      // stat describing the previous content is unsound the moment the
-      // new snapshot publishes (the new corpus may carry a hot bucket
-      // the old histogram never saw) — clear first, let the builder
-      // stamp fresh stats for the arms it writes
-      clearArmStats(dir)
       write
-      publish(dir, listData(dir, "codes"), listData(dir, "vectors"),
-        listData(dir, "marks"), listData(dir, "seqs"))
+      val built = stats
+      val (codes, vectors, marks, seqs) = (listData(dir, "codes"),
+        listData(dir, "vectors"), listData(dir, "marks"), listData(dir, "seqs"))
+      var v = headVersion(dir).getOrElse(0) + 1
+      while (!publishCas(dir, v, codes, vectors, marks, seqs,
+                         extra = factLines(built, stamps(v))))
+        v = math.max(v + 1, headVersion(dir).getOrElse(0) + 1)
+      v
     }
-
-  /** Version of the store's last REPLACEMENT commit (compaction), if
-    * any — incremental readers (diff-based policies like the ANN
-    * retrain trigger) consult this because a diff across a replacement
-    * boundary surfaces rewritten old rows as if they were appends. */
-  def lastReplaceVersion(dir: String): Option[Int] =
-    props(dir).get("last_replace_version").map(_.toInt)
 
   /** Thrown by [[commitReplace]] when ANOTHER replacement committed
     * between `base` and the publish attempt (round 19, the
@@ -1006,12 +852,15 @@ object IndexStore {
     * append that landed while the compaction shuffle ran must survive —
     * it rewrote `base`'s data, not the concurrent batch's). Everything
     * `base` referenced becomes unreferenced garbage for [[vacuum]].
-    * `preservesContent` (compaction only) carries the arm stats that
-    * are coherent with the published-onto head to the new version; a
-    * refine or any other row-changing replacement leaves them at their
-    * old version, which verdicts read as stale (runtime histogram). */
+    * The new manifest carries the published-onto head's stamps plus
+    * `stamps(v)` and `last_replace_version = v`. `preservesContent`
+    * (compaction) also carries that head's arm stats: compaction
+    * rewrites the same rows, or fewer when it folds tombstones, which
+    * only loosens the bound. Any other replacement changes rows, so
+    * its manifest carries no stats (verdicts measure at runtime). */
   def commitReplace(dir: String, base: Snapshot,
-                    preservesContent: Boolean = false)
+                    preservesContent: Boolean = false,
+                    stamps: Int => Map[String, String] = _ => Map.empty)
                    (write: => Unit): Int =
     withWriterLock(dir) {
       val preWrite = Seq("codes", "vectors", "marks", "seqs", "tombs")
@@ -1021,7 +870,6 @@ object IndexStore {
         .map(sub => sub ->
           (listData(dir, sub).toSet -- preWrite(sub))).toMap
       var v = 0
-      var onto = 0
       var done = false
       while (!done) {
         // carries re-derive PER ATTEMPT: an append that lands while the
@@ -1041,17 +889,16 @@ object IndexStore {
           .foreach(w => throw ConcurrentReplacementException(
             dir, base.version, w))
         v = math.max(now.version, v) + 1
-        onto = now.version
         done = publishCas(dir, v,
           (added("codes") ++ (now.codes.toSet -- base.codes.toSet)).toSeq.sorted,
           (added("vectors") ++ (now.vectors.toSet -- base.vectors.toSet)).toSeq.sorted,
           (added("marks") ++ (now.marks.toSet -- base.marks.toSet)).toSeq.sorted,
           (added("seqs") ++ (now.seqs.toSet -- base.seqs.toSet)).toSeq.sorted,
           (added("tombs") ++ (now.tombs.toSet -- base.tombs.toSet)).toSeq.sorted,
-          extra = Seq(s"$REPLACE_PREFIX${base.version}"))
+          extra = s"$REPLACE_PREFIX${base.version}" +: factLines(
+            if (preservesContent) now.stats else Map.empty,
+            now.stamps ++ stamps(v) + ("last_replace_version" -> v.toString)))
       }
-      if (preservesContent) restampArmStats(dir, onto, v)
-      setPropsLocked(dir, Map("last_replace_version" -> v.toString))
       v
     }
 
@@ -1239,10 +1086,10 @@ object IndexStore {
     * bytes are gone — the full takedown lifecycle). `tag` gives the
     * commit the same idempotency contract as streamed appends.
     *
-    * Persisted [[ArmStats]] intentionally survive a forget: the
-    * histogram then OVERCOUNTS, which is the safe direction for the
-    * shed ladder (its bounds stay upper bounds). Compaction re-stamps
-    * honest stats when the drop becomes physical. */
+    * The forget's manifest carries the base's [[ArmStats]] unchanged:
+    * the histogram then OVERCOUNTS, which is the safe direction for the
+    * shed ladder (its bounds stay upper bounds), and compaction carries
+    * the same bound when the drop becomes physical. */
   def forget(spark: SparkSession, dir: String, modality: String,
              ids: DataFrame, tag: Option[String] = None): Int = {
     require(KNOWN_MODALITIES.contains(modality),

@@ -1212,12 +1212,23 @@ object VectorOps {
     * `qe_base`. ≈ 1 while appends match the trained distribution;
     * grows as they diverge. None when nothing was appended or the
     * store predates the stamps. */
-  def appendedDriftRatio(spark: SparkSession, dir: String): Option[Double] = {
-    val props = IndexStore.props(dir)
+  def appendedDriftRatio(spark: SparkSession, dir: String): Option[Double] =
+    driftWindow(dir).map { case (head, built, base) =>
+      val (_, appended) = IndexStore.diffFrames(spark, dir, built, head)
+      val coarse = spark.read.parquet(s"$dir/coarse")
+      meanCoarseQe(kmeansAssign(appended.select(col("vec_id"), col("q")), coarse)) / base
+    }
+
+  /** The drift policy's window, `(head, build snapshot, qe_base)`, from
+    * the stamps the head manifest carries — None when nothing was
+    * appended since the build, or the head carries no stamps (a store
+    * an older layout built reads as unstamped). */
+  private def driftWindow(dir: String)
+      : Option[(IndexStore.Snapshot, IndexStore.Snapshot, Double)] = {
+    val head = IndexStore.snapshot(dir)
     for {
-      base <- props.get("qe_base").map(_.toDouble) if base > 0.0
-      builtV <- props.get("built_version").map(_.toInt)
-      head = IndexStore.snapshot(dir)
+      base <- head.stamps.get("qe_base").map(_.toDouble) if base > 0.0
+      builtV <- head.stamps.get("built_version").map(_.toInt)
       if head.version > builtV
       // a COMPACTION in (builtV, head] rewrote the whole corpus into
       // new files, so the manifest diff would surface every old row as
@@ -1226,15 +1237,11 @@ object VectorOps {
       // ratio is the honest answer; a deployment re-stamps by
       // rebuilding, or sizes its compaction cadence around the policy
       // window (diffFrames documents the same boundary).
-      if !IndexStore.lastReplaceVersion(dir).exists(_ > builtV)
+      if !head.stamps.get("last_replace_version").exists(_.toInt > builtV)
       // vacuum past the retention window prunes the build manifest —
       // the incremental read is then unavailable, not approximable
       built <- scala.util.Try(IndexStore.snapshotAt(dir, builtV)).toOption
-      (_, appended) = IndexStore.diffFrames(spark, dir, built, head)
-    } yield {
-      val coarse = spark.read.parquet(s"$dir/coarse")
-      meanCoarseQe(kmeansAssign(appended.select(col("vec_id"), col("q")), coarse)) / base
-    }
+    } yield (head, built, base)
   }
 
   /** The RETRAIN-TRIGGER policy (VERDICT r15 Next #6) — `None` drift
@@ -1270,12 +1277,6 @@ object VectorOps {
     */
   def buildIvfPqIndex(emb: DataFrame, dir: String, k: Int,
                       checkpointDir: Option[String] = None): Unit = {
-    // clear the previous build's policy stamps FIRST: a crash anywhere
-    // below leaves the store unstamped (policy reads None — honest),
-    // never carrying the old build's qe_base/built_version over data
-    // they do not describe (round-16 review find)
-    if (IndexStore.headVersion(dir).isDefined)
-      IndexStore.setProps(dir, Map("qe_base" -> "", "built_version" -> ""))
     val (quant, coarse, cb, codes, assigned) = ivfPqBuild(emb, k, checkpointDir)
     coarse.write.mode("overwrite").parquet(s"$dir/coarse")
     cb.write.mode("overwrite").parquet(s"$dir/codebook")
@@ -1285,7 +1286,14 @@ object VectorOps {
     val vecCols = Seq(col("vec_id"), col("q"), col("cell")) ++
       (if (quant.columns.contains("label")) Seq(col("label")) else Nil)
     val vecsWritten = assigned.select(vecCols: _*)
-    IndexStore.commitRebuild(dir) {
+    // the training-time quantization error and the build's own version
+    // ride in the manifest that publishes the build: the
+    // [[needsRetrain]] policy compares appended vectors' error against
+    // qe_base, reading the appended rows manifest-natively from
+    // built_version -> HEAD; nothing of a previous build survives
+    lazy val qeBase = meanCoarseQe(assigned)
+    IndexStore.commitRebuild(dir, stamps = v =>
+        Map("qe_base" -> qeBase.toString, "built_version" -> v.toString)) {
       // explicit cell clustering before the write: the encode/assign
       // paths are now pure row-local projections (no shuffle for AQE to
       // coalesce), so writing straight from the corpus partitioning
@@ -1303,17 +1311,7 @@ object VectorOps {
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/vectors")
     }
-    // stamp the training-time quantization error and the build snapshot
-    // version: the [[needsRetrain]] policy compares appended vectors'
-    // error against qe_base, reading the appended rows manifest-natively
-    // from built_version -> HEAD. The stamp lands AFTER the publish (a
-    // crash in between leaves the store unstamped -> policy None, the
-    // honest degraded state) and clears any prior build's
-    // last_replace_version so the new policy window starts clean.
     IndexStore.setProps(dir, Map(
-      "qe_base" -> meanCoarseQe(assigned).toString,
-      "built_version" -> IndexStore.headVersion(dir).getOrElse(0).toString,
-      "last_replace_version" -> "",
       // modality stamp: forget's declared-modalities guard rejects a
       // 'text' takedown against this vec_id vocabulary by name instead
       // of silently tombstoning the wrong id space (ADVICE r17)
@@ -1326,9 +1324,9 @@ object VectorOps {
       // inferred frames are column-order-identical; appends, refines
       // and compactions preserve the shape by construction, and the
       // `ddl.version` gate keeps time-travel reads below this build on
-      // inference. Stamped beside built_version, after the publish —
-      // a crash in between leaves the store unstamped, the honest
-      // degraded (inference) state.
+      // inference. Stamped after the publish — a crash in between
+      // leaves the store unstamped, the honest degraded (inference)
+      // state.
       "ddl.version" -> IndexStore.headVersion(dir).getOrElse(0).toString,
       "ddl.codes" -> inferenceOrderDdl(codes),
       "ddl.vectors" -> inferenceOrderDdl(vecsWritten)))
@@ -1436,16 +1434,7 @@ object VectorOps {
                          maxRefineFraction: Double = 0.5,
                          globalGate: Boolean = true): (Boolean, Seq[Int]) =
     IndexStore.withWriterLock(dir) {
-      val props = IndexStore.props(dir)
-      val eligible = for {
-        base <- props.get("qe_base").map(_.toDouble) if base > 0.0
-        builtV <- props.get("built_version").map(_.toInt)
-        head = IndexStore.snapshot(dir)
-        if head.version > builtV
-        if !IndexStore.lastReplaceVersion(dir).exists(_ > builtV)
-        built <- scala.util.Try(IndexStore.snapshotAt(dir, builtV)).toOption
-      } yield (head, built, base)
-      eligible match {
+      driftWindow(dir) match {
         case None => (false, Nil)
         case Some((head, built, base)) =>
           val (_, appended) = IndexStore.diffFrames(spark, dir, built, head)
@@ -1698,7 +1687,11 @@ object VectorOps {
       vectors = head.vectors.filter(f =>
         drifted.exists(c => f.startsWith(s"cell=$c/"))),
       tombs = Nil)
-    val v = IndexStore.commitReplace(dir, baseScope) {
+    // the policy window restarts at the refined head (future drift
+    // measures future appends); qe_base, the training-time reference,
+    // carries over
+    IndexStore.commitReplace(dir, baseScope,
+        stamps = v => Map("built_version" -> v.toString)) {
       // independent DAGs over the checkpointed assignment — overlap
       // them (the ledger append discipline); the commit lambda
       // returns only when both file sets are on disk
@@ -1725,9 +1718,6 @@ object VectorOps {
     // never reads its own input.
     coarseNew.coalesce(1).write.mode("overwrite").parquet(s"$dir/coarse")
     mark("router flip")
-    // policy window restarts at the refined head: future drift measures
-    // future appends; qe_base (the training-time reference) stands
-    IndexStore.setPropsLocked(dir, Map("built_version" -> v.toString))
   }
 
   /** Serve q127's exact answer from a [[buildIvfPqIndex]] store: the
@@ -1851,10 +1841,13 @@ object VectorOps {
                                  srcFile: String = "embeddings.parquet")
                                 (build: java.io.File => Unit): String = {
     val src = Fingerprint.of(d, srcFile)
-    val fp = md5hex(s"$params|$src")
+    // the store layout is part of every seed's params: a seed an older
+    // layout built is rebuilt, and sits beside this one
+    val keyed = s"$params|layout=${IndexStore.LAYOUT}"
+    val fp = md5hex(s"$keyed|$src")
     val slug = md5hex(new java.io.File(d).getAbsolutePath).take(16)
     val stem = s"graft_${tag}_$slug"
-    val name = s"${stem}_${md5hex(params).take(8)}"
+    val name = s"${stem}_${md5hex(keyed).take(8)}"
     val tmpRoot = new java.io.File(sys.props("java.io.tmpdir"))
     val base = new java.io.File(tmpRoot, name)
     val marker = new java.io.File(base, "_INDEX_FINGERPRINT")

@@ -75,15 +75,4 @@ object JobSinks {
   def readJdbc(spark: org.apache.spark.sql.SparkSession, url: String,
                table: String): DataFrame =
     spark.read.jdbc(url, table, new java.util.Properties())
-
-  /** S9, literal form: write `df` as a REAL SQLite database file
-    * (`sqlite3 jobs.db 'SELECT * FROM jobs'` works on the output —
-    * README.md:61-69's exact downstream surface) via the pure-JVM
-    * [[SqliteWriter]], no JDBC driver involved. Streams one partition
-    * at a time through the driver (`toLocalIterator` + incremental page
-    * assembly) — the single local output file is a disk-bound funnel,
-    * not a driver-heap bound, though fact data still belongs in parquet.
-    */
-  def writeSqlite(df: DataFrame, path: String, table: String = "jobs"): Unit =
-    SqliteWriter.write(df, path, table)
 }

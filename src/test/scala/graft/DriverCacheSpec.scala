@@ -28,7 +28,7 @@ class DriverCacheSpec extends AnyFunSuite {
     for (i <- 900 to 1000; v <- c.get(s"store-$i")) assert(v == i)
   }
 
-  test("all 11 driver memos are DriverCaches at their fixed bounds") {
+  test("all 10 driver memos are DriverCaches at their fixed bounds") {
     // a gate-zone or per-tick store churn cannot grow any of them
     // without limit
     val bounds = Seq[(String, DriverCache[_, _], Int)](
@@ -41,7 +41,6 @@ class DriverCacheSpec extends AnyFunSuite {
       ("ioCache", IndexStore.ioCache, 1 << 16),
       ("sentinelCache", DedupLedger.sentinelCache, 4096),
       ("histCache", DedupLedger.histCache, 4096),
-      ("healSkips", DedupLedger.healSkips, 4096),
       ("mergesCache", BpeOps.mergesCache, 64))
     for ((name, c, max) <- bounds) assert(c.max == max, name)
   }
@@ -56,6 +55,8 @@ class DriverCacheSpec extends AnyFunSuite {
     assert(c.stamped("a", "fp1")(fail("a matching stamp recomputed")) == 1)
     assert(c.stamped("b", 7L)(fail("a matching stamp recomputed")) == 2)
     assert(calls == 2 && c.size == 2)
+    assert(c.at("a", "fp1").contains(1) && c.at("a", "fp2").isEmpty &&
+      c.at("z", "fp1").isEmpty, "at must read only under the stored stamp")
     assert(c.stamped("a", "fp2")(load(3)) == 3, "a stale stamp served")
     assert(c.size == 2 && c.get("a").contains(3),
       "a stale stamp must replace its entry, not add one")

@@ -741,4 +741,64 @@ class IndexStoreSpec extends SparkSpec {
     assert((bc, bv, bcr, bvr) == rows(plain))
     assert(bcr.size == 32 && bvr.size == 32)
   }
+
+  test("manifest facts: stats and stamps round-trip through each commit " +
+       "kind; a legacy manifest with stats side files reads as stats-less " +
+       "and unstamped, and its side files stay inert") {
+    val dir = java.nio.file.Files.createTempDirectory("idx-facts").toString
+    def codes(rows: Seq[(Int, String, Long)], mode: String): Unit =
+      rows.toDF("cell", "h", "owner").write.mode(mode).parquet(s"$dir/codes")
+    val st = IndexStore.ArmStats(0L, 12L, Seq((2, 6L)))
+    val v1 = IndexStore.commitRebuild(dir, stats = Map("k" -> st),
+        stamps = v => Map("built_version" -> v.toString, "qe_base" -> "0.5")) {
+      codes(Seq((0, "a", 0L)), "overwrite")
+    }
+    val s1 = IndexStore.snapshot(dir)
+    assert(s1.stats == Map("k" -> st))
+    assert(s1.stamps == Map("built_version" -> v1.toString, "qe_base" -> "0.5"))
+    // a delta carries both by default
+    IndexStore.commitDelta(dir, Some("d1"))(codes(Seq((1, "b", 1L)), "append"))
+    val s2 = IndexStore.snapshot(dir)
+    assert(s2.stats == s1.stats && s2.stamps == s1.stamps)
+    // a row-changing replacement drops the stats, keeps the stamps and
+    // adds last_replace_version; a rebuild keeps only what it is handed
+    val v3 = IndexStore.commitReplace(dir, s2)(codes(Seq((0, "a", 0L)), "append"))
+    val s3 = IndexStore.snapshot(dir)
+    assert(s3.stats.isEmpty && s3.stamps ==
+      s1.stamps + ("last_replace_version" -> v3.toString))
+    IndexStore.commitRebuild(dir)(codes(Seq((0, "a", 0L)), "overwrite"))
+    val s4 = IndexStore.snapshot(dir)
+    assert(s4.stats.isEmpty && s4.stamps.isEmpty)
+
+    // the legacy layout: a manifest without fact lines, arm stats in a
+    // `_manifest/stats.*` side file and build stamps in props
+    val legacy = java.nio.file.Files.createTempDirectory("idx-legacy").toString
+    Seq((0, "a", 0L)).toDF("cell", "h", "owner")
+      .write.partitionBy("cell").parquet(s"$legacy/codes")
+    val files = new java.io.File(s"$legacy/codes/cell=0").listFiles()
+      .map(_.getName).filter(_.endsWith(".parquet")).map("cell=0/" + _)
+    new java.io.File(s"$legacy/_manifest").mkdirs()
+    def put(rel: String, body: String): Unit =
+      java.nio.file.Files.write(new java.io.File(legacy, rel).toPath,
+        body.getBytes("UTF-8"))
+    put("_manifest/v1.list", files.map(f => s"codes\t$f").mkString("\n"))
+    put("_HEAD", "1")
+    val side = "version=1\nslack=0\nrows=6\n1\t6"
+    put("_manifest/stats.vectors-hist", side)
+    put("_manifest/props", "built_version=1\nqe_base=0.5")
+    val l1 = IndexStore.snapshot(legacy)
+    assert(l1.version == 1 && l1.codes.toSet == files.toSet)
+    assert(l1.stats.isEmpty && l1.stamps.isEmpty,
+      "a legacy manifest must read as stats-less and unstamped")
+    IndexStore.commitDelta(legacy, Some("l1")) {
+      Seq((1, "b", 1L)).toDF("cell", "h", "owner")
+        .write.mode("append").parquet(s"$legacy/codes")
+    }
+    val l2 = IndexStore.snapshot(legacy)
+    assert(l2.version == 2 && l2.stats.isEmpty && l2.stamps.isEmpty,
+      "a delta onto a legacy manifest must not adopt its side files")
+    assert(new String(java.nio.file.Files.readAllBytes(
+      new java.io.File(legacy, "_manifest/stats.vectors-hist").toPath),
+      "UTF-8") == side, "legacy side files stay inert")
+  }
 }

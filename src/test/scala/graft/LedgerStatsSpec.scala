@@ -1,23 +1,27 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.ops.{DedupLedger, IndexStore}
 import graft.ops.DedupLedger.{Media, Text, Video}
 
 /** Write-time arm statistics (round 17, VERDICT r16 #1): the shed
   * ladder's healthy-store decision must come from stats the PUBLISHER
-  * maintained — zero Spark jobs at verdict time — and the stats must
-  * stay SOUND across the store lifecycle:
-  *   - rebuild computes the exact banded-bucket histogram (slack 0);
-  *   - each delta bumps slack by the delta's max bucket count and rows
-  *     by its banded row count (a crashed bump over-counts, never
-  *     under-counts, because it lands before the manifest CAS);
-  *   - a rebuild CLEARS stale stats before the new content publishes;
+  * maintained — zero Spark jobs at verdict time — and the stats ride
+  * in the manifest whose rows they describe, SOUND across the store
+  * lifecycle:
+  *   - a rebuild's manifest carries the exact banded-bucket histogram
+  *     (slack 0) and nothing of the content it replaced;
+  *   - each delta's manifest carries its base's stats bumped by the
+  *     delta's max bucket count (slack) and banded row count (rows),
+  *     re-applied per CAS attempt, so a loser bumps the winner's stats;
   *   - every store a builder writes carries stats, whatever its size,
   *     so a streamed tick's verdict measures nothing ledger-wide;
-  *   - compaction rewrites the same rows, so it carries stats coherent
-  *     with the head it publishes onto (concurrent appends included)
-  *     to its own version;
+  *   - compaction rewrites the same rows, so it carries the stats of
+  *     the head it publishes onto (concurrent appends included);
+  *   - a stats-less manifest converges through the tick's own commit:
+  *     the histogram its verdict paid is published by the next delta,
+  *     and no read path writes;
   *   - stats can only remove work: a hot store (maxBound above the
   *     shed floor) falls back to the runtime histogram and sheds
   *     byte-identically to a store with no stats at all.
@@ -60,6 +64,10 @@ class LedgerStatsSpec extends SparkSpec {
       Media(g) -> marks)
 
   private val textKey = "vectors-hist"
+
+  /** The stats the head manifest carries for `key`. */
+  private def statsOf(dir: String, key: String): Option[IndexStore.ArmStats] =
+    IndexStore.snapshot(dir).stats.get(key)
   private val textBands = 6 // DedupOps.NUM_SEEDS / ROWS_PER_BAND
 
   private def textDocs(ids: Seq[Long]) =
@@ -103,7 +111,7 @@ class LedgerStatsSpec extends SparkSpec {
     for (g <- Seq(geom, DedupLedger.WideMarks)) withClue(s"${g.params}: ") {
       val dir = java.nio.file.Files.createTempDirectory("stats-healthy").toString
       mixedLedger(dir, healthyMarks(40000, g), g)
-      val st = IndexStore.armStats(dir, s"marks-hist-${g.params}")
+      val st = statsOf(dir, s"marks-hist-${g.params}")
         .getOrElse(fail("rebuild of a corpus-scale store must stamp arm stats"))
       assert(st.slack == 0L, "a fresh rebuild's stats carry no slack")
       assert(st.rows == 40000L * g.bands,
@@ -184,20 +192,19 @@ class LedgerStatsSpec extends SparkSpec {
        "text ledger's default verdict runs no more jobs than the uncapped " +
        "one") {
     val dir = textLedger(64)
-    val st = IndexStore.armStats(dir, textKey)
+    val st = statsOf(dir, textKey)
       .getOrElse(fail("a 64-doc ledger build must stamp text arm stats"))
-    assert(st.slack == 0L && st.rows == 64L * textBands &&
-      st.version == IndexStore.headVersion(dir).get, s"got $st")
+    assert(st.slack == 0L && st.rows == 64L * textBands, s"got $st")
     val (jd, jn) = textVerdictJobs(dir)
     assert(jd <= jn, s"the default-budget verdict ran $jd jobs to the " +
       s"uncapped verdict's $jn: it measured the ledger before its verdict")
-    // the mixed builder stamps its text and marks arms; the seqs arm
-    // gets exact stats from its first delta
+    // the mixed builder stamps its text and marks arms; the seqs arm's
+    // first delta bumps zero stats
     val mixed = java.nio.file.Files.createTempDirectory("stats-mixed").toString
     mixedLedger(mixed, healthyMarks(500))
-    assert(IndexStore.armStats(mixed, textKey).exists(_.rows == textBands),
+    assert(statsOf(mixed, textKey).exists(_.rows == textBands),
       "the mixed build must stamp its text arm")
-    assert(IndexStore.armStats(mixed, statsKey)
+    assert(statsOf(mixed, statsKey)
       .exists(_.rows == 500L * geom.bands), "the mixed build must stamp marks")
     val frames = spark.range(0, 10, 1, 2).crossJoin(spark.range(0, 4, 1, 1)
         .withColumnRenamed("id", "f"))
@@ -205,9 +212,9 @@ class LedgerStatsSpec extends SparkSpec {
         expr(s"array(cast(conv(substring(md5(concat(id, '/', f)), 1, 11), " +
           s"16, 10) as bigint) & $mask42)").as("fp"))
     DedupLedger.append(Video(geom), frames, mixed, tag = "seqs-1")
-    assert(IndexStore.armStats(mixed, s"seqs-hist-${geom.params}")
-      .exists(s => s.slack == 0L && s.rows == 40L * geom.bands),
-      "the first video delta must stamp exact seqs stats")
+    assert(statsOf(mixed, s"seqs-hist-${geom.params}")
+      .exists(s => s.hist.isEmpty && s.slack >= 1L && s.rows == 40L * geom.bands),
+      "the first video delta must bump zero seqs stats")
     // the seqs SEED builders (the stores q169-q172 clone) stamp exact
     // stats as well: the first verdict against each runs no more jobs
     // than one against a store whose first delta stamped fresh stats
@@ -244,14 +251,12 @@ class LedgerStatsSpec extends SparkSpec {
        "next verdict still measures nothing") {
     val dir = textLedger(64)
     DedupLedger.append(Text, textDocs(200L until 210L), dir, tag = "c-1")
-    val st0 = IndexStore.armStats(dir, textKey).get
-    assert(st0.version == IndexStore.headVersion(dir).get)
+    val st0 = statsOf(dir, textKey).get
     val v = IndexStore.compact(spark, dir)
     assert(IndexStore.headVersion(dir).contains(v))
-    val st = IndexStore.armStats(dir, textKey).get
-    assert(st.version == v, s"stats must be restamped to the compacted head: $st")
-    assert((st.slack, st.rows, st.hist.toSeq) ==
-      ((st0.slack, st0.rows, st0.hist.toSeq)),
+    val st = IndexStore.snapshotAt(dir, v).stats.getOrElse(textKey,
+      fail("the compacted manifest must carry the stats"))
+    assert(st == st0,
       "compaction rewrites the same rows; the bound must not change")
     val (jd, jn) = textVerdictJobs(dir)
     assert(jd <= jn, s"after compaction the default verdict ran $jd jobs " +
@@ -262,7 +267,7 @@ class LedgerStatsSpec extends SparkSpec {
        "restamps stats that include the append's bump") {
     val dir = textLedger(64)
     val base = IndexStore.snapshot(dir)
-    val st0 = IndexStore.armStats(dir, textKey).get
+    val st0 = statsOf(dir, textKey).get
     val (codes, vecs) = IndexStore.frames(spark, dir, base,
       Some(IndexStore.CODES_DDL), Some(IndexStore.VECTORS_DDL),
       declaredSchema = true)
@@ -280,8 +285,7 @@ class LedgerStatsSpec extends SparkSpec {
       ()
     }
     assert(IndexStore.headVersion(dir).contains(v))
-    val st = IndexStore.armStats(dir, textKey).get
-    assert(st.version >= v, s"stats must cover the published head v$v: $st")
+    val st = statsOf(dir, textKey).get
     assert(st.rows == st0.rows + 20L * textBands && st.slack >= st0.slack + 1L,
       s"stats must include the carried append's bump: $st0 -> $st")
     val sigs = IndexStore.frames(spark, dir, IndexStore.snapshot(dir),
@@ -294,7 +298,7 @@ class LedgerStatsSpec extends SparkSpec {
        "stats before the new content publishes") {
     val dir = java.nio.file.Files.createTempDirectory("stats-bump").toString
     mixedLedger(dir, healthyMarks(40000))
-    val st0 = IndexStore.armStats(dir, statsKey).get
+    val st0 = statsOf(dir, statsKey).get
     // a 200-item delta: every fingerprint lands in some bucket, so the
     // bump must record max-per-bucket slack >= 1 and exactly the
     // delta's banded rows
@@ -303,20 +307,19 @@ class LedgerStatsSpec extends SparkSpec {
         expr(s"array(cast(conv(substring(md5(cast(id as string)), 1, 11), " +
           s"16, 10) as bigint) & $mask42)").as("fp"))
     DedupLedger.append(Media(geom), delta, dir, tag = "bump-1")
-    val st1 = IndexStore.armStats(dir, statsKey).get
+    val st1 = statsOf(dir, statsKey).get
     assert(st1.slack >= 1L, "a non-empty delta must bump slack")
     assert(st1.rows == st0.rows + 200L * geom.bands,
       s"rows must grow by the delta's banded rows, got ${st1.rows}")
     assert(st1.maxBound >= st0.maxBound, "maxBound must be monotone under appends")
     // idempotent replay: the same tag must not double-bump
     DedupLedger.append(Media(geom), delta, dir, tag = "bump-1")
-    val st1r = IndexStore.armStats(dir, statsKey).get
-    assert((st1r.version, st1r.slack, st1r.rows, st1r.hist.toSeq) ==
-      ((st1.version, st1.slack, st1.rows, st1.hist.toSeq)),
+    val st1r = statsOf(dir, statsKey).get
+    assert(st1r == st1,
       "a replayed tagged delta must not bump stats twice")
-    // rebuild: stale stats cleared, fresh exact stats stamped
+    // rebuild: its manifest carries only the fresh exact stats
     mixedLedger(dir, healthyMarks(35000))
-    val st2 = IndexStore.armStats(dir, statsKey).get
+    val st2 = statsOf(dir, statsKey).get
     assert(st2.slack == 0L && st2.rows == 35000L * geom.bands,
       s"rebuild must restamp exact stats, got $st2")
   }
@@ -333,7 +336,7 @@ class LedgerStatsSpec extends SparkSpec {
           |ELSE cast(conv(substring(md5(cast(id as string)), 1, 11), 16, 10)
           |     as bigint) & $mask42 END)""".stripMargin).as("fp"))
     mixedLedger(dir, marks)
-    val st = IndexStore.armStats(dir, statsKey).get
+    val st = statsOf(dir, statsKey).get
     assert(st.maxBound > graft.ops.DedupOps.BAND_CAP,
       s"the planted hot bucket must push maxBound past the floor, got $st")
     val snap = IndexStore.snapshot(dir)
@@ -353,13 +356,12 @@ class LedgerStatsSpec extends SparkSpec {
       .select(col("media_id")).collect().map(_.getLong(0)).toSet
     assert(kept == withStats.filter(_.getLong(3) == 1L).map(_.getLong(0)).toSet,
       "the keepers plan kept other items than the shedding verdict")
-    // delete the stats file, clear memos: the pure runtime path
-    val f = new java.io.File(s"$dir/_manifest").listFiles()
-      .find(_.getName.startsWith("stats.")).get
-    assert(f.delete())
+    // the same manifest without its stat lines, memos cleared: the
+    // pure runtime path
+    dropStats(dir)
     DedupLedger.clearShedMemos()
-    val without = DedupLedger.verdict(Media(geom), spark, batch, dir, snap)
-      .collect().toSeq
+    val without = DedupLedger.verdict(Media(geom), spark, batch, dir,
+      IndexStore.snapshot(dir)).collect().toSeq
     assert(withStats == without,
       "stats presence changed a hot store's shed verdict")
   }
@@ -390,67 +392,74 @@ class LedgerStatsSpec extends SparkSpec {
       s"a budget of 1 must shed the hot buckets and keep the near copy: $shed")
   }
 
-  private def deleteStats(dir: String): Unit =
-    Option(new java.io.File(s"$dir/_manifest").listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("stats."))
-      .foreach { f => assert(f.delete()); () }
+  /** Rewrite the head manifest without its stat lines: the manifest a
+    * legacy store (or a lost measurement) leaves. */
+  private def dropStats(dir: String): Unit = {
+    val f = new java.io.File(s"$dir/_manifest",
+      s"v${IndexStore.headVersion(dir).get}.list").toPath
+    val kept = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      .split('\n').filterNot(_.startsWith("stat\t"))
+    java.nio.file.Files.write(f, kept.mkString("\n").getBytes("UTF-8"))
+    assert(IndexStore.snapshot(dir).stats.isEmpty)
+  }
 
-  test("ESCALATED convergence (VERDICT r17 #4): a corpus-scale stats-less " +
-       "store converges to stats-present within ONE append tick — the " +
-       "write side pays one exact full-arm refresh inside the commit it " +
-       "already holds the lock for") {
-    val dir = java.nio.file.Files.createTempDirectory("stats-escal").toString
-    mixedLedger(dir, healthyMarks(400000))
-    // the legacy / starved store: corpus-scale content, NO stats
-    deleteStats(dir)
-    assert(IndexStore.armStats(dir, statsKey).isEmpty)
-    val snap0 = IndexStore.snapshot(dir)
-    val bytes = snap0.marks.map(rel =>
-      new java.io.File(s"$dir/marks/$rel").length()).sum
-    assert(bytes >= (4L << 20),
-      s"fixture must exceed the 4 MiB escalation proxy, got $bytes")
-    // ONE tick: a small append — the escalation computes the exact
-    // full-arm histogram inside this commit and persists it
-    val delta = spark.range(500000, 500200, 1, 4)
+  private def novelMarks(from: Long, n: Long) =
+    spark.range(from, from + n, 1, 4)
       .select(col("id").as("media_id"),
         expr(s"array(cast(conv(substring(md5(cast(id as string)), 1, 11), " +
           s"16, 10) as bigint) & $mask42)").as("fp"))
-    DedupLedger.append(Media(geom), delta, dir, tag = "escal-1")
-    val st = IndexStore.armStats(dir, statsKey)
-    assert(st.isDefined, "one tick must converge a stats-less corpus store")
-    assert(st.get.slack == 0L &&
-      st.get.rows == (400000L + 200L) * geom.bands,
-      s"the escalated refresh must be EXACT over arm+delta, got ${st.get}")
-    assert(st.get.version == IndexStore.headVersion(dir).get,
-      "the refresh must stamp the version this commit publishes")
-    // subsequent deltas take the cheap bump branch (no more full scans)
-    DedupLedger.append(Media(geom),
-      delta.withColumn("media_id", col("media_id") + 1000L),
-      dir, tag = "escal-2")
-    val st2 = IndexStore.armStats(dir, statsKey).get
-    assert(st2.rows == st.get.rows + 200L * geom.bands && st2.slack >= 1L)
-    // and fixture-scale stores stay stats-less (the byte gate holds):
-    val small = java.nio.file.Files.createTempDirectory("stats-small").toString
-    mixedLedger(small, healthyMarks(2000))
-    deleteStats(small)
-    DedupLedger.append(Media(geom), delta, small, tag = "s-1")
-    assert(IndexStore.armStats(small, statsKey).isEmpty,
-      "a fixture-scale store must not pay the escalated refresh")
+
+  test("a stats-less store converges after one verdict plus one tick, at " +
+       "any size") {
+    for (n <- Seq(100L, 40000L)) withClue(s"$n marks: ") {
+      val dir = java.nio.file.Files.createTempDirectory("stats-converge").toString
+      mixedLedger(dir, healthyMarks(n))
+      dropStats(dir)
+      val batch = novelMarks(700000L, 50L).localCheckpoint()
+      DedupLedger.clearShedMemos()
+      DedupLedger.verdict(Media(geom), spark, batch, dir,
+        IndexStore.snapshot(dir)).collect()
+      assert(statsOf(dir, statsKey).isEmpty, "a verdict wrote stats")
+      // one tick: its commit publishes the histogram the verdict paid,
+      // plus the tick's own bump
+      DedupLedger.ingest(Media(geom), batch, dir, tag = s"converge-$n")
+      val st = statsOf(dir, statsKey).getOrElse(
+        fail("one tick must converge a stats-less store"))
+      val rows = IndexStore.marksFrame(spark, dir, IndexStore.snapshot(dir),
+        IndexStore.MARKS_DDL).count()
+      assert(rows == n + 50L && st.rows == rows * geom.bands,
+        s"the healed stats must count every stored row: $st over $rows rows")
+      assert(st.slack >= 1L && st.hist.map(h => h._1.toLong * h._2).sum ==
+        n * geom.bands, s"slack resets to the tick's bump: $st")
+      assert(st.maxBound <= graft.ops.DedupOps.BAND_CAP)
+      // the next verdict measures nothing
+      val probe = novelMarks(800000L, 50L).localCheckpoint()
+      val snap = IndexStore.snapshot(dir)
+      DedupLedger.clearShedMemos()
+      val jd = countJobs(DedupLedger.verdict(Media(geom), spark, probe, dir, snap))._2
+      DedupLedger.clearShedMemos()
+      val jn = countJobs(DedupLedger.verdict(Media(geom), spark, probe, dir, snap,
+        pairBudgetPerItem = None))._2
+      assert(jd <= jn, s"after one tick the default verdict ran $jd jobs to " +
+        s"the uncapped verdict's $jn")
+    }
   }
 
-  test("verdict-side self-heal escalates to a BLOCKING stats write after " +
-       "3 consecutive skipped opportunistic attempts (contended lock)") {
-    val dir = java.nio.file.Files.createTempDirectory("stats-block").toString
-    mixedLedger(dir, healthyMarks(400000))
-    deleteStats(dir)
-    val snap = IndexStore.snapshot(dir)
-    val batch = spark.range(0, 50, 1, 2)
-      .select((col("id") + 9000000L).as("media_id"),
-        expr(s"array(cast(conv(substring(md5(cast(id + 77 as string)), 1, " +
-          s"11), 16, 10) as bigint) & $mask42)").as("fp"))
-      .localCheckpoint()
-    // a holder thread keeps the writer lock for the first two verdicts:
-    // their opportunistic tryWithWriterLock self-heals must SKIP
+  test("a verdict run while another thread holds the writer lock finishes " +
+       "and leaves _manifest byte-identical") {
+    val dir = java.nio.file.Files.createTempDirectory("stats-locked").toString
+    mixedLedger(dir, healthyMarks(40000))
+    dropStats(dir)
+    def manifestBytes(): Map[String, Seq[Byte]] = {
+      val root = new java.io.File(s"$dir/_manifest").toPath
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      finally walk.close()
+    }
+    val before = manifestBytes()
+    val batch = novelMarks(900000L, 50L).localCheckpoint()
     val release = new java.util.concurrent.CountDownLatch(1)
     val held = new java.util.concurrent.CountDownLatch(1)
     val holder = new Thread(() => {
@@ -458,33 +467,72 @@ class LedgerStatsSpec extends SparkSpec {
       ()
     })
     holder.start(); held.await()
-    def verdict(): Unit = {
-      DedupLedger.clearShedMemos() // force the histogram + heal attempt
-      DedupLedger.verdict(Media(geom), spark, batch, dir, snap)
-        .collect()
-      ()
-    }
     try {
-      verdict(); verdict()
-      assert(IndexStore.armStats(dir, statsKey).isEmpty,
-        "skipped opportunistic heals must not have written stats")
-      // third consecutive miss crosses the threshold while the lock is
-      // STILL held: the opportunistic try skips again, the escalation
-      // fires and BLOCKS; the releaser frees the lock while it waits.
-      // (Benign race: if this verdict's histogram outlives the release
-      // delay, the opportunistic path writes instead — the asserted
-      // outcome is identical, and the 2-consecutive-skip prefix above
-      // already pinned the counter behavior deterministically.)
-      val releaser = new Thread(() => {
-        Thread.sleep(2000); release.countDown()
-      })
-      releaser.start()
-      verdict()
-      releaser.join()
+      // the stats-less verdict pays the histogram: nothing may wait on
+      // the lock or persist it
+      DedupLedger.clearShedMemos()
+      val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+      try {
+        val f = pool.submit(new java.util.concurrent.Callable[Int] {
+          def call(): Int = DedupLedger.verdict(Media(geom), spark, batch, dir,
+            IndexStore.snapshot(dir)).collect().length
+        })
+        assert(f.get(120, java.util.concurrent.TimeUnit.SECONDS) == 50)
+      } finally pool.shutdown()
     } finally { release.countDown(); holder.join() }
-    val st = IndexStore.armStats(dir, statsKey)
-    assert(st.isDefined && st.get.slack == 0L &&
-      st.get.version == snap.version,
-      s"the escalated blocking self-heal must persist exact stats: $st")
+    val after = manifestBytes()
+    assert(after == before, s"a verdict changed ${(after.keySet ++
+      before.keySet).filter(k => after.get(k) != before.get(k))}")
+  }
+
+  test("a CAS-losing delta publishes stats that include both deltas") {
+    val dir = java.nio.file.Files.createTempDirectory("stats-cas").toString
+    mixedLedger(dir, healthyMarks(2000))
+    val st0 = statsOf(dir, statsKey).get
+    val key = (dir, graft.ops.StoreIO.forceHadoopForTest)
+    val real = graft.ops.StoreIO.forDir(dir)
+    var raced = false
+    // the outer delta's first manifest CAS first lets an inner delta
+    // publish: the outer loses that version and retries onto the inner
+    // delta's manifest
+    val racing = new graft.ops.StoreIO {
+      def canonicalKey: String = real.canonicalKey
+      def supportsFileLock: Boolean = real.supportsFileLock
+      def resolve(rel: String): String = real.resolve(rel)
+      def readBytes(rel: String): Option[Array[Byte]] = real.readBytes(rel)
+      def writeAtomic(rel: String, body: Array[Byte]): Unit = real.writeAtomic(rel, body)
+      def appendBytes(rel: String, body: Array[Byte]): Unit = real.appendBytes(rel, body)
+      def createExclusive(rel: String, body: Array[Byte]): Boolean = {
+        if (!raced && rel.startsWith("_manifest/v")) {
+          raced = true
+          DedupLedger.append(Media(geom), novelMarks(610000L, 30L), dir,
+            tag = "inner")
+        }
+        real.createExclusive(rel, body)
+      }
+      def exists(rel: String): Boolean = real.exists(rel)
+      def isDirectory(rel: String): Boolean = real.isDirectory(rel)
+      def list(rel: String): Seq[String] = real.list(rel)
+      def listFilesRecursive(rel: String): Seq[String] = real.listFilesRecursive(rel)
+      def size(rel: String): Long = real.size(rel)
+      def delete(rel: String): Boolean = real.delete(rel)
+      def deleteRecursive(rel: String): Unit = real.deleteRecursive(rel)
+      def mkdirs(rel: String): Unit = real.mkdirs(rel)
+      def move(srcRel: String, dstRel: String): Unit = real.move(srcRel, dstRel)
+    }
+    val losses = IndexStore.casRetries.get()
+    IndexStore.ioCache.update(key)(_ => Some(racing))
+    val v = try DedupLedger.append(Media(geom), novelMarks(600000L, 20L), dir,
+      tag = "outer")
+    finally { IndexStore.ioCache.update(key)(_ => None); () }
+    assert(raced && IndexStore.casRetries.get() > losses,
+      "the outer delta must have lost a manifest CAS")
+    assert(IndexStore.headVersion(dir).contains(v) &&
+      IndexStore.committedTags(dir) == Set("inner", "outer"))
+    val st = statsOf(dir, statsKey).get
+    assert(st.rows == st0.rows + 50L * geom.bands && st.slack >= st0.slack + 2L,
+      s"the loser's manifest must bump the winner's stats: $st0 -> $st")
+    assert(IndexStore.marksFrame(spark, dir, IndexStore.snapshot(dir),
+      IndexStore.MARKS_DDL).count() == 2050L)
   }
 }

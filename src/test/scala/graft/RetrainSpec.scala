@@ -22,8 +22,14 @@ class RetrainSpec extends SparkSpec {
     val emb = GenFixtures.clusteredEmbeddings(spark, 700).localCheckpoint()
     val dir = java.nio.file.Files.createTempDirectory("idx-drift").toString
     VectorOps.buildIvfPqIndex(emb.filter($"vec_id" < 500), dir, k = 8)
-    assert(IndexStore.props(dir).contains("qe_base"),
+    // the stamps ride in the manifest the build publishes
+    val built = IndexStore.snapshot(dir)
+    assert(built.stamps.get("qe_base").exists(_.toDouble > 0.0),
       "build must stamp the training-time quantization error")
+    assert(built.stamps.get("built_version").contains(built.version.toString),
+      s"build must stamp its own version: ${built.stamps}")
+    assert(!IndexStore.props(dir).contains("qe_base"),
+      "build stamps must not be written to store props")
     assert(VectorOps.appendedDriftRatio(spark, dir).isEmpty,
       "no appends yet -> no ratio")
     assert(!VectorOps.needsRetrain(spark, dir))
@@ -70,6 +76,10 @@ class RetrainSpec extends SparkSpec {
     assert(!VectorOps.needsRetrain(spark, dir2),
       "the refine response must clear the trigger (policy window restarts)")
     val headAfter = IndexStore.snapshot(dir2)
+    assert(headAfter.stamps.get("built_version").contains(headAfter.version.toString) &&
+      headAfter.stamps.get("last_replace_version").contains(headAfter.version.toString) &&
+      headAfter.stamps.get("qe_base") == headBefore.stamps.get("qe_base"),
+      s"a refine restamps built_version to its own version: ${headAfter.stamps}")
     // untouched cells' data files carried forward byte-identical
     val untouchedBefore = headBefore.codes.filterNot(f =>
       split.exists(c => f.startsWith(s"cell=$c/"))).toSet
@@ -304,6 +314,11 @@ class RetrainSpec extends SparkSpec {
       emb.filter($"vec_id" >= 500), dir, Some("a1"))
     assert(VectorOps.appendedDriftRatio(spark, dir).isDefined)
     VectorOps.compactIvfPqIndex(spark, dir)
+    val compacted = IndexStore.snapshot(dir)
+    assert(compacted.stamps.get("last_replace_version")
+      .contains(compacted.version.toString) &&
+      compacted.stamps.contains("qe_base"),
+      s"compaction must carry the build stamps and stamp itself: ${compacted.stamps}")
     assert(VectorOps.appendedDriftRatio(spark, dir).isEmpty,
       "a compaction inside the policy window must surface as no-signal")
     assert(!VectorOps.needsRetrain(spark, dir))
@@ -321,6 +336,10 @@ class RetrainSpec extends SparkSpec {
 
     // and a rebuild restores the signal from a clean window
     VectorOps.buildIvfPqIndex(emb, dir, k = 8)
+    val rebuilt = IndexStore.snapshot(dir)
+    assert(!rebuilt.stamps.contains("last_replace_version") &&
+      rebuilt.stamps.get("built_version").contains(rebuilt.version.toString),
+      s"a rebuild's manifest must carry only its own stamps: ${rebuilt.stamps}")
     VectorOps.appendToIvfPqIndex(spark,
       emb.filter($"vec_id" >= 500).withColumn("vec_id", $"vec_id" + 10000),
       dir, Some("a2"))

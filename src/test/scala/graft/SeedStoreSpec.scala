@@ -4,14 +4,16 @@ import java.io.File
 import java.nio.channels.{FileChannel, OverlappingFileLockException}
 import java.nio.file.{Files, StandardOpenOption}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.VectorOps
+import graft.ops.{Fingerprint, IndexStore, VectorOps}
 
 /** Seed stores (`VectorOps.ensureIndex`) are named
   * `graft_<tag>_<slug>_<fp8>`: two params strings build two
   * directories, so code versions with different seed params stop
   * rebuilding each other's stores; a build keeps the newest
-  * `SEED_RETENTION` fingerprints of its (tag, source); and every build
-  * of a (tag, source) runs under one OS lock on `graft_<tag>_<slug>.lock`. */
+  * `SEED_RETENTION` fingerprints of its (tag, source); every build
+  * of a (tag, source) runs under one OS lock on `graft_<tag>_<slug>.lock`;
+  * and the store layout ([[IndexStore.LAYOUT]]) is part of every
+  * params string. */
 class SeedStoreSpec extends AnyFunSuite {
 
   private val tmpRoot = new File(sys.props("java.io.tmpdir"))
@@ -116,6 +118,29 @@ class SeedStoreSpec extends AnyFunSuite {
       assert(fs.map(_.get).distinct.size == 1)
       assert(builds.get == n0 + 1, "a concurrent caller rebuilt the store")
     } finally pool.shutdown()
+    cleanup(tag)
+  }
+
+  test("a seed an older store layout built is rebuilt beside it, never read") {
+    val (d, tag) = source()
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    def md5(x: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // what a build without the layout in its params leaves: a complete
+    // store whose name and marker fingerprint cover the params alone
+    val slug = md5(new File(d).getAbsolutePath).take(16)
+    val old = new File(tmpRoot, s"graft_${tag}_${slug}_${md5("v1").take(8)}")
+    old.mkdirs()
+    Files.write(new File(old, "_INDEX_FINGERPRINT").toPath,
+      md5(s"v1|${Fingerprint.of(d, "embeddings.parquet")}").getBytes("UTF-8"))
+    val dir = ensure(d, tag, "v1", builds)
+    assert(builds.get == 1 && dir != old.getPath,
+      "a seed without the layout in its params was read as current")
+    assert(new File(dir).getName.endsWith(
+      md5(s"v1|layout=${IndexStore.LAYOUT}").take(8)))
+    // under SEED_RETENTION = 2 both layouts' seeds stay side by side
+    assert(siblings(tag) == Seq(old.getName, new File(dir).getName).sorted)
+    assert(ensure(d, tag, "v1", builds) == dir && builds.get == 1)
     cleanup(tag)
   }
 }
